@@ -99,13 +99,11 @@ object VolumeOps {
       chunkSize = chunkSize, encoding = encoding.getOrElse(vol.ctx.encoding))))
     val dest = Volume.create(vol.spark, destRoot, meta2, 1, vol.fillMissing)
     val sc = vol.ctx; val dc = dest.ctx
-    val hconf = vol.spark.sessionState.newHadoopConf()
-    val sconf = new ChunkStore.SerializableConf(ChunkStore.storeConf(hconf, sc.root, sc.codec.name))
-    val dconf = new ChunkStore.SerializableConf(ChunkStore.storeConf(hconf, dc.root, dc.codec.name))
+    val (sconf, dconf) = (vol.confBc, dest.confBc)
     val written = dest.chunkTasks(box).as(Encoders.product[(Int, Int, Int)])
       .mapPartitions({ it =>
-        val sfs = ChunkStore.fs(sc.root, sconf.conf)
-        val dfs = ChunkStore.fs(dc.root, dconf.conf)
+        val sfs = ChunkStore.fs(sc.root, sconf.value.conf)
+        val dfs = ChunkStore.fs(dc.root, dconf.value.conf)
         it.flatMap { case (cx, cy, cz) =>
           dc.sliceAt(cx, cy, cz, box).map { ds =>
             val out = VoxelBuffer.zeros(sc.dataType,

@@ -177,7 +177,10 @@ final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
     import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
     val c = ctx
     val query = box
-    val conf = new ChunkStore.SerializableConf(session.sessionState.newHadoopConf())
+    // broadcast once per execution: a task then carries a reference, not a
+    // full Configuration to deserialize
+    val conf = session.sparkContext.broadcast(
+      new ChunkStore.SerializableConf(session.sessionState.newHadoopConf()))
     val ids = Grid.idRanges(query, c.chunkSize, c.voxelOffset)
     val total = if (query.isEmpty) 0L else ids.total
     val parts = math.max(1, math.min(total, session.sparkContext.defaultParallelism * 2L)).toInt
@@ -192,7 +195,7 @@ final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
       (longMetric("numOutputRows"), longMetric("chunksFetched"),
         longMetric("chunksMissing"), longMetric("bytesFetched"))
     session.sparkContext.range(0L, total, 1, parts).mapPartitions { linearIds =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
+      val fs = ChunkStore.fs(c.root, conf.value.conf)
       val slices = linearIds.flatMap { id =>
         val (cx, cy, cz) = ids.coords(id)
         c.sliceAt(cx, cy, cz, query).map { s =>
@@ -299,7 +302,8 @@ final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
   override protected def doExecute(): RDD[InternalRow] = {
     val c = ctx
     val query = box
-    val conf = new ChunkStore.SerializableConf(session.sessionState.newHadoopConf())
+    val conf = session.sparkContext.broadcast(
+      new ChunkStore.SerializableConf(session.sessionState.newHadoopConf()))
     val ids = Grid.idRanges(query, c.chunkSize, c.voxelOffset)
     // a contradictory filter set can narrow the box to negative-length
     // intervals whose span product is positive garbage — emptiness must be
@@ -321,7 +325,7 @@ final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
       (longMetric("numOutputRows"), longMetric("chunksFetched"),
         longMetric("chunksMissing"), longMetric("bytesFetched"))
     session.sparkContext.range(0L, total, 1, parts).mapPartitions { linearIds =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
+      val fs = ChunkStore.fs(c.root, conf.value.conf)
       // one UnsafeRow buffer per partition, rewritten in place per voxel —
       // standard scan-node row reuse (consumers copy when they buffer)
       val writer = new org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter(tags.length)

@@ -30,11 +30,18 @@ object ChunkStore {
       conf.write(out)
     }
     private def readObject(in: java.io.ObjectInputStream): Unit = {
+      confDeserialized.incrementAndGet()
       in.defaultReadObject()
       conf = new Configuration(false)
       conf.readFields(in)
     }
   }
+
+  /** Test instrumentation: total [[SerializableConf]] deserializations. A
+    * volume handle broadcasts its conf once, so in local mode (executors
+    * share the driver's block manager) its chunk jobs leave this flat;
+    * specs assert the delta. */
+  val confDeserialized = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Per-scheme cloud configuration for a store at `root` holding chunks in
     * `encoding` — the engine's analog of the reference's per-backend PUT

@@ -1,5 +1,6 @@
 package graft.volume
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -294,6 +295,16 @@ final case class VolumeCtx(
       (b.x.lo, b.y.lo, b.z.lo), raw)
   }
 
+  /** Fetch and decode a chunk. An absent chunk is None when the handle
+    * zero-fills (reference: src/modes/sequential.jl:52-54) and raises
+    * [[ChunkStore.MissingChunkException]] otherwise. */
+  def readChunk(fs: org.apache.hadoop.fs.FileSystem, slice: ChunkSlice): Option[VoxelBuffer] =
+    fetchChunk(fs, slice) match {
+      case Some(blob) => Some(decodeChunk(slice, blob))
+      case None if fillMissing => None
+      case None => throw new ChunkStore.MissingChunkException(keyOf(slice))
+    }
+
   def encodeChunk(buf: VoxelBuffer): Array[Byte] = keyStyle match {
     case "mrc-z" => throw new UnsupportedOperationException(
       "mrc: read-only through the chunk engine (a dense single-file container " +
@@ -333,22 +344,29 @@ final case class VolumeCtx(
   }
 }
 
-/** One fetched-and-clipped piece of a cutout, shipped executor → driver. */
-final case class CutPiece(ox: Int, oy: Int, oz: Int, sx: Int, sy: Int, sz: Int, bytes: Array[Byte])
-
 /** A handle on one chunked N-d array dataset — the engine's `BigArray`
   * (reference: src/type.jl). Reads and writes are Spark jobs over the chunk
   * grid; the voxel view (`toVoxels`) is the bridge to the relational surface.
   *
   * Scale design notes (100 TB target):
-  *  - chunk task sets are generated distributedly from `spark.range` (no
-  *    driver-side chunk enumeration), so a petavoxel cutout plans in O(1)
-  *    driver memory;
+  *  - chunk task sets are generated distributedly from a range of linear
+  *    chunk ids (`spark.range` for the DataFrame operators,
+  *    `sparkContext.range` for `cutout`) — no driver-side chunk
+  *    enumeration, so a petavoxel cutout plans in O(1) driver memory;
   *  - `cutout` materializes on the driver (API parity with the reference's
   *    `ba[ranges...]`) and is guarded by a size cap — large reads should stay
-  *    distributed via `toVoxels`;
+  *    distributed via `toVoxels`. It is one plain RDD job (no Catalyst
+  *    planning, no encoder round-trip), so a small cutout costs little more
+  *    than its chunk I/O and decode;
   *  - `fromVoxels` shuffles voxels once, by chunk id (the only shuffle in the
   *    write path), then assembles and writes each chunk object in the task.
+  *
+  * Store conf: a handle snapshots its Hadoop store conf — connector settings
+  * and the `graft.store.retry.*` policy included — at its first chunk job
+  * (for the DataFrame operators: when the first such DataFrame is built),
+  * and broadcasts it once. Later jobs ship only the broadcast reference, so
+  * no task re-parses the conf. A conf change made after that is seen by a
+  * newly opened handle, not by this one.
   */
 final class Volume(
     @transient val spark: SparkSession,
@@ -367,8 +385,12 @@ final class Volume(
     scaleMeta.voxelOffset, scaleMeta.volumeBox, meta.dataType, meta.numChannels,
     scaleMeta.encoding, fillMissing, keyStyle, padEdgeChunks, shard, mrc)
 
-  private def hconf = new ChunkStore.SerializableConf(
-    ChunkStore.storeConf(spark.sessionState.newHadoopConf(), root, ctx.codec.name))
+  /** The store conf every chunk task of this handle reads, broadcast once at
+    * the handle's first chunk job (see the class notes). Closures capture it
+    * through a local `val`, never through `this`. */
+  @transient private[graft] lazy val confBc: Broadcast[ChunkStore.SerializableConf] =
+    spark.sparkContext.broadcast(new ChunkStore.SerializableConf(
+      ChunkStore.storeConf(spark.sessionState.newHadoopConf(), root, ctx.codec.name)))
 
   /** Number of chunks a box touches — counts grid cells in the bounding id
     * box, like the reference (src/type.jl:285-292). Pure math, no I/O. */
@@ -394,35 +416,17 @@ final class Volume(
       expr(s"cast(${ids.loz}L + (id div ${ids.nx * ids.ny}L) as int)").as("cz"))
   }
 
-  /** Fetch + decode + clip the chunks of `query`; returns pieces anchored at
-    * global coords. The per-partition loop opens one FileSystem and streams
-    * chunks through fetch→decode→clip, the executor-side analog of the
-    * reference's worker pipeline (src/modes/multithreads.jl:66-123). */
-  private def cutPieces(query: Box): Dataset[CutPiece] = {
-    val c = ctx; val conf = hconf
-    implicit val enc = Encoders.product[CutPiece]
-    chunkTasks(query).as(Encoders.product[(Int, Int, Int)]).mapPartitions { it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, query).flatMap { s =>
-          c.fetchChunk(fs, s) match {
-            case Some(blob) =>
-              val chunk = c.decodeChunk(s, blob)
-              val piece = chunk.slice(s.cutoutBox)
-              Some(CutPiece(piece.origin._1, piece.origin._2, piece.origin._3,
-                piece.sx, piece.sy, piece.sz, piece.bytes))
-            case None if c.fillMissing => None // zeros (sequential.jl:52-54)
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-          }
-        }
-      }
-    }
-  }
-
   /** N-d range read: the reference's `ba[x0:x1, y0:y1, z0:z1]`
     * (reference: src/type.jl:212-223). Returns a zero-initialized buffer
     * anchored at the query origin; out-of-volume / missing chunks stay zero.
-    * Driver-side materialization is capped — use `toVoxels` for big boxes. */
+    * Driver-side materialization is capped — use `toVoxels` for big boxes.
+    *
+    * One RDD job over the linear ids of the chunks the box touches inside
+    * the volume: each task opens one FileSystem and streams its chunks
+    * through fetch→decode→clip (the executor-side analog of the reference's
+    * worker pipeline, src/modes/multithreads.jl:66-123), and the driver
+    * blits each partition's pieces into the output as that partition's
+    * result arrives. A box wholly outside the volume launches no job. */
   def cutout(query: Box, maxBytes: Long = Int.MaxValue - 64L): VoxelBuffer = {
     if (query.isEmpty)
       return VoxelBuffer.zeros(meta.dataType, 0, 0, 0, meta.numChannels,
@@ -432,11 +436,23 @@ final class Volume(
       s"cutout of $bytesNeeded bytes exceeds cap $maxBytes; use toVoxels for distributed processing")
     val out = VoxelBuffer.zeros(meta.dataType, query.x.len, query.y.len, query.z.len,
       meta.numChannels, (query.x.lo, query.y.lo, query.z.lo))
-    cutPieces(query).collect().foreach { p =>
-      val piece = new VoxelBuffer(meta.dataType, p.sx, p.sy, p.sz, meta.numChannels,
-        (p.ox, p.oy, p.oz), p.bytes)
-      out.blit(piece, piece.box)
+    // chunks off the volume hold nothing (sliceAt skips them), so the id
+    // range is taken over the in-volume part of the box
+    val inVolume = query.intersect(ctx.volumeBox)
+    if (inVolume.isEmpty) return out
+    val c = ctx; val conf = confBc
+    val ids = Grid.idRanges(inVolume, c.chunkSize, c.voxelOffset)
+    val sc = spark.sparkContext
+    val parts = math.max(1, math.min(ids.total, sc.defaultParallelism * 2L)).toInt
+    val pieces = sc.range(0L, ids.total, 1, parts).mapPartitions { linearIds =>
+      val fs = ChunkStore.fs(c.root, conf.value.conf)
+      linearIds.flatMap { id =>
+        val (cx, cy, cz) = ids.coords(id)
+        c.sliceAt(cx, cy, cz, query).flatMap(s => c.readChunk(fs, s).map(_.slice(s.cutoutBox)))
+      }
     }
+    sc.runJob(pieces, (it: Iterator[VoxelBuffer]) => it.toArray,
+      (_: Int, ps: Array[VoxelBuffer]) => ps.foreach(p => out.blit(p, p.box)))
     out
   }
 
@@ -455,19 +471,15 @@ final class Volume(
     * and the whole relational surface run on. Missing chunks yield zeros,
     * preserving the reference's fill semantics (src/modes/sequential.jl:52-54). */
   def toVoxels(query: Box): DataFrame = {
-    val c = ctx; val conf = hconf
+    val c = ctx; val conf = confBc
     val schema = voxelSchema
     val rowEnc = Encoders.row(schema)
     val taskEnc = Encoders.product[(Int, Int, Int)]
     val rows = chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
+      val fs = ChunkStore.fs(c.root, conf.value.conf)
       it.flatMap { case (cx, cy, cz) =>
         c.sliceAt(cx, cy, cz, query).toSeq.flatMap { s =>
-          val bufOpt = c.fetchChunk(fs, s) match {
-            case Some(blob) => Some(c.decodeChunk(s, blob))
-            case None if c.fillMissing => None
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-          }
+          val bufOpt = c.readChunk(fs, s)
           val cut = s.cutoutBox
           // iterator generators: never materialize a chunk's rows strictly
           for {
@@ -508,7 +520,7 @@ final class Volume(
     require(c.chunkSize == c2.chunkSize && c.voxelOffset == c2.voxelOffset,
       s"zipVoxels needs one chunk grid: ${c.chunkSize}@${c.voxelOffset} vs ${c2.chunkSize}@${c2.voxelOffset}")
     require(c.numChannels == 1 && c2.numChannels == 1, "zipVoxels: single-channel volumes only")
-    val (conf, conf2) = (hconf, other.hconf)
+    val (conf, conf2) = (confBc, other.confBc)
     val schema = StructType(Seq(
       StructField("x", IntegerType, nullable = false),
       StructField("y", IntegerType, nullable = false),
@@ -518,19 +530,13 @@ final class Volume(
     val rowEnc = Encoders.row(schema)
     val taskEnc = Encoders.product[(Int, Int, Int)]
     chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
-      val fs2 = ChunkStore.fs(c2.root, conf2.conf)
-      def decodeOrNone(cc: VolumeCtx, f: org.apache.hadoop.fs.FileSystem, s: ChunkSlice) =
-        cc.fetchChunk(f, s) match {
-          case Some(blob) => Some(cc.decodeChunk(s, blob))
-          case None if cc.fillMissing => None
-          case None => throw new ChunkStore.MissingChunkException(cc.keyOf(s))
-        }
+      val fs = ChunkStore.fs(c.root, conf.value.conf)
+      val fs2 = ChunkStore.fs(c2.root, conf2.value.conf)
       it.flatMap { case (cx, cy, cz) =>
         (c.sliceAt(cx, cy, cz, query), c2.sliceAt(cx, cy, cz, query)) match {
           case (Some(s), Some(s2)) =>
-            val bufA = decodeOrNone(c, fs, s)
-            val bufB = decodeOrNone(c2, fs2, s2)
+            val bufA = c.readChunk(fs, s)
+            val bufB = c2.readChunk(fs2, s2)
             val cut = s.cutoutBox // ≡ s2.cutoutBox: same grid, same query
             for {
               z <- (cut.z.lo to cut.z.hi).iterator
@@ -572,7 +578,7 @@ final class Volume(
     * reference: src/ChunkIterators.jl). A missing chunk under fillMissing
     * is all-background and emits nothing. */
   def localComponents(query: Box): DataFrame = {
-    val c = ctx; val conf = hconf
+    val c = ctx; val conf = confBc
     require(c.numChannels == 1, "localComponents: single-channel volumes only")
     require(query.x.lo >= 0 && query.x.hi < (1 << 20) &&
       query.y.lo >= 0 && query.y.hi < (1 << 20) &&
@@ -596,14 +602,12 @@ final class Volume(
     val taskEnc = Encoders.product[(Int, Int, Int)]
     val isFloat = c.dataType == graft.core.Meta.TFloat32 || c.dataType == graft.core.Meta.TFloat64
     chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
+      val fs = ChunkStore.fs(c.root, conf.value.conf)
       it.flatMap { case (cx, cy, cz) =>
         c.sliceAt(cx, cy, cz, query).iterator.flatMap { s =>
-          c.fetchChunk(fs, s) match {
-            case None if c.fillMissing => Iterator.empty // all-zero: no foreground
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-            case Some(blob) =>
-              val b = c.decodeChunk(s, blob)
+          c.readChunk(fs, s) match {
+            case None => Iterator.empty // all-zero: no foreground
+            case Some(b) =>
               val cut = s.cutoutBox
               val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
               // union-find over the cut box; -1 = background
@@ -711,7 +715,7 @@ final class Volume(
     * move. Restricting to `query`-interior semantics: dilation does not
     * grow outside the query box. */
   def localDilate(query: Box): DataFrame = {
-    val c = ctx; val conf = hconf
+    val c = ctx; val conf = confBc
     require(c.numChannels == 1, "localDilate: single-channel volumes only")
     val schema = StructType(Seq(
       StructField("cx", IntegerType, nullable = false),
@@ -737,14 +741,12 @@ final class Volume(
     val isFloat = c.dataType == graft.core.Meta.TFloat32 || c.dataType == graft.core.Meta.TFloat64
     val qbox = query
     chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
+      val fs = ChunkStore.fs(c.root, conf.value.conf)
       it.flatMap { case (cx, cy, cz) =>
         c.sliceAt(cx, cy, cz, qbox).iterator.flatMap { s =>
-          c.fetchChunk(fs, s) match {
-            case None if c.fillMissing => Iterator.empty // all-background
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-            case Some(blob) =>
-              val b = c.decodeChunk(s, blob)
+          c.readChunk(fs, s) match {
+            case None => Iterator.empty // all-background
+            case Some(b) =>
               val cut = s.cutoutBox
               val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
               @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
@@ -837,7 +839,7 @@ final class Volume(
     * needs against the face relation and keeps candidates with every need
     * confirmed — O(surface) rows move, the voxel relation never shuffles. */
   def localErode(query: Box): DataFrame = {
-    val c = ctx; val conf = hconf
+    val c = ctx; val conf = confBc
     require(c.numChannels == 1, "localErode: single-channel volumes only")
     val coord = StructType(Seq(
       StructField("x", IntegerType, nullable = false),
@@ -861,14 +863,12 @@ final class Volume(
     val isFloat = c.dataType == graft.core.Meta.TFloat32 || c.dataType == graft.core.Meta.TFloat64
     val qbox = query
     chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
+      val fs = ChunkStore.fs(c.root, conf.value.conf)
       it.flatMap { case (cx, cy, cz) =>
         c.sliceAt(cx, cy, cz, qbox).iterator.flatMap { s =>
-          c.fetchChunk(fs, s) match {
-            case None if c.fillMissing => Iterator.empty // all-background
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-            case Some(blob) =>
-              val b = c.decodeChunk(s, blob)
+          c.readChunk(fs, s) match {
+            case None => Iterator.empty // all-background
+            case Some(b) =>
               val cut = s.cutoutBox
               val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
               @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
@@ -967,7 +967,7 @@ final class Volume(
     * The voxel relation never shuffles; see
     * [[graft.ops.ArrayOps.openStats]] for the relational combiner. */
   def localOpen(query: Box): DataFrame = {
-    val c = ctx; val conf = hconf
+    val c = ctx; val conf = confBc
     require(c.numChannels == 1, "localOpen: single-channel volumes only")
     val coord = StructType(Seq(
       StructField("x", IntegerType, nullable = false),
@@ -1000,14 +1000,12 @@ final class Volume(
     val isFloat = c.dataType == graft.core.Meta.TFloat32 || c.dataType == graft.core.Meta.TFloat64
     val qbox = query
     chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
+      val fs = ChunkStore.fs(c.root, conf.value.conf)
       it.flatMap { case (cx, cy, cz) =>
         c.sliceAt(cx, cy, cz, qbox).iterator.flatMap { s =>
-          c.fetchChunk(fs, s) match {
-            case None if c.fillMissing => Iterator.empty // all-background
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-            case Some(blob) =>
-              val b = c.decodeChunk(s, blob)
+          c.readChunk(fs, s) match {
+            case None => Iterator.empty // all-background
+            case Some(b) =>
               val cut = s.cutoutBox
               val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
               @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
@@ -1151,7 +1149,7 @@ final class Volume(
     * without fetching them ([[toVoxelsAtLeast]]). Missing chunks report
     * (0, 0) under fillMissing. Integer single-channel volumes only. */
   def chunkStats(query: Box): DataFrame = {
-    val c = ctx; val conf = hconf
+    val c = ctx; val conf = confBc
     require(c.numChannels == 1, "chunkStats: single-channel volumes only")
     require(c.dataType != graft.core.Meta.TFloat32 && c.dataType != graft.core.Meta.TFloat64,
       "chunkStats: integer volumes only")
@@ -1166,16 +1164,14 @@ final class Volume(
     val taskEnc = Encoders.product[(Int, Int, Int)]
     val qbox = query
     chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
+      val fs = ChunkStore.fs(c.root, conf.value.conf)
       it.flatMap { case (cx, cy, cz) =>
         c.sliceAt(cx, cy, cz, qbox).iterator.map { s =>
           val cut = s.cutoutBox
           val nTot = cut.x.len.toLong * cut.y.len * cut.z.len
-          c.fetchChunk(fs, s) match {
-            case None if c.fillMissing => Row(cx, cy, cz, 0L, 0L, nTot)
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-            case Some(blob) =>
-              val b = c.decodeChunk(s, blob)
+          c.readChunk(fs, s) match {
+            case None => Row(cx, cy, cz, 0L, 0L, nTot)
+            case Some(b) =>
               var mn = Long.MaxValue; var mx = Long.MinValue
               var z = cut.z.lo
               while (z <= cut.z.hi) {
@@ -1212,7 +1208,7 @@ final class Volume(
     * (spec-proven: deleting them from the store does not disturb the
     * pruned scan). Integer single-channel volumes only. */
   def toVoxelsAtLeast(query: Box, t: Long, stats: Option[DataFrame] = None): DataFrame = {
-    val c = ctx; val conf = hconf
+    val c = ctx; val conf = confBc
     require(c.numChannels == 1, "toVoxelsAtLeast: single-channel volumes only")
     val kept = stats.getOrElse(chunkStats(query))
       .filter(col("vmax") >= t).select(col("cx"), col("cy"), col("cz"))
@@ -1223,14 +1219,10 @@ final class Volume(
     val taskEnc = Encoders.product[(Int, Int, Int)]
     val qbox = query
     tasks.as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
+      val fs = ChunkStore.fs(c.root, conf.value.conf)
       it.flatMap { case (cx, cy, cz) =>
         c.sliceAt(cx, cy, cz, qbox).toSeq.flatMap { s =>
-          val bufOpt = c.fetchChunk(fs, s) match {
-            case Some(blob) => Some(c.decodeChunk(s, blob))
-            case None if c.fillMissing => None
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-          }
+          val bufOpt = c.readChunk(fs, s)
           val cut = s.cutoutBox
           for {
             z <- (cut.z.lo to cut.z.hi).iterator
@@ -1270,7 +1262,7 @@ final class Volume(
     * shuffles. A missing chunk reads as zeros (fill-missing semantics),
     * still contributing its geometry. Integer volumes only. */
   def localBlur(query: Box): DataFrame = {
-    val c = ctx; val conf = hconf
+    val c = ctx; val conf = confBc
     require(c.numChannels == 1, "localBlur: single-channel volumes only")
     require(c.dataType != graft.core.Meta.TFloat32 && c.dataType != graft.core.Meta.TFloat64,
       "localBlur: integer volumes only (exact ⌊s/c⌋ gate semantics)")
@@ -1303,15 +1295,10 @@ final class Volume(
     val taskEnc = Encoders.product[(Int, Int, Int)]
     val qbox = query
     chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
+      val fs = ChunkStore.fs(c.root, conf.value.conf)
       it.flatMap { case (cx, cy, cz) =>
         c.sliceAt(cx, cy, cz, qbox).iterator.map { s =>
-          val blobOpt = c.fetchChunk(fs, s) match {
-            case some @ Some(_) => some
-            case None if c.fillMissing => None // zero-filled cut
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-          }
-          val bOpt = blobOpt.map(c.decodeChunk(s, _))
+          val bOpt = c.readChunk(fs, s) // None: zero-filled cut
           val cut = s.cutoutBox
           val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
           @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
@@ -1408,7 +1395,7 @@ final class Volume(
     * probe→negface on coordinates, and folds both into per-label-pair
     * totals. Integer label volumes only. */
   def localContacts(query: Box): DataFrame = {
-    val c = ctx; val conf = hconf
+    val c = ctx; val conf = confBc
     require(c.numChannels == 1, "localContacts: single-channel volumes only")
     require(c.dataType != graft.core.Meta.TFloat32 && c.dataType != graft.core.Meta.TFloat64,
       "localContacts: integer label volumes only")
@@ -1432,14 +1419,12 @@ final class Volume(
     val taskEnc = Encoders.product[(Int, Int, Int)]
     val qbox = query
     chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.conf)
+      val fs = ChunkStore.fs(c.root, conf.value.conf)
       it.flatMap { case (cx, cy, cz) =>
         c.sliceAt(cx, cy, cz, qbox).iterator.flatMap { s =>
-          c.fetchChunk(fs, s) match {
-            case None if c.fillMissing => Iterator.empty // all-background
-            case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-            case Some(blob) =>
-              val b = c.decodeChunk(s, blob)
+          c.readChunk(fs, s) match {
+            case None => Iterator.empty // all-background
+            case Some(b) =>
               val cut = s.cutoutBox
               val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
               @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
@@ -1541,7 +1526,7 @@ final class Volume(
       "write start must align with the chunk grid (reference: src/modes/multithreads.jl:45-47)")
     require(buf.nc == meta.numChannels, "channel count mismatch")
     require(buf.dataType == meta.dataType, "dtype mismatch")
-    val c = ctx; val conf = hconf
+    val c = ctx; val conf = confBc
     val bufBc = spark.sparkContext.broadcast(buf)
     /** Encoded bytes for one chunk of the write, read-modify-merged when the
       * write box only partially covers it (so existing data survives). The
@@ -1570,7 +1555,7 @@ final class Volume(
     val written = c.shard match {
       case None =>
         chunkTasks(q).as(taskEnc).mapPartitions({ it =>
-          val fs = ChunkStore.fs(c.root, conf.conf)
+          val fs = ChunkStore.fs(c.root, conf.value.conf)
           val b = bufBc.value
           it.flatMap { case (cx, cy, cz) =>
             c.sliceAt(cx, cy, cz, q).map { s =>
@@ -1588,7 +1573,7 @@ final class Volume(
         chunkTasks(q).as(taskEnc)
           .groupByKey { case (cx, cy, cz) => c.shardCoords(cx, cy, cz) }(taskEnc)
           .mapGroups({ (_: (Int, Int, Int), cells: Iterator[(Int, Int, Int)]) =>
-            val fs = ChunkStore.fs(c.root, conf.conf)
+            val fs = ChunkStore.fs(c.root, conf.value.conf)
             val b = bufBc.value
             var shardKey: String = null
             var inner = Map.empty[Int, Array[Byte]]
@@ -1627,7 +1612,7 @@ final class Volume(
     * sharded layouts concurrent jobs must target disjoint SHARDS, not just
     * disjoint chunks. */
   def fromVoxels(df: DataFrame): Long = {
-    val c = ctx; val conf = hconf
+    val c = ctx; val conf = confBc
     val (csx, csy, csz) = ctx.chunkSize
     val ox = Grid.gridOffset(c.voxelOffset._1, csx)
     val oy = Grid.gridOffset(c.voxelOffset._2, csy)
@@ -1669,7 +1654,7 @@ final class Volume(
         ds.groupByKey { case (cx, cy, cz, _, _, _, _, _, _) => (cx, cy, cz) }(Encoders.product[(Int, Int, Int)])
           .mapGroups((key: (Int, Int, Int), voxels: Iterator[Vox]) => {
             val (cx, cy, cz) = key
-            val fs = ChunkStore.fs(c.root, conf.conf)
+            val fs = ChunkStore.fs(c.root, conf.value.conf)
             // whole-box query so sliceAt clamps to the volume only
             c.sliceAt(cx, cy, cz, c.volumeBox) match {
               case Some(s) =>
@@ -1705,7 +1690,7 @@ final class Volume(
           .groupByKey { case (sx, sy, sz, _, _) => (sx, sy, sz) }(
             Encoders.product[(Int, Int, Int)])
           .mapGroups((sk: (Int, Int, Int), blobs: Iterator[(Int, Int, Int, Int, Array[Byte])]) => {
-            val fs = ChunkStore.fs(c.root, conf.conf)
+            val fs = ChunkStore.fs(c.root, conf.value.conf)
             val (sx, sy, sz) = sk
             val shardKey = c.shardKeyAt(sx, sy, sz)
             var inner = ChunkStore.readOpt(fs, c.root, shardKey)
@@ -1745,7 +1730,7 @@ final class Volume(
     * carried by the listing itself), parse names back to grid coords,
     * bounds-filter to the query's id ranges. */
   private def listedChunkSizes(query: Box, caller: String): Dataset[(Int, Int, Int, Long)] = {
-    val c = ctx; val conf = hconf
+    val c = ctx; val conf = confBc
     require(c.shard.isEmpty,
       s"$caller: sharded stores enumerate via the shard index (one cached GET per shard)")
     implicit val enc4 = Encoders.product[(Int, Int, Int, Long)]
@@ -1757,7 +1742,7 @@ final class Volume(
       PrecomputedScan.maxListingTasks(spark.sparkContext.defaultParallelism)))
     spark.createDataset(globs)(Encoders.STRING).repartition(slots)
       .mapPartitions { git =>
-        val fs = ChunkStore.fs(c.root, conf.conf)
+        val fs = ChunkStore.fs(c.root, conf.value.conf)
         git.flatMap(g => ChunkStore.globRelSizes(fs, c.root, c.scaleKey, g))
           .flatMap { case (rel, len) =>
             c.parseRelKey(rel).map { case (cx, cy, cz) => (cx, cy, cz, len) } }
@@ -1807,7 +1792,7 @@ final class Volume(
     *  (one cached GET per shard, then in-memory lookups per cell), already
     *  O(shard objects) I/O. */
   def missingChunks(query: Box, planning: String = "auto"): Dataset[String] = {
-    val c = ctx; val conf = hconf
+    val c = ctx; val conf = confBc
     implicit val se = Encoders.STRING
     val useListing = planning match {
       case "listing" => true
@@ -1830,7 +1815,7 @@ final class Volume(
     } else
       chunkTasks(query).as(Encoders.product[(Int, Int, Int)])
         .mapPartitions { it =>
-          val fs = ChunkStore.fs(c.root, conf.conf)
+          val fs = ChunkStore.fs(c.root, conf.value.conf)
           // suffix convention resolved once per partition (first hit wins):
           // one existence probe per absent cell, not two
           val prober = new ChunkStore.SuffixProber(fs, c.root)

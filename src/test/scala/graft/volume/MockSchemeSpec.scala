@@ -128,6 +128,40 @@ class MockSchemeSpec extends AnyFunSuite {
     hconf.unset(ChunkStore.RetryBaseMsKey)
   }
 
+  test("a handle keeps the store conf of its first chunk job; a new open sees later changes") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.flaky3a.impl", classOf[FlakyFileSystem].getName)
+    // uncached: each FileSystem instance carries the conf it was opened
+    // with, so the retry policy comes from the handle's conf snapshot
+    hconf.setBoolean("fs.flaky3a.impl.disable.cache", true)
+    hconf.set(ChunkStore.RetryBaseMsKey, "1")
+    hconf.set(ChunkStore.RetryAttemptsKey, "2")
+    try {
+      val root = s"flaky3a:${SparkSuite.tempDir("graft-flaky3a-snap")}"
+      val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
+        Meta.ScaleMeta("1_1_1", (16, 16, 4), "gzip", (1, 1, 1), (32, 32, 4), (0, 0, 0))))
+      val buf = VoxelBuffer.sequenced(Meta.TUInt8, 32, 32, 4, 1, (1, 1, 1))
+      Volume.create(spark, root, meta).ingest(buf)
+      val box = Box(1, 32, 1, 32, 1, 4)
+      val old = Volume.open(spark, root)
+      assert(old.cutout(box) == buf) // first chunk job: conf snapshot, 2 attempts
+
+      hconf.set(ChunkStore.RetryAttemptsKey, "1") // no retries from here on
+      FlakyFaults.remaining.set(1)
+      assert(old.cutout(box) == buf, "the old handle still retries once")
+      assert(FlakyFaults.remaining.get() == 0)
+
+      val fresh = Volume.open(spark, root)
+      FlakyFaults.remaining.set(1)
+      intercept[org.apache.spark.SparkException](fresh.cutout(box))
+      assert(FlakyFaults.remaining.get() == 0, "the new handle's one attempt met the fault")
+    } finally {
+      FlakyFaults.remaining.set(0)
+      Seq("fs.flaky3a.impl.disable.cache", ChunkStore.RetryBaseMsKey, ChunkStore.RetryAttemptsKey)
+        .foreach(hconf.unset)
+    }
+  }
+
   test("sharded zarr v3 over a non-file scheme: ranged GETs through FS dispatch") {
     // the sharded read path is index fetch + ranged read (seek + bounded
     // readFully — a Range GET on cloud connectors); driving it through the

@@ -129,6 +129,85 @@ class VolumeSpec extends AnyFunSuite {
       Option(e.getCause).exists(_.getMessage.contains("no such chunk key")))
   }
 
+  /** Spark jobs started and SQL executions finished while `thunk` runs. */
+  def jobsAndQueries(thunk: => Unit): (Int, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graftshim.shim.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val queries = graft.testutil.PlanProbe.executedPlans(spark)(thunk)
+      (jobs.get(), queries.size)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** The cutout of `b` a store holding exactly `model` must return. */
+  def expectedCutout(model: VoxelBuffer, b: Box): VoxelBuffer = {
+    val e = VoxelBuffer.zeros(model.dataType, b.x.len, b.y.len, b.z.len, model.nc,
+      (b.x.lo, b.y.lo, b.z.lo))
+    val in = b.intersect(model.box)
+    if (!in.isEmpty) e.blit(model, in)
+    e
+  }
+
+  test("a handle ships its store conf once; a cutout is one plain Spark job") {
+    val vol = newVolume()
+    val buf = VoxelBuffer.sequenced(Meta.TUInt8, 200, 200, 10, 1, (1, 1, 1))
+    val before = ChunkStore.confDeserialized.get()
+    vol.ingest(buf)
+    val rng = new scala.util.Random(7)
+    for (_ <- 1 to 20) {
+      val (x0, y0, z0) = (1 + rng.nextInt(160), 1 + rng.nextInt(160), 1 + rng.nextInt(6))
+      val b = Box(x0, x0 + rng.nextInt(40), y0, y0 + rng.nextInt(40), z0, z0 + rng.nextInt(4))
+      assert(vol.cutout(b) == buf.slice(b), b)
+    }
+    assert(vol.toVoxels(Box(1, 200, 1, 200, 1, 10)).count() == 200L * 200 * 10)
+    // local-mode executors read the broadcast from the driver's block
+    // manager: no chunk task deserializes a conf of its own
+    assert(ChunkStore.confDeserialized.get() == before)
+    val b = Box(57, 123, 90, 110, 3, 8)
+    var got: VoxelBuffer = null
+    assert(jobsAndQueries { got = vol.cutout(b) } == ((1, 0)))
+    assert(got == buf.slice(b))
+  }
+
+  test("cutout partitioning edge cases equal a sequenced model byte for byte") {
+    // a 12x3x3 chunk grid: boxes touch 1, 7, 11, 27 and all 108 chunks,
+    // spread unevenly over 2 x defaultParallelism partitions
+    val meta = Meta.VolumeMeta("image", Meta.TUInt16, 1, Vector(
+      Meta.ScaleMeta("1_1_1", (8, 16, 8), "gzip", (1, 1, 1), (96, 48, 24), (0, 0, 0))))
+    val vol = Volume.create(spark, SparkSuite.tempDir("graft-cut-edges"), meta)
+    val model = VoxelBuffer.sequenced(Meta.TUInt16, 96, 48, 24, 1, (1, 1, 1))
+    vol.ingest(model)
+    for ((b, n) <- Seq(
+        Box(3, 6, 20, 30, 10, 15) -> 1,
+        Box(5, 52, 18, 30, 9, 16) -> 7,
+        Box(3, 85, 33, 48, 17, 20) -> 11,
+        Box(7, 20, 10, 40, 2, 23) -> 27,
+        Box(-5, 101, -3, 52, 0, 27) -> 108)) { // straddles both edges on every axis
+      assert(vol.numChunks(b.intersect(model.box)) == n, b)
+      assert(vol.cutout(b) == expectedCutout(model, b), b)
+    }
+    // wholly outside the volume: zeros, without launching a job
+    val outside = Box(97, 120, -10, 0, 1, 10)
+    var got: VoxelBuffer = null
+    assert(jobsAndQueries { got = vol.cutout(outside) } == ((0, 0)))
+    assert(got == expectedCutout(model, outside))
+
+    // zarr stores edge chunks full-size: the padding past the array edge
+    // never reaches a cutout
+    val zarr = graft.sources.Zarr.create(spark, SparkSuite.tempDir("graft-cut-zarr"),
+      shape = (20, 12, 6), chunks = (8, 4, 2), dataType = Meta.TUInt16, encoding = "zlib")
+    val written = VoxelBuffer.sequenced(Meta.TUInt16, 24, 12, 6, 1, (1, 1, 1))
+    zarr.ingest(written)
+    val zmodel = written.slice(Box(1, 20, 1, 12, 1, 6))
+    for (b <- Seq(Box(17, 20, 1, 12, 1, 6), Box(15, 22, 2, 11, 2, 5), Box(-2, 25, 0, 14, 0, 8)))
+      assert(zarr.cutout(b) == expectedCutout(zmodel, b), b)
+  }
+
   test("missingChunks lists expected-minus-stored keys (type.jl:299-328)") {
     val vol = newVolume()
     val buf = VoxelBuffer.sequenced(Meta.TUInt8, 100, 100, 5, 1, (1, 1, 1))
