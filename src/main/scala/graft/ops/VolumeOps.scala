@@ -75,9 +75,10 @@ object VolumeOps {
     * encoding — the re-layout primitive behind chunk-size tuning (small
     * chunks for random cutouts vs large for sequential scans).
     *
-    * Works at CHUNK grain with NO shuffle: one task per destination chunk
-    * reads just the source chunks it overlaps (blob fetch + decode + range
-    * blit), encodes, and writes. Voxels never become rows — a voxel-grain
+    * Works at CHUNK grain as one plain RDD job with no shuffle: a task
+    * builds each destination chunk from just the source chunks it overlaps
+    * (blob fetch + decode + range blit), encodes and writes it; the driver
+    * sums the tasks' counts. Voxels never become rows — a voxel-grain
     * `toVoxels`→`fromVoxels` pass was measured ~20x slower (24-byte rows
     * per source byte through an exchange). Read amplification is bounded
     * by the grid overlap factor (a source chunk is re-read by at most
@@ -90,8 +91,6 @@ object VolumeOps {
     * source-true; chunks wholly outside `box` stay absent. */
   def rechunk(vol: Volume, box: Box, destRoot: String, chunkSize: (Int, Int, Int),
       encoding: Option[String] = None): Long = {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.functions.{coalesce, col, lit, sum => colSum}
     import graft.core.Grid
     import graft.volume.{ChunkStore, VoxelBuffer}
     val srcScale = vol.meta.scales(vol.mip - 1)
@@ -100,8 +99,8 @@ object VolumeOps {
     val dest = Volume.create(vol.spark, destRoot, meta2, 1, vol.fillMissing)
     val sc = vol.ctx; val dc = dest.ctx
     val (sconf, dconf) = (vol.confBc, dest.confBc)
-    val written = dest.chunkTasks(box).as(Encoders.product[(Int, Int, Int)])
-      .mapPartitions({ it =>
+    dest.chunkCells(box).fold(0L) { cells =>
+      val written = cells.mapPartitions { it =>
         val sfs = ChunkStore.fs(sc.root, sconf.value.conf)
         val dfs = ChunkStore.fs(dc.root, dconf.value.conf)
         it.flatMap { case (cx, cy, cz) =>
@@ -136,8 +135,9 @@ object VolumeOps {
             1L
           }
         }
-      })(Encoders.scalaLong)
-    written.toDF("n").agg(coalesce(colSum(col("n")), lit(0L))).head.getLong(0)
+      }
+      vol.spark.sparkContext.runJob(written, (it: Iterator[Long]) => it.sum).sum
+    }
   }
 
   /** Build mips `vol.mip+1 .. topMip` over `box`, each level fed by the

@@ -249,22 +249,6 @@ object ChunkStore {
     else fs.listStatus(dir).toSeq.map(_.getPath.getName).filterNot(_.startsWith("."))
   }
 
-  /** Streaming variant of [[list]] for unbounded-size prefixes: object names
-    * arrive in listing pages (the object-store LIST API shape), never
-    * materialized whole. */
-  def listIterator(fs: FileSystem, root: String, prefix: String): Iterator[String] = {
-    listCalls.incrementAndGet()
-    val dir = if (prefix.isEmpty) new Path(root) else new Path(root, prefix)
-    if (!fs.exists(dir)) Iterator.empty
-    else {
-      val it = fs.listStatusIterator(dir)
-      new Iterator[String] {
-        def hasNext: Boolean = it.hasNext
-        def next(): String = it.next().getPath.getName
-      }.filterNot(_.startsWith("."))
-    }
-  }
-
   /** Object names under `root/prefix` matching a name glob — the sharded
     * LIST: on object stores a leading-literal glob (`3*`) is a bounded
     * prefix enumeration, which is what lets several tasks list one flat

@@ -1,6 +1,7 @@
 package graft.volume
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -351,13 +352,15 @@ final case class VolumeCtx(
   * Scale design notes (100 TB target):
   *  - chunk task sets are generated distributedly from a range of linear
   *    chunk ids (`spark.range` for the DataFrame operators,
-  *    `sparkContext.range` for `cutout`) — no driver-side chunk
-  *    enumeration, so a petavoxel cutout plans in O(1) driver memory;
-  *  - `cutout` materializes on the driver (API parity with the reference's
-  *    `ba[ranges...]`) and is guarded by a size cap — large reads should stay
-  *    distributed via `toVoxels`. It is one plain RDD job (no Catalyst
-  *    planning, no encoder round-trip), so a small cutout costs little more
-  *    than its chunk I/O and decode;
+  *    `sparkContext.range` via `chunkCells` for `cutout`, `ingest` and
+  *    `VolumeOps.rechunk`) — no driver-side chunk enumeration, so a
+  *    petavoxel cutout plans in O(1) driver memory;
+  *  - `cutout`, `ingest` and `rechunk` are each one plain RDD job (no
+  *    Catalyst planning, no encoder round-trip, no shuffle), so a small call
+  *    costs little more than its chunk I/O and codec work. `cutout`
+  *    materializes on the driver (API parity with the reference's
+  *    `ba[ranges...]`) and is guarded by a size cap — large reads should
+  *    stay distributed via `toVoxels`;
   *  - `fromVoxels` shuffles voxels once, by chunk id (the only shuffle in the
   *    write path), then assembles and writes each chunk object in the task.
   *
@@ -416,6 +419,26 @@ final class Volume(
       expr(s"cast(${ids.loz}L + (id div ${ids.nx * ids.ny}L) as int)").as("cz"))
   }
 
+  /** The grid cells a box touches inside the volume as an RDD of chunk
+    * coords (with `perShard`: of the shards holding them) — the task source
+    * of `cutout`, `ingest` and `VolumeOps.rechunk`. Ids come from
+    * `sparkContext.range` in `min(total, 2 × defaultParallelism)` partitions,
+    * so nothing is enumerated on the driver; None (no job) when the box
+    * misses the volume. */
+  private[graft] def chunkCells(query: Box, perShard: Boolean = false): Option[RDD[(Int, Int, Int)]] = {
+    val inVolume = query.intersect(ctx.volumeBox)
+    if (inVolume.isEmpty) return None
+    val cells = Grid.idRanges(inVolume, ctx.chunkSize, ctx.voxelOffset)
+    val ids = if (!perShard) cells else {
+      val (lx, ly, lz) = ctx.shardCoords(cells.lox, cells.loy, cells.loz)
+      val (hx, hy, hz) = ctx.shardCoords(cells.hix, cells.hiy, cells.hiz)
+      Grid.IdRanges(lx, hx, ly, hy, lz, hz)
+    }
+    val sc = spark.sparkContext
+    val parts = math.max(1, math.min(ids.total, sc.defaultParallelism * 2L)).toInt
+    Some(sc.range(0L, ids.total, 1, parts).map(ids.coords))
+  }
+
   /** N-d range read: the reference's `ba[x0:x1, y0:y1, z0:z1]`
     * (reference: src/type.jl:212-223). Returns a zero-initialized buffer
     * anchored at the query origin; out-of-volume / missing chunks stay zero.
@@ -436,23 +459,17 @@ final class Volume(
       s"cutout of $bytesNeeded bytes exceeds cap $maxBytes; use toVoxels for distributed processing")
     val out = VoxelBuffer.zeros(meta.dataType, query.x.len, query.y.len, query.z.len,
       meta.numChannels, (query.x.lo, query.y.lo, query.z.lo))
-    // chunks off the volume hold nothing (sliceAt skips them), so the id
-    // range is taken over the in-volume part of the box
-    val inVolume = query.intersect(ctx.volumeBox)
-    if (inVolume.isEmpty) return out
     val c = ctx; val conf = confBc
-    val ids = Grid.idRanges(inVolume, c.chunkSize, c.voxelOffset)
-    val sc = spark.sparkContext
-    val parts = math.max(1, math.min(ids.total, sc.defaultParallelism * 2L)).toInt
-    val pieces = sc.range(0L, ids.total, 1, parts).mapPartitions { linearIds =>
-      val fs = ChunkStore.fs(c.root, conf.value.conf)
-      linearIds.flatMap { id =>
-        val (cx, cy, cz) = ids.coords(id)
-        c.sliceAt(cx, cy, cz, query).flatMap(s => c.readChunk(fs, s).map(_.slice(s.cutoutBox)))
+    for (cells <- chunkCells(query)) {
+      val pieces = cells.mapPartitions { it =>
+        val fs = ChunkStore.fs(c.root, conf.value.conf)
+        it.flatMap { case (cx, cy, cz) =>
+          c.sliceAt(cx, cy, cz, query).flatMap(s => c.readChunk(fs, s).map(_.slice(s.cutoutBox)))
+        }
       }
+      spark.sparkContext.runJob(pieces, (it: Iterator[VoxelBuffer]) => it.toArray,
+        (_: Int, ps: Array[VoxelBuffer]) => ps.foreach(p => out.blit(p, p.box)))
     }
-    sc.runJob(pieces, (it: Iterator[VoxelBuffer]) => it.toArray,
-      (_: Int, ps: Array[VoxelBuffer]) => ps.foreach(p => out.blit(p, p.box)))
     out
   }
 
@@ -1502,8 +1519,10 @@ final class Volume(
     * (reference: src/type.jl:137-150). Enforces chunk-aligned write starts
     * like the reference (src/modes/multithreads.jl:45-47: alignment uses the
     * raw voxel offset), clamps at the volume boundary, slices/encodes/puts
-    * one object per chunk. The buffer ships to executors via broadcast —
-    * fine for cutout-sized writes; use `fromVoxels` for bulk loads.
+    * one object per chunk in one RDD job without a shuffle (sharded: a task
+    * owns whole shards); a buffer wholly outside the volume launches none.
+    * The buffer ships to executors via broadcast — fine for cutout-sized
+    * writes; use `fromVoxels` for bulk loads.
     *
     * Concurrency contract (this and `fromVoxels`): writes are
     * last-PUT-wins per stored OBJECT, with no cross-job coordination —
@@ -1527,7 +1546,6 @@ final class Volume(
     require(buf.nc == meta.numChannels, "channel count mismatch")
     require(buf.dataType == meta.dataType, "dtype mismatch")
     val c = ctx; val conf = confBc
-    val bufBc = spark.sparkContext.broadcast(buf)
     /** Encoded bytes for one chunk of the write, read-modify-merged when the
       * write box only partially covers it (so existing data survives). The
       * stored blob must always cover the chunk box — that's the shape the
@@ -1551,57 +1569,49 @@ final class Volume(
         }
       c.encodeChunk(chunkBuf)
     }
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val written = c.shard match {
-      case None =>
-        chunkTasks(q).as(taskEnc).mapPartitions({ it =>
-          val fs = ChunkStore.fs(c.root, conf.value.conf)
-          val b = bufBc.value
-          it.flatMap { case (cx, cy, cz) =>
+    for (cells <- chunkCells(q, perShard = c.shard.isDefined)) {
+      val bufBc = spark.sparkContext.broadcast(buf)
+      val written = cells.mapPartitions { it =>
+        val fs = ChunkStore.fs(c.root, conf.value.conf)
+        val b = bufBc.value
+        c.shard match {
+          case None => it.flatMap { case (cx, cy, cz) =>
             c.sliceAt(cx, cy, cz, q).map { s =>
-              ChunkStore.write(fs, c.root, c.keyOf(s),
-                encodeCovered(b, s, c.fetchChunk(fs, s)))
+              ChunkStore.write(fs, c.root, c.keyOf(s), encodeCovered(b, s, c.fetchChunk(fs, s)))
               1
             }
           }
-        })(Encoders.scalaInt)
-      case Some(p) =>
-        // sharded: ALL inner chunks of one shard object must be written
-        // together (per-cell writes would clobber each other), so tasks
-        // group by shard key — one assembled PUT per shard, inner cells
-        // untouched by the write preserved from the existing object
-        chunkTasks(q).as(taskEnc)
-          .groupByKey { case (cx, cy, cz) => c.shardCoords(cx, cy, cz) }(taskEnc)
-          .mapGroups({ (_: (Int, Int, Int), cells: Iterator[(Int, Int, Int)]) =>
-            val fs = ChunkStore.fs(c.root, conf.value.conf)
-            val b = bufBc.value
-            var shardKey: String = null
-            var inner = Map.empty[Int, Array[Byte]]
-            var loadedExisting = false
-            var n = 0
-            cells.foreach { case (cx, cy, cz) =>
-              c.sliceAt(cx, cy, cz, q).foreach { s =>
-                if (!loadedExisting) {
-                  shardKey = c.shardKeyOf(s)
-                  inner = ChunkStore.readOpt(fs, c.root, shardKey)
-                    .map(graft.core.Shard.parseAll(p, _)).getOrElse(Map.empty)
-                  loadedExisting = true
-                }
-                val (wx, wy, wz) = c.innerCoords(s)
-                val cell = p.linear(wx, wy, wz)
-                inner += (cell -> encodeCovered(b, s, inner.get(cell)))
-                n += 1
-              }
+          // sharded: ALL inner chunks of one shard object must be written
+          // together (per-cell writes would clobber each other), so a task
+          // owns whole shards — one read and one assembled PUT per shard,
+          // inner cells untouched by the write preserved from the existing
+          // object. Every shard in the range holds a cell of the clipped box.
+          case Some(p) => it.map { case (sx, sy, sz) =>
+            val slices = for {
+              cz <- sz * p.gz + 1 to (sz + 1) * p.gz
+              cy <- sy * p.gy + 1 to (sy + 1) * p.gy
+              cx <- sx * p.gx + 1 to (sx + 1) * p.gx
+              s <- c.sliceAt(cx, cy, cz, q)
+            } yield s
+            val shardKey = c.shardKeyAt(sx, sy, sz)
+            val existing = ChunkStore.readOpt(fs, c.root, shardKey)
+              .map(graft.core.Shard.parseAll(p, _)).getOrElse(Map.empty[Int, Array[Byte]])
+            val inner = existing ++ slices.map { s =>
+              val (wx, wy, wz) = c.innerCoords(s)
+              val cell = p.linear(wx, wy, wz)
+              cell -> encodeCovered(b, s, existing.get(cell))
             }
-            if (shardKey != null) {
-              ChunkStore.write(fs, c.root, shardKey, graft.core.Shard.build(p, inner))
-              graft.core.Shard.invalidate(c.root, shardKey)
-            }
-            n
-          })(Encoders.scalaInt)
+            ChunkStore.write(fs, c.root, shardKey, graft.core.Shard.build(p, inner))
+            graft.core.Shard.invalidate(c.root, shardKey)
+            slices.size
+          }
+        }
+      }
+      // destroy even when the job fails: the driver's block manager holds
+      // the whole buffer until then
+      try spark.sparkContext.runJob(written, (it: Iterator[Int]) => it.sum)
+      finally bufBc.destroy()
     }
-    written.toDF("n").agg(coalesce(sum(col("n")), lit(0L))).head // force the job
-    bufBc.destroy()
   }
 
   /** Bulk distributed ingest from a voxel DataFrame `(x, y, z[, c], value)`.

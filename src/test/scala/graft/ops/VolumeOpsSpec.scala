@@ -190,6 +190,33 @@ class VolumeOpsSpec extends AnyFunSuite {
       assert(out.getLong(x, y, z) == buf.getLong(x, y, z), s"spill ($x,$y,$z)")
   }
 
+  test("rechunk is one plain Spark job; a box outside the volume launches none") {
+    import graft.testutil.PlanProbe.jobsAndQueries
+    val meta = Meta.VolumeMeta("image", Meta.TUInt16, 1, Vector(
+      Meta.ScaleMeta("1_1_1", (100, 100, 5), "gzip", (1, 1, 1), (200, 200, 10), (0, 0, 0))))
+    val vol = Volume.create(spark, SparkSuite.tempDir("graft-rckj-src"), meta)
+    val buf = VoxelBuffer.sequenced(Meta.TUInt16, 200, 200, 10, 1, (1, 1, 1))
+    vol.ingest(buf)
+    val before = graft.volume.ChunkStore.confDeserialized.get()
+    var written = -1L
+    for ((box, cs, n) <- Seq(
+        (Box(1, 200, 1, 200, 1, 10), (64, 64, 8), 32L),
+        (Box(30, 170, 1, 200, 4, 7), (128, 32, 4), 2L * 7 * 2))) {
+      val destRoot = SparkSuite.tempDir("graft-rckj-dst")
+      assert(jobsAndQueries(spark) { written = VolumeOps.rechunk(vol, box, destRoot, cs) } == ((1, 0)))
+      assert(written == n)
+      assert(Volume.open(spark, destRoot).cutout(box) == buf.slice(box))
+    }
+    val destRoot = SparkSuite.tempDir("graft-rckj-out")
+    assert(jobsAndQueries(spark) {
+      written = VolumeOps.rechunk(vol, Box(201, 300, 1, 10, 1, 10), destRoot, (64, 64, 8))
+    } == ((0, 0)))
+    assert(written == 0L)
+    assert(new java.io.File(destRoot).list().toSeq == Seq("info"))
+    // source and destination handles ship their store confs as broadcasts
+    assert(graft.volume.ChunkStore.confDeserialized.get() == before)
+  }
+
   test("a19 mip audit localizes the planted corruption to its z range") {
     val rows = ArrayOps.a19_mip_audit(spark, "/root/testdata/sf0.001").collect()
       .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap

@@ -146,6 +146,25 @@ class Zarr3ShardSpec extends AnyFunSuite {
     assert(after.getLong(8, 8, 5, 0) == buf.getLong(8, 8, 5, 0))
   }
 
+  test("ingests into disjoint inner cells of one shard both survive") {
+    val root = SparkSuite.tempDir("graft-z3shard-disjoint")
+    val vol = Zarr3.createSharded(spark, root, shape = (16, 8, 4),
+      shardShape = (8, 8, 4), innerChunks = (4, 4, 2),
+      dataType = Meta.TUInt16, encoding = "gzip")
+    val model = VoxelBuffer.zeros(Meta.TUInt16, 16, 8, 4, 1, (1, 1, 1))
+    for (b <- Seq(
+        VoxelBuffer.sequenced(Meta.TUInt16, 4, 4, 2, 1, (1, 1, 1)), // cell (0,0,0) of shard 0
+        VoxelBuffer.sequenced(Meta.TUInt16, 3, 4, 4, 1, (5, 5, 1)), // cells (1,1,0..1), partly
+        VoxelBuffer.sequenced(Meta.TUInt16, 8, 4, 2, 1, (5, 1, 3)))) { // spans shards 0 and 1
+      vol.ingest(b)
+      model.blit(b, b.box)
+      assert(Zarr3.open(spark, root).cutout(model.box) == model, b.box)
+    }
+    def files(p: java.io.File): Seq[java.io.File] =
+      if (p.isDirectory) p.listFiles().toSeq.flatMap(files) else Seq(p)
+    assert(files(new java.io.File(root, "c")).length == 2)
+  }
+
   test("partial-coverage sharded read costs one index + one GET per touched cell, never the shard") {
     import scala.jdk.CollectionConverters._
     // the petavoxel-layout read-amplification contract at scale shape: a

@@ -46,6 +46,21 @@ object PlanProbe {
     plans.asScala.toList
   }
 
+  /** Spark jobs started and SQL executions finished while `thunk` runs. */
+  def jobsAndQueries(spark: SparkSession)(thunk: => Unit): (Int, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    shim.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val queries = executedPlans(spark)(thunk)
+      (jobs.get(), queries.size)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   /** FileSourceScan nodes over `table` (path substring) in one plan,
     * descending into adaptive plans and materialized query stages.
     * ReusedExchange / reused-stage references are leaves here and are NOT

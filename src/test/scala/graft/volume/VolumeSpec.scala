@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{Grid, Meta}
 import graft.core.Grid.Box
-import graft.testutil.SparkSuite
+import graft.testutil.{PlanProbe, SparkSuite}
 
 /** End-to-end roundtrip oracle tests, porting the reference's own test
   * scenarios (reference: test/BinDicts.jl) onto the Spark-native engine. */
@@ -129,20 +129,7 @@ class VolumeSpec extends AnyFunSuite {
       Option(e.getCause).exists(_.getMessage.contains("no such chunk key")))
   }
 
-  /** Spark jobs started and SQL executions finished while `thunk` runs. */
-  def jobsAndQueries(thunk: => Unit): (Int, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.sql.graftshim.shim.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val queries = graft.testutil.PlanProbe.executedPlans(spark)(thunk)
-      (jobs.get(), queries.size)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  def jobsAndQueries(thunk: => Unit): (Int, Int) = PlanProbe.jobsAndQueries(spark)(thunk)
 
   /** The cutout of `b` a store holding exactly `model` must return. */
   def expectedCutout(model: VoxelBuffer, b: Box): VoxelBuffer = {
@@ -206,6 +193,98 @@ class VolumeSpec extends AnyFunSuite {
     val zmodel = written.slice(Box(1, 20, 1, 12, 1, 6))
     for (b <- Seq(Box(17, 20, 1, 12, 1, 6), Box(15, 22, 2, 11, 2, 5), Box(-2, 25, 0, 14, 0, 8)))
       assert(zarr.cutout(b) == expectedCutout(zmodel, b), b)
+  }
+
+  /** A buffer at `origin` whose values differ from `sequenced` there, so a
+    * write over sequenced data is visible voxel by voxel. */
+  def overwrite(t: Meta.VoxelType, sx: Int, sy: Int, sz: Int, origin: (Int, Int, Int)): VoxelBuffer =
+    new VoxelBuffer(t, sx, sy, sz, 1, origin, VoxelBuffer.sequenced(t, sx, sy, sz, 1,
+      (origin._1 + 1000, origin._2, origin._3)).bytes)
+
+  def storedObjects(root: String): Set[String] = {
+    def walk(f: java.io.File): Seq[String] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f.getPath)
+    walk(new java.io.File(root)).toSet
+  }
+
+  test("an ingest is one plain Spark job; one wholly outside the volume launches none") {
+    val vol = newVolume()
+    val model = VoxelBuffer.sequenced(Meta.TUInt8, 200, 200, 10, 1, (1, 1, 1))
+    vol.ingest(model)
+    val before = ChunkStore.confDeserialized.get()
+    // 2x2x2 chunks, all but one partly covered: each read, merged and put
+    val patch = overwrite(Meta.TUInt8, 150, 130, 7, (1, 1, 1))
+    assert(jobsAndQueries { vol.ingest(patch) } == ((1, 0)))
+    model.blit(patch, patch.box)
+    assert(vol.cutout(model.box) == model)
+    // the volume ends at x = 210
+    val objects = storedObjects(vol.root)
+    val outside = VoxelBuffer.sequenced(Meta.TUInt8, 100, 100, 5, 1, (301, 1, 1))
+    assert(jobsAndQueries { vol.ingest(outside) } == ((0, 0)))
+    assert(storedObjects(vol.root) == objects)
+    assert(ChunkStore.confDeserialized.get() == before)
+  }
+
+  test("a failed ingest still frees its broadcast buffer") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import org.apache.spark.graftshim.BlockProbe
+    val vol = newVolume()
+    vol.ingest(VoxelBuffer.sequenced(Meta.TUInt8, 100, 100, 5, 1, (1, 1, 1)))
+    val f = new java.io.File(vol.root, "6_6_30/0-100_0-100_0-5")
+    val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+    java.nio.file.Files.write(f.toPath, bytes.take(bytes.length / 2))
+    // the probe sees a live broadcast of a buffer
+    val control = VoxelBuffer.zeros(Meta.TUInt8, 1, 1, 1, 1, (1, 1, 1))
+    val controlBc = spark.sparkContext.broadcast(control)
+    assert(BlockProbe.broadcastsHolding(control) == Set(controlBc.id))
+    controlBc.destroy()
+    // a partial write must read-merge the truncated chunk, so its task fails
+    val patch = overwrite(Meta.TUInt8, 50, 50, 5, (1, 1, 1))
+    intercept[org.apache.spark.SparkException](vol.ingest(patch))
+    eventually(timeout(10.seconds), interval(50.millis)) {
+      assert(BlockProbe.broadcastsHolding(patch).isEmpty)
+    }
+  }
+
+  test("ingest edge cases equal a sequenced model byte for byte") {
+    // the cutout edge-case grid: 12x3x3 chunks of 8x16x8 voxels
+    val meta = Meta.VolumeMeta("image", Meta.TUInt16, 1, Vector(
+      Meta.ScaleMeta("1_1_1", (8, 16, 8), "gzip", (1, 1, 1), (96, 48, 24), (0, 0, 0))))
+    val vol = Volume.create(spark, SparkSuite.tempDir("graft-ingest-edges"), meta)
+    val model = VoxelBuffer.zeros(Meta.TUInt16, 96, 48, 24, 1, (1, 1, 1))
+    for (b <- Seq(
+        // all 108 chunks, spread unevenly over 2 x defaultParallelism partitions
+        VoxelBuffer.sequenced(Meta.TUInt16, 96, 48, 24, 1, (1, 1, 1)),
+        // inside one chunk: read-merge-write keeps the chunk's other voxels
+        overwrite(Meta.TUInt16, 5, 7, 3, (9, 17, 9)),
+        // 6 x 2 x 3 = 36 chunks, most of them partly covered
+        overwrite(Meta.TUInt16, 43, 20, 19, (17, 1, 1)),
+        // straddles the volume's upper edge on every axis: clamped
+        overwrite(Meta.TUInt16, 20, 30, 15, (89, 33, 17)))) {
+      vol.ingest(b)
+      model.blit(b, b.box.intersect(model.box))
+      assert(vol.cutout(model.box) == model, b.box)
+    }
+    // no object past the volume's edge; edge chunks stored clamped
+    val keys = new java.io.File(vol.root, "1_1_1").list().toSeq
+    assert(keys.size == 108)
+    assert(keys.forall(k => Grid.parseKey(k).exists(kb => kb.intersect(model.box) == kb)), keys)
+
+    // zarr stores edge chunks full-size: a clamped write pads them
+    val zarr = graft.sources.Zarr.create(spark, SparkSuite.tempDir("graft-ingest-zarr"),
+      shape = (20, 12, 6), chunks = (8, 4, 2), dataType = Meta.TUInt16, encoding = "zlib")
+    val zmodel = VoxelBuffer.zeros(Meta.TUInt16, 20, 12, 6, 1, (1, 1, 1))
+    for (b <- Seq(
+        VoxelBuffer.sequenced(Meta.TUInt16, 20, 12, 6, 1, (1, 1, 1)),
+        overwrite(Meta.TUInt16, 5, 3, 1, (9, 5, 3)),
+        overwrite(Meta.TUInt16, 7, 5, 3, (17, 9, 5)))) { // partly covers padded edge chunks
+      zarr.ingest(b)
+      zmodel.blit(b, b.box.intersect(zmodel.box))
+      assert(zarr.cutout(zmodel.box) == zmodel, b.box)
+    }
+    val edge = java.nio.file.Files.readAllBytes(new java.io.File(zarr.root, "2.2.2").toPath)
+    assert(zarr.ctx.codec.decode(edge).length == 8 * 4 * 2 * 2)
   }
 
   test("missingChunks lists expected-minus-stored keys (type.jl:299-328)") {
