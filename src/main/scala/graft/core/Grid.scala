@@ -68,6 +68,8 @@ object Grid {
     /** Decompose a linear id in [0, total) into grid coords (x fastest). */
     def coords(id: Long): (Int, Int, Int) =
       ((lox + id % nx).toInt, (loy + (id / nx) % ny).toInt, (loz + id / (nx * ny)).toInt)
+    /** The linear id of grid coords: the inverse of [[coords]]. */
+    def id(cx: Int, cy: Int, cz: Int): Long = (cx - lox) + nx * ((cy - loy) + ny * (cz - loz))
   }
 
   def idRanges(query: Box, chunkSize: (Int, Int, Int), offset: (Int, Int, Int)): IdRanges = {

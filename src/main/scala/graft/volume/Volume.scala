@@ -113,6 +113,18 @@ final case class VolumeCtx(
     shardKeyAt(sx, sy, sz)
   }
 
+  /** Read-modify-write of the shard object at shard-grid coords: `update`
+    * maps its existing inner blobs (by linear cell) to the cells to
+    * replace; the others are kept. Drops the shard's cached index. */
+  def rewriteShard(fs: org.apache.hadoop.fs.FileSystem, sx: Int, sy: Int, sz: Int)(
+      update: Map[Int, Array[Byte]] => Map[Int, Array[Byte]]): Unit = {
+    val p = shard.get; val key = shardKeyAt(sx, sy, sz)
+    val existing = ChunkStore.readOpt(fs, root, key)
+      .map(graft.core.Shard.parseAll(p, _)).getOrElse(Map.empty[Int, Array[Byte]])
+    ChunkStore.write(fs, root, key, graft.core.Shard.build(p, existing ++ update(existing)))
+    graft.core.Shard.invalidate(root, key)
+  }
+
   /** Cell coords of an inner chunk within its shard. */
   def innerCoords(slice: ChunkSlice): (Int, Int, Int) = {
     val p = shard.get
@@ -361,8 +373,11 @@ final case class VolumeCtx(
   *    materializes on the driver (API parity with the reference's
   *    `ba[ranges...]`) and is guarded by a size cap — large reads should
   *    stay distributed via `toVoxels`;
-  *  - `fromVoxels` shuffles voxels once, by chunk id (the only shuffle in the
-  *    write path), then assembles and writes each chunk object in the task.
+  *  - `fromVoxels` is one plain RDD job too, run under one SQL execution of
+  *    its input plan: map tasks fold voxel rows into partial chunks with
+  *    Spark's spilling combiner, and the only shuffle in the write path
+  *    moves those partials, not a row per voxel, to the task that merges,
+  *    encodes and writes each chunk object.
   *
   * Store conf: a handle snapshots its Hadoop store conf — connector settings
   * and the `graft.store.retry.*` policy included — at its first chunk job
@@ -1593,16 +1608,11 @@ final class Volume(
               cx <- sx * p.gx + 1 to (sx + 1) * p.gx
               s <- c.sliceAt(cx, cy, cz, q)
             } yield s
-            val shardKey = c.shardKeyAt(sx, sy, sz)
-            val existing = ChunkStore.readOpt(fs, c.root, shardKey)
-              .map(graft.core.Shard.parseAll(p, _)).getOrElse(Map.empty[Int, Array[Byte]])
-            val inner = existing ++ slices.map { s =>
+            c.rewriteShard(fs, sx, sy, sz)(existing => slices.map { s =>
               val (wx, wy, wz) = c.innerCoords(s)
               val cell = p.linear(wx, wy, wz)
               cell -> encodeCovered(b, s, existing.get(cell))
-            }
-            ChunkStore.write(fs, c.root, shardKey, graft.core.Shard.build(p, inner))
-            graft.core.Shard.invalidate(c.root, shardKey)
+            }.toMap)
             slices.size
           }
         }
@@ -1614,110 +1624,71 @@ final class Volume(
     }
   }
 
-  /** Bulk distributed ingest from a voxel DataFrame `(x, y, z[, c], value)`.
-    * One shuffle (by chunk id), then per-chunk assembly + encode + put.
-    * Whole chunks are written: voxels absent from the input within a touched
-    * chunk become zero. Values outside the volume box are dropped (boundary
-    * clamp). Same single-writer-per-object contract as [[ingest]]: for
-    * sharded layouts concurrent jobs must target disjoint SHARDS, not just
-    * disjoint chunks. */
+  /** Bulk distributed ingest from a voxel DataFrame `(x, y, z[, c], value)`:
+    * one Spark job under one SQL execution of the input plan. Map tasks fold
+    * rows into partial chunks ([[Volume.PartialChunks]]) in Spark's spilling
+    * combiner; reduce tasks merge, encode and put each chunk (sharded: sorted
+    * by shard, each shard rewritten once), so voxels absent from the input
+    * read zero. Values outside the volume are dropped; a bad channel or value
+    * fails with an `IllegalArgumentException` naming the voxel. Same contract
+    * as [[ingest]]: sharded concurrent jobs must target disjoint SHARDS. */
   def fromVoxels(df: DataFrame): Long = {
-    val c = ctx; val conf = confBc
-    val (csx, csy, csz) = ctx.chunkSize
-    val ox = Grid.gridOffset(c.voxelOffset._1, csx)
-    val oy = Grid.gridOffset(c.voxelOffset._2, csy)
-    val oz = Grid.gridOffset(c.voxelOffset._3, csz)
-    val withC = if (df.columns.contains("c")) df else df.withColumn("c", lit(0))
+    require(mrc.isEmpty, "mrc: read-only through the chunk engine — " +
+      "export with graft.sources.Mrc.write")
+    val c = ctx; val conf = confBc; val t = meta.dataType; val nc = meta.numChannels
+    val (csx, csy, csz) = c.chunkSize
+    val (ox, oy, oz) = (Grid.gridOffset(c.voxelOffset._1, csx),
+      Grid.gridOffset(c.voxelOffset._2, csy), Grid.gridOffset(c.voxelOffset._3, csz))
     val vb = c.volumeBox
-    val isFloat = meta.dataType == Meta.TFloat32 || meta.dataType == Meta.TFloat64
-    // transport: Long for integer types, Double for float types (f32→f64 is
-    // exact). Avoids any UDF in the shuffled projection.
-    val vLong = Volume.valueAsLong(meta.dataType, col("value"))
-    val vDbl = if (isFloat) col("value").cast(DoubleType) else lit(0.0)
-    val prepared = withC
+    val ids = Grid.idRanges(vb, c.chunkSize, c.voxelOffset) // chunks are keyed by linear id
+    val prepared = (if (df.columns.contains("c")) df else df.withColumn("c", lit(0)))
       .filter(col("x").between(vb.x.lo, vb.x.hi) && col("y").between(vb.y.lo, vb.y.hi) &&
         col("z").between(vb.z.lo, vb.z.hi))
-      .select(
-        floor((col("x") - 1 - ox) / csx).cast(IntegerType).plus(1).as("cx"),
-        floor((col("y") - 1 - oy) / csy).cast(IntegerType).plus(1).as("cy"),
-        floor((col("z") - 1 - oz) / csz).cast(IntegerType).plus(1).as("cz"),
-        col("x").cast(IntegerType), col("y").cast(IntegerType), col("z").cast(IntegerType),
-        col("c").cast(IntegerType), vLong.as("vl"), vDbl.as("vd"))
-    implicit val enc = Encoders.product[(Int, Int, Int, Int, Int, Int, Int, Long, Double)]
-    type Vox = (Int, Int, Int, Int, Int, Int, Int, Long, Double)
-    /** Assemble one whole chunk from its voxels (absent voxels = zero). */
-    def assemble(s: Grid.ChunkSlice, voxels: Iterator[Vox]): VoxelBuffer = {
-      val b = s.chunkBox
-      val chunkBuf = VoxelBuffer.zeros(c.dataType, b.x.len, b.y.len, b.z.len,
-        c.numChannels, (b.x.lo, b.y.lo, b.z.lo))
-      voxels.foreach { case (_, _, _, x, y, z, ch, vl, vd) =>
-        if (b.x.contains(x) && b.y.contains(y) && b.z.contains(z)) {
-          if (isFloat) chunkBuf.setDouble(x - b.x.lo, y - b.y.lo, z - b.z.lo, ch, vd)
-          else chunkBuf.setLong(x - b.x.lo, y - b.y.lo, z - b.z.lo, ch, vl)
+      .select(col("x").cast(IntegerType), col("y").cast(IntegerType), col("z").cast(IntegerType),
+        col("c").cast(IntegerType), Volume.valueTransport(t, col("value")))
+    val shardOf = (id: Long) => { val (cx, cy, cz) = ids.coords(id); c.shardCoords(cx, cy, cz) }
+    val qe = prepared.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("fromVoxels")) {
+      val voxels = qe.toRdd.map { r =>
+        val bits = Volume.voxelBits(t, nc, r)
+        val x = r.getInt(0) - 1 - ox; val y = r.getInt(1) - 1 - oy; val z = r.getInt(2) - 1 - oz
+        (ids.id(Math.floorDiv(x, csx) + 1, Math.floorDiv(y, csy) + 1, Math.floorDiv(z, csz) + 1),
+          (Grid.flatIndex(Math.floorMod(x, csx), Math.floorMod(y, csy), Math.floorMod(z, csz),
+            r.getInt(3), csx, csy, csz), bits))
+      }
+      // a chunk's write unit is the chunk itself, or its shard
+      val units = new org.apache.spark.HashPartitioner(math.max(1, voxels.getNumPartitions)) {
+        override def getPartition(id: Any): Int =
+          super.getPartition(if (c.shard.isEmpty) id else shardOf(id.asInstanceOf[Long]))
+      }
+      val pc = new Volume.PartialChunks(t, csx * csy * csz * nc)
+      val merged = new org.apache.spark.rdd.ShuffledRDD[Long, (Int, Long), Array[Byte]](voxels, units)
+        .setAggregator(org.apache.spark.Aggregator[Long, (Int, Long), Array[Byte]](pc.one, pc.add, pc.merge))
+        .setMapSideCombine(true)
+      if (c.shard.isDefined) merged.setKeyOrdering(Ordering.by((id: Long) => (shardOf(id), id)))
+      val written = merged.mapPartitions { it =>
+        val fs = ChunkStore.fs(c.root, conf.value.conf)
+        val chunks = it.map { case (id, part) =>
+          val (cx, cy, cz) = ids.coords(id)
+          val s = c.sliceAt(cx, cy, cz, vb).get; val cb = s.chunkBox
+          val cell = new VoxelBuffer(t, csx, csy, csz, nc, (cb.x.lo, cb.y.lo, cb.z.lo), pc.bytes(part))
+          (id, s, c.encodeChunk(if (cell.box == cb) cell else cell.slice(cb)))
+        }.buffered
+        c.shard match {
+          case None => chunks.map { case (_, s, blob) => ChunkStore.write(fs, c.root, c.keyOf(s), blob); 1L }
+          case Some(p) => Iterator.continually(chunks).takeWhile(_.hasNext).map { _ =>
+            val (sx, sy, sz) = shardOf(chunks.head._1)
+            val cells = Iterator.continually(chunks)
+              .takeWhile(ch => ch.hasNext && shardOf(ch.head._1) == ((sx, sy, sz))).map(_.next())
+              .map { case (_, s, blob) => val (wx, wy, wz) = c.innerCoords(s); p.linear(wx, wy, wz) -> blob }
+              .toMap
+            c.rewriteShard(fs, sx, sy, sz)(_ => cells)
+            cells.size.toLong
+          }
         }
       }
-      chunkBuf
+      spark.sparkContext.runJob(written, (it: Iterator[Long]) => it.sum).sum
     }
-    val ds = prepared.as[Vox]
-    val results = c.shard match {
-      case None =>
-        ds.groupByKey { case (cx, cy, cz, _, _, _, _, _, _) => (cx, cy, cz) }(Encoders.product[(Int, Int, Int)])
-          .mapGroups((key: (Int, Int, Int), voxels: Iterator[Vox]) => {
-            val (cx, cy, cz) = key
-            val fs = ChunkStore.fs(c.root, conf.value.conf)
-            // whole-box query so sliceAt clamps to the volume only
-            c.sliceAt(cx, cy, cz, c.volumeBox) match {
-              case Some(s) =>
-                ChunkStore.write(fs, c.root, c.keyOf(s), c.encodeChunk(assemble(s, voxels)))
-                1L
-              case None => 0L
-            }
-          })(Encoders.scalaLong)
-      case Some(p) =>
-        // sharded: the storage unit is the SHARD object (a chunk-grain
-        // write would have concurrent tasks clobbering one object), but
-        // buffering a whole shard's VOXELS in one task would not survive
-        // production shard sizes. Two stages instead: (1) chunk-grain
-        // groups stream their voxels into encoded inner-chunk blobs —
-        // bounded by ONE chunk buffer per task, same memory contract as
-        // the per-chunk path; (2) shard-grain groups compose the
-        // (compressed, shard-object-sized) blobs and rewrite each shard
-        // once, cells outside the input preserved from the existing
-        // object.
-        implicit val blobEnc = Encoders.product[(Int, Int, Int, Int, Array[Byte])]
-        val encoded = ds
-          .groupByKey { case (cx, cy, cz, _, _, _, _, _, _) => (cx, cy, cz) }(
-            Encoders.product[(Int, Int, Int)])
-          .flatMapGroups((key: (Int, Int, Int), voxels: Iterator[Vox]) => {
-            val (cx, cy, cz) = key
-            c.sliceAt(cx, cy, cz, c.volumeBox).map { s =>
-              val (sx, sy, sz) = c.shardCoords(cx, cy, cz)
-              val (wx, wy, wz) = c.innerCoords(s)
-              (sx, sy, sz, p.linear(wx, wy, wz), c.encodeChunk(assemble(s, voxels)))
-            }.iterator
-          })
-        encoded
-          .groupByKey { case (sx, sy, sz, _, _) => (sx, sy, sz) }(
-            Encoders.product[(Int, Int, Int)])
-          .mapGroups((sk: (Int, Int, Int), blobs: Iterator[(Int, Int, Int, Int, Array[Byte])]) => {
-            val fs = ChunkStore.fs(c.root, conf.value.conf)
-            val (sx, sy, sz) = sk
-            val shardKey = c.shardKeyAt(sx, sy, sz)
-            var inner = ChunkStore.readOpt(fs, c.root, shardKey)
-              .map(graft.core.Shard.parseAll(p, _)).getOrElse(Map.empty)
-            var n = 0L
-            blobs.foreach { case (_, _, _, cell, bytes) =>
-              inner += (cell -> bytes); n += 1
-            }
-            ChunkStore.write(fs, c.root, shardKey, graft.core.Shard.build(p, inner))
-            graft.core.Shard.invalidate(c.root, shardKey)
-            n
-          })(Encoders.scalaLong)
-    }
-    // empty-safe sum (reduce throws on an empty Dataset — e.g. every voxel
-    // filtered out by the volume-box bounds)
-    val total = results.toDF("n").agg(coalesce(sum(col("n")), lit(0L))).head.getLong(0)
-    total
   }
 
   /** Grid coordinates of chunks PRESENT in the store within `query` — the
@@ -1909,18 +1880,98 @@ object Volume {
     case TFloat64 => 0.0
   }
 
-  /** Integer-family widened value column → storage Long (two's-complement
-    * wrap for u64/Decimal computed arithmetically, exact in Decimal). For
-    * float types this column is unused (they ride the Double transport). */
-  private[volume] def valueAsLong(t: VoxelType, v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  /** The `fromVoxels` value column: Long for the integer types, Decimal
+    * for uint64 (its whole range, and past it, without wrapping), Double
+    * for the float types (f32 to f64 is exact). */
+  private def valueTransport(t: VoxelType, v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     t match {
       case TBool => when(v, 1L).otherwise(0L)
-      case TUInt8 | TUInt16 | TUInt32 => v.cast(LongType)
-      case TUInt64 =>
-        val wide = v.cast(DecimalType(21, 0))
-        when(wide >= lit(new java.math.BigDecimal("9223372036854775808")),
-          (wide - lit(new java.math.BigDecimal("18446744073709551616"))).cast(LongType))
-          .otherwise(v.cast(LongType))
-      case TFloat32 | TFloat64 => lit(0L)
+      case TUInt64 => v.cast(DecimalType(21, 0))
+      case TFloat32 | TFloat64 => v.cast(DoubleType)
+      case _ => v.cast(LongType)
     }
+
+  /** Raw element bits of one `fromVoxels` row `(x, y, z, c, value)`. A
+    * channel outside `[0, nc)` or a value the type cannot hold raises an
+    * `IllegalArgumentException` naming the voxel, instead of indexing past
+    * the chunk or being cut to the element width. */
+  private def voxelBits(t: VoxelType, nc: Int,
+      r: org.apache.spark.sql.catalyst.InternalRow): Long = {
+    def reject(why: String): Nothing = {
+      val v = if (r.isNullAt(4)) "null" else t match {
+        case TFloat32 | TFloat64 => r.getDouble(4).toString
+        case TUInt64 => r.getDecimal(4, 21, 0).toString
+        case _ => r.getLong(4).toString
+      }
+      val ch = if (r.isNullAt(3)) "null" else r.getInt(3).toString
+      throw new IllegalArgumentException(s"fromVoxels: voxel (x, y, z, c) = " +
+        s"(${r.getInt(0)}, ${r.getInt(1)}, ${r.getInt(2)}, $ch) with value $v: $why")
+    }
+    if (r.isNullAt(3) || r.getInt(3) < 0 || r.getInt(3) >= nc)
+      reject(s"channel outside [0, $nc) of this ${t.name} volume")
+    if (r.isNullAt(4)) reject(s"a ${t.name} volume has no null voxel")
+    t match {
+      case TFloat32 => java.lang.Float.floatToRawIntBits(r.getDouble(4).toFloat) & 0xffffffffL
+      case TFloat64 => java.lang.Double.doubleToRawLongBits(r.getDouble(4))
+      case TUInt64 =>
+        val v = r.getDecimal(4, 21, 0).toJavaBigDecimal.toBigInteger
+        if (v.signum < 0 || v.bitLength > 64) reject("outside [0, 2^64) of this uint64 volume")
+        v.longValue
+      case _ =>
+        val v = r.getLong(4)
+        val hi = (1L << (8 * t.byteSize)) - 1
+        if (v < 0 || v > hi) reject(s"outside [0, $hi] of this ${t.name} volume")
+        v
+    }
+  }
+
+  /** The voxels of one chunk that `fromVoxels` has gathered, as a byte
+    * array, so the shuffle moves partials (and their Long chunk-id keys)
+    * with Spark's Kryo serializer and no class metadata. Byte 0 gives the
+    * form: sparse (0), a count and then entries of a cell index and the
+    * element bytes, 4 + es bytes a voxel, while that is the smaller form;
+    * then dense (1), the chunk's full grid cell in chunk layout, absent
+    * voxels zero, and a presence bit per voxel that merging honours. */
+  private[volume] final class PartialChunks(t: VoxelType, cellVoxels: Int) extends Serializable {
+    private val es = t.byteSize; private val entry = 4 + es
+    private val denseSize = 1L + cellVoxels.toLong * es + (cellVoxels + 7) / 8
+    private def write(a: Array[Byte], off: Int, width: Int, v: Long): Unit =
+      (0 until width).foreach(k => a(off + k) = (v >>> 8 * k).toByte)
+    private def read(a: Array[Byte], off: Int, width: Int): Long =
+      (0 until width).foldLeft(0L)((v, k) => v | (a(off + k) & 0xffL) << 8 * k)
+    def one(v: (Int, Long)): Array[Byte] = add(new Array[Byte](5 + entry), v)
+    def add(a: Array[Byte], v: (Int, Long)): Array[Byte] = put(a, v._1, v._2)
+    private def put(a: Array[Byte], i: Int, bits: Long): Array[Byte] =
+      if (a(0) == 1) {
+        write(a, 1 + i * es, es, bits)
+        val m = 1 + cellVoxels * es + i / 8
+        a(m) = (a(m) | 1 << i % 8).toByte; a
+      } else {
+        val n = read(a, 1, 4).toInt
+        if (5 + (n + 1) * entry <= a.length) {
+          write(a, 5 + n * entry, 4, i); write(a, 9 + n * entry, es, bits); write(a, 1, 4, n + 1); a
+        } else if (5L + (n + 1) * entry < denseSize)
+          put(java.util.Arrays.copyOf(a, math.min(5L + 2L * n * entry, denseSize - 1).toInt), i, bits)
+        else put(densify(a), i, bits)
+      }
+    /** The `(cell index, element bits)` pairs `a` holds. */
+    private def entries(a: Array[Byte]): Iterator[(Int, Long)] =
+      if (a(0) == 0) Iterator.range(0, read(a, 1, 4).toInt)
+        .map(j => (read(a, 5 + j * entry, 4).toInt, read(a, 9 + j * entry, es)))
+      else {
+        val m = java.util.BitSet.valueOf(
+          java.nio.ByteBuffer.wrap(a, 1 + cellVoxels * es, a.length - 1 - cellVoxels * es))
+        Iterator.iterate(m.nextSetBit(0))(i => m.nextSetBit(i + 1)).takeWhile(_ >= 0)
+          .map(i => (i, read(a, 1 + i * es, es)))
+      }
+    private def densify(a: Array[Byte]): Array[Byte] = {
+      val d = new Array[Byte](denseSize.toInt); d(0) = 1
+      entries(a).foldLeft(d) { case (d, (i, v)) => put(d, i, v) }
+    }
+    def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+      if (a(0) == 0 && b(0) == 1) merge(b, a) else entries(b).foldLeft(a) { case (x, (i, v)) => put(x, i, v) }
+    /** The cell's bytes in chunk layout, absent voxels zero. */
+    def bytes(a: Array[Byte]): Array[Byte] =
+      java.util.Arrays.copyOfRange(if (a(0) == 1) a else densify(a), 1, 1 + cellVoxels * es)
+  }
 }

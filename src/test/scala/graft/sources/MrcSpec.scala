@@ -105,6 +105,22 @@ class MrcSpec extends AnyFunSuite {
       .getMessage.contains("read-only"))
   }
 
+  test("fromVoxels on an mrc handle fails on the driver, before any job") {
+    import org.apache.spark.sql.functions._
+    val path = SparkSuite.tempDir("graft-mrc-fv") + "/v.mrc"
+    val buf = VoxelBuffer.sequenced(Meta.TUInt8, 4, 4, 2, 1, (1, 1, 1))
+    Mrc.write(spark, path, buf)
+    val vol = Mrc.open(spark, path)
+    val df = spark.range(4).select((col("id") + 1).cast("int").as("x"), lit(1).as("y"),
+      lit(1).as("z"), lit(9).cast("short").as("value"))
+    var e: IllegalArgumentException = null
+    assert(graft.testutil.PlanProbe.jobsAndQueries(spark) {
+      e = intercept[IllegalArgumentException](vol.fromVoxels(df))
+    } == ((0, 0)))
+    assert(e.getMessage.contains("read-only"))
+    assert(Mrc.open(spark, path).cutout(Box(1, 4, 1, 4, 1, 2)) == buf)
+  }
+
   test("mrc -> precomputed conversion feeds a writable chunked store") {
     import graft.ops.VolumeOps
     val src = SparkSuite.tempDir("graft-mrc-conv") + "/v.mrc"

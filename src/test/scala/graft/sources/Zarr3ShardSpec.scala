@@ -249,4 +249,35 @@ class Zarr3ShardSpec extends AnyFunSuite {
     assert(got.getLong(1) == n)
     assert(got.getLong(0) == n * (n - 1) / 2)
   }
+
+  test("fromVoxels keeps an existing shard's untouched inner cells") {
+    import org.apache.spark.sql.functions._
+    val root = SparkSuite.tempDir("graft-z3shard-fv-keep")
+    // 2 x 2 x 1 shards of 2 x 2 x 2 inner cells of 4 x 4 x 2 voxels
+    val vol = Zarr3.createSharded(spark, root, shape = (16, 16, 4),
+      shardShape = (8, 8, 4), innerChunks = (4, 4, 2),
+      dataType = Meta.TUInt16, encoding = "gzip")
+    val model = VoxelBuffer.sequenced(Meta.TUInt16, 16, 16, 4, 1, (1, 1, 1))
+    vol.ingest(model)
+    // cells (0,0,0) and (1,1,1) of shard (0,0,0), a corner voxel of cell
+    // (0,0,0) of shard (1,1,0), spread over 4 partitions; every other cell of
+    // both shards, and all of the other two shards, stays as ingested
+    val cells = Seq(Box(1, 4, 1, 4, 1, 2), Box(5, 8, 5, 8, 3, 4))
+    val voxels = cells.map { b =>
+      spark.range(0, b.numVoxels, 1, 2).select(
+        (lit(b.x.lo) + col("id") % 4).cast("int").as("x"),
+        (lit(b.y.lo) + (col("id") / 4).cast("long") % 4).cast("int").as("y"),
+        (lit(b.z.lo) + (col("id") / 16).cast("long")).cast("int").as("z"))
+    }.reduce(_ union _).union(spark.range(1).select(lit(9).as("x"), lit(9).as("y"), lit(1).as("z")))
+    assert(vol.fromVoxels(voxels.withColumn("value", col("x") * 1000 + col("y") * 10 + col("z"))) == 3L)
+    for (b <- cells :+ Box(9, 12, 9, 12, 1, 2))
+      model.blit(VoxelBuffer.zeros(Meta.TUInt16, 4, 4, 2, 1, (b.x.lo, b.y.lo, b.z.lo)), b)
+    for (b <- cells; z <- b.z.lo to b.z.hi; y <- b.y.lo to b.y.hi; x <- b.x.lo to b.x.hi)
+      model.setLong(x - 1, y - 1, z - 1, 0, x * 1000L + y * 10 + z)
+    model.setLong(8, 8, 0, 0, 9091L)
+    assert(Zarr3.open(spark, root).cutout(model.box) == model)
+    def files(p: java.io.File): Seq[java.io.File] =
+      if (p.isDirectory) p.listFiles().toSeq.flatMap(files) else Seq(p)
+    assert(files(new java.io.File(root, "c")).length == 4)
+  }
 }

@@ -346,6 +346,197 @@ class VolumeSpec extends AnyFunSuite {
     assert(vol.cutout(buf.box) == buf)
   }
 
+  /** `b`'s voxels `(x, y, z)`, x fastest, as a `spark.range` in `parts`
+    * partitions. */
+  def boxVoxels(b: Box, parts: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    val (nx, ny) = (b.x.len.toLong, b.y.len.toLong)
+    spark.range(0L, b.numVoxels, 1, parts).select(
+      (lit(b.x.lo) + col("id") % nx).cast("int").as("x"),
+      (lit(b.y.lo) + (col("id") / nx).cast("long") % ny).cast("int").as("y"),
+      (lit(b.z.lo) + (col("id") / (nx * ny)).cast("long")).cast("int").as("z"))
+  }
+
+  /** Writes the voxel rows `df` with `fromVoxels` and applies the same
+    * write to `model` (which `vol` must otherwise match): every chunk a row
+    * falls in is rewritten whole, so its voxels absent from `df` read zero.
+    * `bits` gives a voxel's raw element bits. Checks the chunk count the
+    * call returns and a cutout of `model`'s box, byte for byte. */
+  def checkFromVoxels(vol: Volume, model: VoxelBuffer, df: org.apache.spark.sql.DataFrame)(
+      bits: (Int, Int, Int, Int) => Long): Unit = {
+    import org.apache.spark.sql.functions._
+    val c = vol.ctx
+    val (csx, csy, csz) = c.chunkSize
+    val ch = if (df.columns.contains("c")) col("c") else lit(0)
+    val pts = df.select(col("x"), col("y"), col("z"), ch).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)))
+    val cells = pts.map { case (x, y, z, _) =>
+      (Grid.chunkIdOf(x, csx, Grid.gridOffset(c.voxelOffset._1, csx)),
+        Grid.chunkIdOf(y, csy, Grid.gridOffset(c.voxelOffset._2, csy)),
+        Grid.chunkIdOf(z, csz, Grid.gridOffset(c.voxelOffset._3, csz)))
+    }.distinct
+    for ((cx, cy, cz) <- cells) {
+      val cb = c.sliceAt(cx, cy, cz, c.volumeBox).get.chunkBox.intersect(model.box)
+      model.blit(VoxelBuffer.zeros(model.dataType, cb.x.len, cb.y.len, cb.z.len, model.nc,
+        (cb.x.lo, cb.y.lo, cb.z.lo)), cb)
+    }
+    for ((x, y, z, k) <- pts) model.setLong(x - model.origin._1, y - model.origin._2,
+      z - model.origin._3, k, bits(x, y, z, k))
+    assert(vol.fromVoxels(df) == cells.length)
+    assert(vol.cutout(model.box) == model)
+  }
+
+  test("fromVoxels is one plain Spark job under one SQL execution; an all-filtered input writes nothing") {
+    import org.apache.spark.sql.functions._
+    val vol = newVolume()
+    val model = VoxelBuffer.zeros(Meta.TUInt8, 200, 100, 5, 1, (1, 1, 1))
+    def slab(b: Box) = boxVoxels(b, 4)
+      .withColumn("value", pmod(col("x") * 7 + col("y") * 13 + col("z") * 29, lit(251)).cast("short"))
+    val bits = (x: Int, y: Int, z: Int, _: Int) => Math.floorMod(x * 7 + y * 13 + z * 29, 251).toLong
+    checkFromVoxels(vol, model, slab(Box(1, 100, 1, 100, 1, 5)))(bits)
+    val before = ChunkStore.confDeserialized.get()
+    var n = -1L
+    // two chunks, the second partly covered
+    val patch = slab(Box(1, 150, 1, 100, 1, 5))
+    assert(jobsAndQueries { n = vol.fromVoxels(patch) } == ((1, 1)))
+    assert(n == 2L)
+    checkFromVoxels(vol, model, patch)(bits)
+    // the volume ends at x = 210: every row is filtered out
+    val objects = storedObjects(vol.root)
+    assert(jobsAndQueries { n = vol.fromVoxels(slab(Box(301, 340, 1, 40, 1, 5))) } == ((1, 1)))
+    assert(n == 0L)
+    assert(storedObjects(vol.root) == objects)
+    assert(ChunkStore.confDeserialized.get() == before)
+  }
+
+  /** The first `IllegalArgumentException` in `e`'s cause chain. */
+  def illegalArgument(e: Throwable): IllegalArgumentException =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case i: IllegalArgumentException => i }
+      .getOrElse(fail(s"no IllegalArgumentException behind $e"))
+
+  test("fromVoxels rejects a channel or a value the volume cannot hold, naming the voxel") {
+    import org.apache.spark.sql.functions._
+    def row(ch: Int, value: org.apache.spark.sql.Column) =
+      spark.range(1).select(lit(5).as("x"), lit(6).as("y"), lit(2).as("z"), lit(ch).as("c"),
+        value.as("value"))
+    val two64 = new java.math.BigDecimal("18446744073709551616")
+    for ((t, nc, ch, value, shown) <- Seq(
+        (Meta.TUInt8, 1, 0, lit(300), "300"),
+        (Meta.TUInt8, 1, 0, lit(-1), "-1"),
+        (Meta.TUInt16, 1, 0, lit(65536), "65536"),
+        (Meta.TUInt32, 1, 0, lit(1L << 32), "4294967296"),
+        (Meta.TUInt64, 1, 0, lit(two64), "18446744073709551616"),
+        (Meta.TUInt64, 1, 0, lit(-1L), "-1"),
+        (Meta.TUInt8, 1, 1, lit(7), "7"),
+        (Meta.TFloat32, 3, -1, lit(0.5f), "0.5"),
+        (Meta.TUInt16, 2, 2, lit(9), "9"))) {
+      val vol = newVolume(dataType = t, numChannels = nc)
+      val e = illegalArgument(intercept[Exception](vol.fromVoxels(row(ch, value))))
+      val m = e.getMessage
+      assert(m.contains(s"(5, 6, 2, $ch)") && m.contains(s"value $shown") && m.contains(t.name), m)
+      assert(m.contains(if (ch < 0 || ch >= nc) "channel" else "outside"), m)
+      // nothing was written
+      assert(vol.cutout(Box(1, 100, 1, 100, 1, 5)) ==
+        VoxelBuffer.zeros(t, 100, 100, 5, nc, (1, 1, 1)), m)
+    }
+    // the top of each range is accepted
+    for ((t, top, bits) <- Seq((Meta.TUInt8, lit(255), 255L), (Meta.TUInt16, lit(65535), 65535L),
+        (Meta.TUInt32, lit((1L << 32) - 1), (1L << 32) - 1),
+        (Meta.TUInt64, lit(two64.subtract(java.math.BigDecimal.ONE)), -1L))) {
+      val vol = newVolume(dataType = t)
+      assert(vol.fromVoxels(row(0, top)) == 1L)
+      assert(vol.cutout(Box(5, 5, 6, 6, 2, 2)).getLong(0, 0, 0) == bits, t)
+    }
+  }
+
+  test("a partial chunk's size tracks its voxel count") {
+    val cell = 64 * 64 * 64
+    val dense = 1 + cell + cell / 8 // u8 values and a presence mask
+    val pc = new Volume.PartialChunks(Meta.TUInt8, cell)
+    for (k <- Seq(1, 10, 1000, 20000, 60000, cell / 2, cell)) {
+      // distinct voxels spread over the cell
+      val vs = (0 until k).map(i => ((i.toLong * 7919) % cell).toInt -> (i % 251).toLong)
+      val p = vs.tail.foldLeft(pc.one(vs.head))(pc.add)
+      // sparse: a count and 5 bytes a voxel, capacity at most doubled
+      assert(p.length <= math.min(5 + 2L * 5 * k, dense), k)
+      val want = new Array[Byte](cell)
+      vs.foreach { case (i, v) => want(i) = v.toByte }
+      assert(java.util.Arrays.equals(pc.bytes(p), want), k)
+    }
+  }
+
+  test("fromVoxels edge cases equal a model byte for byte") {
+    import org.apache.spark.sql.functions._
+    // the cutout edge-case grid: 12x3x3 chunks of 8x16x8 voxels
+    val meta = Meta.VolumeMeta("image", Meta.TUInt16, 1, Vector(
+      Meta.ScaleMeta("1_1_1", (8, 16, 8), "gzip", (1, 1, 1), (96, 48, 24), (0, 0, 0))))
+    val vol = Volume.create(spark, SparkSuite.tempDir("graft-fromvoxels-edges"), meta)
+    val model = VoxelBuffer.zeros(Meta.TUInt16, 96, 48, 24, 1, (1, 1, 1))
+    def write(k: Int, voxels: org.apache.spark.sql.DataFrame): Unit =
+      checkFromVoxels(vol, model, voxels.withColumn("value",
+        pmod(col("x") * 7 + col("y") * 13 + col("z") * 29 + lit(101 * k), lit(65521)))) {
+        (x, y, z, _) => Math.floorMod(x * 7 + y * 13 + z * 29 + 101 * k, 65521).toLong
+      }
+    // every chunk gets partials from at least 3 map partitions
+    val spread = boxVoxels(model.box, 2).repartition(4)
+    val perChunk = spread.withColumn("p", spark_partition_id())
+      .groupBy(((col("x") - 1) / 8).cast("long"), ((col("y") - 1) / 16).cast("long"),
+        ((col("z") - 1) / 8).cast("long"))
+      .agg(countDistinct("p").as("n"))
+    assert(perChunk.count() == 108 && perChunk.agg(min("n")).head.getLong(0) >= 3)
+    write(1, spread)
+    // each of 12 chunks: two dense partials and a sparse one, disjoint, from
+    // three single-partition inputs (an RDD union, which no rule collapses)
+    val sel = pmod(col("x") * 31 + col("y") * 17 + col("z"), lit(20))
+    val base = boxVoxels(Box(1, 24, 1, 32, 1, 16), 1)
+    val thirds = spark.createDataFrame(Seq(sel >= 11, sel.between(2, 10), sel < 2)
+      .map(base.filter(_).rdd).reduce(_ union _), base.schema)
+    assert(thirds.rdd.getNumPartitions == 3)
+    write(2, thirds)
+    // partly covered chunks: the rest of each touched chunk reads zero
+    write(3, boxVoxels(Box(13, 29, 20, 40, 5, 19), 3))
+    // scattered: one voxel in each of 72 chunks, over 8 partitions
+    write(4, spark.range(0, 72, 1, 8).select(
+      (col("id") % 12 * 8 + 3).cast("int").as("x"),
+      ((col("id") / 12).cast("long") % 3 * 16 + 5).cast("int").as("y"),
+      ((col("id") / 36).cast("long") * 8 + 2).cast("int").as("z")))
+
+    // two channels through a c column, float32 extremes
+    val f32 = newVolume(dataType = Meta.TFloat32, numChannels = 2)
+    val fmodel = VoxelBuffer.zeros(Meta.TFloat32, 200, 100, 5, 2, (1, 1, 1))
+    val floats = Seq(Float.MaxValue, -Float.MaxValue, Float.MinPositiveValue, -0.0f,
+      Float.PositiveInfinity, Float.NegativeInfinity, Float.NaN, 1.5f)
+    import scala.jdk.CollectionConverters._
+    val frows = floats.zipWithIndex.map { case (v, i) =>
+      org.apache.spark.sql.Row(1 + 23 * i, 7, 3, i % 2, v) }
+    checkFromVoxels(f32, fmodel, spark.createDataFrame(frows.asJava, f32.voxelSchema).repartition(3)) {
+      (x, _, _, _) => java.lang.Float.floatToRawIntBits(floats((x - 1) / 23)) & 0xffffffffL
+    }
+    // uint64 extremes, given as decimal(20, 0)
+    val u64 = newVolume(dataType = Meta.TUInt64)
+    val umodel = VoxelBuffer.zeros(Meta.TUInt64, 200, 100, 5, 1, (1, 1, 1))
+    val longs = Seq(0L, 1L, Long.MaxValue, Long.MinValue, -1L) // as unsigned bits
+    val urows = longs.zipWithIndex.map { case (v, i) => org.apache.spark.sql.Row(1 + 37 * i, 9, 4, 0,
+      new java.math.BigDecimal(new java.math.BigInteger(java.lang.Long.toUnsignedString(v)))) }
+    checkFromVoxels(u64, umodel, spark.createDataFrame(urows.asJava, u64.voxelSchema)) {
+      (x, _, _, _) => longs((x - 1) / 37)
+    }
+
+    // zarr stores edge chunks full-size: the padding past the array edge is zero
+    val zarr = graft.sources.Zarr.create(spark, SparkSuite.tempDir("graft-fromvoxels-zarr"),
+      shape = (20, 12, 6), chunks = (8, 4, 2), dataType = Meta.TUInt16, encoding = "zlib")
+    val zmodel = VoxelBuffer.zeros(Meta.TUInt16, 20, 12, 6, 1, (1, 1, 1))
+    checkFromVoxels(zarr, zmodel, boxVoxels(zmodel.box, 3).withColumn("value", col("x") * 100 + col("y"))) {
+      (x, y, _, _) => x * 100L + y
+    }
+    val edge = zarr.ctx.codec.decode(
+      java.nio.file.Files.readAllBytes(new java.io.File(zarr.root, "2.2.2").toPath))
+    assert(edge.length == 8 * 4 * 2 * 2)
+    val edgeBuf = new VoxelBuffer(Meta.TUInt16, 8, 4, 2, 1, (17, 9, 5), edge)
+    assert(edgeBuf.getLong(3, 3, 1) == 2012L && edgeBuf.getLong(4, 0, 0) == 0L)
+  }
+
   test("chunk keys on disk match the reference byte-layout naming") {
     val vol = newVolume()
     val buf = VoxelBuffer.sequenced(Meta.TUInt8, 100, 100, 5, 1, (1, 1, 1))
