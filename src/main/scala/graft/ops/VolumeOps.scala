@@ -98,11 +98,11 @@ object VolumeOps {
       chunkSize = chunkSize, encoding = encoding.getOrElse(vol.ctx.encoding))))
     val dest = Volume.create(vol.spark, destRoot, meta2, 1, vol.fillMissing)
     val sc = vol.ctx; val dc = dest.ctx
-    val (sconf, dconf) = (vol.confBc, dest.confBc)
+    val (openSrc, openDest) = (vol.storeFs, dest.storeFs)
     dest.chunkCells(box).fold(0L) { cells =>
       val written = cells.mapPartitions { it =>
-        val sfs = ChunkStore.fs(sc.root, sconf.value.conf)
-        val dfs = ChunkStore.fs(dc.root, dconf.value.conf)
+        val sfs = openSrc()
+        val dfs = openDest()
         it.flatMap { case (cx, cy, cz) =>
           dc.sliceAt(cx, cy, cz, box).map { ds =>
             val out = VoxelBuffer.zeros(sc.dataType,

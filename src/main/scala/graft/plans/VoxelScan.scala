@@ -10,7 +10,8 @@ import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.types.Decimal
-import org.apache.spark.unsafe.types.UTF8String
+
+import scala.jdk.CollectionConverters._
 
 import graft.core.Grid
 import graft.core.Grid.{Box, Ival}
@@ -131,9 +132,9 @@ object VoxelScanStrategy extends SparkStrategy {
   * written straight into `OnHeapColumnVector`s, 4096 per batch, and Spark
   * plants its codegen'd `ColumnarToRow` above — the same shape as the
   * vectorized parquet reader, which keeps the per-voxel cost to a few
-  * primitive array stores instead of per-row UnsafeRow bookkeeping. The
-  * row-at-a-time path is retained (`doExecute`) for plan shapes where the
-  * planner declines columnar. */
+  * primitive array stores instead of per-row UnsafeRow bookkeeping. That
+  * batch loop is the node's one fetch and emit loop: `doExecute`, for plan
+  * shapes that ask for rows, projects the same batches to `UnsafeRow`s. */
 final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
     extends LeafExecNode {
 
@@ -177,24 +178,29 @@ final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
     import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
     val c = ctx
     val query = box
+    val sc = session.sparkContext
     // broadcast once per execution: a task then carries a reference, not a
     // full Configuration to deserialize
-    val conf = session.sparkContext.broadcast(
+    val conf = sc.broadcast(
       new ChunkStore.SerializableConf(session.sessionState.newHadoopConf()))
-    val ids = Grid.idRanges(query, c.chunkSize, c.voxelOffset)
-    val total = if (query.isEmpty) 0L else ids.total
-    val parts = math.max(1, math.min(total, session.sparkContext.defaultParallelism * 2L)).toInt
+    // a contradictory filter set narrows the box to an empty one: no cells
+    val ids = c.cellRanges(query)
+    // pruned-column layout, resolved ONCE to integer tags: the batch loop
+    // runs per voxel, so no string comparison or boxing inside
     val tags = tagsOf(output)
     val dtypeTag = dtypeTagOf(c)
-    val needValue = tags.contains(4)
-    val skipFetch = !needValue && c.fillMissing
+    // coords-only scans under zero-fill semantics never touch the store:
+    // rows exist for every in-box voxel regardless of which chunks exist.
+    // Strict mode (fillMissing=false) keeps fetching so missing chunks still
+    // raise, preserving error semantics.
+    val skipFetch = !tags.contains(4) && c.fillMissing
     val schema = org.apache.spark.sql.types.StructType(
       output.map(a => org.apache.spark.sql.types.StructField(a.name, a.dataType, a.nullable)))
     val numChannels = c.numChannels
     val (mRows, mChunks, mMissing, mBytes) =
       (longMetric("numOutputRows"), longMetric("chunksFetched"),
         longMetric("chunksMissing"), longMetric("bytesFetched"))
-    session.sparkContext.range(0L, total, 1, parts).mapPartitions { linearIds =>
+    sc.range(0L, ids.total, 1, Volume.taskPartitions(ids.total, sc)).mapPartitions { linearIds =>
       val fs = ChunkStore.fs(c.root, conf.value.conf)
       val slices = linearIds.flatMap { id =>
         val (cx, cy, cz) = ids.coords(id)
@@ -216,7 +222,7 @@ final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
         private val vectors = OnHeapColumnVector.allocateColumns(capacity, schema)
         private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
         // cursor over the current slice's cutout box, (ch, z, y, x) order —
-        // identical emission order to the row path
+        // the emission order of `Volume.toVoxels`
         private var cur: Grid.ChunkSlice = null
         private var buf: VoxelBuffer = null
         private var ch = 0; private var z = 0; private var y = 0; private var x = 0
@@ -299,102 +305,13 @@ final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
     }
   }
 
+  /** Rows for plan shapes that ask for them: the columnar batches, each
+    * row projected to an `UnsafeRow` (what Spark's `ColumnarToRow` does). */
   override protected def doExecute(): RDD[InternalRow] = {
-    val c = ctx
-    val query = box
-    val conf = session.sparkContext.broadcast(
-      new ChunkStore.SerializableConf(session.sessionState.newHadoopConf()))
-    val ids = Grid.idRanges(query, c.chunkSize, c.voxelOffset)
-    // a contradictory filter set can narrow the box to negative-length
-    // intervals whose span product is positive garbage — emptiness must be
-    // decided on the box, not the id count
-    val total = if (query.isEmpty) 0L else ids.total
-    val parts = math.max(1, math.min(total, session.sparkContext.defaultParallelism * 2L)).toInt
-    // pruned-column layout, resolved ONCE to integer tags: this loop runs
-    // per voxel, so no string comparison / boxing / row allocation inside
-    // (tags: 0=x 1=y 2=z 3=c 4=value; dtypeTag indexes the widened type)
-    val tags: Array[Int] = tagsOf(output)
-    val dtypeTag: Int = dtypeTagOf(c)
-    val needValue = tags.contains(4)
-    // coords-only scans under zero-fill semantics never touch the store:
-    // rows exist for every in-box voxel regardless of which chunks exist.
-    // Strict mode (fillMissing=false) keeps fetching so missing chunks still
-    // raise, preserving error semantics.
-    val skipFetch = !needValue && c.fillMissing
-    val (mRows, mChunks, mMissing, mBytes) =
-      (longMetric("numOutputRows"), longMetric("chunksFetched"),
-        longMetric("chunksMissing"), longMetric("bytesFetched"))
-    session.sparkContext.range(0L, total, 1, parts).mapPartitions { linearIds =>
-      val fs = ChunkStore.fs(c.root, conf.value.conf)
-      // one UnsafeRow buffer per partition, rewritten in place per voxel —
-      // standard scan-node row reuse (consumers copy when they buffer)
-      val writer = new org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter(tags.length)
-      writer.resetRowWriter()
-      linearIds.flatMap { id =>
-        val (cx, cy, cz) = ids.coords(id)
-        c.sliceAt(cx, cy, cz, query).iterator.flatMap { s =>
-          val bufOpt =
-            if (skipFetch) None
-            else c.fetchChunk(fs, s) match {
-              case Some(blob) =>
-                mChunks.add(1); mBytes.add(blob.length)
-                Some(c.decodeChunk(s, blob))
-              case None if c.fillMissing => mMissing.add(1); None
-              case None => throw new ChunkStore.MissingChunkException(c.keyOf(s))
-            }
-          val buf = bufOpt.orNull
-          val cut = s.cutoutBox
-          for {
-            ch <- (0 until c.numChannels).iterator
-            z <- (cut.z.lo to cut.z.hi).iterator
-            y <- (cut.y.lo to cut.y.hi).iterator
-            x <- (cut.x.lo to cut.x.hi).iterator
-          } yield {
-            writer.reset()
-            var i = 0
-            while (i < tags.length) {
-              tags(i) match {
-                case 0 => writer.write(i, x)
-                case 1 => writer.write(i, y)
-                case 2 => writer.write(i, z)
-                case 3 => writer.write(i, ch)
-                case _ =>
-                  if (buf == null) dtypeTag match {
-                    case 0 => writer.write(i, false)
-                    case 1 => writer.write(i, 0.toShort)
-                    case 2 => writer.write(i, 0)
-                    case 3 => writer.write(i, 0L)
-                    case 4 => writer.write(i, Decimal(0L), 20, 0)
-                    case 5 => writer.write(i, 0.0f)
-                    case _ => writer.write(i, 0.0)
-                  } else {
-                    val lx = x - buf.origin._1; val ly = y - buf.origin._2; val lz = z - buf.origin._3
-                    dtypeTag match {
-                      case 0 => writer.write(i, buf.getLong(lx, ly, lz, ch) != 0L)
-                      case 1 => writer.write(i, buf.getLong(lx, ly, lz, ch).toShort)
-                      case 2 => writer.write(i, buf.getLong(lx, ly, lz, ch).toInt)
-                      case 3 => writer.write(i, buf.getLong(lx, ly, lz, ch))
-                      case 4 =>
-                        val u = buf.getLong(lx, ly, lz, ch)
-                        writer.write(i,
-                          if (u >= 0) Decimal(u)
-                          else Decimal(new java.math.BigDecimal(new java.math.BigInteger(
-                            java.lang.Long.toUnsignedString(u)))), 20, 0)
-                      case 5 => writer.write(i, buf.getDouble(lx, ly, lz, ch).toFloat)
-                      case _ => writer.write(i, buf.getDouble(lx, ly, lz, ch))
-                    }
-                  }
-              }
-              i += 1
-            }
-            // per-emitted-row accounting (a plain local long add), so a
-            // partially drained iterator (e.g. LIMIT) reports true counts
-            // consistent with the columnar path's per-batch accounting
-            mRows.add(1)
-            writer.getRow: InternalRow
-          }
-        }
-      }
+    val out = output
+    executeColumnar().mapPartitions { batches =>
+      val toUnsafe = UnsafeProjection.create(out, out)
+      batches.flatMap(_.rowIterator().asScala.map(toUnsafe))
     }
   }
 }

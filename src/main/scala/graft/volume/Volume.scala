@@ -1,5 +1,6 @@
 package graft.volume
 
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
@@ -267,6 +268,14 @@ final case class VolumeCtx(
       Grid.clampHiTo(chunkBox, volumeBox), Grid.clampHiTo(cut, volumeBox)))
   }
 
+  /** The chunk-id ranges of the cells a box touches inside the volume,
+    * empty when it misses the volume. Clipping first keeps the id count
+    * exact for a box far larger than the volume. */
+  private[graft] def cellRanges(query: Box): Grid.IdRanges = {
+    val q = query.intersect(volumeBox)
+    if (q.isEmpty) Grid.IdRanges(1, 0, 1, 0, 1, 0) else Grid.idRanges(q, chunkSize, voxelOffset)
+  }
+
   /** Decode a blob into a buffer anchored at the (clamped) chunk box.
     * Boundary chunks are stored partial — shape comes from the clamped box
     * (reference: src/modes/sequential.jl:43-48). */
@@ -362,11 +371,17 @@ final case class VolumeCtx(
   * grid; the voxel view (`toVoxels`) is the bridge to the relational surface.
   *
   * Scale design notes (100 TB target):
-  *  - chunk task sets are generated distributedly from a range of linear
-  *    chunk ids (`spark.range` for the DataFrame operators,
-  *    `sparkContext.range` via `chunkCells` for `cutout`, `ingest` and
-  *    `VolumeOps.rechunk`) — no driver-side chunk enumeration, so a
-  *    petavoxel cutout plans in O(1) driver memory;
+  *  - chunk task sets are ranges of the linear ids of the cells a box
+  *    touches inside the volume (`VolumeCtx.cellRanges`, decoded by
+  *    `Grid.IdRanges.coords`) — no driver-side chunk enumeration, so a
+  *    petavoxel cutout plans in O(1) driver memory, and a box far larger
+  *    than the volume costs no more than the volume. Every per-chunk
+  *    DataFrame operator (`toVoxels`, `zipVoxels`, `chunkStats`,
+  *    `toVoxelsAtLeast`, `missingChunks` and the `local*` halo kernels)
+  *    runs on one combinator, `chunkRows`, over `spark.range`; `cutout`,
+  *    `ingest` and `VolumeOps.rechunk` run on `chunkCells`, over
+  *    `sparkContext.range`. Each opens the store once per task
+  *    (`storeFs`) and reads through `VolumeCtx.readChunk`;
   *  - `cutout`, `ingest` and `rechunk` are each one plain RDD job (no
   *    Catalyst planning, no encoder round-trip, no shuffle), so a small call
   *    costs little more than its chunk I/O and codec work. `cutout`
@@ -396,6 +411,7 @@ final class Volume(
     val padEdgeChunks: Boolean = false,
     val shard: Option[graft.core.Shard.Params] = None,
     val mrc: Option[graft.core.MrcFormat.Params] = None) extends Serializable {
+  import Volume.{CutBox, arrayOf, coordType, field, ints, longs}
 
   val scaleMeta: ScaleMeta = meta.scale(mip)
 
@@ -416,42 +432,60 @@ final class Volume(
     if (query.isEmpty) 0L
     else Grid.idRanges(query, ctx.chunkSize, ctx.voxelOffset).total
 
-  /** Distributed chunk-task table for a query box: one row per grid cell in
-    * the pruned id range — the reference's ChunkIterator as a DataFrame
-    * (reference: src/ChunkIterators.jl:9-42). Generated from `spark.range`,
-    * so it never materializes on the driver. */
-  def chunkTasks(query: Box): DataFrame = {
-    val ids = Grid.idRanges(query, ctx.chunkSize, ctx.voxelOffset)
-    // an empty query box yields negative-length id spans whose product can
-    // be positive — decide emptiness on the box, then enumerate nothing
-    if (query.isEmpty)
-      return spark.range(0).select(lit(0).as("cx"), lit(0).as("cy"), lit(0).as("cz"))
-    val parts = math.max(1, math.min(ids.total, spark.sparkContext.defaultParallelism * 2L)).toInt
-    // `div` (integral division), not `/` (double division): exact for any id
-    spark.range(0, ids.total, 1, parts).select(
-      expr(s"cast(${ids.lox}L + (id % ${ids.nx}L) as int)").as("cx"),
-      expr(s"cast(${ids.loy}L + ((id div ${ids.nx}L) % ${ids.ny}L) as int)").as("cy"),
-      expr(s"cast(${ids.loz}L + (id div ${ids.nx * ids.ny}L) as int)").as("cz"))
+  /** Opens this handle's store FileSystem from [[confBc]] — what a chunk
+    * task calls once per partition. Closures capture the returned function,
+    * never the handle. */
+  private[graft] def storeFs: () => FileSystem = {
+    val r = root; val conf = confBc
+    () => ChunkStore.fs(r, conf.value.conf)
   }
 
   /** The grid cells a box touches inside the volume as an RDD of chunk
     * coords (with `perShard`: of the shards holding them) — the task source
     * of `cutout`, `ingest` and `VolumeOps.rechunk`. Ids come from
-    * `sparkContext.range` in `min(total, 2 × defaultParallelism)` partitions,
-    * so nothing is enumerated on the driver; None (no job) when the box
-    * misses the volume. */
+    * `sparkContext.range` in [[Volume.taskPartitions]] partitions, so
+    * nothing is enumerated on the driver; None (no job) when the box misses
+    * the volume. */
   private[graft] def chunkCells(query: Box, perShard: Boolean = false): Option[RDD[(Int, Int, Int)]] = {
-    val inVolume = query.intersect(ctx.volumeBox)
-    if (inVolume.isEmpty) return None
-    val cells = Grid.idRanges(inVolume, ctx.chunkSize, ctx.voxelOffset)
+    val cells = ctx.cellRanges(query)
+    if (cells.total == 0) return None
     val ids = if (!perShard) cells else {
       val (lx, ly, lz) = ctx.shardCoords(cells.lox, cells.loy, cells.loz)
       val (hx, hy, hz) = ctx.shardCoords(cells.hix, cells.hiy, cells.hiz)
       Grid.IdRanges(lx, hx, ly, hy, lz, hz)
     }
     val sc = spark.sparkContext
-    val parts = math.max(1, math.min(ids.total, sc.defaultParallelism * 2L)).toInt
-    Some(sc.range(0L, ids.total, 1, parts).map(ids.coords))
+    Some(sc.range(0L, ids.total, 1, Volume.taskPartitions(ids.total, sc)).map(ids.coords))
+  }
+
+  /** The one chunk-task path of every per-chunk DataFrame operator — the
+    * reference's ChunkIterator (src/ChunkIterators.jl:9-42) as a DataFrame.
+    * Tasks are the linear ids of the cells `query` touches inside the
+    * volume, on `spark.range` in [[Volume.taskPartitions]] partitions, so an
+    * operator's plan stays Range-sized and nothing is enumerated on the
+    * driver; with `cells`, only the ids of that table's `(cx, cy, cz)` rows
+    * among those cells. `kernel` gets the store FileSystem once per
+    * partition and returns the rows of each chunk slice, which it reads
+    * through [[VolumeCtx.readChunk]]. */
+  private def chunkRows(query: Box, schema: StructType, cells: Option[DataFrame] = None)(
+      kernel: FileSystem => ChunkSlice => Iterator[Row]): DataFrame = {
+    val c = ctx; val openFs = storeFs
+    val r = c.cellRanges(query)
+    val range = spark.range(0L, r.total, 1L, Volume.taskPartitions(r.total, spark.sparkContext))
+    // listed cells join the range BROADCAST, so they keep its partitions: a
+    // one-file table would otherwise put every chunk in one task
+    val ids = cells.fold(range)(t => range.join(broadcast(t
+      .filter(col("cx").between(r.lox, r.hix) && col("cy").between(r.loy, r.hiy) &&
+        col("cz").between(r.loz, r.hiz))
+      .select((col("cx") - r.lox + (col("cy") - r.loy + (col("cz") - r.loz) * r.ny) * r.nx)
+        .cast(LongType).as("id"))), "id").as(Encoders.LONG))
+    ids.mapPartitions((it: Iterator[java.lang.Long]) => {
+      val chunk = kernel(openFs())
+      it.flatMap { id =>
+        val (cx, cy, cz) = r.coords(id)
+        c.sliceAt(cx, cy, cz, query).iterator.flatMap(chunk)
+      }
+    })(Encoders.row(schema))
   }
 
   /** N-d range read: the reference's `ba[x0:x1, y0:y1, z0:z1]`
@@ -474,10 +508,10 @@ final class Volume(
       s"cutout of $bytesNeeded bytes exceeds cap $maxBytes; use toVoxels for distributed processing")
     val out = VoxelBuffer.zeros(meta.dataType, query.x.len, query.y.len, query.z.len,
       meta.numChannels, (query.x.lo, query.y.lo, query.z.lo))
-    val c = ctx; val conf = confBc
+    val c = ctx; val openFs = storeFs
     for (cells <- chunkCells(query)) {
       val pieces = cells.mapPartitions { it =>
-        val fs = ChunkStore.fs(c.root, conf.value.conf)
+        val fs = openFs()
         it.flatMap { case (cx, cy, cz) =>
           c.sliceAt(cx, cy, cz, query).flatMap(s => c.readChunk(fs, s).map(_.slice(s.cutoutBox)))
         }
@@ -491,47 +525,34 @@ final class Volume(
   /** Spark schema of the voxel view, with unsigned types widened losslessly
     * (Spark has no unsigned ints): u8→Short, u16→Int, u32→Long,
     * u64→Decimal(20,0), f32→Float, f64→Double, bool→Boolean. */
-  def voxelSchema: StructType = StructType(Seq(
-    StructField("x", IntegerType, nullable = false),
-    StructField("y", IntegerType, nullable = false),
-    StructField("z", IntegerType, nullable = false),
-    StructField("c", IntegerType, nullable = false),
-    StructField("value", Volume.widenedType(meta.dataType), nullable = false)))
+  def voxelSchema: StructType =
+    StructType(ints("x", "y", "z", "c") :+ field("value", Volume.widenedType(meta.dataType)))
 
   /** The distributed long-form view of a box: one row per voxel
     * `(x, y, z, c, value)` in global coordinates — what joins/aggregations
     * and the whole relational surface run on. Missing chunks yield zeros,
     * preserving the reference's fill semantics (src/modes/sequential.jl:52-54). */
   def toVoxels(query: Box): DataFrame = {
-    val c = ctx; val conf = confBc
-    val schema = voxelSchema
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val rows = chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.value.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, query).toSeq.flatMap { s =>
-          val bufOpt = c.readChunk(fs, s)
-          val cut = s.cutoutBox
-          // iterator generators: never materialize a chunk's rows strictly
-          for {
-            ch <- (0 until c.numChannels).iterator
-            z <- (cut.z.lo to cut.z.hi).iterator
-            y <- (cut.y.lo to cut.y.hi).iterator
-            x <- (cut.x.lo to cut.x.hi).iterator
-          } yield {
-            val v: Any = bufOpt match {
-              case Some(b) =>
-                val (lx, ly, lz) = (x - b.origin._1, y - b.origin._2, z - b.origin._3)
-                Volume.widenedValue(c.dataType, b, lx, ly, lz, ch)
-              case None => Volume.zeroValue(c.dataType)
-            }
-            Row(x, y, z, ch, v)
-          }
+    val c = ctx
+    chunkRows(query, voxelSchema) { fs => s =>
+      val bufOpt = c.readChunk(fs, s)
+      val cut = s.cutoutBox
+      // iterator generators: never materialize a chunk's rows strictly
+      for {
+        ch <- (0 until c.numChannels).iterator
+        z <- (cut.z.lo to cut.z.hi).iterator
+        y <- (cut.y.lo to cut.y.hi).iterator
+        x <- (cut.x.lo to cut.x.hi).iterator
+      } yield {
+        val v: Any = bufOpt match {
+          case Some(b) =>
+            val (lx, ly, lz) = (x - b.origin._1, y - b.origin._2, z - b.origin._3)
+            Volume.widenedValue(c.dataType, b, lx, ly, lz, ch)
+          case None => Volume.zeroValue(c.dataType)
         }
+        Row(x, y, z, ch, v)
       }
-    })(rowEnc)
-    rows
+    }
   }
 
   /** Chunk-ALIGNED zip of two volumes over `query`: one row per voxel
@@ -552,40 +573,29 @@ final class Volume(
     require(c.chunkSize == c2.chunkSize && c.voxelOffset == c2.voxelOffset,
       s"zipVoxels needs one chunk grid: ${c.chunkSize}@${c.voxelOffset} vs ${c2.chunkSize}@${c2.voxelOffset}")
     require(c.numChannels == 1 && c2.numChannels == 1, "zipVoxels: single-channel volumes only")
-    val (conf, conf2) = (confBc, other.confBc)
-    val schema = StructType(Seq(
-      StructField("x", IntegerType, nullable = false),
-      StructField("y", IntegerType, nullable = false),
-      StructField("z", IntegerType, nullable = false),
-      StructField("va", Volume.widenedType(meta.dataType), nullable = false),
-      StructField("vb", Volume.widenedType(other.meta.dataType), nullable = false)))
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.value.conf)
-      val fs2 = ChunkStore.fs(c2.root, conf2.value.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        (c.sliceAt(cx, cy, cz, query), c2.sliceAt(cx, cy, cz, query)) match {
-          case (Some(s), Some(s2)) =>
-            val bufA = c.readChunk(fs, s)
-            val bufB = c2.readChunk(fs2, s2)
-            val cut = s.cutoutBox // ≡ s2.cutoutBox: same grid, same query
-            for {
-              z <- (cut.z.lo to cut.z.hi).iterator
-              y <- (cut.y.lo to cut.y.hi).iterator
-              x <- (cut.x.lo to cut.x.hi).iterator
-            } yield {
-              def at(cc: VolumeCtx, b: Option[VoxelBuffer]): Any = b match {
-                case Some(bb) => Volume.widenedValue(cc.dataType, bb,
-                  x - bb.origin._1, y - bb.origin._2, z - bb.origin._3, 0)
-                case None => Volume.zeroValue(cc.dataType)
-              }
-              Row(x, y, z, at(c, bufA), at(c2, bufB))
-            }
-          case _ => Iterator.empty
+    val openFs2 = other.storeFs
+    val schema = StructType(ints("x", "y", "z") ++ Seq(
+      field("va", Volume.widenedType(meta.dataType)), field("vb", Volume.widenedType(other.meta.dataType))))
+    chunkRows(query, schema) { fs =>
+      val fs2 = openFs2()
+      s => c2.sliceAt(s.idx, s.idy, s.idz, query).iterator.flatMap { s2 =>
+        val bufA = c.readChunk(fs, s)
+        val bufB = c2.readChunk(fs2, s2)
+        val cut = s.cutoutBox // ≡ s2.cutoutBox: same grid, same query
+        for {
+          z <- (cut.z.lo to cut.z.hi).iterator
+          y <- (cut.y.lo to cut.y.hi).iterator
+          x <- (cut.x.lo to cut.x.hi).iterator
+        } yield {
+          def at(cc: VolumeCtx, b: Option[VoxelBuffer]): Any = b match {
+            case Some(bb) => Volume.widenedValue(cc.dataType, bb,
+              x - bb.origin._1, y - bb.origin._2, z - bb.origin._3, 0)
+            case None => Volume.zeroValue(cc.dataType)
+          }
+          Row(x, y, z, at(c, bufA), at(c2, bufB))
         }
       }
-    })(rowEnc)
+    }
   }
 
   /** Per-chunk connected components (6-connectivity, foreground = nonzero):
@@ -610,120 +620,90 @@ final class Volume(
     * reference: src/ChunkIterators.jl). A missing chunk under fillMissing
     * is all-background and emits nothing. */
   def localComponents(query: Box): DataFrame = {
-    val c = ctx; val conf = confBc
+    val c = ctx
     require(c.numChannels == 1, "localComponents: single-channel volumes only")
     require(query.x.lo >= 0 && query.x.hi < (1 << 20) &&
       query.y.lo >= 0 && query.y.hi < (1 << 20) &&
       query.z.lo >= 0 && query.z.hi < (1 << 20),
       s"localComponents: coords must lie in [0, 2^20) for linearized ids, got $query")
-    val schema = StructType(Seq(
-      StructField("prov", LongType, nullable = false),
-      StructField("n", LongType, nullable = false),
-      StructField("x0", IntegerType, nullable = false),
-      StructField("x1", IntegerType, nullable = false),
-      StructField("y0", IntegerType, nullable = false),
-      StructField("y1", IntegerType, nullable = false),
-      StructField("z0", IntegerType, nullable = false),
-      StructField("z1", IntegerType, nullable = false),
-      StructField("face", ArrayType(StructType(Seq(
-        StructField("x", IntegerType, nullable = false),
-        StructField("y", IntegerType, nullable = false),
-        StructField("z", IntegerType, nullable = false))), containsNull = false),
-        nullable = false)))
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val isFloat = c.dataType == graft.core.Meta.TFloat32 || c.dataType == graft.core.Meta.TFloat64
-    chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.value.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, query).iterator.flatMap { s =>
-          c.readChunk(fs, s) match {
-            case None => Iterator.empty // all-zero: no foreground
-            case Some(b) =>
-              val cut = s.cutoutBox
-              val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
-              // union-find over the cut box; -1 = background
-              val parent = new Array[Int](nx * ny * nz)
-              java.util.Arrays.fill(parent, -1)
-              @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
-              def find(i0: Int): Int = {
-                var i = i0
-                while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
-                i
-              }
-              @inline def isFg(lx: Int, ly: Int, lz: Int): Boolean = {
-                val bx = cut.x.lo - b.origin._1 + lx
-                val by = cut.y.lo - b.origin._2 + ly
-                val bz = cut.z.lo - b.origin._3 + lz
-                if (isFloat) b.getDouble(bx, by, bz, 0) != 0.0
-                else b.getLong(bx, by, bz, 0) != 0L
-              }
-              // pass 1: mark foreground, union each voxel with its already-
-              // visited -x/-y/-z neighbors (x-fastest scan order)
-              var lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    if (isFg(lx, ly, lz)) {
-                      val i = li(lx, ly, lz)
-                      parent(i) = i
-                      @inline def union(j: Int): Unit = {
-                        val ri = find(i); val rj = find(j)
-                        if (ri != rj) parent(math.max(ri, rj)) = math.min(ri, rj)
-                      }
-                      if (lx > 0 && parent(li(lx - 1, ly, lz)) >= 0) union(li(lx - 1, ly, lz))
-                      if (ly > 0 && parent(li(lx, ly - 1, lz)) >= 0) union(li(lx, ly - 1, lz))
-                      if (lz > 0 && parent(li(lx, ly, lz - 1)) >= 0) union(li(lx, ly, lz - 1))
-                    }
-                    lx += 1
-                  }
-                  ly += 1
+    val schema = StructType(longs("prov", "n") ++ ints("x0", "x1", "y0", "y1", "z0", "z1") :+
+      arrayOf("face", coordType))
+    chunkRows(query, schema) { fs => s =>
+      c.readChunk(fs, s).iterator.flatMap { b => // a missing chunk has no foreground
+        val v = new CutBox(s.cutoutBox); val cut = v.cut
+        val nx = v.nx; val ny = v.ny; val nz = v.nz
+        val (fg, _) = v.mask(b)
+        // union-find over the cut box; -1 = background
+        val parent = new Array[Int](fg.length)
+        java.util.Arrays.fill(parent, -1)
+        def find(i0: Int): Int = {
+          var i = i0
+          while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+          i
+        }
+        // pass 1: mark foreground, union each voxel with its already-
+        // visited -x/-y/-z neighbors (x-fastest scan order)
+        var lz = 0
+        while (lz < nz) {
+          var ly = 0
+          while (ly < ny) {
+            var lx = 0
+            while (lx < nx) {
+              val i = v.li(lx, ly, lz)
+              if (fg(i)) {
+                parent(i) = i
+                @inline def union(j: Int): Unit = {
+                  val ri = find(i); val rj = find(j)
+                  if (ri != rj) parent(math.max(ri, rj)) = math.min(ri, rj)
                 }
-                lz += 1
+                if (lx > 0 && fg(i - 1)) union(i - 1)
+                if (ly > 0 && fg(i - nx)) union(i - nx)
+                if (lz > 0 && fg(i - nx * ny)) union(i - nx * ny)
               }
-              // pass 2: fold per-root stats + face voxel lists
-              final class Acc {
-                var n = 0L; var minLin = Long.MaxValue
-                var x0 = Int.MaxValue; var x1 = Int.MinValue
-                var y0 = Int.MaxValue; var y1 = Int.MinValue
-                var z0 = Int.MaxValue; var z1 = Int.MinValue
-                val face = scala.collection.mutable.ArrayBuffer.empty[Row]
-              }
-              val accs = scala.collection.mutable.LongMap.empty[Acc]
-              lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    val i = li(lx, ly, lz)
-                    if (parent(i) >= 0) {
-                      val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                      val lin = (gz.toLong << 40) | (gy.toLong << 20) | gx.toLong
-                      val a = accs.getOrElseUpdate(find(i).toLong, new Acc)
-                      a.n += 1
-                      if (lin < a.minLin) a.minLin = lin
-                      if (gx < a.x0) a.x0 = gx; if (gx > a.x1) a.x1 = gx
-                      if (gy < a.y0) a.y0 = gy; if (gy > a.y1) a.y1 = gy
-                      if (gz < a.z0) a.z0 = gz; if (gz > a.z1) a.z1 = gz
-                      if (lx == 0 || lx == nx - 1 || ly == 0 || ly == ny - 1 ||
-                        lz == 0 || lz == nz - 1) a.face += Row(gx, gy, gz)
-                    }
-                    lx += 1
-                  }
-                  ly += 1
-                }
-                lz += 1
-              }
-              accs.values.iterator.map { a =>
-                Row(a.minLin, a.n, a.x0, a.x1, a.y0, a.y1, a.z0, a.z1, a.face.toSeq)
-              }
+              lx += 1
+            }
+            ly += 1
           }
+          lz += 1
+        }
+        // pass 2: fold per-root stats + face voxel lists
+        final class Acc {
+          var n = 0L; var minLin = Long.MaxValue
+          var x0 = Int.MaxValue; var x1 = Int.MinValue
+          var y0 = Int.MaxValue; var y1 = Int.MinValue
+          var z0 = Int.MaxValue; var z1 = Int.MinValue
+          val face = scala.collection.mutable.ArrayBuffer.empty[Row]
+        }
+        val accs = scala.collection.mutable.LongMap.empty[Acc]
+        lz = 0
+        while (lz < nz) {
+          var ly = 0
+          while (ly < ny) {
+            var lx = 0
+            while (lx < nx) {
+              val i = v.li(lx, ly, lz)
+              if (fg(i)) {
+                val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
+                val lin = (gz.toLong << 40) | (gy.toLong << 20) | gx.toLong
+                val a = accs.getOrElseUpdate(find(i).toLong, new Acc)
+                a.n += 1
+                if (lin < a.minLin) a.minLin = lin
+                if (gx < a.x0) a.x0 = gx; if (gx > a.x1) a.x1 = gx
+                if (gy < a.y0) a.y0 = gy; if (gy > a.y1) a.y1 = gy
+                if (gz < a.z0) a.z0 = gz; if (gz > a.z1) a.z1 = gz
+                if (v.onFace(lx, ly, lz)) a.face += Row(gx, gy, gz)
+              }
+              lx += 1
+            }
+            ly += 1
+          }
+          lz += 1
+        }
+        accs.values.iterator.map { a =>
+          Row(a.minLin, a.n, a.x0, a.x1, a.y0, a.y1, a.z0, a.z1, a.face.toSeq)
         }
       }
-    })(rowEnc)
+    }
   }
 
   /** Per-chunk binary DILATION partials (6-connectivity, foreground =
@@ -747,110 +727,56 @@ final class Volume(
     * move. Restricting to `query`-interior semantics: dilation does not
     * grow outside the query box. */
   def localDilate(query: Box): DataFrame = {
-    val c = ctx; val conf = confBc
+    val c = ctx
     require(c.numChannels == 1, "localDilate: single-channel volumes only")
-    val schema = StructType(Seq(
-      StructField("cx", IntegerType, nullable = false),
-      StructField("cy", IntegerType, nullable = false),
-      StructField("cz", IntegerType, nullable = false),
-      StructField("n_fg", LongType, nullable = false),
-      StructField("n_dil", LongType, nullable = false),
-      StructField("shell", ArrayType(StructType(Seq(
-        StructField("x", IntegerType, nullable = false),
-        StructField("y", IntegerType, nullable = false),
-        StructField("z", IntegerType, nullable = false))), containsNull = false),
-        nullable = false),
-      StructField("spill", ArrayType(StructType(Seq(
-        StructField("tcx", IntegerType, nullable = false),
-        StructField("tcy", IntegerType, nullable = false),
-        StructField("tcz", IntegerType, nullable = false),
-        StructField("x", IntegerType, nullable = false),
-        StructField("y", IntegerType, nullable = false),
-        StructField("z", IntegerType, nullable = false))), containsNull = false),
-        nullable = false)))
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val isFloat = c.dataType == graft.core.Meta.TFloat32 || c.dataType == graft.core.Meta.TFloat64
-    val qbox = query
-    chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.value.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, qbox).iterator.flatMap { s =>
-          c.readChunk(fs, s) match {
-            case None => Iterator.empty // all-background
-            case Some(b) =>
-              val cut = s.cutoutBox
-              val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
-              @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
-              val fg = new Array[Boolean](nx * ny * nz)
-              var nFg = 0L
-              var lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    val bx = cut.x.lo - b.origin._1 + lx
-                    val by = cut.y.lo - b.origin._2 + ly
-                    val bz = cut.z.lo - b.origin._3 + lz
-                    val v = if (isFloat) b.getDouble(bx, by, bz, 0) != 0.0
-                      else b.getLong(bx, by, bz, 0) != 0L
-                    if (v) { fg(li(lx, ly, lz)) = true; nFg += 1 }
-                    lx += 1
-                  }
-                  ly += 1
-                }
-                lz += 1
+    val schema = StructType(ints("cx", "cy", "cz") ++ longs("n_fg", "n_dil") ++ Seq(
+      arrayOf("shell", coordType),
+      arrayOf("spill", StructType(ints("tcx", "tcy", "tcz", "x", "y", "z")))))
+    chunkRows(query, schema) { fs => s =>
+      c.readChunk(fs, s).iterator.map { b => // a missing chunk is all background
+        val v = new CutBox(s.cutoutBox); val cut = v.cut
+        val nx = v.nx; val ny = v.ny; val nz = v.nz
+        val (fg, nFg) = v.mask(b)
+        var nDil = 0L
+        val shell = scala.collection.mutable.ArrayBuffer.empty[Row]
+        val spill = scala.collection.mutable.ArrayBuffer.empty[Row]
+        var lz = 0
+        while (lz < nz) {
+          var ly = 0
+          while (ly < ny) {
+            var lx = 0
+            while (lx < nx) {
+              val i = v.li(lx, ly, lz)
+              val self = fg(i)
+              val dil = self ||
+                (lx > 0 && fg(i - 1)) || (lx < nx - 1 && fg(i + 1)) ||
+                (ly > 0 && fg(i - nx)) || (ly < ny - 1 && fg(i + nx)) ||
+                (lz > 0 && fg(i - nx * ny)) || (lz < nz - 1 && fg(i + nx * ny))
+              val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
+              if (dil) {
+                nDil += 1
+                if (v.onFace(lx, ly, lz)) shell += Row(gx, gy, gz)
               }
-              var nDil = 0L
-              val shell = scala.collection.mutable.ArrayBuffer.empty[Row]
-              val spill = scala.collection.mutable.ArrayBuffer.empty[Row]
-              lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    val self = fg(li(lx, ly, lz))
-                    val dil = self ||
-                      (lx > 0 && fg(li(lx - 1, ly, lz))) ||
-                      (lx < nx - 1 && fg(li(lx + 1, ly, lz))) ||
-                      (ly > 0 && fg(li(lx, ly - 1, lz))) ||
-                      (ly < ny - 1 && fg(li(lx, ly + 1, lz))) ||
-                      (lz > 0 && fg(li(lx, ly, lz - 1))) ||
-                      (lz < nz - 1 && fg(li(lx, ly, lz + 1)))
-                    if (dil) {
-                      nDil += 1
-                      val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                      if (lx == 0 || lx == nx - 1 || ly == 0 || ly == ny - 1 ||
-                        lz == 0 || lz == nz - 1) shell += Row(gx, gy, gz)
-                    }
-                    if (self) {
-                      val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                      @inline def push(dcx: Int, dcy: Int, dcz: Int,
-                          tx: Int, ty: Int, tz: Int): Unit = {
-                        if (qbox.x.contains(tx) && qbox.y.contains(ty) && qbox.z.contains(tz))
-                          spill += Row(cx + dcx, cy + dcy, cz + dcz, tx, ty, tz)
-                        ()
-                      }
-                      if (lx == 0) push(-1, 0, 0, gx - 1, gy, gz)
-                      if (lx == nx - 1) push(1, 0, 0, gx + 1, gy, gz)
-                      if (ly == 0) push(0, -1, 0, gx, gy - 1, gz)
-                      if (ly == ny - 1) push(0, 1, 0, gx, gy + 1, gz)
-                      if (lz == 0) push(0, 0, -1, gx, gy, gz - 1)
-                      if (lz == nz - 1) push(0, 0, 1, gx, gy, gz + 1)
-                    }
-                    lx += 1
-                  }
-                  ly += 1
-                }
-                lz += 1
+              if (self) {
+                @inline def push(dcx: Int, dcy: Int, dcz: Int, tx: Int, ty: Int, tz: Int): Unit =
+                  if (query.x.contains(tx) && query.y.contains(ty) && query.z.contains(tz))
+                    spill += Row(s.idx + dcx, s.idy + dcy, s.idz + dcz, tx, ty, tz)
+                if (lx == 0) push(-1, 0, 0, gx - 1, gy, gz)
+                if (lx == nx - 1) push(1, 0, 0, gx + 1, gy, gz)
+                if (ly == 0) push(0, -1, 0, gx, gy - 1, gz)
+                if (ly == ny - 1) push(0, 1, 0, gx, gy + 1, gz)
+                if (lz == 0) push(0, 0, -1, gx, gy, gz - 1)
+                if (lz == nz - 1) push(0, 0, 1, gx, gy, gz + 1)
               }
-              Iterator.single(Row(cx, cy, cz, nFg, nDil, shell.toSeq, spill.toSeq))
+              lx += 1
+            }
+            ly += 1
           }
+          lz += 1
         }
+        Row(s.idx, s.idy, s.idz, nFg, nDil, shell.toSeq, spill.toSeq)
       }
-    })(rowEnc)
+    }
   }
 
   /** Per-chunk binary EROSION partials (6-connectivity) — [[localDilate]]'s
@@ -871,108 +797,42 @@ final class Volume(
     * needs against the face relation and keeps candidates with every need
     * confirmed — O(surface) rows move, the voxel relation never shuffles. */
   def localErode(query: Box): DataFrame = {
-    val c = ctx; val conf = confBc
+    val c = ctx
     require(c.numChannels == 1, "localErode: single-channel volumes only")
-    val coord = StructType(Seq(
-      StructField("x", IntegerType, nullable = false),
-      StructField("y", IntegerType, nullable = false),
-      StructField("z", IntegerType, nullable = false)))
-    val schema = StructType(Seq(
-      StructField("cx", IntegerType, nullable = false),
-      StructField("cy", IntegerType, nullable = false),
-      StructField("cz", IntegerType, nullable = false),
-      StructField("n_fg", LongType, nullable = false),
-      StructField("n_inner", LongType, nullable = false),
-      StructField("cand", ArrayType(StructType(Seq(
-        StructField("x", IntegerType, nullable = false),
-        StructField("y", IntegerType, nullable = false),
-        StructField("z", IntegerType, nullable = false),
-        StructField("needs", ArrayType(coord, containsNull = false), nullable = false))),
-        containsNull = false), nullable = false),
-      StructField("face", ArrayType(coord, containsNull = false), nullable = false)))
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val isFloat = c.dataType == graft.core.Meta.TFloat32 || c.dataType == graft.core.Meta.TFloat64
-    val qbox = query
-    chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.value.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, qbox).iterator.flatMap { s =>
-          c.readChunk(fs, s) match {
-            case None => Iterator.empty // all-background
-            case Some(b) =>
-              val cut = s.cutoutBox
-              val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
-              @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
-              val fg = new Array[Boolean](nx * ny * nz)
-              var nFg = 0L
-              var lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    val bx = cut.x.lo - b.origin._1 + lx
-                    val by = cut.y.lo - b.origin._2 + ly
-                    val bz = cut.z.lo - b.origin._3 + lz
-                    val v = if (isFloat) b.getDouble(bx, by, bz, 0) != 0.0
-                      else b.getLong(bx, by, bz, 0) != 0L
-                    if (v) { fg(li(lx, ly, lz)) = true; nFg += 1 }
-                    lx += 1
-                  }
-                  ly += 1
-                }
-                lz += 1
+    val schema = StructType(ints("cx", "cy", "cz") ++ longs("n_fg", "n_inner") ++ Seq(
+      arrayOf("cand", StructType(coordType.fields :+ arrayOf("needs", coordType))),
+      arrayOf("face", coordType)))
+    chunkRows(query, schema) { fs => s =>
+      c.readChunk(fs, s).iterator.map { b => // a missing chunk is all background
+        val v = new CutBox(s.cutoutBox); val cut = v.cut
+        val nx = v.nx; val ny = v.ny; val nz = v.nz
+        val (fg, nFg) = v.mask(b)
+        var nInner = 0L
+        val cand = scala.collection.mutable.ArrayBuffer.empty[Row]
+        val face = scala.collection.mutable.ArrayBuffer.empty[Row]
+        var lz = 0
+        while (lz < nz) {
+          var ly = 0
+          while (ly < ny) {
+            var lx = 0
+            while (lx < nx) {
+              val i = v.li(lx, ly, lz)
+              if (fg(i)) {
+                val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
+                if (v.onFace(lx, ly, lz)) {
+                  face += Row(gx, gy, gz)
+                  v.erosionNeeds(fg, lx, ly, lz, query).foreach(needs => cand += Row(gx, gy, gz, needs))
+                } else if (v.interiorSurvives(fg, i)) nInner += 1
               }
-              var nInner = 0L
-              val cand = scala.collection.mutable.ArrayBuffer.empty[Row]
-              val face = scala.collection.mutable.ArrayBuffer.empty[Row]
-              lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    if (fg(li(lx, ly, lz))) {
-                      val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                      val onFace = lx == 0 || lx == nx - 1 || ly == 0 || ly == ny - 1 ||
-                        lz == 0 || lz == nz - 1
-                      if (onFace) face += Row(gx, gy, gz)
-                      var localOk = true
-                      var outOfBox = false
-                      val needs = scala.collection.mutable.ArrayBuffer.empty[Row]
-                      @inline def probe(dlx: Int, dly: Int, dlz: Int): Unit = {
-                        val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
-                        if (tlx >= 0 && tlx < nx && tly >= 0 && tly < ny &&
-                          tlz >= 0 && tlz < nz) {
-                          if (!fg(li(tlx, tly, tlz))) localOk = false
-                        } else {
-                          val tx = gx + dlx; val ty = gy + dly; val tz = gz + dlz
-                          if (qbox.x.contains(tx) && qbox.y.contains(ty) && qbox.z.contains(tz))
-                            needs += Row(tx, ty, tz)
-                          else outOfBox = true // background by definition
-                        }
-                        ()
-                      }
-                      probe(-1, 0, 0); probe(1, 0, 0)
-                      probe(0, -1, 0); probe(0, 1, 0)
-                      probe(0, 0, -1); probe(0, 0, 1)
-                      if (localOk && !outOfBox) {
-                        if (needs.isEmpty) nInner += 1
-                        else cand += Row(gx, gy, gz, needs.toSeq)
-                      }
-                    }
-                    lx += 1
-                  }
-                  ly += 1
-                }
-                lz += 1
-              }
-              Iterator.single(Row(cx, cy, cz, nFg, nInner, cand.toSeq, face.toSeq))
+              lx += 1
+            }
+            ly += 1
           }
+          lz += 1
         }
+        Row(s.idx, s.idy, s.idz, nFg, nInner, cand.toSeq, face.toSeq)
       }
-    })(rowEnc)
+    }
   }
 
   /** Per-chunk binary OPENING partials (erode → dilate, 6-connectivity) —
@@ -999,178 +859,90 @@ final class Volume(
     * The voxel relation never shuffles; see
     * [[graft.ops.ArrayOps.openStats]] for the relational combiner. */
   def localOpen(query: Box): DataFrame = {
-    val c = ctx; val conf = confBc
+    val c = ctx
     require(c.numChannels == 1, "localOpen: single-channel volumes only")
-    val coord = StructType(Seq(
-      StructField("x", IntegerType, nullable = false),
-      StructField("y", IntegerType, nullable = false),
-      StructField("z", IntegerType, nullable = false)))
-    val target = StructType(Seq(
-      StructField("tcx", IntegerType, nullable = false),
-      StructField("tcy", IntegerType, nullable = false),
-      StructField("tcz", IntegerType, nullable = false),
-      StructField("x", IntegerType, nullable = false),
-      StructField("y", IntegerType, nullable = false),
-      StructField("z", IntegerType, nullable = false)))
-    val schema = StructType(Seq(
-      StructField("cx", IntegerType, nullable = false),
-      StructField("cy", IntegerType, nullable = false),
-      StructField("cz", IntegerType, nullable = false),
-      StructField("n_fg", LongType, nullable = false),
-      StructField("n_open_loc", LongType, nullable = false),
-      StructField("rim", ArrayType(coord, containsNull = false), nullable = false),
-      StructField("cand", ArrayType(StructType(Seq(
-        StructField("x", IntegerType, nullable = false),
-        StructField("y", IntegerType, nullable = false),
-        StructField("z", IntegerType, nullable = false),
-        StructField("needs", ArrayType(coord, containsNull = false), nullable = false),
-        StructField("targets", ArrayType(target, containsNull = false), nullable = false))),
-        containsNull = false), nullable = false),
-      StructField("face", ArrayType(coord, containsNull = false), nullable = false)))
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val isFloat = c.dataType == graft.core.Meta.TFloat32 || c.dataType == graft.core.Meta.TFloat64
-    val qbox = query
-    chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.value.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, qbox).iterator.flatMap { s =>
-          c.readChunk(fs, s) match {
-            case None => Iterator.empty // all-background
-            case Some(b) =>
-              val cut = s.cutoutBox
-              val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
-              @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
-              val fg = new Array[Boolean](nx * ny * nz)
-              var nFg = 0L
-              var lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    val bx = cut.x.lo - b.origin._1 + lx
-                    val by = cut.y.lo - b.origin._2 + ly
-                    val bz = cut.z.lo - b.origin._3 + lz
-                    val v = if (isFloat) b.getDouble(bx, by, bz, 0) != 0.0
-                      else b.getLong(bx, by, bz, 0) != 0L
-                    if (v) { fg(li(lx, ly, lz)) = true; nFg += 1 }
-                    lx += 1
-                  }
-                  ly += 1
-                }
-                lz += 1
-              }
-              // pass 1: interior erosion (non-face voxels — all 6 probes
-              // in-cut) and face candidates with needs + owner-resolved
-              // dilation targets
-              val opened = new Array[Boolean](nx * ny * nz)
-              val cand = scala.collection.mutable.ArrayBuffer.empty[Row]
-              val face = scala.collection.mutable.ArrayBuffer.empty[Row]
-              lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    if (fg(li(lx, ly, lz))) {
-                      val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                      val onFace = lx == 0 || lx == nx - 1 || ly == 0 || ly == ny - 1 ||
-                        lz == 0 || lz == nz - 1
-                      if (onFace) {
-                        face += Row(gx, gy, gz)
-                        // face candidate: in-cut neighbors must pass; out-of-
-                        // cut neighbors inside the box become needs; an
-                        // out-of-box neighbor is background → dead
-                        var localOk = true
-                        var outOfBox = false
-                        val needs = scala.collection.mutable.ArrayBuffer.empty[Row]
-                        @inline def probe(dlx: Int, dly: Int, dlz: Int): Unit = {
-                          val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
-                          if (tlx >= 0 && tlx < nx && tly >= 0 && tly < ny &&
-                            tlz >= 0 && tlz < nz) {
-                            if (!fg(li(tlx, tly, tlz))) localOk = false
-                          } else {
-                            val tx = gx + dlx; val ty = gy + dly; val tz = gz + dlz
-                            if (qbox.x.contains(tx) && qbox.y.contains(ty) && qbox.z.contains(tz))
-                              needs += Row(tx, ty, tz)
-                            else outOfBox = true
-                          }
-                          ()
-                        }
-                        probe(-1, 0, 0); probe(1, 0, 0)
-                        probe(0, -1, 0); probe(0, 1, 0)
-                        probe(0, 0, -1); probe(0, 0, 1)
-                        if (localOk && !outOfBox) {
-                          // all 7 dilation targets are in-box (an in-box
-                          // eroded voxel's neighbors are in-box — its
-                          // out-of-box neighbors would have killed it);
-                          // owner chunk shifts only on the crossed axis
-                          val targets = scala.collection.mutable.ArrayBuffer.empty[Row]
-                          @inline def tgt(dlx: Int, dly: Int, dlz: Int): Unit = {
-                            val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
-                            val dcx = if (tlx < 0) -1 else if (tlx >= nx) 1 else 0
-                            val dcy = if (tly < 0) -1 else if (tly >= ny) 1 else 0
-                            val dcz = if (tlz < 0) -1 else if (tlz >= nz) 1 else 0
-                            targets += Row(cx + dcx, cy + dcy, cz + dcz,
-                              gx + dlx, gy + dly, gz + dlz)
-                            ()
-                          }
-                          tgt(0, 0, 0)
-                          tgt(-1, 0, 0); tgt(1, 0, 0)
-                          tgt(0, -1, 0); tgt(0, 1, 0)
-                          tgt(0, 0, -1); tgt(0, 0, 1)
-                          cand += Row(gx, gy, gz, needs.toSeq, targets.toSeq)
-                        }
-                      } else {
-                        // interior voxel: erosion fully local
-                        var ok = true
-                        if (!fg(li(lx - 1, ly, lz)) || !fg(li(lx + 1, ly, lz)) ||
-                          !fg(li(lx, ly - 1, lz)) || !fg(li(lx, ly + 1, lz)) ||
-                          !fg(li(lx, ly, lz - 1)) || !fg(li(lx, ly, lz + 1))) ok = false
-                        if (ok) {
-                          // dilate the interior-eroded voxel: all 7 in-cut
-                          opened(li(lx, ly, lz)) = true
-                          opened(li(lx - 1, ly, lz)) = true
-                          opened(li(lx + 1, ly, lz)) = true
-                          opened(li(lx, ly - 1, lz)) = true
-                          opened(li(lx, ly + 1, lz)) = true
-                          opened(li(lx, ly, lz - 1)) = true
-                          opened(li(lx, ly, lz + 1)) = true
-                        }
-                      }
+    val schema = StructType(ints("cx", "cy", "cz") ++ longs("n_fg", "n_open_loc") ++ Seq(
+      arrayOf("rim", coordType),
+      arrayOf("cand", StructType(coordType.fields ++ Seq(arrayOf("needs", coordType),
+        arrayOf("targets", StructType(ints("tcx", "tcy", "tcz", "x", "y", "z")))))),
+      arrayOf("face", coordType)))
+    chunkRows(query, schema) { fs => s =>
+      c.readChunk(fs, s).iterator.map { b => // a missing chunk is all background
+        val v = new CutBox(s.cutoutBox); val cut = v.cut
+        val nx = v.nx; val ny = v.ny; val nz = v.nz
+        val (fg, nFg) = v.mask(b)
+        // pass 1: interior erosion (non-face voxels — all 6 probes in-cut)
+        // and face candidates with needs + owner-resolved dilation targets
+        val opened = new Array[Boolean](fg.length)
+        val cand = scala.collection.mutable.ArrayBuffer.empty[Row]
+        val face = scala.collection.mutable.ArrayBuffer.empty[Row]
+        var lz = 0
+        while (lz < nz) {
+          var ly = 0
+          while (ly < ny) {
+            var lx = 0
+            while (lx < nx) {
+              val i = v.li(lx, ly, lz)
+              if (fg(i)) {
+                val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
+                if (v.onFace(lx, ly, lz)) {
+                  face += Row(gx, gy, gz)
+                  v.erosionNeeds(fg, lx, ly, lz, query).foreach { needs =>
+                    // all 7 dilation targets are in-box (an in-box eroded
+                    // voxel's neighbors are in-box — its out-of-box
+                    // neighbors would have killed it); owner chunk shifts
+                    // only on the crossed axis
+                    val targets = scala.collection.mutable.ArrayBuffer.empty[Row]
+                    @inline def tgt(dlx: Int, dly: Int, dlz: Int): Unit = {
+                      val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
+                      val dcx = if (tlx < 0) -1 else if (tlx >= nx) 1 else 0
+                      val dcy = if (tly < 0) -1 else if (tly >= ny) 1 else 0
+                      val dcz = if (tlz < 0) -1 else if (tlz >= nz) 1 else 0
+                      targets += Row(s.idx + dcx, s.idy + dcy, s.idz + dcz,
+                        gx + dlx, gy + dly, gz + dlz)
                     }
-                    lx += 1
+                    tgt(0, 0, 0)
+                    tgt(-1, 0, 0); tgt(1, 0, 0)
+                    tgt(0, -1, 0); tgt(0, 1, 0)
+                    tgt(0, 0, -1); tgt(0, 0, 1)
+                    cand += Row(gx, gy, gz, needs, targets.toSeq)
                   }
-                  ly += 1
+                } else if (v.interiorSurvives(fg, i)) {
+                  // dilate the interior-eroded voxel: all 7 in-cut
+                  opened(i) = true
+                  opened(i - 1) = true; opened(i + 1) = true
+                  opened(i - nx) = true; opened(i + nx) = true
+                  opened(i - nx * ny) = true; opened(i + nx * ny) = true
                 }
-                lz += 1
               }
-              var nOpenLoc = 0L
-              val rim = scala.collection.mutable.ArrayBuffer.empty[Row]
-              lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    if (opened(li(lx, ly, lz))) {
-                      nOpenLoc += 1
-                      if (lx <= 1 || lx >= nx - 2 || ly <= 1 || ly >= ny - 2 ||
-                        lz <= 1 || lz >= nz - 2)
-                        rim += Row(cut.x.lo + lx, cut.y.lo + ly, cut.z.lo + lz)
-                    }
-                    lx += 1
-                  }
-                  ly += 1
-                }
-                lz += 1
-              }
-              Iterator.single(Row(cx, cy, cz, nFg, nOpenLoc, rim.toSeq, cand.toSeq, face.toSeq))
+              lx += 1
+            }
+            ly += 1
           }
+          lz += 1
         }
+        var nOpenLoc = 0L
+        val rim = scala.collection.mutable.ArrayBuffer.empty[Row]
+        lz = 0
+        while (lz < nz) {
+          var ly = 0
+          while (ly < ny) {
+            var lx = 0
+            while (lx < nx) {
+              if (opened(v.li(lx, ly, lz))) {
+                nOpenLoc += 1
+                if (lx <= 1 || lx >= nx - 2 || ly <= 1 || ly >= ny - 2 || lz <= 1 || lz >= nz - 2)
+                  rim += Row(cut.x.lo + lx, cut.y.lo + ly, cut.z.lo + lz)
+              }
+              lx += 1
+            }
+            ly += 1
+          }
+          lz += 1
+        }
+        Row(s.idx, s.idy, s.idz, nFg, nOpenLoc, rim.toSeq, cand.toSeq, face.toSeq)
       }
-    })(rowEnc)
+    }
   }
 
   /** Per-chunk ZONE-MAP statistics — the parquet-footer idea applied to
@@ -1181,50 +953,35 @@ final class Volume(
     * without fetching them ([[toVoxelsAtLeast]]). Missing chunks report
     * (0, 0) under fillMissing. Integer single-channel volumes only. */
   def chunkStats(query: Box): DataFrame = {
-    val c = ctx; val conf = confBc
+    val c = ctx
     require(c.numChannels == 1, "chunkStats: single-channel volumes only")
     require(c.dataType != graft.core.Meta.TFloat32 && c.dataType != graft.core.Meta.TFloat64,
       "chunkStats: integer volumes only")
-    val schema = StructType(Seq(
-      StructField("cx", IntegerType, nullable = false),
-      StructField("cy", IntegerType, nullable = false),
-      StructField("cz", IntegerType, nullable = false),
-      StructField("vmin", LongType, nullable = false),
-      StructField("vmax", LongType, nullable = false),
-      StructField("n", LongType, nullable = false)))
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val qbox = query
-    chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.value.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, qbox).iterator.map { s =>
-          val cut = s.cutoutBox
-          val nTot = cut.x.len.toLong * cut.y.len * cut.z.len
-          c.readChunk(fs, s) match {
-            case None => Row(cx, cy, cz, 0L, 0L, nTot)
-            case Some(b) =>
-              var mn = Long.MaxValue; var mx = Long.MinValue
-              var z = cut.z.lo
-              while (z <= cut.z.hi) {
-                var y = cut.y.lo
-                while (y <= cut.y.hi) {
-                  var x = cut.x.lo
-                  while (x <= cut.x.hi) {
-                    val v = b.getLong(x - b.origin._1, y - b.origin._2, z - b.origin._3, 0)
-                    if (v < mn) mn = v
-                    if (v > mx) mx = v
-                    x += 1
-                  }
-                  y += 1
-                }
-                z += 1
+    chunkRows(query, StructType(ints("cx", "cy", "cz") ++ longs("vmin", "vmax", "n"))) { fs => s =>
+      val cut = s.cutoutBox
+      val nTot = cut.x.len.toLong * cut.y.len * cut.z.len
+      Iterator.single(c.readChunk(fs, s) match {
+        case None => Row(s.idx, s.idy, s.idz, 0L, 0L, nTot)
+        case Some(b) =>
+          var mn = Long.MaxValue; var mx = Long.MinValue
+          var z = cut.z.lo
+          while (z <= cut.z.hi) {
+            var y = cut.y.lo
+            while (y <= cut.y.hi) {
+              var x = cut.x.lo
+              while (x <= cut.x.hi) {
+                val v = b.getLong(x - b.origin._1, y - b.origin._2, z - b.origin._3, 0)
+                if (v < mn) mn = v
+                if (v > mx) mx = v
+                x += 1
               }
-              Row(cx, cy, cz, mn, mx, nTot)
+              y += 1
+            }
+            z += 1
           }
-        }
-      }
-    })(rowEnc)
+          Row(s.idx, s.idy, s.idz, mn, mx, nTot)
+      })
+    }
   }
 
   /** Zone-map-PRUNED predicate scan: voxels of `query` with `value ≥ t`,
@@ -1234,41 +991,30 @@ final class Volume(
     * threshold query (bright-spot detection, label presence) is selective.
     * Pass a pre-built `stats` relation to reuse the at-rest artifact (the
     * production shape — stats built once at ingest, served to every
-    * query); by default the stats pass runs inline. The surviving task
-    * list joins chunk tasks BROADCAST (stats are chunk-grain metadata,
-    * megabytes at petavoxel scale), and pruned chunks are never fetched
+    * query); by default the stats pass runs inline. The chunk tasks are the
+    * kept stats rows inside the query's cells (broadcast onto the chunk-id
+    * range, so they spread like any chunk task set), and pruned chunks are
+    * never fetched
     * (spec-proven: deleting them from the store does not disturb the
     * pruned scan). Integer single-channel volumes only. */
   def toVoxelsAtLeast(query: Box, t: Long, stats: Option[DataFrame] = None): DataFrame = {
-    val c = ctx; val conf = confBc
+    val c = ctx
     require(c.numChannels == 1, "toVoxelsAtLeast: single-channel volumes only")
-    val kept = stats.getOrElse(chunkStats(query))
-      .filter(col("vmax") >= t).select(col("cx"), col("cy"), col("cz"))
-    val tasks = chunkTasks(query)
-      .join(org.apache.spark.sql.functions.broadcast(kept), Seq("cx", "cy", "cz"))
-    val schema = voxelSchema
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val qbox = query
-    tasks.as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.value.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, qbox).toSeq.flatMap { s =>
-          val bufOpt = c.readChunk(fs, s)
-          val cut = s.cutoutBox
-          for {
-            z <- (cut.z.lo to cut.z.hi).iterator
-            y <- (cut.y.lo to cut.y.hi).iterator
-            x <- (cut.x.lo to cut.x.hi).iterator
-            lv = bufOpt match {
-              case Some(b) => b.getLong(x - b.origin._1, y - b.origin._2, z - b.origin._3, 0)
-              case None => 0L
-            }
-            if lv >= t
-          } yield Row(x, y, z, 0, Volume.widenedOf(c.dataType, lv))
+    val kept = stats.getOrElse(chunkStats(query)).filter(col("vmax") >= t)
+    chunkRows(query, voxelSchema, Some(kept)) { fs => s =>
+      val bufOpt = c.readChunk(fs, s)
+      val cut = s.cutoutBox
+      for {
+        z <- (cut.z.lo to cut.z.hi).iterator
+        y <- (cut.y.lo to cut.y.hi).iterator
+        x <- (cut.x.lo to cut.x.hi).iterator
+        lv = bufOpt match {
+          case Some(b) => b.getLong(x - b.origin._1, y - b.origin._2, z - b.origin._3, 0)
+          case None => 0L
         }
-      }
-    })(rowEnc)
+        if lv >= t
+      } yield Row(x, y, z, 0, Volume.widenedOf(c.dataType, lv))
+    }
   }
 
   /** Per-chunk box-BLUR partials (6-connectivity boundary-aware mean) —
@@ -1294,114 +1040,60 @@ final class Volume(
     * shuffles. A missing chunk reads as zeros (fill-missing semantics),
     * still contributing its geometry. Integer volumes only. */
   def localBlur(query: Box): DataFrame = {
-    val c = ctx; val conf = confBc
+    val c = ctx
     require(c.numChannels == 1, "localBlur: single-channel volumes only")
     require(c.dataType != graft.core.Meta.TFloat32 && c.dataType != graft.core.Meta.TFloat64,
       "localBlur: integer volumes only (exact ⌊s/c⌋ gate semantics)")
-    val schema = StructType(Seq(
-      StructField("cx", IntegerType, nullable = false),
-      StructField("cy", IntegerType, nullable = false),
-      StructField("cz", IntegerType, nullable = false),
-      StructField("zsums", ArrayType(StructType(Seq(
-        StructField("z", IntegerType, nullable = false),
-        StructField("n", LongType, nullable = false),
-        StructField("s", LongType, nullable = false))), containsNull = false),
-        nullable = false),
-      StructField("needs", ArrayType(StructType(Seq(
-        StructField("px", IntegerType, nullable = false),
-        StructField("py", IntegerType, nullable = false),
-        StructField("pz", IntegerType, nullable = false),
-        StructField("s0", LongType, nullable = false),
-        StructField("c", IntegerType, nullable = false),
-        StructField("tx", IntegerType, nullable = false),
-        StructField("ty", IntegerType, nullable = false),
-        StructField("tz", IntegerType, nullable = false))), containsNull = false),
-        nullable = false),
-      StructField("vals", ArrayType(StructType(Seq(
-        StructField("x", IntegerType, nullable = false),
-        StructField("y", IntegerType, nullable = false),
-        StructField("z", IntegerType, nullable = false),
-        StructField("v", LongType, nullable = false))), containsNull = false),
-        nullable = false)))
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val qbox = query
-    chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.value.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, qbox).iterator.map { s =>
-          val bOpt = c.readChunk(fs, s) // None: zero-filled cut
-          val cut = s.cutoutBox
-          val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
-          @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
-          val vv = new Array[Long](nx * ny * nz)
-          bOpt.foreach { b =>
-            var lz = 0
-            while (lz < nz) {
-              var ly = 0
-              while (ly < ny) {
-                var lx = 0
-                while (lx < nx) {
-                  vv(li(lx, ly, lz)) = b.getLong(
-                    cut.x.lo - b.origin._1 + lx, cut.y.lo - b.origin._2 + ly,
-                    cut.z.lo - b.origin._3 + lz, 0)
-                  lx += 1
-                }
-                ly += 1
+    val schema = StructType(ints("cx", "cy", "cz") ++ Seq(
+      arrayOf("zsums", StructType(ints("z") ++ longs("n", "s"))),
+      arrayOf("needs", StructType(ints("px", "py", "pz") ++ longs("s0") ++ ints("c", "tx", "ty", "tz"))),
+      arrayOf("vals", StructType(ints("x", "y", "z") ++ longs("v")))))
+    chunkRows(query, schema) { fs => s =>
+      val v = new CutBox(s.cutoutBox); val cut = v.cut
+      val nx = v.nx; val ny = v.ny; val nz = v.nz
+      val vv = v.values(c.readChunk(fs, s)) // a missing chunk reads as zeros
+      val zn = new Array[Long](nz); val zs = new Array[Long](nz)
+      val needs = scala.collection.mutable.ArrayBuffer.empty[Row]
+      val vals = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var lz = 0
+      while (lz < nz) {
+        var ly = 0
+        while (ly < ny) {
+          var lx = 0
+          while (lx < nx) {
+            val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
+            var s0 = vv(v.li(lx, ly, lz))
+            var cTot = 1
+            val miss = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
+            @inline def probe(dlx: Int, dly: Int, dlz: Int): Unit = {
+              val tx = gx + dlx; val ty = gy + dly; val tz = gz + dlz
+              if (query.x.contains(tx) && query.y.contains(ty) && query.z.contains(tz)) {
+                cTot += 1
+                val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
+                if (tlx >= 0 && tlx < nx && tly >= 0 && tly < ny && tlz >= 0 && tlz < nz)
+                  s0 += vv(v.li(tlx, tly, tlz))
+                else miss += ((tx, ty, tz))
               }
-              lz += 1
             }
-          }
-          val zn = new Array[Long](nz); val zs = new Array[Long](nz)
-          val needs = scala.collection.mutable.ArrayBuffer.empty[Row]
-          val vals = scala.collection.mutable.ArrayBuffer.empty[Row]
-          var lz = 0
-          while (lz < nz) {
-            var ly = 0
-            while (ly < ny) {
-              var lx = 0
-              while (lx < nx) {
-                val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                var s0 = vv(li(lx, ly, lz))
-                var cTot = 1
-                val miss = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
-                @inline def probe(dlx: Int, dly: Int, dlz: Int): Unit = {
-                  val tx = gx + dlx; val ty = gy + dly; val tz = gz + dlz
-                  if (qbox.x.contains(tx) && qbox.y.contains(ty) && qbox.z.contains(tz)) {
-                    cTot += 1
-                    val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
-                    if (tlx >= 0 && tlx < nx && tly >= 0 && tly < ny && tlz >= 0 && tlz < nz)
-                      s0 += vv(li(tlx, tly, tlz))
-                    else miss += ((tx, ty, tz))
-                  }
-                  ()
-                }
-                probe(-1, 0, 0); probe(1, 0, 0)
-                probe(0, -1, 0); probe(0, 1, 0)
-                probe(0, 0, -1); probe(0, 0, 1)
-                if (miss.isEmpty) {
-                  zn(lz) += 1
-                  zs(lz) += Math.floorDiv(s0, cTot.toLong)
-                } else {
-                  miss.foreach { case (tx, ty, tz) =>
-                    needs += Row(gx, gy, gz, s0, cTot, tx, ty, tz)
-                  }
-                }
-                if (lx == 0 || lx == nx - 1 || ly == 0 || ly == ny - 1 ||
-                  lz == 0 || lz == nz - 1)
-                  vals += Row(gx, gy, gz, vv(li(lx, ly, lz)))
-                lx += 1
-              }
-              ly += 1
+            probe(-1, 0, 0); probe(1, 0, 0)
+            probe(0, -1, 0); probe(0, 1, 0)
+            probe(0, 0, -1); probe(0, 0, 1)
+            if (miss.isEmpty) {
+              zn(lz) += 1
+              zs(lz) += Math.floorDiv(s0, cTot.toLong)
+            } else {
+              miss.foreach { case (tx, ty, tz) => needs += Row(gx, gy, gz, s0, cTot, tx, ty, tz) }
             }
-            lz += 1
+            if (v.onFace(lx, ly, lz)) vals += Row(gx, gy, gz, vv(v.li(lx, ly, lz)))
+            lx += 1
           }
-          val zsums = (0 until nz).filter(zn(_) > 0)
-            .map(i => Row(cut.z.lo + i, zn(i), zs(i)))
-          Row(cx, cy, cz, zsums, needs.toSeq, vals.toSeq)
+          ly += 1
         }
+        lz += 1
       }
-    })(rowEnc)
+      val zsums = (0 until nz).filter(zn(_) > 0).map(i => Row(cut.z.lo + i, zn(i), zs(i)))
+      Iterator.single(Row(s.idx, s.idy, s.idz, zsums, needs.toSeq, vals.toSeq))
+    }
   }
 
   /** Per-chunk CONTACT-SURFACE partials over a labeled segmentation volume
@@ -1427,95 +1119,57 @@ final class Volume(
     * probe→negface on coordinates, and folds both into per-label-pair
     * totals. Integer label volumes only. */
   def localContacts(query: Box): DataFrame = {
-    val c = ctx; val conf = confBc
+    val c = ctx
     require(c.numChannels == 1, "localContacts: single-channel volumes only")
     require(c.dataType != graft.core.Meta.TFloat32 && c.dataType != graft.core.Meta.TFloat64,
       "localContacts: integer label volumes only")
-    val labeled = StructType(Seq(
-      StructField("x", IntegerType, nullable = false),
-      StructField("y", IntegerType, nullable = false),
-      StructField("z", IntegerType, nullable = false),
-      StructField("label", LongType, nullable = false)))
-    val schema = StructType(Seq(
-      StructField("cx", IntegerType, nullable = false),
-      StructField("cy", IntegerType, nullable = false),
-      StructField("cz", IntegerType, nullable = false),
-      StructField("pairs", ArrayType(StructType(Seq(
-        StructField("la", LongType, nullable = false),
-        StructField("lb", LongType, nullable = false),
-        StructField("n", LongType, nullable = false))), containsNull = false),
-        nullable = false),
-      StructField("probe", ArrayType(labeled, containsNull = false), nullable = false),
-      StructField("negface", ArrayType(labeled, containsNull = false), nullable = false)))
-    val rowEnc = Encoders.row(schema)
-    val taskEnc = Encoders.product[(Int, Int, Int)]
-    val qbox = query
-    chunkTasks(query).as(taskEnc).mapPartitions({ it =>
-      val fs = ChunkStore.fs(c.root, conf.value.conf)
-      it.flatMap { case (cx, cy, cz) =>
-        c.sliceAt(cx, cy, cz, qbox).iterator.flatMap { s =>
-          c.readChunk(fs, s) match {
-            case None => Iterator.empty // all-background
-            case Some(b) =>
-              val cut = s.cutoutBox
-              val nx = cut.x.len; val ny = cut.y.len; val nz = cut.z.len
-              @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
-              val lab = new Array[Long](nx * ny * nz)
-              var lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    lab(li(lx, ly, lz)) = b.getLong(
-                      cut.x.lo - b.origin._1 + lx, cut.y.lo - b.origin._2 + ly,
-                      cut.z.lo - b.origin._3 + lz, 0)
-                    lx += 1
-                  }
-                  ly += 1
-                }
-                lz += 1
-              }
-              val pairCnt = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
-              val probe = scala.collection.mutable.ArrayBuffer.empty[Row]
-              val negface = scala.collection.mutable.ArrayBuffer.empty[Row]
-              @inline def addPair(a: Long, bb: Long): Unit = {
-                val k = if (a < bb) (a, bb) else (bb, a)
-                pairCnt.update(k, pairCnt.getOrElse(k, 0L) + 1L)
-              }
-              lz = 0
-              while (lz < nz) {
-                var ly = 0
-                while (ly < ny) {
-                  var lx = 0
-                  while (lx < nx) {
-                    val v = lab(li(lx, ly, lz))
-                    if (v != 0L) {
-                      val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                      // local +x/+y/+z pairs — each counted exactly once
-                      if (lx + 1 < nx) { val n = lab(li(lx + 1, ly, lz)); if (n != 0L && n != v) addPair(v, n) }
-                      if (ly + 1 < ny) { val n = lab(li(lx, ly + 1, lz)); if (n != 0L && n != v) addPair(v, n) }
-                      if (lz + 1 < nz) { val n = lab(li(lx, ly, lz + 1)); if (n != 0L && n != v) addPair(v, n) }
-                      // forward halo: positive faces push a probe across the seam
-                      if (lx == nx - 1 && qbox.x.contains(gx + 1)) probe += Row(gx + 1, gy, gz, v)
-                      if (ly == ny - 1 && qbox.y.contains(gy + 1)) probe += Row(gx, gy + 1, gz, v)
-                      if (lz == nz - 1 && qbox.z.contains(gz + 1)) probe += Row(gx, gy, gz + 1, v)
-                      // backward presence: negative faces are probe targets
-                      if (lx == 0 || ly == 0 || lz == 0) negface += Row(gx, gy, gz, v)
-                    }
-                    lx += 1
-                  }
-                  ly += 1
-                }
-                lz += 1
-              }
-              val pairs = pairCnt.toSeq.sortBy(_._1)
-                .map { case ((a, bb), n) => Row(a, bb, n) }
-              Iterator.single(Row(cx, cy, cz, pairs, probe.toSeq, negface.toSeq))
-          }
+    val labeled = StructType(coordType.fields ++ longs("label"))
+    val schema = StructType(ints("cx", "cy", "cz") ++ Seq(
+      arrayOf("pairs", StructType(longs("la", "lb", "n"))),
+      arrayOf("probe", labeled), arrayOf("negface", labeled)))
+    chunkRows(query, schema) { fs => s =>
+      c.readChunk(fs, s).iterator.map { b => // a missing chunk is all background
+        val v = new CutBox(s.cutoutBox); val cut = v.cut
+        val nx = v.nx; val ny = v.ny; val nz = v.nz
+        val lab = v.values(Some(b))
+        val pairCnt = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
+        val probe = scala.collection.mutable.ArrayBuffer.empty[Row]
+        val negface = scala.collection.mutable.ArrayBuffer.empty[Row]
+        @inline def addPair(a: Long, bb: Long): Unit = {
+          val k = if (a < bb) (a, bb) else (bb, a)
+          pairCnt.update(k, pairCnt.getOrElse(k, 0L) + 1L)
         }
+        var lz = 0
+        while (lz < nz) {
+          var ly = 0
+          while (ly < ny) {
+            var lx = 0
+            while (lx < nx) {
+              val i = v.li(lx, ly, lz)
+              val l = lab(i)
+              if (l != 0L) {
+                val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
+                // local +x/+y/+z pairs — each counted exactly once
+                if (lx + 1 < nx) { val n = lab(i + 1); if (n != 0L && n != l) addPair(l, n) }
+                if (ly + 1 < ny) { val n = lab(i + nx); if (n != 0L && n != l) addPair(l, n) }
+                if (lz + 1 < nz) { val n = lab(i + nx * ny); if (n != 0L && n != l) addPair(l, n) }
+                // forward halo: positive faces push a probe across the seam
+                if (lx == nx - 1 && query.x.contains(gx + 1)) probe += Row(gx + 1, gy, gz, l)
+                if (ly == ny - 1 && query.y.contains(gy + 1)) probe += Row(gx, gy + 1, gz, l)
+                if (lz == nz - 1 && query.z.contains(gz + 1)) probe += Row(gx, gy, gz + 1, l)
+                // backward presence: negative faces are probe targets
+                if (lx == 0 || ly == 0 || lz == 0) negface += Row(gx, gy, gz, l)
+              }
+              lx += 1
+            }
+            ly += 1
+          }
+          lz += 1
+        }
+        val pairs = pairCnt.toSeq.sortBy(_._1).map { case ((a, bb), n) => Row(a, bb, n) }
+        Row(s.idx, s.idy, s.idz, pairs, probe.toSeq, negface.toSeq)
       }
-    })(rowEnc)
+    }
   }
 
   /** The whole volume as a Catalyst-native voxel relation: a custom
@@ -1560,7 +1214,7 @@ final class Volume(
       "write start must align with the chunk grid (reference: src/modes/multithreads.jl:45-47)")
     require(buf.nc == meta.numChannels, "channel count mismatch")
     require(buf.dataType == meta.dataType, "dtype mismatch")
-    val c = ctx; val conf = confBc
+    val c = ctx; val openFs = storeFs
     /** Encoded bytes for one chunk of the write, read-modify-merged when the
       * write box only partially covers it (so existing data survives). The
       * stored blob must always cover the chunk box — that's the shape the
@@ -1587,7 +1241,7 @@ final class Volume(
     for (cells <- chunkCells(q, perShard = c.shard.isDefined)) {
       val bufBc = spark.sparkContext.broadcast(buf)
       val written = cells.mapPartitions { it =>
-        val fs = ChunkStore.fs(c.root, conf.value.conf)
+        val fs = openFs()
         val b = bufBc.value
         c.shard match {
           case None => it.flatMap { case (cx, cy, cz) =>
@@ -1635,7 +1289,7 @@ final class Volume(
   def fromVoxels(df: DataFrame): Long = {
     require(mrc.isEmpty, "mrc: read-only through the chunk engine — " +
       "export with graft.sources.Mrc.write")
-    val c = ctx; val conf = confBc; val t = meta.dataType; val nc = meta.numChannels
+    val c = ctx; val openFs = storeFs; val t = meta.dataType; val nc = meta.numChannels
     val (csx, csy, csz) = c.chunkSize
     val (ox, oy, oz) = (Grid.gridOffset(c.voxelOffset._1, csx),
       Grid.gridOffset(c.voxelOffset._2, csy), Grid.gridOffset(c.voxelOffset._3, csz))
@@ -1667,7 +1321,7 @@ final class Volume(
         .setMapSideCombine(true)
       if (c.shard.isDefined) merged.setKeyOrdering(Ordering.by((id: Long) => (shardOf(id), id)))
       val written = merged.mapPartitions { it =>
-        val fs = ChunkStore.fs(c.root, conf.value.conf)
+        val fs = openFs()
         val chunks = it.map { case (id, part) =>
           val (cx, cy, cz) = ids.coords(id)
           val s = c.sliceAt(cx, cy, cz, vb).get; val cb = s.chunkBox
@@ -1711,7 +1365,7 @@ final class Volume(
     * carried by the listing itself), parse names back to grid coords,
     * bounds-filter to the query's id ranges. */
   private def listedChunkSizes(query: Box, caller: String): Dataset[(Int, Int, Int, Long)] = {
-    val c = ctx; val conf = confBc
+    val c = ctx; val openFs = storeFs
     require(c.shard.isEmpty,
       s"$caller: sharded stores enumerate via the shard index (one cached GET per shard)")
     implicit val enc4 = Encoders.product[(Int, Int, Int, Long)]
@@ -1723,7 +1377,7 @@ final class Volume(
       PrecomputedScan.maxListingTasks(spark.sparkContext.defaultParallelism)))
     spark.createDataset(globs)(Encoders.STRING).repartition(slots)
       .mapPartitions { git =>
-        val fs = ChunkStore.fs(c.root, conf.value.conf)
+        val fs = openFs()
         git.flatMap(g => ChunkStore.globRelSizes(fs, c.root, c.scaleKey, g))
           .flatMap { case (rel, len) =>
             c.parseRelKey(rel).map { case (cx, cy, cz) => (cx, cy, cz, len) } }
@@ -1760,8 +1414,8 @@ final class Volume(
     * modes, mirroring the precomputed DSv2 scan's probe-vs-listing choice:
     *
     *  - PROBE (small grids): a distributed existence probe over the
-    *    arithmetic chunk grid — the expected cells come from `chunkTasks`
-    *    (never materialized on the driver) and each executor probes its
+    *    arithmetic chunk grid — the expected cells are the chunk tasks'
+    *    ids (never materialized on the driver) and each executor probes its
     *    own cells. O(cells) HEADs; nothing lists the store.
     *  - LISTING (`auto` above [[PrecomputedScan.ListingThreshold]] cells,
     *    non-sharded): LIST the present chunks (O(objects), bounded per-
@@ -1773,8 +1427,7 @@ final class Volume(
     *  (one cached GET per shard, then in-memory lookups per cell), already
     *  O(shard objects) I/O. */
   def missingChunks(query: Box, planning: String = "auto"): Dataset[String] = {
-    val c = ctx; val conf = confBc
-    implicit val se = Encoders.STRING
+    val c = ctx
     val useListing = planning match {
       case "listing" => true
       case "probe" => false
@@ -1784,27 +1437,18 @@ final class Volume(
         s"missingChunks planning must be auto|probe|listing, got $other")
     }
     if (useListing) {
-      implicit val enc3 = Encoders.product[(Int, Int, Int)]
-      val expected = chunkTasks(query).as(Encoders.product[(Int, Int, Int)])
-        .flatMap { case (cx, cy, cz) =>
-          c.sliceAt(cx, cy, cz, query).map(s => (s.idx, s.idy, s.idz)) }
-      expected.toDF("cx", "cy", "cz")
-        .join(presentChunks(query).toDF("cx", "cy", "cz"), Seq("cx", "cy", "cz"), "left_anti")
-        .as[(Int, Int, Int)]
-        .mapPartitions(_.flatMap { case (cx, cy, cz) =>
-          c.sliceAt(cx, cy, cz, query).map(c.relKey) })
+      val expected = chunkRows(query, StructType(ints("cx", "cy", "cz") :+ field("key", StringType))) {
+        _ => s => Iterator.single(Row(s.idx, s.idy, s.idz, c.relKey(s)))
+      }
+      expected.join(presentChunks(query).toDF("cx", "cy", "cz"), Seq("cx", "cy", "cz"), "left_anti")
+        .select(col("key")).as(Encoders.STRING)
     } else
-      chunkTasks(query).as(Encoders.product[(Int, Int, Int)])
-        .mapPartitions { it =>
-          val fs = ChunkStore.fs(c.root, conf.value.conf)
-          // suffix convention resolved once per partition (first hit wins):
-          // one existence probe per absent cell, not two
-          val prober = new ChunkStore.SuffixProber(fs, c.root)
-          it.flatMap { case (cx, cy, cz) =>
-            c.sliceAt(cx, cy, cz, query).filterNot(s => c.chunkExists(fs, prober, s))
-              .map(c.relKey)
-          }
-        }
+      chunkRows(query, StructType(Seq(field("key", StringType)))) { fs =>
+        // suffix convention resolved once per partition (first hit wins):
+        // one existence probe per absent cell, not two
+        val prober = new ChunkStore.SuffixProber(fs, c.root)
+        s => if (c.chunkExists(fs, prober, s)) Iterator.empty else Iterator.single(Row(c.relKey(s)))
+      }.as(Encoders.STRING)
   }
 
   /** Write the info JSON back to the store (reference: src/type.jl:335-339). */
@@ -1835,6 +1479,106 @@ object Volume {
   }
 
   import graft.core.Meta._
+
+  /** Chunk tasks for `total` chunk ids: one partition per chunk, up to
+    * twice the default parallelism. */
+  private[graft] def taskPartitions(total: Long, sc: org.apache.spark.SparkContext): Int =
+    math.max(1, math.min(total, sc.defaultParallelism * 2L)).toInt
+
+  private def field(name: String, t: DataType): StructField = StructField(name, t, nullable = false)
+  private def ints(names: String*): Seq[StructField] = names.map(field(_, IntegerType))
+  private def longs(names: String*): Seq[StructField] = names.map(field(_, LongType))
+  /** A list of `t` structs; neither it nor its elements are null. */
+  private def arrayOf(name: String, t: StructType): StructField =
+    field(name, ArrayType(t, containsNull = false))
+  /** The `(x, y, z)` voxel struct of the halo kernels' lists. */
+  private val coordType: StructType = StructType(ints("x", "y", "z"))
+
+  /** A chunk slice's cut box as flat arrays indexed
+    * `(lz * ny + ly) * nx + lx` — the view the halo kernels share. Each
+    * kernel keeps its own per-voxel loops. */
+  private final class CutBox(val cut: Box) {
+    val nx: Int = cut.x.len; val ny: Int = cut.y.len; val nz: Int = cut.z.len
+    @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
+    @inline def onFace(lx: Int, ly: Int, lz: Int): Boolean =
+      lx == 0 || lx == nx - 1 || ly == 0 || ly == ny - 1 || lz == 0 || lz == nz - 1
+
+    /** The foreground (nonzero) mask of `b` over the cut, float voxels read
+      * as doubles, and its voxel count. */
+    def mask(b: VoxelBuffer): (Array[Boolean], Long) = {
+      val isFloat = b.dataType == TFloat32 || b.dataType == TFloat64
+      val ox = cut.x.lo - b.origin._1; val oy = cut.y.lo - b.origin._2; val oz = cut.z.lo - b.origin._3
+      val fg = new Array[Boolean](nx * ny * nz)
+      var n = 0L; var i = 0
+      var lz = 0
+      while (lz < nz) {
+        var ly = 0
+        while (ly < ny) {
+          var lx = 0
+          while (lx < nx) {
+            fg(i) = if (isFloat) b.getDouble(ox + lx, oy + ly, oz + lz, 0) != 0.0
+              else b.getLong(ox + lx, oy + ly, oz + lz, 0) != 0L
+            if (fg(i)) n += 1
+            i += 1; lx += 1
+          }
+          ly += 1
+        }
+        lz += 1
+      }
+      (fg, n)
+    }
+
+    /** The voxel values over the cut as Longs; zeros for a missing chunk. */
+    def values(b: Option[VoxelBuffer]): Array[Long] = {
+      val vs = new Array[Long](nx * ny * nz)
+      for (b <- b) {
+        val ox = cut.x.lo - b.origin._1; val oy = cut.y.lo - b.origin._2; val oz = cut.z.lo - b.origin._3
+        var i = 0
+        var lz = 0
+        while (lz < nz) {
+          var ly = 0
+          while (ly < ny) {
+            var lx = 0
+            while (lx < nx) {
+              vs(i) = b.getLong(ox + lx, oy + ly, oz + lz, 0)
+              i += 1; lx += 1
+            }
+            ly += 1
+          }
+          lz += 1
+        }
+      }
+      vs
+    }
+
+    /** Whether foreground voxel `i`, on no face, survives erosion: all six
+      * neighbours are foreground. */
+    @inline def interiorSurvives(fg: Array[Boolean], i: Int): Boolean =
+      fg(i - 1) && fg(i + 1) && fg(i - nx) && fg(i + nx) && fg(i - nx * ny) && fg(i + nx * ny)
+
+    /** The erosion probe of foreground voxel (lx, ly, lz) on a face: None
+      * when an in-cut neighbour is background or a neighbour past the cut
+      * lies outside `query` (background by definition); otherwise the
+      * across-seam neighbours whose presence the seam join must confirm. */
+    def erosionNeeds(fg: Array[Boolean], lx: Int, ly: Int, lz: Int, query: Box): Option[Seq[Row]] = {
+      val needs = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var alive = true
+      def probe(dlx: Int, dly: Int, dlz: Int): Unit = {
+        val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
+        if (tlx >= 0 && tlx < nx && tly >= 0 && tly < ny && tlz >= 0 && tlz < nz) {
+          if (!fg(li(tlx, tly, tlz))) alive = false
+        } else {
+          val tx = cut.x.lo + tlx; val ty = cut.y.lo + tly; val tz = cut.z.lo + tlz
+          if (query.x.contains(tx) && query.y.contains(ty) && query.z.contains(tz)) needs += Row(tx, ty, tz)
+          else alive = false
+        }
+      }
+      probe(-1, 0, 0); probe(1, 0, 0)
+      probe(0, -1, 0); probe(0, 1, 0)
+      probe(0, 0, -1); probe(0, 0, 1)
+      if (alive) Some(needs.toSeq) else None
+    }
+  }
 
   def widenedType(t: VoxelType): DataType = t match {
     case TBool => BooleanType
@@ -1935,10 +1679,15 @@ object Volume {
   private[volume] final class PartialChunks(t: VoxelType, cellVoxels: Int) extends Serializable {
     private val es = t.byteSize; private val entry = 4 + es
     private val denseSize = 1L + cellVoxels.toLong * es + (cellVoxels + 7) / 8
-    private def write(a: Array[Byte], off: Int, width: Int, v: Long): Unit =
-      (0 until width).foreach(k => a(off + k) = (v >>> 8 * k).toByte)
-    private def read(a: Array[Byte], off: Int, width: Int): Long =
-      (0 until width).foldLeft(0L)((v, k) => v | (a(off + k) & 0xffL) << 8 * k)
+    private def write(a: Array[Byte], off: Int, width: Int, v: Long): Unit = {
+      var k = 0
+      while (k < width) { a(off + k) = (v >>> 8 * k).toByte; k += 1 }
+    }
+    private def read(a: Array[Byte], off: Int, width: Int): Long = {
+      var v = 0L; var k = 0
+      while (k < width) { v |= (a(off + k) & 0xffL) << 8 * k; k += 1 }
+      v
+    }
     def one(v: (Int, Long)): Array[Byte] = add(new Array[Byte](5 + entry), v)
     def add(a: Array[Byte], v: (Int, Long)): Array[Byte] = put(a, v._1, v._2)
     private def put(a: Array[Byte], i: Int, bits: Long): Array[Byte] =

@@ -50,7 +50,7 @@ class VoxelScanSpec extends AnyFunSuite {
     // the physical scan must treat it as empty, not a garbage id space
     assert(vol.voxels().filter(col("x") >= 100 && col("x") <= 1).count() == 0)
     assert(vol.numChunks(Box(100, 1, 1, 10, 1, 10)) == 0)
-    assert(vol.chunkTasks(Box(100, 1, 1, 10, 1, 10)).count() == 0)
+    assert(vol.toVoxels(Box(100, 1, 1, 10, 1, 10)).count() == 0)
     val empty = vol.cutout(Box(100, 1, 1, 10, 1, 10))
     assert(empty.sx == 0 && empty.sy == 0 && empty.sz == 0)
   }
@@ -134,6 +134,42 @@ class VoxelScanSpec extends AnyFunSuite {
       else new java.math.BigDecimal((x - 1) + 10L * (y - 1))
       assert(got.compareTo(expected) == 0, s"($x,$y): $got != $expected")
     }
+  }
+
+  test("the row path is the columnar path projected to rows") {
+    import scala.jdk.CollectionConverters._
+    /** The planned scan's rows through `execute()` and through
+      * `executeColumnar()`, each row as comparable values. */
+    def bothPaths(df: org.apache.spark.sql.DataFrame): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
+      val scan = df.queryExecution.executedPlan.collectFirst { case v: VoxelScanExec => v }.get
+      val types = scan.output.map(_.dataType)
+      val values = (r: org.apache.spark.sql.catalyst.InternalRow) =>
+        r.toSeq(types).map { case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal; case v => v }
+      (scan.execute().map(values).collect().toSeq,
+        scan.executeColumnar().flatMap(_.rowIterator().asScala.map(values)).collect().toSeq)
+    }
+    // u64 with the high bit set and clear
+    val meta = Meta.VolumeMeta("image", Meta.TUInt64, 1, Vector(
+      Meta.ScaleMeta("1_1_1", (4, 4, 2), "gzip", (1, 1, 1), (8, 4, 2), (0, 0, 0))))
+    val u64 = Volume.create(spark, SparkSuite.tempDir("graft-rowpath"), meta)
+    val buf = VoxelBuffer.zeros(Meta.TUInt64, 8, 4, 2, 1, (1, 1, 1))
+    for (z <- 0 until 2; y <- 0 until 4; x <- 0 until 8)
+      buf.setLong(x, y, z, 0, if (x % 2 == 1) java.lang.Long.MIN_VALUE + x + y else x + 10L * y)
+    u64.ingest(buf)
+    val (rows, cols) = bothPaths(u64.voxels())
+    assert(rows.length == 8 * 4 * 2 && rows == cols)
+    val top = new java.math.BigDecimal(java.math.BigInteger.ONE.shiftLeft(63))
+    val u = rows.map(_(4).asInstanceOf[java.math.BigDecimal])
+    assert(u.exists(_.compareTo(top) >= 0) && u.exists(v => v.signum > 0 && v.compareTo(top) < 0))
+    // a coords-only projection
+    val (coords, coordCols) = bothPaths(u64.voxels().select(col("x"), col("z")))
+    assert(coords.length == 8 * 4 * 2 && coords == coordCols && coords.head.length == 2)
+    // a zero-filled missing chunk: the second x chunk reads zero on both paths
+    assert(new java.io.File(u64.root, "1_1_1/4-8_0-4_0-2").delete())
+    val (filled, filledCols) = bothPaths(u64.voxels())
+    assert(filled == filledCols)
+    assert(filled.filter(_(0).asInstanceOf[Int] > 4).forall(_(4).asInstanceOf[java.math.BigDecimal].signum == 0))
+    assert(filled.filter(_(0).asInstanceOf[Int] <= 4).exists(_(4).asInstanceOf[java.math.BigDecimal].signum != 0))
   }
 
   test("SQL metrics account fetched chunks, bytes, and output rows") {
