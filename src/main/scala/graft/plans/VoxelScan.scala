@@ -1,15 +1,18 @@
 package graft.plans
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.execution.SparkStrategy
-import org.apache.spark.sql.types.Decimal
+import org.apache.spark.sql.types.{Decimal, IntegerType}
 
 import scala.jdk.CollectionConverters._
 
@@ -17,38 +20,64 @@ import graft.core.Grid
 import graft.core.Grid.{Box, Ival}
 import graft.volume.{ChunkStore, VolumeCtx, Volume, VoxelBuffer}
 
-/** The voxel view as a first-class Catalyst citizen.
+/** The voxel view as a first-class Catalyst citizen: the voxels of
+  * `box ∩ volume`, read with the handle's broadcast store conf.
   *
   * `Volume.voxels()` produces a [[VoxelScan]] leaf covering the whole
-  * physical volume. The [[PushBoxFilters]] optimizer rule narrows that box
-  * from x/y/z range predicates sitting above it — so
-  * `vol.voxels().filter($"x" between (a, b))` fetches only intersecting
-  * chunks, reproducing the reference's exact chunk pruning
-  * (reference: src/ChunkIterators.jl:20-24) as a Catalyst rewrite. The
-  * residual filter still runs, so semantics never depend on the rule firing.
+  * physical volume and `Volume.toVoxels(box)` one covering `box`. The
+  * [[PushBoxFilters]] optimizer rule narrows that box from x/y/z range
+  * predicates sitting above it — so `vol.voxels().filter($"x" between (a, b))`
+  * fetches only intersecting chunks, reproducing the reference's exact chunk
+  * pruning (reference: src/ChunkIterators.jl:20-24) as a Catalyst rewrite —
+  * and drops those predicates, which then hold on every row the scan emits.
+  *
+  * Statistics are the row count of the box and the row width, so a join
+  * plans the scan by its real size (a petavoxel scan is never broadcast).
   *
   * This is the (LogicalPlan + Rule + Strategy + Exec) stack from
   * SURVEY.md §4, registered through [[GraftExtensions]].
   */
-final case class VoxelScan(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
-    extends LeafNode {
+final case class VoxelScan(ctx: VolumeCtx, box: Box, output: Seq[Attribute],
+    storeConf: Broadcast[ChunkStore.SerializableConf]) extends LeafNode with MultiInstanceRelation {
   override def simpleString(maxFields: Int): String =
     s"VoxelScan ${ctx.root} box=[${box.x.lo}..${box.x.hi}, ${box.y.lo}..${box.y.hi}, ${box.z.lo}..${box.z.hi}]"
+
+  /** Fresh attribute ids, so a self-join of one scan resolves. */
+  override def newInstance(): VoxelScan = copy(output = output.map(_.newInstance()))
+
+  override def computeStats(): Statistics = {
+    val b = box.intersect(ctx.volumeBox)
+    val rows =
+      if (b.isEmpty) BigInt(0)
+      else b.dims.map(i => BigInt(i.hi.toLong - i.lo + 1)).product * ctx.numChannels
+    Statistics(sizeInBytes = rows * EstimationUtils.getSizePerRow(output), rowCount = Some(rows))
+  }
 }
 
 /** Narrow a VoxelScan's box using conjunctive x/y/z range predicates above
-  * it, and prune its output columns from enclosing Projects. The filter is
-  * left in place (exact residual evaluation); only the I/O set shrinks —
-  * and when `value` is pruned away entirely, the physical scan skips blob
-  * fetch/decode and emits coordinates arithmetically (a `count(*)` or
-  * box-extent query touches zero objects). */
-object PushBoxFilters extends Rule[LogicalPlan] {
+  * it, and prune its output columns from enclosing Projects. A predicate
+  * folded into the box — a `>=`, `>`, `<=`, `<` or `=` between the scan's
+  * own `x`/`y`/`z` and an `Int` literal, in the deterministic prefix of the
+  * conjuncts — holds on every row the narrowed scan emits, so it leaves the
+  * filter; the other conjuncts stay as its residual, and a filter with none
+  * left is removed. No box literal then reaches the generated code, so a
+  * query over a new box compiles nothing. When `value` is pruned away
+  * entirely, the physical scan skips blob fetch/decode and emits
+  * coordinates arithmetically (a `count(*)` or box-extent query touches
+  * zero objects). */
+object PushBoxFilters extends Rule[LogicalPlan] with PredicateHelper {
   import org.apache.spark.sql.catalyst.plans.logical.Project
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case f @ Filter(cond, scan: VoxelScan) =>
-      val narrowed = conjuncts(cond).foldLeft(scan.box)((b, e) => narrow(b, e, scan))
-      if (narrowed == scan.box) f else f.copy(child = scan.copy(box = narrowed))
+      val parts = splitConjunctivePredicates(cond)
+      val bounds = parts.takeWhile(_.deterministic).flatMap(e => bound(e, scan).map(e -> _))
+      if (bounds.isEmpty) f
+      else {
+        val narrowed = scan.copy(box = bounds.foldLeft(scan.box)(_ intersect _._2))
+        parts.filterNot(e => bounds.exists(_._1 eq e)).reduceOption(And)
+          .fold[LogicalPlan](narrowed)(Filter(_, narrowed))
+      }
     case p @ Project(exprs, scan: VoxelScan) =>
       val needed = exprs.flatMap(_.references.toSeq).map(_.exprId).toSet
       val kept = scan.output.filter(a => needed.contains(a.exprId))
@@ -61,57 +90,40 @@ object PushBoxFilters extends Rule[LogicalPlan] {
       else p.copy(child = f.copy(child = scan.copy(output = kept)))
   }
 
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => conjuncts(l) ++ conjuncts(r)
-    case other => Seq(other)
-  }
-
-  private def axisOf(a: Expression, scan: VoxelScan): Option[Char] = a match {
-    case attr: AttributeReference if scan.output.exists(_.exprId == attr.exprId) &&
-      (attr.name == "x" || attr.name == "y" || attr.name == "z") => Some(attr.name.head)
-    case _ => None
-  }
-
-  private def lit(e: Expression): Option[Int] = e match {
-    case Literal(v: Int, _) => Some(v)
-    case _ => None
-  }
-
-  private def narrow(b: Box, e: Expression, scan: VoxelScan): Box = {
-    def clampLo(bb: Box, ax: Char, v: Int): Box = ax match {
-      case 'x' => bb.copy(x = Ival(math.max(bb.x.lo, v), bb.x.hi))
-      case 'y' => bb.copy(y = Ival(math.max(bb.y.lo, v), bb.y.hi))
-      case 'z' => bb.copy(z = Ival(math.max(bb.z.lo, v), bb.z.hi))
+  private object IntLit {
+    def unapply(e: Expression): Option[Long] = e match {
+      case Literal(v: Int, IntegerType) => Some(v.toLong)
+      case _ => None
     }
-    def clampHi(bb: Box, ax: Char, v: Int): Box = ax match {
-      case 'x' => bb.copy(x = Ival(bb.x.lo, math.min(bb.x.hi, v)))
-      case 'y' => bb.copy(y = Ival(bb.y.lo, math.min(bb.y.hi, v)))
-      case 'z' => bb.copy(z = Ival(bb.z.lo, math.min(bb.z.hi, v)))
+  }
+
+  /** The box a range conjunct confines the scan's output to, unbounded on
+    * the other axes; None for any other expression. */
+  private def bound(e: Expression, scan: VoxelScan): Option[Box] = {
+    val Min = Int.MinValue.toLong; val Max = Int.MaxValue.toLong
+    val range = e match {
+      case GreaterThanOrEqual(a, IntLit(v)) => Some((a, v, Max))
+      case GreaterThanOrEqual(IntLit(v), a) => Some((a, Min, v))
+      case GreaterThan(a, IntLit(v)) => Some((a, v + 1, Max))
+      case GreaterThan(IntLit(v), a) => Some((a, Min, v - 1))
+      case LessThanOrEqual(a, IntLit(v)) => Some((a, Min, v))
+      case LessThanOrEqual(IntLit(v), a) => Some((a, v, Max))
+      case LessThan(a, IntLit(v)) => Some((a, Min, v - 1))
+      case LessThan(IntLit(v), a) => Some((a, v + 1, Max))
+      case EqualTo(a, IntLit(v)) => Some((a, v, v))
+      case EqualTo(IntLit(v), a) => Some((a, v, v))
+      case _ => None
     }
-    // each comparison may appear attr-first or literal-first; handle both
-    // orientations inside one arm (the flipped form mirrors the bound)
-    def bound(l: Expression, r: Expression, attrFirst: (Char, Int) => Box,
-        litFirst: (Char, Int) => Box): Box =
-      (axisOf(l, scan), lit(r)) match {
-        case (Some(ax), Some(x)) => attrFirst(ax, x)
-        case _ => (axisOf(r, scan), lit(l)) match {
-          case (Some(ax), Some(x)) => litFirst(ax, x)
-          case _ => b
-        }
+    range.collect { case (attr: AttributeReference, lo, hi)
+        if scan.output.exists(_.exprId == attr.exprId) && Seq("x", "y", "z").contains(attr.name) =>
+      // bounds are Long so `x > Int.MaxValue` is empty instead of wrapping
+      val i = if (lo > hi) Ival(1, 0) else Ival(lo.toInt, hi.toInt)
+      val all = Ival(Int.MinValue, Int.MaxValue)
+      attr.name match {
+        case "x" => Box(i, all, all)
+        case "y" => Box(all, i, all)
+        case _ => Box(all, all, i)
       }
-    e match {
-      case GreaterThanOrEqual(l, r) =>
-        bound(l, r, (ax, x) => clampLo(b, ax, x), (ax, x) => clampHi(b, ax, x))
-      case GreaterThan(l, r) =>
-        bound(l, r, (ax, x) => clampLo(b, ax, x + 1), (ax, x) => clampHi(b, ax, x - 1))
-      case LessThanOrEqual(l, r) =>
-        bound(l, r, (ax, x) => clampHi(b, ax, x), (ax, x) => clampLo(b, ax, x))
-      case LessThan(l, r) =>
-        bound(l, r, (ax, x) => clampHi(b, ax, x - 1), (ax, x) => clampLo(b, ax, x + 1))
-      case EqualTo(l, r) =>
-        bound(l, r, (ax, x) => clampHi(clampLo(b, ax, x), ax, x),
-          (ax, x) => clampHi(clampLo(b, ax, x), ax, x))
-      case _ => b
     }
   }
 }
@@ -119,14 +131,16 @@ object PushBoxFilters extends Rule[LogicalPlan] {
 /** Plan a VoxelScan into its physical chunk-fetch execution. */
 object VoxelScanStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case VoxelScan(ctx, box, output) => VoxelScanExec(ctx, box, output) :: Nil
+    case VoxelScan(ctx, box, output, storeConf) => VoxelScanExec(ctx, box, output, storeConf) :: Nil
     case _ => Nil
   }
 }
 
-/** Physical voxel scan: distributed chunk-task grid → fetch/decode/emit.
-  * Same dataflow as Volume.toVoxels, expressed as a native SparkPlan so it
-  * composes with any relational operators above it.
+/** Physical voxel scan: tasks over the linear ids of the cells the box
+  * touches inside the volume (`VolumeCtx.cellRanges`, in
+  * `Volume.taskPartitions` partitions) → fetch/decode/emit, each task
+  * opening the store with the handle's broadcast conf. Per partition it
+  * emits each slice's voxels in `(c, z, y, x)` order, slices in id order.
   *
   * Emits COLUMNAR batches by default (`supportsColumnar`): voxels are
   * written straight into `OnHeapColumnVector`s, 4096 per batch, and Spark
@@ -135,8 +149,8 @@ object VoxelScanStrategy extends SparkStrategy {
   * primitive array stores instead of per-row UnsafeRow bookkeeping. That
   * batch loop is the node's one fetch and emit loop: `doExecute`, for plan
   * shapes that ask for rows, projects the same batches to `UnsafeRow`s. */
-final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
-    extends LeafExecNode {
+final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute],
+    storeConf: Broadcast[ChunkStore.SerializableConf]) extends LeafExecNode {
 
   override def simpleString(maxFields: Int): String =
     s"VoxelScanExec ${ctx.root} box=[${box.x.lo}..${box.x.hi}, ${box.y.lo}..${box.y.hi}, ${box.z.lo}..${box.z.hi}]"
@@ -179,10 +193,7 @@ final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
     val c = ctx
     val query = box
     val sc = session.sparkContext
-    // broadcast once per execution: a task then carries a reference, not a
-    // full Configuration to deserialize
-    val conf = sc.broadcast(
-      new ChunkStore.SerializableConf(session.sessionState.newHadoopConf()))
+    val storeBc = storeConf
     // a contradictory filter set narrows the box to an empty one: no cells
     val ids = c.cellRanges(query)
     // pruned-column layout, resolved ONCE to integer tags: the batch loop
@@ -201,7 +212,7 @@ final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
       (longMetric("numOutputRows"), longMetric("chunksFetched"),
         longMetric("chunksMissing"), longMetric("bytesFetched"))
     sc.range(0L, ids.total, 1, Volume.taskPartitions(ids.total, sc)).mapPartitions { linearIds =>
-      val fs = ChunkStore.fs(c.root, conf.value.conf)
+      val fs = ChunkStore.fs(c.root, storeBc.value.conf)
       val slices = linearIds.flatMap { id =>
         val (cx, cy, cz) = ids.coords(id)
         c.sliceAt(cx, cy, cz, query).map { s =>
@@ -221,8 +232,7 @@ final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute])
         private val capacity = 4096
         private val vectors = OnHeapColumnVector.allocateColumns(capacity, schema)
         private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
-        // cursor over the current slice's cutout box, (ch, z, y, x) order —
-        // the emission order of `Volume.toVoxels`
+        // cursor over the current slice's cutout box, (ch, z, y, x) order
         private var cur: Grid.ChunkSlice = null
         private var buf: VoxelBuffer = null
         private var ch = 0; private var z = 0; private var y = 0; private var x = 0
@@ -353,17 +363,24 @@ object GraftExtensions {
     SimhashAgg.register(spark)
     ZOrderExpr.register(spark)
     NfkcExpr.register(spark)
-    if (!spark.experimental.extraStrategies.contains(VoxelScanStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ VoxelScanStrategy
-    if (!spark.experimental.extraOptimizations.contains(PushBoxFilters))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushBoxFilters
+    installVoxelScan(spark)
     // the SQL DDL surface: CREATE TABLE graft.x USING precomputed — the
     // catalog is lazily instantiated on first reference, so setting the
     // conf here is enough (never overrides a user-provided catalog)
     if (!spark.conf.getOption("spark.sql.catalog.graft").isDefined)
       spark.conf.set("spark.sql.catalog.graft",
         classOf[graft.sources.PrecomputedCatalog].getName)
+  }
+
+  /** Install the voxel scan's strategy and rule into a session, each once
+    * however often this runs — what every `VoxelScan` DataFrame calls. */
+  private[graft] def installVoxelScan(spark: SparkSession): Unit = {
+    val e = spark.experimental
+    e.synchronized {
+      if (!e.extraStrategies.contains(VoxelScanStrategy))
+        e.extraStrategies = e.extraStrategies :+ VoxelScanStrategy
+      if (!e.extraOptimizations.contains(PushBoxFilters))
+        e.extraOptimizations = e.extraOptimizations :+ PushBoxFilters
+    }
   }
 }

@@ -375,13 +375,20 @@ final case class VolumeCtx(
   *    touches inside the volume (`VolumeCtx.cellRanges`, decoded by
   *    `Grid.IdRanges.coords`) — no driver-side chunk enumeration, so a
   *    petavoxel cutout plans in O(1) driver memory, and a box far larger
-  *    than the volume costs no more than the volume. Every per-chunk
-  *    DataFrame operator (`toVoxels`, `zipVoxels`, `chunkStats`,
+  *    than the volume costs no more than the volume. The voxel view
+  *    (`toVoxels`, `voxels()`) is one Catalyst leaf, `VoxelScan`, whose
+  *    physical scan writes columnar batches and whose statistics are the
+  *    box's row count, so a join never broadcasts a petavoxel scan. The
+  *    other per-chunk DataFrame operators (`zipVoxels`, `chunkStats`,
   *    `toVoxelsAtLeast`, `missingChunks` and the `local*` halo kernels)
-  *    runs on one combinator, `chunkRows`, over `spark.range`; `cutout`,
+  *    run on one combinator, `chunkRows`, over `spark.range`; `cutout`,
   *    `ingest` and `VolumeOps.rechunk` run on `chunkCells`, over
   *    `sparkContext.range`. Each opens the store once per task
-  *    (`storeFs`) and reads through `VolumeCtx.readChunk`;
+  *    (`storeFs`, or the scan's broadcast conf) and fetches with the
+  *    handle's fill semantics;
+  *  - range filters over the voxel view fold into the scan's box and leave
+  *    the plan (`PushBoxFilters`), so a voxel query over a new box reads
+  *    only the chunks it touches and compiles no new code;
   *  - `cutout`, `ingest` and `rechunk` are each one plain RDD job (no
   *    Catalyst planning, no encoder round-trip, no shuffle), so a small call
   *    costs little more than its chunk I/O and codec work. `cutout`
@@ -397,8 +404,9 @@ final case class VolumeCtx(
   * Store conf: a handle snapshots its Hadoop store conf — connector settings
   * and the `graft.store.retry.*` policy included — at its first chunk job
   * (for the DataFrame operators: when the first such DataFrame is built),
-  * and broadcasts it once. Later jobs ship only the broadcast reference, so
-  * no task re-parses the conf. A conf change made after that is seen by a
+  * and broadcasts it once; the voxel view's scans read with the same
+  * broadcast. Later jobs ship only the broadcast reference, so no task
+  * re-parses the conf. A conf change made after that is seen by a
   * newly opened handle, not by this one.
   */
 final class Volume(
@@ -529,30 +537,19 @@ final class Volume(
     StructType(ints("x", "y", "z", "c") :+ field("value", Volume.widenedType(meta.dataType)))
 
   /** The distributed long-form view of a box: one row per voxel
-    * `(x, y, z, c, value)` in global coordinates — what joins/aggregations
-    * and the whole relational surface run on. Missing chunks yield zeros,
-    * preserving the reference's fill semantics (src/modes/sequential.jl:52-54). */
+    * `(x, y, z, c, value)` of `query ∩ volume`, in global coordinates — what
+    * joins/aggregations and the whole relational surface run on. Missing
+    * chunks yield zeros, preserving the reference's fill semantics
+    * (src/modes/sequential.jl:52-54). It is a `VoxelScan` leaf over `query`
+    * reading with [[confBc]], so range filters above it narrow its chunk
+    * reads as they do for [[voxels]]; building it installs the scan's
+    * strategy and rule into the session. */
   def toVoxels(query: Box): DataFrame = {
-    val c = ctx
-    chunkRows(query, voxelSchema) { fs => s =>
-      val bufOpt = c.readChunk(fs, s)
-      val cut = s.cutoutBox
-      // iterator generators: never materialize a chunk's rows strictly
-      for {
-        ch <- (0 until c.numChannels).iterator
-        z <- (cut.z.lo to cut.z.hi).iterator
-        y <- (cut.y.lo to cut.y.hi).iterator
-        x <- (cut.x.lo to cut.x.hi).iterator
-      } yield {
-        val v: Any = bufOpt match {
-          case Some(b) =>
-            val (lx, ly, lz) = (x - b.origin._1, y - b.origin._2, z - b.origin._3)
-            Volume.widenedValue(c.dataType, b, lx, ly, lz, ch)
-          case None => Volume.zeroValue(c.dataType)
-        }
-        Row(x, y, z, ch, v)
-      }
-    }
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    graft.plans.GraftExtensions.installVoxelScan(spark)
+    val attrs = voxelSchema.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
+    org.apache.spark.sql.graftshim.shim.dataFrame(spark,
+      graft.plans.VoxelScan(ctx, query, attrs, confBc))
   }
 
   /** Chunk-ALIGNED zip of two volumes over `query`: one row per voxel
@@ -1175,14 +1172,8 @@ final class Volume(
   /** The whole volume as a Catalyst-native voxel relation: a custom
     * `VoxelScan` leaf whose box is narrowed by the `PushBoxFilters`
     * optimizer rule, so `voxels().filter($"x".between(a, b) && ...)` prunes
-    * chunk I/O exactly like a `cutout` of that box. Requires the
-    * GraftExtensions rule/strategy (see graft.plans.GraftExtensions). */
-  def voxels(): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.AttributeReference
-    val attrs = voxelSchema.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
-    org.apache.spark.sql.graftshim.shim.dataFrame(spark,
-      graft.plans.VoxelScan(ctx, ctx.volumeBox, attrs))
-  }
+    * chunk I/O exactly like a `cutout` of that box. */
+  def voxels(): DataFrame = toVoxels(ctx.volumeBox)
 
   /** Driver-buffer ingest: the reference's `ba[ranges...] = buf`
     * (reference: src/type.jl:137-150). Enforces chunk-aligned write starts
@@ -1417,7 +1408,8 @@ final class Volume(
     *    arithmetic chunk grid — the expected cells are the chunk tasks'
     *    ids (never materialized on the driver) and each executor probes its
     *    own cells. O(cells) HEADs; nothing lists the store.
-    *  - LISTING (`auto` above [[PrecomputedScan.ListingThreshold]] cells,
+    *  - LISTING (`auto` above [[PrecomputedScan.ListingThreshold]] of the
+    *    cells the box touches inside the volume,
     *    non-sharded): LIST the present chunks (O(objects), bounded per-
     *    column globs) and anti-join the expected grid — the sparse-store
     *    plan, where a mostly-empty 100 TB store would otherwise pay an
@@ -1432,7 +1424,7 @@ final class Volume(
       case "listing" => true
       case "probe" => false
       case "auto" => c.shard.isEmpty &&
-        numChunks(query) > PrecomputedScan.ListingThreshold
+        c.cellRanges(query).total > PrecomputedScan.ListingThreshold
       case other => throw new IllegalArgumentException(
         s"missingChunks planning must be auto|probe|listing, got $other")
     }

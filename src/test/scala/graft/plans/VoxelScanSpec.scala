@@ -20,14 +20,28 @@ class VoxelScanSpec extends AnyFunSuite {
     (vol, buf)
   }
 
+  /** (Σ value, count) over `b` of the volume `newVolume` builds: `buf`
+    * where it lies, zero elsewhere. */
+  def model(buf: VoxelBuffer, b: Box): (Long, Long) = {
+    var s = 0L
+    for (z <- b.z.lo to b.z.hi; y <- b.y.lo to b.y.hi; x <- b.x.lo to b.x.hi
+        if buf.box.x.contains(x) && buf.box.y.contains(y) && buf.box.z.contains(z))
+      s += buf.getLong(x - 1, y - 1, z - 1)
+    (s, b.numVoxels)
+  }
+
+  def sumCount(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+    val r = df.agg(sum("value"), count(lit(1))).collect().head
+    (if (r.isNullAt(0)) 0L else r.getLong(0), r.getLong(1))
+  }
+
   test("voxels() filter results match toVoxels on the same box") {
     val (vol, buf) = newVolume()
-    val viaScan = vol.voxels()
-      .filter(col("x").between(57, 123) && col("y").between(90, 110) && col("z").between(3, 8))
-      .agg(sum("value"), count(lit(1))).collect().head
-    val viaToVoxels = vol.toVoxels(Box(57, 123, 90, 110, 3, 8))
-      .agg(sum("value"), count(lit(1))).collect().head
-    assert(viaScan == viaToVoxels)
+    val b = Box(57, 123, 90, 110, 3, 8)
+    val viaScan = sumCount(vol.voxels()
+      .filter(col("x").between(57, 123) && col("y").between(90, 110) && col("z").between(3, 8)))
+    assert(viaScan == model(buf, b))
+    assert(sumCount(vol.toVoxels(b)) == model(buf, b))
   }
 
   test("scan executes columnar: ColumnarToRow sits above VoxelScanExec") {
@@ -36,12 +50,87 @@ class VoxelScanSpec extends AnyFunSuite {
     val physical = df.queryExecution.executedPlan.toString
     assert(physical.contains("ColumnarToRow"), s"expected columnar transition in:\n$physical")
     assert(physical.contains("VoxelScanExec"), physical)
-    // row-path / columnar-path agreement on values, order-insensitively
-    val viaColumnar = df.agg(sum("value"), count(lit(1))).collect().head
-    val viaDriver = vol.toVoxels(Box(vol.meta.scales.head.volumeBox.x.lo, vol.meta.scales.head.volumeBox.x.hi,
-      vol.meta.scales.head.volumeBox.y.lo, vol.meta.scales.head.volumeBox.y.hi, 1, 1))
-      .agg(sum("value"), count(lit(1))).collect().head
-    assert(viaColumnar == viaDriver)
+    val plane = Box(1, 510, 1, 510, 1, 1)
+    assert(sumCount(df) == model(buf, plane))
+    assert(sumCount(vol.toVoxels(plane)) == model(buf, plane))
+  }
+
+  test("range conjuncts leave the plan: a voxel aggregate over a new box compiles no code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val (vol, buf) = newVolume()
+    def viaScan(b: Box) = vol.voxels().filter(col("x").between(b.x.lo, b.x.hi) &&
+      col("y").between(b.y.lo, b.y.hi) && col("z").between(b.z.lo, b.z.hi))
+    def compiles(f: => Unit): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      f
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val warm = Box(11, 60, 21, 90, 2, 7)
+    assert(sumCount(viaScan(warm)) == model(buf, warm))
+    assert(sumCount(vol.toVoxels(warm)) == model(buf, warm))
+    val fresh = Box(33, 141, 17, 188, 4, 9)
+    assert(compiles(assert(sumCount(viaScan(fresh)) == model(buf, fresh))) == 0)
+    assert(compiles(assert(sumCount(vol.toVoxels(fresh)) == model(buf, fresh))) == 0)
+    assert(!viaScan(fresh).queryExecution.optimizedPlan.exists(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.Filter]))
+  }
+
+  test("range bounds at the Int limits give an empty box, never a wrapped one") {
+    val (vol, _) = newVolume()
+    for (cond <- Seq(col("x") > Int.MaxValue, col("x") < Int.MinValue,
+        lit(Int.MaxValue) < col("y"), lit(Int.MinValue) > col("z"),
+        col("x") >= 5 && col("x") > Int.MaxValue, col("x") === 7 && col("x") === 9))
+      assert(vol.voxels().filter(cond).count() == 0, cond)
+  }
+
+  test("a range conjunct beside a non-range conjunct equals the model") {
+    val (vol, buf) = newVolume()
+    val b = Box(150, 230, 1, 40, 6, 12)
+    val inBox = for (z <- b.z.lo to b.z.hi; y <- b.y.lo to b.y.hi; x <- b.x.lo to b.x.hi)
+      yield if (x <= 200 && z <= 10) buf.getLong(x - 1, y - 1, z - 1) else 0L
+    def between(df: org.apache.spark.sql.DataFrame) = df.filter(col("x").between(b.x.lo, b.x.hi) &&
+      col("y").between(b.y.lo, b.y.hi) && col("z").between(b.z.lo, b.z.hi))
+    val above = between(vol.voxels().filter(col("value") > 3))
+    assert(sumCount(above) == ((inBox.filter(_ > 3).sum, inBox.count(_ > 3).toLong)))
+    assert(above.queryExecution.optimizedPlan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition.references.toSeq.map(_.name)
+    } == Seq(Seq("value")))
+    assert(sumCount(between(vol.voxels()).filter(col("c") === 0)) == ((inBox.sum, inBox.length.toLong)))
+  }
+
+  test("a voxels() join plans with the scan's statistics and equals a driver-side model") {
+    val (vol, buf) = newVolume()
+    val weights = Seq(1 -> 2L, 7 -> 3L, 7 -> 5L, 150 -> 1L, 205 -> 4L, 600 -> 9L)
+    val other = spark.createDataFrame(weights).toDF("x2", "w")
+    val r = vol.voxels().filter(col("z") <= 8 && col("y") <= 120)
+      .join(other, col("x") === col("x2"))
+      .agg(sum(col("value") * col("w")), count(lit(1))).collect().head
+    var s = 0L; var n = 0L
+    for ((x, w) <- weights if x <= 510; z <- 1 to 8; y <- 1 to 120) {
+      n += 1
+      if (x <= 200) s += buf.getLong(x - 1, y - 1, z - 1) * w
+    }
+    assert((r.getLong(0), r.getLong(1)) == ((s, n)))
+  }
+
+  test("a large toVoxels joined to a larger relation never broadcasts the scan") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    // 128^3 voxels, nothing ingested: planning reads no chunk
+    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
+      Meta.ScaleMeta("1_1_1", (64, 64, 64), "gzip", (1, 1, 1), (128, 128, 128), (0, 0, 0))))
+    val vol = Volume.create(spark, SparkSuite.tempDir("graft-vscan-stats"), meta)
+    val vox = vol.toVoxels(Box(1, 128, 1, 128, 1, 128))
+    val stats = vox.queryExecution.optimizedPlan.stats
+    assert(stats.rowCount.contains(BigInt(128 * 128 * 128)))
+    val larger = spark.range(0L, 1L << 23).select(col("id").cast("int").as("k"))
+    val plan = vox.join(larger, col("x") === col("k")).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    assert(plan.collect { case v: VoxelScanExec => v }.length == 1, plan)
+    assert(plan.collect { case b: BroadcastExchangeExec => b }
+      .forall(_.collect { case v: VoxelScanExec => v }.isEmpty), plan)
   }
 
   test("contradictory filters short-circuit to an empty scan") {

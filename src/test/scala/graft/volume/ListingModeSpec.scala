@@ -84,6 +84,18 @@ class ListingModeSpec extends AnyFunSuite {
     }
   }
 
+  test("missingChunks auto decides from the cells a box far larger than the volume visits") {
+    // 2^30 voxels a side on 4^3 chunks is 2^84 cells, which wraps the
+    // unclipped product to 0; clipped to the volume it is the 4352 cells
+    val (_, vol, _) = volumes.head
+    ingestSparse(vol)
+    val huge = Box(1, 1 << 30, 1, 1 << 30, 1, 1 << 30)
+    val want = vol.missingChunks(FullBox).collect().toSet
+    val probes0 = ChunkStore.probeCalls.get()
+    assert(vol.missingChunks(huge).collect().toSet == want)
+    assert(ChunkStore.probeCalls.get() - probes0 == 0, "auto must pick listing, as for the volume box")
+  }
+
   test("parseRelKey is the inverse of relKey and rejects foreign objects") {
     volumes.foreach { case (label, vol, _) =>
       val c = vol.ctx

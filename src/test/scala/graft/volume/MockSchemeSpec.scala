@@ -162,6 +162,55 @@ class MockSchemeSpec extends AnyFunSuite {
     }
   }
 
+  test("the voxel view reads with the handle's store conf, broadcast once") {
+    import org.apache.spark.sql.functions.{col, sum}
+    import org.apache.spark.graftshim.BlockProbe
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.flaky3a.impl", classOf[FlakyFileSystem].getName)
+    hconf.setBoolean("fs.flaky3a.impl.disable.cache", true)
+    hconf.set(ChunkStore.RetryBaseMsKey, "1")
+    hconf.set(ChunkStore.RetryAttemptsKey, "2")
+    try {
+      val root = s"flaky3a:${SparkSuite.tempDir("graft-flaky3a-scan")}"
+      val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
+        Meta.ScaleMeta("1_1_1", (16, 16, 4), "gzip", (1, 1, 1), (32, 32, 4), (0, 0, 0))))
+      val buf = VoxelBuffer.sequenced(Meta.TUInt8, 32, 32, 4, 1, (1, 1, 1))
+      Volume.create(spark, root, meta).ingest(buf)
+      val box = Box(1, 32, 1, 32, 1, 4)
+      var want = 0L
+      for (z <- 0 until 4; y <- 0 until 32; x <- 0 until 32) want += buf.getLong(x, y, z)
+      def total(df: org.apache.spark.sql.DataFrame): Long = df.agg(sum("value")).head().getLong(0)
+      val old = Volume.open(spark, root)
+      assert(old.cutout(box) == buf) // first chunk job: conf snapshot, 2 attempts
+
+      hconf.set(ChunkStore.RetryAttemptsKey, "1") // no retries from here on
+      for ((name, df) <- Seq("toVoxels" -> old.toVoxels(box),
+          "voxels()" -> old.voxels().filter(col("x") <= 32))) {
+        FlakyFaults.remaining.set(1)
+        assert(total(df) == want, s"$name: the old handle still retries once")
+        assert(FlakyFaults.remaining.get() == 0, name)
+      }
+      val fresh = Volume.open(spark, root)
+      FlakyFaults.remaining.set(1)
+      intercept[org.apache.spark.SparkException](total(fresh.voxels()))
+      assert(FlakyFaults.remaining.get() == 0, "the new handle's one attempt met the fault")
+
+      // ten more voxel queries: no new conf broadcast, no conf deserialized
+      val confs = BlockProbe.broadcastsOf(classOf[ChunkStore.SerializableConf])
+      val before = ChunkStore.confDeserialized.get()
+      for (i <- 1 to 5) {
+        assert(total(old.voxels().filter(col("z") === i % 4 + 1)) > 0)
+        assert(total(old.toVoxels(Box(i, 32, 1, 32, 1, 4))) > 0)
+      }
+      assert(ChunkStore.confDeserialized.get() == before)
+      assert((BlockProbe.broadcastsOf(classOf[ChunkStore.SerializableConf]) -- confs).isEmpty)
+    } finally {
+      FlakyFaults.remaining.set(0)
+      Seq("fs.flaky3a.impl.disable.cache", ChunkStore.RetryBaseMsKey, ChunkStore.RetryAttemptsKey)
+        .foreach(hconf.unset)
+    }
+  }
+
   test("sharded zarr v3 over a non-file scheme: ranged GETs through FS dispatch") {
     // the sharded read path is index fetch + ranged read (seek + bounded
     // readFully — a Range GET on cloud connectors); driving it through the
