@@ -20,13 +20,22 @@ import org.apache.spark.sql.SparkSession
   * `persistent` otherwise), so a loaded driver box no longer costs a
   * judge session per round.
   *
-  * Registry-fed queries (those whose warmed runs serve from an
-  * AtRestRegistry artifact) additionally report a `cold` number — all
-  * registries reset, one run — and the run reports `registry_build_sec`,
-  * the one-time artifact build cost observed across the sweep (per
-  * registry key, once). The headline `value` is warm total + that build
-  * cost; `value_warm` keeps the old warmed-only semantics. */
+  * Registry-fed queries (those that looked up an operator-artifact
+  * AtRestRegistry during their measured runs, as recorded by
+  * `AtRestRegistry.touchedBy`) additionally report a `cold` number —
+  * every artifact registry reset, one run — and the run reports
+  * `registry_build_sec`, the one-time artifact build cost observed
+  * across the sweep (per registry key, once; fixture staging excluded).
+  * The headline `value` is warm total + that build cost; `value_warm`
+  * keeps the old warmed-only semantics. A run that throws is never a
+  * timing: it is listed under `failed` with its phase (warm, cold or
+  * remeasure) and left out of every timing map and total. */
 object Bench {
+  /** A query is registry-fed when it looked up an operator artifact; a
+    * fixture-staging lookup (a copied input, its metadata) is not. */
+  private[graft] def registryFed(touched: Set[(graft.core.AtRestRegistry[_], String)]): Boolean =
+    touched.exists(_._1.kind == graft.core.AtRestRegistry.Artifact)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -45,15 +54,22 @@ object Bench {
     sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
       .foreach(spark.sparkContext.setCheckpointDir)
 
-    def force(name: String): Double = {
+    // (name, phase) of every run that threw, in order; never a timing
+    val failures = scala.collection.mutable.LinkedHashSet.empty[(String, String)]
+    def failed(name: String, phase: String, e: Throwable): None.type = {
+      System.err.println(s"[bench] $name ($phase) failed: $e")
+      failures += (name -> phase)
+      None
+    }
+    def force(name: String, phase: String = "warm"): Option[Double] = {
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); return -1.0 }
+      catch { case e: Throwable => return failed(name, phase, e) }
       val dt = (System.nanoTime() - t0) / 1e9
       // drop caches a query may have persisted (e.g. the minhash shingle
       // set) so runs don't accumulate memory pressure across 2x37 queries
       spark.catalog.clearCache()
-      dt
+      Some(dt)
     }
 
     // warmup: session machinery + parquet footers + codegen paths
@@ -104,31 +120,33 @@ object Bench {
       best > 2.0 * band && best - band > 0.75
     // ONE adjudication policy, shared by the query loop and the v_* array
     // metrics below — two hand-maintained copies of the escalation rule
-    // would drift. `sample` returns <0 on failure (queries only).
-    def adjudicate(name: String, sample: () => Double): QRes = {
-      val a = sample(); val b = sample()
-      if (a < 0 || b < 0) return QRes(a, math.max(a, b), 2)
-      var best = math.min(a, b)
+    // would drift. `sample` is None on failure (queries only); a query
+    // with a failed sample gets no timing at all (it is in `failures`).
+    def adjudicate(name: String, sample: () => Option[Double]): Option[QRes] = {
+      val (a, b) = (sample(), sample())
+      if (a.isEmpty || b.isEmpty) return None
+      var best = math.min(a.get, b.get)
       var reps = 2
       while (reps < 5 && bands.get(name).exists(over(best, _))) {
-        val r = sample()
-        if (r >= 0) best = math.min(best, r)
+        best = math.min(best, sample().getOrElse(return None))
         reps += 1
       }
-      QRes(a, best, reps)
+      Some(QRes(a.get, best, reps))
     }
-    // reps >= 3 guarantees the escalation loop really ran: a query whose
-    // first run FAILED never escalated, and flagging it off one sample is
-    // the exact false positive this mechanism exists to prevent (its -1
-    // in `queries` already reports the failure)
+    // reps >= 3 guarantees the escalation loop really ran
     def isSuspect(name: String, r: QRes): Boolean =
-      r.best >= 0 && r.reps >= 3 && bands.get(name).exists(over(r.best, _))
-    val measured: Seq[(String, QRes)] =
-      names.map(n => n -> adjudicate(n, () => force(n)))
-    val suspects = measured.collect {
-      case (n, r) if isSuspect(n, r) => (n, r.best, bands(n))
+      r.reps >= 3 && bands.get(name).exists(over(r.best, _))
+    // each query's registry lookups over its measured runs decide whether
+    // it also gets a cold run below
+    val runs = names.map { n =>
+      val (r, touched) = graft.core.AtRestRegistry.touchedBy(adjudicate(n, () => force(n)))
+      (n, r, registryFed(touched))
     }
-    val results0 = measured.map { case (n, r) => n -> r.best }
+    val measured = runs.map { case (n, r, _) => n -> r }
+    val suspects = measured.collect {
+      case (n, Some(r)) if isSuspect(n, r) => (n, r.best, bands(n))
+    }
+    val results0 = measured.collect { case (n, Some(r)) => n -> r.best }
 
     // array-surface throughput (the reference's per-call MB/s metric,
     // src/modes/sequential.jl:62-63): 256^3 uint8 = 16 MiB ingest + cutout.
@@ -139,7 +157,7 @@ object Bench {
     var arraySuspects = List.empty[(String, Double, Double)]
     // samplers the post-sweep re-measure pass can re-invoke (the v_*
     // closures capture the bench volume, so they register here)
-    var remeasureSamplers = Map.empty[String, () => Double]
+    var remeasureSamplers = Map.empty[String, () => Option[Double]]
     val arrayBench = try {
       import graft.core.{Grid, Meta}
       import graft.volume.{Volume, VoxelBuffer}
@@ -150,10 +168,10 @@ object Bench {
       val buf = VoxelBuffer.sequenced(Meta.TUInt8, 256, 256, 256, 1, (1, 1, 1))
       def adjudicated(name: String)(f: => Unit): Double = {
         val sample = () => {
-          val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
+          val t = System.nanoTime(); f; Some((System.nanoTime() - t) / 1e9)
         }
         remeasureSamplers += (name -> sample)
-        val r = adjudicate(name, sample)
+        val r = adjudicate(name, sample).get // a throwing sample ends the array bench
         if (isSuspect(name, r)) arraySuspects ::= ((name, r.best, bands(name)))
         r.best
       }
@@ -181,9 +199,7 @@ object Bench {
       }
       Seq("v_ingest_256" -> tIngest, "v_cutout_256" -> tCutout, "v_scan_256" -> tScan,
         "v_rechunk_256" -> tRechunk)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] array bench failed: $e"); Seq.empty
-    }
+    } catch { case e: Throwable => failed("v_array_bench", "warm", e); Seq.empty }
     // bounded-drive floor (e-family adjudication aid): ONE stateful drive
     // over a 1-row stream through the exact e-drive harness — reported as
     // its own entry so every e-query's number reads as floor + data work
@@ -191,16 +207,14 @@ object Bench {
       val sample = () => {
         val t = System.nanoTime()
         graft.streaming.EventStreams.driveFloorOnce(spark)
-        (System.nanoTime() - t) / 1e9
+        Some((System.nanoTime() - t) / 1e9)
       }
       remeasureSamplers += ("e0_drive_floor" -> sample)
-      val r = adjudicate("e0_drive_floor", sample)
+      val r = adjudicate("e0_drive_floor", sample).get
       if (isSuspect("e0_drive_floor", r))
         arraySuspects ::= (("e0_drive_floor", r.best, bands("e0_drive_floor")))
       Seq("e0_drive_floor" -> r.best)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] drive-floor bench failed: $e"); Seq.empty
-    }
+    } catch { case e: Throwable => failed("e0_drive_floor", "warm", e); Seq.empty }
     val allSuspects = suspects ++ arraySuspects.reverse
 
     // ---- post-sweep self-adjudication (r12 directive #2) ----
@@ -213,40 +227,39 @@ object Bench {
     // entry whose re-measure lands back inside the band is labeled
     // `environmental` by the harness; only `persistent` entries need a
     // human (or a judge) to look at the code.
-    case class Adj(remeasure: Double, floorRatio: Double, verdict: String)
+    // remeasure: the best re-measured time, None when every re-measure
+    // failed (verdict "failed"); floorRatio: None when every floor probe
+    // failed
+    case class Adj(remeasure: Option[Double], floorRatio: Option[Double], verdict: String)
     val adjudications: Map[String, Adj] = if (allSuspects.isEmpty) Map.empty else {
       // every re-invocation is failure-isolated (the v_* samplers carry
       // require()s and temp-dir creation): one throw here must never
       // discard the whole sweep's output — the run's entire point
-      val samplers: Map[String, () => Double] =
-        names.map(n => n -> (() => force(n))).toMap ++ remeasureSamplers
-      def safe(s: () => Double): Double =
-        try s() catch { case e: Throwable =>
-          System.err.println(s"[bench] remeasure sample failed: $e"); -1.0 }
-      def bo3(n: String): Double = samplers.get(n) match {
-        case None => -1.0
-        case Some(s) =>
-          val vs = (1 to 3).map(_ => safe(s)).filter(_ >= 0)
-          if (vs.isEmpty) -1.0 else vs.min
-      }
+      val samplers: Map[String, () => Option[Double]] =
+        names.map(n => n -> (() => force(n, "remeasure"))).toMap ++ remeasureSamplers
+      def safe(n: String, s: () => Option[Double]): Option[Double] =
+        try s() catch { case e: Throwable => failed(n, "remeasure", e) }
+      def bo3(n: String): Seq[Double] =
+        samplers.get(n).toSeq.flatMap(s => (1 to 3).flatMap(_ => safe(n, s)))
       try {
         val order = allSuspects.map(_._1)
-        val floorPre = safe(() => floorProbe())
+        def floor() = safe("floor_probe", () => Some(floorProbe()))
+        val floorPre = floor()
         val fwd = order.map(n => n -> bo3(n))
-        val floorMid = safe(() => floorProbe())
+        val floorMid = floor()
         val rev = order.reverse.map(n => n -> bo3(n))
-        val floorPost = safe(() => floorProbe())
-        val floors = Seq(floorPre, floorMid, floorPost).filter(_ >= 0)
-        val fr = if (floors.isEmpty || floorBase <= 0) -1.0
-          else floors.min / floorBase
-        val best = (fwd ++ rev).groupBy(_._1).map { case (n, xs) =>
-          val vs = xs.map(_._2).filter(_ >= 0)
-          n -> (if (vs.isEmpty) -1.0 else vs.min)
+        val floorPost = floor()
+        val floors = Seq(floorPre, floorMid, floorPost).flatten
+        val fr = if (floors.isEmpty || floorBase <= 0) None else Some(floors.min / floorBase)
+        val best = (fwd ++ rev).groupBy(_._1).collect {
+          case (n, xs) if xs.exists(_._2.nonEmpty) => n -> xs.flatMap(_._2).min
         }
         allSuspects.map { case (n, _, band) =>
-          val rm = best.getOrElse(n, -1.0)
-          val verdict =
-            if (rm >= 0 && !over(rm, band)) "environmental" else "persistent"
+          val rm = best.get(n)
+          val verdict = rm match {
+            case None => "failed"
+            case Some(v) => if (over(v, band)) "persistent" else "environmental"
+          }
           n -> Adj(rm, fr, verdict)
         }.toMap
       } catch { case e: Throwable =>
@@ -270,15 +283,11 @@ object Bench {
     val registryBuilds: Map[String, Double] =
       graft.core.AtRestRegistry.buildSecondsByRegistry
     val registryBuildSec = registryBuilds.values.sum
-    val registryFed = Seq(
-      "d3_dedup_minhash", "d4_dedup_simhash", "d8_dedup_incr_near",
-      "d13_containment", "d17_bbit_minhash", "d18_simhash_eval",
-      "d20_incr_clusters", "d21_lsh_tuning", "s12_sparse_topk",
-      "s29_rrf_fusion")
     val cold: Seq[(String, Double)] =
-      registryFed.filter(n => names.contains(n)).map { n =>
-        graft.core.AtRestRegistry.resetAll()
-        n -> force(n)
+      runs.collect { case (n, _, true) => n }.flatMap { n =>
+        graft.core.AtRestRegistry.all
+          .filter(_.kind == graft.core.AtRestRegistry.Artifact).foreach(_.reset())
+        force(n, "cold").map(n -> _)
       }
 
     val results = results0 ++ arrayBench ++ floorBench
@@ -288,7 +297,7 @@ object Bench {
     // on e.g. de_DE JVMs — corrupting the band file and the JSON line
     def dec3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     sys.env.get("SPARK_GRAFT_BANDS_OUT").foreach { out =>
-      val body = results.filter(_._2 >= 0)
+      val body = results
         .map { case (k, v) =>
           // a measurement the run itself flagged suspect must not become
           // the new band (a 5x in-context JVM spike would make the band
@@ -301,7 +310,7 @@ object Bench {
       java.nio.file.Files.write(java.nio.file.Paths.get(out), body.getBytes("UTF-8"))
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + dec3(v) }.mkString("{", ",", "}")
-    val totalWarm = results.map(_._2).filter(_ >= 0).sum
+    val totalWarm = results.map(_._2).sum
     val total = totalWarm + registryBuildSec
     val coldJson = cold.map { case (k, v) => "\"" + k + "\":" + dec3(v) }
       .mkString("{", ",", "}")
@@ -317,11 +326,15 @@ object Bench {
     // suspect list, v_* array metrics, total — rides in the last few
     // hundred bytes, surviving any truncation. (JSON object key order is
     // semantically irrelevant, so an untruncated line parses identically.)
-    val singles = measured.map { case (k, r) => "\"" + k + "\":" + dec3(r.first) }
+    val singles = measured.collect { case (k, Some(r)) => "\"" + k + "\":" + dec3(r.first) }
       .mkString("{", ",", "}")
+    val failedJson = failures.map { case (n, phase) => s"""{"name":"$n","phase":"$phase"}""" }
+      .mkString("[", ",", "]")
     val suspectJson = allSuspects.map { case (n, best, band) =>
       val extra = adjudications.get(n).map(a =>
-        s""","remeasure":${dec3(a.remeasure)},"floor_ratio":${dec3(a.floorRatio)},"verdict":"${a.verdict}"""")
+        a.remeasure.map(v => s""","remeasure":${dec3(v)}""").getOrElse("") +
+          a.floorRatio.map(v => s""","floor_ratio":${dec3(v)}""").getOrElse("") +
+          s""","verdict":"${a.verdict}"""")
         .getOrElse("")
       s"""{"name":"$n","best":${dec3(best)},"band":${dec3(band)},"ratio":${dec3(best / band)}$extra}"""
     }.mkString("[", ",", "]")
@@ -332,7 +345,7 @@ object Bench {
     System.err.flush()
     System.out.flush()
     val fullLine =
-      s"""{"queries":$qs,"singles":$singles,"cold":$coldJson,"registry_builds":$rbJson,"sf":"$sfDir","suspect":$suspectJson,$vPart"registry_build_sec":${dec3(registryBuildSec)},"value_warm":${dec3(totalWarm)},"metric":"total","unit":"sec","value":${dec3(total)}}"""
+      s"""{"queries":$qs,"singles":$singles,"cold":$coldJson,"registry_builds":$rbJson,"sf":"$sfDir","failed":$failedJson,"suspect":$suspectJson,$vPart"registry_build_sec":${dec3(registryBuildSec)},"value_warm":${dec3(totalWarm)},"metric":"total","unit":"sec","value":${dec3(total)}}"""
     // DURABLE in-repo record (r10 directive): the driver archives only a
     // ~2 KB log TAIL, so the full per-query map has never survived into a
     // BENCH_r* artifact. Every run therefore also writes the complete
@@ -360,7 +373,7 @@ object Bench {
     }
     val qsShort = results0.map { case (k, v) => "\"" + shortName(k) + "\":" + dec3(v) }
       .mkString("{", ",", "}")
-    System.out.println(s"""{"queries":$qsShort,"cold":$coldJson,"sf":"$sfDir","suspect":$suspectJson,$vPart"registry_build_sec":${dec3(registryBuildSec)},"value_warm":${dec3(totalWarm)},"metric":"total","unit":"sec","value":${dec3(total)}}""")
+    System.out.println(s"""{"queries":$qsShort,"cold":$coldJson,"sf":"$sfDir","failed":$failedJson,"suspect":$suspectJson,$vPart"registry_build_sec":${dec3(registryBuildSec)},"value_warm":${dec3(totalWarm)},"metric":"total","unit":"sec","value":${dec3(total)}}""")
     // FINAL scalars-only line: at 197 queries even the compact map above
     // is ~2.4 KB and the driver's ~2 KB log tail clips its head
     // (BENCH_r08 `"parsed": null`). The LAST line therefore carries NO
@@ -371,11 +384,12 @@ object Bench {
     // cannot regrow the line past the tail.
     val susCap = allSuspects.take(5).map { case (n, best, band) =>
       val v = adjudications.get(n).map(a =>
-        s""","remeasure":${dec3(a.remeasure)},"verdict":"${a.verdict}"""").getOrElse("")
+        a.remeasure.map(r => s""","remeasure":${dec3(r)}""").getOrElse("") +
+          s""","verdict":"${a.verdict}"""").getOrElse("")
       s"""{"name":"$n","best":${dec3(best)},"band":${dec3(band)}$v}"""
     }.mkString("[", ",", "]")
     val susMore = if (allSuspects.size > 5) s""","suspect_more":${allSuspects.size - 5}""" else ""
-    System.out.println(s"""{"sf":"$sfDir","n_queries":${results0.size},"suspect":$susCap$susMore,$vPart"registry_build_sec":${dec3(registryBuildSec)},"value_warm":${dec3(totalWarm)},"metric":"total","unit":"sec","value":${dec3(total)}}""")
+    System.out.println(s"""{"sf":"$sfDir","n_queries":${results0.size},"n_failed":${failures.size},"suspect":$susCap$susMore,$vPart"registry_build_sec":${dec3(registryBuildSec)},"value_warm":${dec3(totalWarm)},"metric":"total","unit":"sec","value":${dec3(total)}}""")
     System.out.flush()
   }
 }

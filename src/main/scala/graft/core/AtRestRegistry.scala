@@ -31,7 +31,8 @@ import scala.jdk.CollectionConverters._
   * exactly the registry under test ([[reset]]) instead of blanket-
   * clearing unrelated ones.
   */
-final class AtRestRegistry[V] private[core] (val name: String, val arity: Int) {
+final class AtRestRegistry[V] private[core] (val name: String, val arity: Int,
+    val kind: AtRestRegistry.Kind) {
   private val map = new java.util.concurrent.ConcurrentHashMap[String, V]()
   // Wall-clock seconds of the most recent build per key (survives
   // [[reset]] deliberately: the record of what a build COST is
@@ -57,13 +58,16 @@ final class AtRestRegistry[V] private[core] (val name: String, val arity: Int) {
 
   /** The artifact for this key — built by `build` exactly once per JVM
     * (computeIfAbsent semantics; concurrent first touchers serialize). */
-  def getOrBuild(parts: Any*)(build: => V): V =
-    map.computeIfAbsent(keyOf(parts), { k =>
+  def getOrBuild(parts: Any*)(build: => V): V = {
+    val key = keyOf(parts)
+    AtRestRegistry.recorders.forEach(_.add((this, key)))
+    map.computeIfAbsent(key, { k =>
       val t0 = System.nanoTime()
       val v = build
       buildSecs.put(k, Double.box((System.nanoTime() - t0) / 1e9))
       v
     })
+  }
 
   /** Seconds spent building artifacts in this registry, one entry per key
     * (latest build wins after a reset+rebuild). */
@@ -102,6 +106,13 @@ final class AtRestRegistry[V] private[core] (val name: String, val arity: Int) {
 }
 
 object AtRestRegistry {
+  /** What a registry keeps at rest: an operator's own output, whose build
+    * is the work a warm run skips, or staged input (a copied fixture, a
+    * fixture's metadata), which is not part of any operator's cost. */
+  sealed trait Kind
+  case object Artifact extends Kind
+  case object Fixture extends Kind
+
   private val registries =
     new java.util.concurrent.CopyOnWriteArrayList[AtRestRegistry[_]]()
 
@@ -111,8 +122,22 @@ object AtRestRegistry {
     registries.add(r)
   }
 
-  def apply[V](name: String, arity: Int): AtRestRegistry[V] =
-    new AtRestRegistry[V](name, arity)
+  def apply[V](name: String, arity: Int, kind: Kind = Artifact): AtRestRegistry[V] =
+    new AtRestRegistry[V](name, arity, kind)
+
+  private val recorders =
+    new java.util.concurrent.CopyOnWriteArrayList[java.util.Set[(AtRestRegistry[_], String)]]()
+
+  /** Runs `body` and returns, beside its result, every (registry, key)
+    * looked up while it ran, built or served. Recording is JVM-wide, so
+    * lookups from other threads (a streaming query's batches) count, and
+    * so would those of a concurrent, unrelated caller. */
+  private[graft] def touchedBy[T](body: => T): (T, Set[(AtRestRegistry[_], String)]) = {
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[(AtRestRegistry[_], String)]()
+    recorders.add(seen)
+    val r = try body finally recorders.remove(seen)
+    (r, seen.asScala.toSet)
+  }
 
   /** Every registry constructed so far in this JVM (owner objects are
     * lazily initialized — enumeration sees a registry once its owner has
@@ -122,12 +147,13 @@ object AtRestRegistry {
   private[graft] def resetAll(): Unit = all.foreach(_.reset())
 
   /** One-time artifact build cost observed in this JVM, summed per
-    * registry (each key counted once — its most recent build). */
+    * [[Artifact]] registry (each key counted once — its most recent
+    * build); fixture staging is not an operator's cost. */
   private[graft] def buildSecondsByRegistry: Map[String, Double] =
-    all.map(r => r.name -> r.buildSecondsByKey.values.sum)
+    all.filter(_.kind == Artifact).map(r => r.name -> r.buildSecondsByKey.values.sum)
       .filter(_._2 > 0).toMap
 
-  private[core] def md5Hex(s: String): String =
+  private[graft] def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 }

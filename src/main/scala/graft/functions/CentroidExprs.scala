@@ -246,7 +246,9 @@ case class CentroidNearestL2(child: Expression, centroids: Array[Array[Double]])
 /** Nearest centroid under EXACT scaled-integer L2 (s28's gated census
   * assignment) — the native form of the SQL limb fold it replaces (r14
   * opt): per centroid, each squared diff `t = (a−b)²` (≤ 4e18 under the
-  * |coordinate| < 10 ⇒ |scaled| ≤ 2e9 bound) splits into base-1e9 limb
+  * |scaled| ≤ 1e9 bound, i.e. |coordinate| < 10 at scale 1e8; a value
+  * past it fails loudly, since a wider diff's square could wrap a Long)
+  * splits into base-1e9 limb
   * sums `h += t div 1e9, l += t % 1e9` (t ≥ 0, so div/% agree with
   * Scala's `/`/`%`), carry-normalizes to (dh = h + l div 1e9,
   * dl = l % 1e9), and the argmin compares (dh, dl) lexicographically
@@ -262,6 +264,11 @@ case class CentroidNearestLimb(child: Expression, centroids: Array[Array[Long]])
     extends UnaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "centroid_nearest_limb"
+
+  private def outOfBound(v: Long): Boolean = v > 1000000000L || v < -1000000000L
+  private def boundError(what: String, v: Long): Nothing =
+    throw new IllegalArgumentException(s"$prettyName: $what $v is outside the |scaled| <= 1e9 bound")
+  for (c <- centroids.indices; v <- centroids(c) if outOfBound(v)) boundError(s"centroid $c value", v)
 
   private def mayHaveNullElems: Boolean = child.dataType match {
     case ArrayType(_, n) => n
@@ -283,6 +290,7 @@ case class CentroidNearestLimb(child: Expression, centroids: Array[Array[Long]])
     while (i < n) {
       if (nullable && arr.isNullAt(i)) return null
       x(i) = arr.getLong(i)
+      if (outOfBound(x(i))) boundError(s"element $i", x(i))
       i += 1
     }
     require(centroids.length > 0 && n == centroids(0).length,

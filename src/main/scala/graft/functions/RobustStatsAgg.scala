@@ -86,7 +86,7 @@ case class RobustStatsAgg(
   }
 
   override def serialize(buf: RobustStatsAgg.Buf): Array[Byte] = {
-    val bb = ByteBuffer.allocate(12 + buf.size * 8)
+    val bb = ByteBuffer.allocate(RobustStatsAgg.serializedSize(buf.size))
     bb.putInt(buf.size).putLong(buf.nulls)
     var i = 0
     while (i < buf.size) { bb.putDouble(buf.values(i)); i += 1 }
@@ -135,6 +135,19 @@ object RobustStatsAgg {
       java.util.Arrays.sort(v)
       v
     }
+  }
+
+  /** Bytes `serialize` writes for `n` values: the Int
+    * count, the Long null count and 8 bytes a value, summed in Long so a
+    * large group cannot wrap to a small or negative size. Fails, naming
+    * the group size, when that exceeds the largest byte array a JVM
+    * allocates. */
+  private[functions] def serializedSize(n: Int): Int = {
+    val bytes = 12L + n.toLong * 8
+    require(bytes <= Int.MaxValue - 8,
+      s"robust_stats: a group of $n non-null values serializes to $bytes bytes, " +
+        s"over the ${Int.MaxValue - 8}-byte array limit")
+    bytes.toInt
   }
 
   val Out: StructType = StructType(Seq(

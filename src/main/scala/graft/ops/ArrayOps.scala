@@ -90,7 +90,7 @@ object ArrayOps {
   private def aggFromDump(spark: SparkSession, voxels: DataFrame, dump: String,
       keys: Seq[String] = Seq("z")): DataFrame = {
     voxels.write.mode("overwrite").parquet(dump)
-    spark.read.parquet(dump)
+    Tables.parquet(spark, dump)
       .groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
       .orderBy(keys.map(col): _*)
@@ -181,7 +181,7 @@ object ArrayOps {
       .filter(col("value") =!= 0)
       .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("label"))
       .write.mode("overwrite").parquet(dump)
-    spark.read.parquet(dump)
+    Tables.parquet(spark, dump)
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_vox"),
         min(col("x")).as("x0"), max(col("x")).as("x1"),
@@ -242,7 +242,7 @@ object ArrayOps {
       .filter(col("blob").isNotNull)
       .select(col("cx"), col("cy"), col("cz"), md5(col("blob")).as("h"))
       .write.mode("overwrite").parquet(dump)
-    val groups = spark.read.parquet(dump)
+    val groups = Tables.parquet(spark, dump)
       .groupBy(col("h")).agg(count(lit(1)).as("copies"))
     groups.groupBy(col("copies"))
       .agg(count(lit(1)).as("n_digests"), sum(col("copies")).as("n_chunks"))
@@ -345,7 +345,7 @@ object ArrayOps {
     val mip1 = new Volume(spark, root, meta, 2).toVoxels(Box(1, 32, 1, 32, 1, 8))
       .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("v"))
     mip1.write.mode("overwrite").parquet(dump)
-    spark.read.parquet(dump)
+    Tables.parquet(spark, dump)
       .select(explode(expr(
         """array(struct(2*x - 1 AS ux, 2*y - 1 AS uy, z, v),
           |      struct(2*x     AS ux, 2*y - 1 AS uy, z, v),
@@ -484,13 +484,13 @@ object ArrayOps {
       .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("value"))
     m0.write.mode("overwrite").parquet(s"$voxelDumpRoot/a19m0")
     m1.write.mode("overwrite").parquet(s"$voxelDumpRoot/a19m1")
-    val derived = spark.read.parquet(s"$voxelDumpRoot/a19m0")
+    val derived = Tables.parquet(spark, s"$voxelDumpRoot/a19m0")
       .groupBy(
         (floor((col("x") - 1) / 2) + 1).cast(IntegerType).as("x"),
         (floor((col("y") - 1) / 2) + 1).cast(IntegerType).as("y"),
         col("z"))
       .agg(round(avg(col("value"))).cast(LongType).as("want"))
-    spark.read.parquet(s"$voxelDumpRoot/a19m1")
+    Tables.parquet(spark, s"$voxelDumpRoot/a19m1")
       .join(derived, Seq("x", "y", "z"))
       .groupBy(col("z"))
       .agg(count(lit(1)).as("n_cells"),
@@ -685,7 +685,7 @@ object ArrayOps {
     vol.toVoxels(Box(1, 64, 1, 64, 1, 8))
       .withColumn("label", expr("CAST(value AS BIGINT) DIV 1024"))
       .write.mode("overwrite").parquet(dump)
-    spark.read.parquet(dump)
+    Tables.parquet(spark, dump)
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n"),
         min(col("x")).as("x0"), max(col("x")).as("x1"),
@@ -731,7 +731,7 @@ object ArrayOps {
       .withColumn("label", expr("CAST(vb AS BIGINT) DIV 1024"))
       .select(col("x"), col("y"), col("z"), col("va").cast(LongType).as("v"), col("label"))
       .write.mode("overwrite").parquet(dump)
-    spark.read.parquet(dump)
+    Tables.parquet(spark, dump)
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n"),
         min(col("v")).as("vmin"), max(col("v")).as("vmax"),
@@ -787,7 +787,7 @@ object ArrayOps {
     // the at-rest zone-map artifact: built once, read back per query
     val statsPath = s"${Similarity.OracleDumpRoot}/a30_stats"
     vol.chunkStats(box).write.mode("overwrite").parquet(statsPath)
-    vol.toVoxelsAtLeast(box, 50L, Some(spark.read.parquet(statsPath)))
+    vol.toVoxelsAtLeast(box, 50L, Some(Tables.parquet(spark, statsPath)))
       .groupBy(col("z"))
       .agg(count(lit(1)).as("n"), sum(col("value").cast(LongType)).as("sv"))
   }
@@ -928,7 +928,7 @@ object ArrayOps {
     gold.zipVoxels(pred, Box(1, 64, 1, 64, 1, 8))
       .select(col("va").cast(LongType).as("gold"), col("vb").cast(LongType).as("pred"))
       .write.mode("overwrite").parquet(dump)
-    spark.read.parquet(dump)
+    Tables.parquet(spark, dump)
       .groupBy(col("gold"), col("pred")).agg(count(lit(1)).as("n"))
   }
 
@@ -956,7 +956,7 @@ object ArrayOps {
     val dump = s"$voxelDumpRoot/a14"
     vol.storageReport(Box(1, 60, 1, 60, 1, 7))
       .write.mode("overwrite").parquet(dump)
-    spark.read.parquet(dump)
+    Tables.parquet(spark, dump)
       .groupBy(col("cz"))
       .agg(count(lit(1)).as("n_chunks"),
         sum(col("stored_bytes")).as("stored"),
@@ -1668,7 +1668,7 @@ object ArrayOps {
     vol.toVoxels(Box(1, 64, 1, 64, 1, 8))
       .select(col("value").cast(LongType).as("value"))
       .write.mode("overwrite").parquet(dump)
-    val hist = spark.read.parquet(dump)
+    val hist = Tables.parquet(spark, dump)
       .groupBy(col("value")).agg(count(lit(1)).as("cnt"))
     val cum = hist.withColumn("cc", sum(col("cnt")).over(
       Window.orderBy(col("value")).rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -1721,7 +1721,7 @@ object ArrayOps {
     vol.toVoxels(Box(1, 64, 1, 64, 1, 8))
       .select(col("x"), col("y"), col("value").cast(LongType).as("value"))
       .write.mode("overwrite").parquet(dump)
-    spark.read.parquet(dump)
+    Tables.parquet(spark, dump)
       .groupBy(col("x"), col("y")).agg(max(col("value")).as("mx"))
   }
 
@@ -1936,7 +1936,7 @@ object ArrayOps {
       struct(lit(id).as("id"), lit(x0).as("x0"), lit(x1).as("x1"),
         lit(y0).as("y0"), lit(y1).as("y1"), lit(z0).as("z0"), lit(z1).as("z1"))
     }: _*)
-    spark.read.parquet(s"$voxelDumpRoot/a23")
+    Tables.parquet(spark, s"$voxelDumpRoot/a23")
       .withColumn("__rois", roiArr)
       .select(col("value"), explode(expr(
         "filter(__rois, r -> x >= r.x0 AND x <= r.x1 AND y >= r.y0 AND y <= r.y1" +
@@ -1994,7 +1994,7 @@ object ArrayOps {
     val vox = src.toVoxels(box)
       .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("value"))
     vox.write.mode("overwrite").parquet(s"$voxelDumpRoot/a24")
-    val dumped = spark.read.parquet(s"$voxelDumpRoot/a24")
+    val dumped = Tables.parquet(spark, s"$voxelDumpRoot/a24")
     val hist = dumped.groupBy(col("value")).agg(count(lit(1)).as("cnt"))
     val cum = hist.withColumn("cc", sum(col("cnt")).over(
       Window.orderBy(col("value")).rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -2090,7 +2090,7 @@ object ArrayOps {
     val vox = src.toVoxels(box)
       .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("value"))
     vox.write.mode("overwrite").parquet(s"$voxelDumpRoot/a36")
-    val dumped = spark.read.parquet(s"$voxelDumpRoot/a36")
+    val dumped = Tables.parquet(spark, s"$voxelDumpRoot/a36")
     val hist = dumped.groupBy(col("value")).agg(count(lit(1)).as("cnt"))
     val w = Window.orderBy(col("value")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = hist
@@ -2206,7 +2206,7 @@ object ArrayOps {
     val served = a26Rois.map { case (id, x0, x1, y0, y1, z0, z1) =>
       val nvox = (x1 - x0 + 1).toLong * (y1 - y0 + 1) * (z1 - z0 + 1)
       if (nvox <= A26Budget)
-        spark.read.parquet(s"$voxelDumpRoot/a26m1")
+        Tables.parquet(spark, s"$voxelDumpRoot/a26m1")
           .filter(col("x").between(x0, x1) && col("y").between(y0, y1) &&
             col("z").between(z0, z1))
           .agg(count(lit(1)).as("n_vox"),
@@ -2215,7 +2215,7 @@ object ArrayOps {
       else {
         val (fx0, fx1) = ((x0 - 1) / 2 + 1, (x1 - 1) / 2 + 1)
         val (fy0, fy1) = ((y0 - 1) / 2 + 1, (y1 - 1) / 2 + 1)
-        spark.read.parquet(s"$voxelDumpRoot/a26m2")
+        Tables.parquet(spark, s"$voxelDumpRoot/a26m2")
           .filter(col("x").between(fx0, fx1) && col("y").between(fy0, fy1) &&
             col("z").between(z0, z1))
           .agg(count(lit(1)).as("n_vox"),
@@ -2547,14 +2547,14 @@ object ArrayOps {
     refv.toVoxels(box)
       .select(col("value").cast(LongType).as("value"))
       .write.mode("overwrite").parquet(s"$voxelDumpRoot/a41_ref")
-    val srcVox = spark.read.parquet(s"$voxelDumpRoot/a41_src")
+    val srcVox = Tables.parquet(spark, s"$voxelDumpRoot/a41_src")
     val wv = Window.orderBy(col("value"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val sCum = srcVox.groupBy(col("value")).agg(count(lit(1)).as("cnt"))
       .withColumn("cs", sum(col("cnt")).over(wv))
       .crossJoin(broadcast(srcVox.agg(count(lit(1)).as("ns"))))
       .select(col("value"), col("cs"), col("ns"))
-    val refVox = spark.read.parquet(s"$voxelDumpRoot/a41_ref")
+    val refVox = Tables.parquet(spark, s"$voxelDumpRoot/a41_ref")
     val rCum = refVox.groupBy(col("value").as("r")).agg(count(lit(1)).as("cnt"))
       .withColumn("cr", sum(col("cnt")).over(Window.orderBy(col("r"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -2654,7 +2654,7 @@ object ArrayOps {
     // the oracle; re-deriving sizes from the store paid that whole
     // decode pass a second time. Same rows by construction (the dump is
     // written from the identical filter+projection).
-    val sizes = spark.read.parquet(s"$voxelDumpRoot/a40")
+    val sizes = Tables.parquet(spark, s"$voxelDumpRoot/a40")
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_vox"))
     val edges = contacts.filter(col("n_pairs") >= tau)
@@ -2788,7 +2788,8 @@ object ArrayOps {
   /** Once-per-JVM registry of the a46 fixture per input dir:
     * (volume root, fixity-manifest parquet path). */
   private[graft] val fixityReg =
-    graft.core.AtRestRegistry[(String, String)]("array.a46_fixity", arity = 1)
+    graft.core.AtRestRegistry[(String, String)]("array.a46_fixity", arity = 1,
+      kind = graft.core.AtRestRegistry.Fixture)
 
   /** FIXITY / bit-rot audit (a46) — the archival-integrity pass every
     * long-lived chunk store runs (object stores corrupt rarely but not
@@ -2839,7 +2840,7 @@ object ArrayOps {
     }
     spark.read.format("precomputed").load(root)
       .select(col("cx"), col("cy"), col("cz"), col("key"), md5(col("blob")).as("now"))
-      .join(spark.read.parquet(man), Seq("key"))
+      .join(Tables.parquet(spark, man), Seq("key"))
       .select(col("cx"), col("cy"), col("cz"), col("key"),
         (col("now") =!= col("h")).as("drifted"))
   }
@@ -2908,7 +2909,7 @@ object ArrayOps {
       val m0 = vol.toVoxels(Box(1, 64, 1, 64, 1, 16))
         .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("value"))
       m0.write.mode("overwrite").parquet(m0Dump)
-      val want = spark.read.parquet(m0Dump)
+      val want = Tables.parquet(spark, m0Dump)
         .groupBy(
           (floor((col("x") - 1) / 2) + 1).cast(IntegerType).as("x"),
           (floor((col("y") - 1) / 2) + 1).cast(IntegerType).as("y"),
@@ -2935,7 +2936,7 @@ object ArrayOps {
       // post-repair re-derivation must be clean EVERYWHERE (same dump the
       // gate folds — but equality of engine and oracle folds alone would
       // not prove the repair landed, so the property is asserted here)
-      val dirtyAfter = spark.read.parquet(m1Dump)
+      val dirtyAfter = Tables.parquet(spark, m1Dump)
         .join(want, Seq("x", "y", "z"))
         .filter(col("value") =!= col("want")).count()
       require(dirtyAfter == 0, s"a47: $dirtyAfter voxels still drifted after repair")
@@ -2943,13 +2944,13 @@ object ArrayOps {
     }
     // the gated report: per mip-1 chunk, the injected-drift verdict and
     // the post-repair agreement census (must be total everywhere)
-    val want = spark.read.parquet(m0Dump)
+    val want = Tables.parquet(spark, m0Dump)
       .groupBy(
         (floor((col("x") - 1) / 2) + 1).cast(IntegerType).as("x"),
         (floor((col("y") - 1) / 2) + 1).cast(IntegerType).as("y"),
         col("z"))
       .agg(round(avg(col("value"))).cast(LongType).as("want"))
-    spark.read.parquet(m1Dump)
+    Tables.parquet(spark, m1Dump)
       .join(want, Seq("x", "y", "z"))
       .groupBy(
         (floor((col("x") - 1) / 32) + 1).cast(IntegerType).as("cx"),

@@ -401,7 +401,7 @@ object Corpus {
         .write.mode("overwrite").parquet(p)
       p
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** DuckDB oracle twin of [[decontaminate]] — same n-grams (list slices are
@@ -445,7 +445,7 @@ object Corpus {
         .write.mode("overwrite").parquet(p)
       p
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** FUZZY benchmark decontamination (c18) — the near-duplicate
@@ -688,7 +688,7 @@ object Corpus {
         stageAttrition(standing).write.mode("overwrite").parquet(ap)
         (pp, ap)
       }
-    val standingPacks = spark.read.parquet(packsPath)
+    val standingPacks = Tables.parquet(spark, packsPath)
     // the delta screen touches ONLY the delta shard
     val delta = releaseStaged(spark, dir, evalMod, n, minJ,
       pmod(col("doc_id"), lit(deltaMod)) === 0)
@@ -704,7 +704,7 @@ object Corpus {
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tok_sum"))
     // combined attrition: counters are group sums, so standing ⊕ delta is
     // exact (the q33 decomposability argument at counter grain)
-    val att = spark.read.parquet(attPath).unionByName(stageAttrition(delta))
+    val att = Tables.parquet(spark, attPath).unionByName(stageAttrition(delta))
       .agg(sum(col("docs_in")).as("docs_in"),
         sum(col("drop_quality")).as("drop_quality"),
         sum(col("drop_dup")).as("drop_dup"),
@@ -770,10 +770,10 @@ object Corpus {
           .write.mode("overwrite").parquet(sp)
         (sp, mp)
       }
-    val recomputed = spark.read.parquet(shippedPath)
+    val recomputed = Tables.parquet(spark, shippedPath)
       .groupBy(col("source"), col("pack_id"))
       .agg(digest.as("now"))
-    spark.read.parquet(manifestPath)
+    Tables.parquet(spark, manifestPath)
       .join(recomputed, Seq("source", "pack_id"))
       .select(col("source"), col("pack_id"), col("n_docs"), col("tok_sum"),
         (col("now") =!= col("digest")).as("drifted"))
@@ -1190,7 +1190,7 @@ object Corpus {
         .write.mode("overwrite").partitionBy("source").parquet(p)
       p
     }
-    spark.read.parquet(out)
+    Tables.parquet(spark, out)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
   }
@@ -1458,7 +1458,7 @@ object Corpus {
         .withColumn("fid", ((row_number().over(w) - 1) / lit(ManifestFileRows))
           .cast(LongType))
       clustered.write.mode("overwrite").partitionBy("fid").parquet(dp)
-      spark.read.parquet(dp)
+      Tables.parquet(spark, dp)
         .groupBy(col("fid"))
         .agg(min(col("n_chars")).as("min_chars"), max(col("n_chars")).as("max_chars"),
           count(lit(1)).as("n_rows"))
@@ -1471,12 +1471,12 @@ object Corpus {
     val (mn, mx) = (mm.getLong(0), mm.getLong(1))
     val (lo, hi) = (mn + (mx - mn) / 3, mn + (mx - mn) / 2)
     // plan against the manifest: the interval-overlap test picks the files
-    val manifest = spark.read.parquet(manifestPath)
+    val manifest = Tables.parquet(spark, manifestPath)
     val filesTotal = manifest.count()
     val qualifying = manifest
       .filter(col("max_chars") >= lo && col("min_chars") <= hi)
       .select(col("fid").cast(LongType)).collect().map(_.getLong(0)).sorted
-    spark.read.parquet(dataPath)
+    Tables.parquet(spark, dataPath)
       .filter(col("fid").isin(qualifying.toSeq: _*)) // only planned files open
       .filter(col("n_chars").between(lo, hi))        // residual row predicate
       .groupBy(col("lang"))
@@ -1495,10 +1495,10 @@ object Corpus {
       .agg(min(col("n_chars")), max(col("n_chars"))).head()
     val (mn, mx) = (mm.getLong(0), mm.getLong(1))
     val (lo, hi) = (mn + (mx - mn) / 3, mn + (mx - mn) / 2)
-    val qualifying = spark.read.parquet(manifestPath)
+    val qualifying = Tables.parquet(spark, manifestPath)
       .filter(col("max_chars") >= lo && col("min_chars") <= hi)
       .select(col("fid").cast(LongType)).collect().map(_.getLong(0)).sorted
-    spark.read.parquet(dataPath)
+    Tables.parquet(spark, dataPath)
       .filter(col("fid").isin(qualifying.toSeq: _*))
       .filter(col("n_chars").between(lo, hi))
   }

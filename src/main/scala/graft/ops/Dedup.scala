@@ -209,7 +209,7 @@ object Dedup {
       rankedShingleSets(t(spark, dir, "documents")).write.mode("overwrite").parquet(p)
       p
     }
-    containmentFrom(spark.read.parquet(path), minC)
+    containmentFrom(Tables.parquet(spark, path), minC)
   }
 
   /** The rarity-ranked shingle-set relation over the quote-augmented
@@ -374,7 +374,7 @@ object Dedup {
   /** The full-form at-rest signature relation (doc_id, m0..m95, sz, shs)
     * for `dir` — see [[sigReg]]. */
   private[ops] def sigSetsAtRest(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(signaturesAtRest(spark, dir)._1)
+    Tables.parquet(spark, signaturesAtRest(spark, dir)._1)
 
   /** [[minhashPairs]] over an ALREADY-materialized fused signature
     * relation — the seam d17 uses to compute pairs AND dump the signature
@@ -760,7 +760,7 @@ object Dedup {
       ngramJaccardPairs(t(spark, dir, "documents"), minJ).write.mode("overwrite").parquet(p)
       p
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** Inter-source duplication matrix — the curation report that drives
@@ -796,7 +796,7 @@ object Dedup {
         .write.mode("overwrite").parquet(p)
       p
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** Incremental exact dedup — THE dedup shape a standing 100 TB pipeline
@@ -851,7 +851,7 @@ object Dedup {
         .write.mode("overwrite").parquet(sPath)
       (bPath, sPath)
     }
-    (spark.read.parquet(bp), spark.read.parquet(sp))
+    (Tables.parquet(spark, bp), Tables.parquet(spark, sp))
   }
 
   /** Incremental NEAR-dup (d8): the delta shard's MinHash bands probe the
@@ -1178,8 +1178,8 @@ object Dedup {
     // r13 this op re-built the pipeline and dumped a duplicate artifact)
     val (fullPath, longPath) = signaturesAtRest(spark, dir)
     BbitSigDump = longPath
-    val sigSets = spark.read.parquet(fullPath)
-    val sigs = spark.read.parquet(longPath)
+    val sigSets = Tables.parquet(spark, fullPath)
+    val sigs = Tables.parquet(spark, longPath)
     val mask = (1L << b) - 1
     val denomB = NumHashes * ((1 << b) - 1)
     minhashPairsFrom(sigSets, minJ).select(col("a"), col("b"), col("jac"))
@@ -1257,7 +1257,7 @@ object Dedup {
       signaturesWithSets(shingles(t(spark, dir, "documents")))
         .select((col("doc_id") +: sigCols.map(col)) ++ Seq(col("sz"), col("shs")): _*)
         .write.mode("overwrite").parquet(fp)
-      spark.read.parquet(fp).select(col("doc_id"), explode(expr(
+      Tables.parquet(spark, fp).select(col("doc_id"), explode(expr(
         s"transform(sequence(0, ${NumHashes - 1}), i -> struct(CAST(i AS BIGINT) AS i, element_at(array(${sigCols.mkString(",")}), CAST(i + 1 AS INT)) AS m))")).as("s"))
         .select(col("doc_id"), col("s.i").as("i"), col("s.m").as("m"))
         .write.mode("overwrite").parquet(lp)
@@ -1298,7 +1298,7 @@ object Dedup {
     // the calibration sweep reads ONLY the m-columns (parquet pruning)
     val (fullPath, longPath) = signaturesAtRest(spark, dir)
     TuneSigDump = longPath
-    val sigs = spark.read.parquet(fullPath)
+    val sigs = Tables.parquet(spark, fullPath)
       .select((col("doc_id") +: sigCols.map(col)): _*)
     // exact ground truth from the at-rest registry ([[nearDupPairsAtRest]]
     // — first toucher in the JVM pays the PPJoin once, every consumer
@@ -1383,7 +1383,7 @@ object Dedup {
         .write.mode("overwrite").parquet(path)
       path
     }
-    val atRest = spark.read.parquet(p)
+    val atRest = Tables.parquet(spark, p)
     // delta signatures at rest (the d8 rationale above) — and the d8
     // probe inside incrementalNearDup reads the SAME artifact, so the
     // delta shingle pipeline that used to run TWICE per d20 (once here,

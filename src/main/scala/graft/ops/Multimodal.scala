@@ -1167,7 +1167,8 @@ object Multimodal {
   /** Per-JVM registry of media fixture dirs (input dir → fixture path),
     * the [[graft.ops.Similarity]] artifact-dump pattern. */
   private[graft] val mediaFixtureReg =
-    graft.core.AtRestRegistry[String]("mm.m7_media", arity = 1)
+    graft.core.AtRestRegistry[String]("mm.m7_media", arity = 1,
+      kind = graft.core.AtRestRegistry.Fixture)
 
   /** Materialize a directory of REAL media FILES — `<doc_id>.tif` /
     * `<doc_id>.wav` / `<doc_id>.avi` — encoded by the engine's own codecs
@@ -1896,7 +1897,7 @@ object Multimodal {
       visualDecontam(spark, dir, evalMod, tau).write.mode("overwrite").parquet(p)
       p
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** The oracle CTE chain replaying [[perceptualHashRelation]] (donor

@@ -528,7 +528,7 @@ object Relational {
     val deltaAgg = ev.filter(col("hr_idx") >= cut)
       .groupBy(col("hr_idx"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("v")).cast(dec).as("sv"))
-    spark.read.parquet(mvPath).unionByName(deltaAgg)
+    Tables.parquet(spark, mvPath).unionByName(deltaAgg)
       .groupBy(col("hr_idx"), col("event_type"))
       .agg(sum(col("n")).as("n"), outd(sum(col("sv"))).as("sv"))
   }
@@ -595,7 +595,7 @@ object Relational {
         .write.mode("overwrite").partitionBy("l_year").parquet(p)
       p
     }
-    val fact = spark.read.parquet(factPath)
+    val fact = Tables.parquet(spark, factPath)
     val dim = t(spark, dir, "orders")
       .groupBy(year(col("o_orderdate")).as("l_year"))
       .agg(count(lit(1)).as("n_orders"))
@@ -619,7 +619,7 @@ object Relational {
     * PartitionFilters. */
   private[graft] def q36PlanProbe(spark: SparkSession, dir: String): DataFrame = {
     q36_dpp_join(spark, dir) // ensures the layout exists
-    val fact = spark.read.parquet(dppFactReg.lookup(dir).get)
+    val fact = Tables.parquet(spark, dppFactReg.lookup(dir).get)
     val dim = t(spark, dir, "orders")
       .groupBy(year(col("o_orderdate")).as("l_year"))
       .agg(count(lit(1)).as("n_orders"))
@@ -978,17 +978,17 @@ object Relational {
     }
     val cdc = Tables.materialize(q42Cdc(spark, dir))
     val months = cdc.select(col("o_pm")).distinct().collect().map(_.getString(0)).sorted
-    val affected = spark.read.parquet(target)
+    val affected = Tables.parquet(spark, target)
       .filter(col("o_pm").isin(months.toSeq: _*))
     val merged = affected
       .join(broadcast(cdc.select(col("o_orderkey"))), Seq("o_orderkey"), "left_anti")
       .unionByName(cdc)
     val stage = s"$target.stage"
     merged.write.mode("overwrite").partitionBy("o_pm").parquet(stage)
-    spark.read.parquet(stage).write.mode("overwrite")
+    Tables.parquet(spark, stage).write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("o_pm").parquet(target)
-    spark.read.parquet(target)
+    Tables.parquet(spark, target)
       .groupBy(col("o_pm").cast(StringType).as("o_pm"))
       .agg(count(lit(1)).as("n_orders"), sum(col("price")).as("s"))
       .select(col("o_pm"), col("n_orders"), outd(col("s")).as("total"),
@@ -1002,7 +1002,7 @@ object Relational {
     q42_merge_upsert(spark, dir) // ensures the layout exists
     val cdc = q42Cdc(spark, dir)
     val months = cdc.select(col("o_pm")).distinct().collect().map(_.getString(0)).sorted
-    spark.read.parquet(mergeTargetReg.lookup(dir).get)
+    Tables.parquet(spark, mergeTargetReg.lookup(dir).get)
       .filter(col("o_pm").isin(months.toSeq: _*))
   }
 
@@ -1039,7 +1039,7 @@ object Relational {
       val cdc = Tables.materialize(q42Cdc(spark, dir))
       val months = cdc.select(col("o_pm")).distinct()
         .collect().map(_.getString(0)).sorted.toSeq
-      val affected = spark.read.parquet(s"$p/base")
+      val affected = Tables.parquet(spark, s"$p/base")
         .filter(col("pm").isin(months: _*)).drop("pm")
       affected
         .join(broadcast(cdc.select(col("o_orderkey"))), Seq("o_orderkey"), "left_anti")
@@ -1057,10 +1057,10 @@ object Relational {
       p
     }
     def asOf(v: Int): DataFrame = {
-      val paths = spark.read.parquet(s"$root/manifest")
+      val paths = Tables.parquet(spark, s"$root/manifest")
         .filter(col("version") === v).select(col("path"))
         .collect().map(r => s"$root/${r.getString(0)}").sorted
-      spark.read.parquet(paths.toSeq: _*).withColumn("version", lit(v.toLong))
+      Tables.parquet(spark, paths.toSeq: _*).withColumn("version", lit(v.toLong))
     }
     asOf(0).unionByName(asOf(1))
       .groupBy(col("version"), col("o_pm"))
@@ -1462,7 +1462,7 @@ object Relational {
       .withColumn("v2", (col("v") + lit(new java.math.BigDecimal("1.50"))).cast(dec))
       .groupBy(col("hr_idx"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("v2")).cast(dec).as("sv"))
-    spark.read.parquet(mvPath)
+    Tables.parquet(spark, mvPath)
       .unionByName(retract).unionByName(restate)
       .groupBy(col("hr_idx"), col("event_type"))
       .agg(sum(col("n")).as("n"), outd(sum(col("sv"))).as("sv"))

@@ -32,7 +32,8 @@ object EventStreams {
     * (best-of-N bench, multi-query rounds) otherwise re-pay a batch footer
     * read each run. */
   private[graft] val tsTypeReg =
-    graft.core.AtRestRegistry[DataType]("stream.ts_type", arity = 1)
+    graft.core.AtRestRegistry[DataType]("stream.ts_type", arity = 1,
+      kind = graft.core.AtRestRegistry.Fixture)
 
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -42,7 +43,7 @@ object EventStreams {
     // resolve just like the fixture's literal events.parquet
     val glob = s"$dir/events*.parquet"
     val tsType = tsTypeReg.getOrBuild(glob) {
-      spark.read.parquet(glob).schema("ts").dataType
+      Tables.parquet(spark, glob).schema("ts").dataType
     }
     // glob form: the file-stream source requires a directory basePath
     Tables.normalizeTs(
@@ -101,7 +102,8 @@ object EventStreams {
   /** Per-JVM 1-row parquet fixture for [[driveFloorOnce]] — staged once,
     * deleted with the other staged dirs' lifetime (tmpfs temp dir). */
   private[graft] val floorFixtureReg =
-    graft.core.AtRestRegistry[String]("stream.floor_fixture", arity = 1)
+    graft.core.AtRestRegistry[String]("stream.floor_fixture", arity = 1,
+      kind = graft.core.AtRestRegistry.Fixture)
 
   /** The irreducible cost of ONE bounded stateful drive — state-store
     * init, offset/commit-log machinery, microbatch planning, memory-sink
@@ -337,7 +339,7 @@ object EventStreams {
     * stream-stream joins). Aggregated per (segment, event_type) so the batch
     * SQL twin can hash-check the result. */
   def enrichedAggOnce(spark: SparkSession, dir: String): DataFrame = {
-    val cust = spark.read.parquet(s"$dir/customer.parquet")
+    val cust = Tables.parquet(spark, s"$dir/customer.parquet")
       .select(col("c_custkey"), col("c_mktsegment"))
     val agg = readEventStream(spark, dir)
       .join(broadcast(cust), col("user_id") === col("c_custkey"))
@@ -434,13 +436,13 @@ object EventStreams {
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val sp = batch.sparkSession
           batch.distinct()
-            .join(sp.read.parquet(ixDir), Seq("h"), "left_anti")
+            .join(Tables.parquet(sp, ixDir), Seq("h"), "left_anti")
             .write.mode("append").parquet(ixDir)
         }
         .queryName(name).start()
       try q.processAllAvailable() finally q.stop()
     }
-    spark.read.parquet(ixDir)
+    Tables.parquet(spark, ixDir)
       .groupBy(substring(col("h"), 1, 1).as("pfx"))
       .agg(count(lit(1)).as("n"))
   }
@@ -481,7 +483,7 @@ object EventStreams {
         .queryName(name).start()
       try q.processAllAvailable() finally q.stop()
     }
-    val src = spark.read.parquet(s"$dir/documents.parquet")
+    val src = Tables.parquet(spark, s"$dir/documents.parquet")
       .select(col("doc_id"), col("source"))
     // explicit schema: an empty sink dir must read as zero rows, not fail
     val keep = spark.read.schema("doc_id LONG").parquet(keepDir)
@@ -630,7 +632,7 @@ object EventStreams {
     }
     driveOnce()
     driveOnce() // the simulated full retry — must be absorbed, not appended
-    spark.read.parquet(sink)
+    Tables.parquet(spark, sink)
       .groupBy((col("doc_id") % 10).as("bucket"))
       .agg(count(lit(1)).as("n"), sum(col("n_tok")).as("tok_sum"))
   }
@@ -685,7 +687,7 @@ object EventStreams {
     val stream = spark.readStream.schema(docSchema).parquet(s"$dir/documents*.parquet")
     val flagged = TextOps.gopherRules(TextOps.withSyntheticLines(stream))
       .select(col("doc_id"), col("keep"))
-    val src = spark.read.parquet(s"$dir/documents.parquet")
+    val src = Tables.parquet(spark, s"$dir/documents.parquet")
       .select(col("doc_id"), col("source"))
     val agg = flagged.join(broadcast(src), Seq("doc_id"))
       .groupBy(col("source"), col("keep"))
@@ -835,7 +837,8 @@ object EventStreams {
     * of the e7/e10/e25 floor (each drive re-paid a file copy + a Spark
     * write + two footer reads for byte-identical output). */
   private[graft] val stagedDirReg =
-    graft.core.AtRestRegistry[String]("stream.staged_fixture", arity = 2)
+    graft.core.AtRestRegistry[String]("stream.staged_fixture", arity = 2,
+      kind = graft.core.AtRestRegistry.Fixture)
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       stagedDirReg.values.foreach(d => rmStage(d))))
@@ -854,7 +857,7 @@ object EventStreams {
       Paths.get(FastTmpRoot), "graft-stage").toString
     Files.copy(Paths.get(s"$dir/events.parquet"), Paths.get(s"$stage/events0.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
-    val srcTsType = spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    val srcTsType = Tables.parquet(spark, s"$dir/events.parquet").schema("ts").dataType
     val farNs = 4102444800L * 1000000000L
     import spark.implicits._
     val sentinelsRaw = sentinelTypes.zipWithIndex.map { case (tpe, i) =>
@@ -1615,7 +1618,7 @@ object EventStreams {
       .collect().map(_.getInt(0)).sorted
     val cur =
       if (new java.io.File(target).exists())
-        spark.read.parquet(target)
+        Tables.parquet(spark, target)
           .filter(col("bucket").isin(buckets.toSeq: _*))
           .withColumn("bucket", col("bucket").cast("int"))
       else delta.limit(0)
@@ -1628,7 +1631,7 @@ object EventStreams {
         col("last.last_type").as("last_type"), col("bucket"))
     val stage = s"$target.stage"
     merged.write.mode("overwrite").partitionBy("bucket").parquet(stage)
-    spark.read.parquet(stage).write.mode("overwrite")
+    Tables.parquet(spark, stage).write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket").parquet(target)
   }
@@ -1654,7 +1657,7 @@ object EventStreams {
         .queryName(name).start()
       try q.processAllAvailable() finally q.stop()
     }
-    spark.read.parquet(target)
+    Tables.parquet(spark, target)
       .groupBy(col("bucket").cast("long").as("bucket"))
       .agg(count(lit(1)).as("n_users"), sum(col("n_events")).as("sum_events"),
         count_distinct(col("last_type")).as("n_types"))
@@ -1700,7 +1703,7 @@ object EventStreams {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val stage = Files.createTempDirectory(Paths.get(FastTmpRoot), "graft-e27").toString
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = Tables.parquet(spark, s"$dir/events.parquet")
     def writeSplit(df: DataFrame, name: String): Unit = {
       val tmp = s"$stage/__tmp"
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -1807,7 +1810,7 @@ object EventStreams {
     val acc = java.nio.file.Files.createTempDirectory("graft-e29-acc").toString
     streamVisualInto(spark, s"$dir/documents*.parquet", evalIdx, donors, acc,
       evalMod, tau)
-    spark.read.parquet(s"$acc/batch_*")
+    Tables.parquet(spark, s"$acc/batch_*")
   }
 
   /** The streaming half of [[streamVisualScreenOnce]], factored so the
@@ -1890,9 +1893,9 @@ object EventStreams {
     * partial, one bounded (≤ nlist rows per relation) aggregation. */
   private[streaming] def servedIvfCensus(spark: SparkSession, cellPath: String,
       acc: String): DataFrame = {
-    val standing = spark.read.parquet(cellPath)
+    val standing = Tables.parquet(spark, cellPath)
       .select(col("cell"), col("n_standing").as("n"), col("s_sum").as("s"))
-    val parts = spark.read.parquet(s"$acc/batch_*")
+    val parts = Tables.parquet(spark, s"$acc/batch_*")
       .select(col("cell"), col("n"), col("s"))
     standing.unionByName(parts)
       .groupBy(col("cell"))

@@ -62,7 +62,7 @@ object CurationPipelineDemo {
     // 6. hive-partitioned export (c13 layout: one dir per source)
     val out = java.nio.file.Files.createTempDirectory("graft-pipeline-out").toString
     sampled.write.mode("overwrite").partitionBy("source").parquet(out)
-    val reloaded = spark.read.parquet(out)
+    val reloaded = graft.ops.Tables.parquet(spark, out)
 
     val funnel = Seq(
       "raw" -> docs.count(),

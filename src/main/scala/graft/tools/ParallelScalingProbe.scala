@@ -34,7 +34,7 @@ object ParallelScalingProbe {
     spark.sparkContext.setLogLevel("ERROR")
     import graft.functions.TriangleLimbSumAgg.triangle_limb_sum
 
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = graft.ops.Tables.parquet(spark, s"$sfDir/embeddings.parquet")
     val nD = emb.selectExpr("size(embedding)").head().getInt(0)
     // The fixture is one small parquet file, so the scan is ONE task:
     // everything before the exchange serializes. Fan out in two stages —

@@ -103,6 +103,35 @@ class AtRestRegistrySpec extends AnyFunSuite {
     }
   }
 
+  test("build seconds count operator artifacts, not fixture staging") {
+    val art = AtRestRegistry[String]("spec.kind_artifact", arity = 1)
+    val fix = AtRestRegistry[String]("spec.kind_fixture", arity = 1, kind = AtRestRegistry.Fixture)
+    art.getOrBuild("k") { Thread.sleep(5); "a" }
+    fix.getOrBuild("k") { Thread.sleep(5); "f" }
+    val secs = AtRestRegistry.buildSecondsByRegistry
+    assert(secs.contains("spec.kind_artifact") && !secs.contains("spec.kind_fixture"))
+    assert(graft.streaming.EventStreams.floorFixtureReg.kind == AtRestRegistry.Fixture)
+    assert(graft.ops.Similarity.postingsReg.kind == AtRestRegistry.Artifact)
+  }
+
+  test("a query's registry lookups decide whether Bench gives it a cold run") {
+    val docs = graft.testutil.CorpusFixture.documents(spark)
+    def fed(q: String): Boolean = {
+      val (_, touched) = AtRestRegistry.touchedBy {
+        graft.SparkEntry.queries(q)(spark, docs).write.mode("overwrite").format("noop").save()
+      }
+      graft.Bench.registryFed(touched)
+    }
+    // built on the first run and served on the second: both count
+    assert(fed("c18_fuzzy_decontam") && fed("c18_fuzzy_decontam"))
+    assert(fed("s12_sparse_topk"))
+    assert(!fed("t9_bm25"))
+    // lookups after the recording ended are not recorded
+    val (_, none) = AtRestRegistry.touchedBy(())
+    graft.ops.Similarity.sparseTfidfTopK(spark, docs)
+    assert(none.isEmpty)
+  }
+
   test("no hand-rolled registry outside the utility (source scan)") {
     // the two remaining ConcurrentHashMap sites are NOT at-rest registries:
     //  - sources/PrecomputedCatalog.scala: DSv2 catalog state (tables are

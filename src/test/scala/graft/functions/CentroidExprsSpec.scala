@@ -104,6 +104,25 @@ class CentroidExprsSpec extends AnyFunSuite {
     assert((0 until 150 by 10).forall(i => kernel(i.toLong) == 2L))
   }
 
+  test("centroid_nearest_limb rejects a scaled value past the 1e9 bound") {
+    import spark.implicits._
+    val cents = Array(Array(0L, 0L), Array(1000000000L, -1000000000L))
+    // at the bound: the widest diff (2e9) squares to 4e18, inside a Long
+    val ok = Seq((0L, Seq(-1000000000L, 1000000000L))).toDF("vec_id", "ri")
+      .select(CentroidExprs.centroid_nearest_limb(col("ri"), cents)).as[Long].collect()
+    assert(ok.toSeq == Seq(0L))
+    // past it: the diff 3.1e9 to centroid 0 squares past 2^63 and wraps
+    // negative, so centroid 0 would win silently (centroid 1 is nearer)
+    val past = Seq((0L, Seq(3100000000L, 0L))).toDF("vec_id", "ri")
+      .select(CentroidExprs.centroid_nearest_limb(col("ri"), cents))
+    val e = intercept[Exception](past.collect())
+    def chain(t: Throwable): Seq[Throwable] = if (t == null) Nil else t +: chain(t.getCause)
+    assert(chain(e).exists(t => t.isInstanceOf[IllegalArgumentException] &&
+      t.getMessage.contains("element 0 3100000000 is outside the |scaled| <= 1e9 bound")), e)
+    intercept[IllegalArgumentException](
+      CentroidExprs.centroid_nearest_limb(col("ri"), Array(Array(1000000001L, 0L))))
+  }
+
   test("NON-NULLABLE input stays codegen'd (generated code must not reference undeclared isNull)") {
     // regression: nullSafeCodeGen only DECLARES ev.isNull for nullable
     // expressions; the kernels' null-result guard referenced it

@@ -83,4 +83,17 @@ class RobustStatsSpec extends AnyFunSuite {
     assert(got("a")._2.contains(3.0))
     assert(got("b") == ((2L, None, 0L))) // all-null group: n kept, stats null
   }
+
+  test("the serialized buffer size is Long arithmetic, checked against the array limit") {
+    assert(RobustStatsAgg.serializedSize(0) == 12)
+    assert(RobustStatsAgg.serializedSize(3) == 36)
+    val top = (Int.MaxValue - 8 - 12) / 8
+    assert(RobustStatsAgg.serializedSize(top) == 12 + top * 8)
+    // 12 + n * 8 in Int arithmetic wraps here (to a negative size at
+    // n = 2^28, to 4 at Int.MaxValue); no buffer is allocated to see it
+    for (n <- Seq(top + 1, 1 << 28, Int.MaxValue)) {
+      val e = intercept[IllegalArgumentException](RobustStatsAgg.serializedSize(n))
+      assert(e.getMessage.contains(s"a group of $n non-null values"), e.getMessage)
+    }
+  }
 }
