@@ -1,11 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, RelationalGroupedDataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Grid
+import graft.core.{Annotations, Grid, MeshFragment, Meta, Scratch, Skeleton}
 import graft.core.Grid.Box
+import graft.sources.{Mrc, N5, TiffStack, Zarr, Zarr3}
+import graft.volume.{ChunkStore, Volume, VoxelBuffer}
 
 /** The reference's array/planning operators exposed on the relational
   * surface: chunk planning as a DataFrame computation, bbox-union
@@ -19,18 +22,12 @@ object ArrayOps {
   val demoChunk: (Int, Int, Int) = (64, 64, 8)
   val demoOffset: (Int, Int, Int) = (-300, -300, -10)
 
-
-
   /** Chunk-grid planning (the reference's ChunkIterator, src/ChunkIterators.jl)
     * as a declarative DataFrame: `sequence`+`explode` generate the pruned id
     * grid, computed columns derive each chunk's storage key
     * (src/Indexes.jl:80-94). Scales: the generator is distributed, and at
     * query time the same arithmetic becomes pruning predicates. */
   def a1_chunk_plan(spark: SparkSession, dir: String): DataFrame = {
-    val (csx, csy, csz) = demoChunk
-    val ox = Grid.gridOffset(demoOffset._1, csx)
-    val oy = Grid.gridOffset(demoOffset._2, csy)
-    val oz = Grid.gridOffset(demoOffset._3, csz)
     val ids = Grid.idRanges(demoBox, demoChunk, demoOffset)
     val (x0, x1) = (ids.lox, ids.hix); val (y0, y1) = (ids.loy, ids.hiy); val (z0, z1) = (ids.loz, ids.hiz)
     spark.range(1).select(
@@ -74,13 +71,14 @@ object ArrayOps {
       .agg(min(col("o_custkey")).as("xlo"), max(col("o_custkey")).as("xhi"),
         min(col("dday")).cast(LongType).as("ylo"), max(col("dday")).cast(LongType).as("yhi"))
 
-  /** Where a3/a4 dump their voxel relations so the DuckDB oracle can
-    * independently re-aggregate the same rows (the voxel VALUES are
+  /** Where the a-pipelines dump their voxel relations so the DuckDB oracle
+    * can independently re-aggregate the same rows (the voxel VALUES are
     * exactness-tested against the buffer in VolumeSpec; the oracle checks
-    * the store-roundtrip relation and the aggregation cross-engine). */
-  /** Per-JVM dump root (shared with the centroid dumps): a fixed /tmp path
-    * would let concurrent sessions clobber each other's oracle artifacts
-    * between the Spark write and the DuckDB replay. */
+    * the store-roundtrip relation and the aggregation cross-engine). It is
+    * per-JVM and shared with the centroid dumps: a fixed /tmp path would
+    * let concurrent sessions clobber each other's oracle artifacts between
+    * the Spark write and the DuckDB replay. The DuckDB replay runs after
+    * this JVM exits, so the dumps stay out of the [[Scratch]] tree. */
   lazy val voxelDumpRoot: String = s"${Similarity.OracleDumpRoot}/voxels"
 
   /** Dump a voxel relation and re-aggregate it by `keys` — ONE copy of the
@@ -100,21 +98,172 @@ object ArrayOps {
     s"SELECT ${keys.mkString(", ")}, count(*) AS n, CAST(sum(value) AS BIGINT) AS sv " +
       s"FROM read_parquet('$dump/*.parquet') GROUP BY ${keys.mkString(", ")}"
 
+  // ---------------- the demo store ----------------
+
+  /** The demo store's one scale: 64×64×8 voxels in 32×32×4 chunks at
+    * origin (1, 1, 1). Most store-backed a-queries build it, and their
+    * oracles' chunk arithmetic assumes it. */
+  private val demoScale =
+    Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))
+
+  /** The demo store's full extent. */
+  private[ops] val demoExtent: Box = Box(1, 64, 1, 64, 1, 8)
+
+  /** Create a demo store (dtype and channel count from `data`, `mips`
+    * pyramid levels) under a fresh [[Scratch]] root and ingest `data`. */
+  private[ops] def demoVolume(spark: SparkSession, tag: String, layer: String = "image",
+      encoding: String = "gzip", mips: Int = 1)(data: VoxelBuffer): Volume = {
+    val meta = Meta.VolumeMeta(layer, data.dataType, data.nc,
+      Vector(demoScale.copy(encoding = encoding))).withNumMips(mips)
+    val vol = Volume.create(spark, Scratch.dir(s"graft-$tag"), meta)
+    vol.ingest(data)
+    vol
+  }
+
+  /** A demo-extent buffer holding `fill(x, y, z)` (1-based coordinates). */
+  private[ops] def demoFill(fill: (Int, Int, Int) => Long,
+      t: Meta.VoxelType = Meta.TUInt8): VoxelBuffer = {
+    val (sx, sy, sz) = demoScale.size
+    val buf = VoxelBuffer.zeros(t, sx, sy, sz, 1, (1, 1, 1))
+    for (z <- 1 to sz; y <- 1 to sy; x <- 1 to sx)
+      buf.setLong(x - 1, y - 1, z - 1, 0, fill(x, y, z))
+    buf
+  }
+
+  /** A demo-extent buffer of [[VoxelBuffer.sequenced]] values. */
+  private def demoSequenced(t: Meta.VoxelType = Meta.TUInt8, channels: Int = 1): VoxelBuffer = {
+    val (sx, sy, sz) = demoScale.size
+    VoxelBuffer.sequenced(t, sx, sy, sz, channels, (1, 1, 1))
+  }
+
+  /** Dump the coordinates of a mask's foreground voxels for the oracle's
+    * relational replay. */
+  private def dumpForeground(vol: Volume, tag: String): Unit =
+    vol.toVoxels(demoExtent).filter(col("value") =!= 0)
+      .select(col("x"), col("y"), col("z"))
+      .write.mode("overwrite").parquet(s"$voxelDumpRoot/$tag")
+
+  /** The (x, y, z, value) voxel projection with the value as BIGINT. */
+  private def longVoxels(voxels: DataFrame): DataFrame =
+    voxels.select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("value"))
+
+  // The demo stores' voxel fields, as functions of 1-based (x, y, z).
+  // ArrayOpsFixtureSpec pins the bytes each one ingests.
+
+  /** The (7x+3y+5z) mod 23 lattice residue that the a17, a18/a37, a20 and
+    * a40 masks are cut from. */
+  private def lattice23(x: Int, y: Int, z: Int): Int = (x * 7 + y * 3 + z * 5) % 23
+
+  /** The (31x+17y+7z) mod 251 residue behind [[skewed]] and [[bimodal]]. */
+  private def u251(x: Int, y: Int, z: Int): Int = (x * 31 + y * 17 + z * 7) % 251
+
+  /** a28's gold segmentation: 16 block labels of 16×16 voxels, all z. */
+  private[ops] def blocks16(x: Int, y: Int, z: Int): Long = 1 + (x - 1) / 16 + 4 * ((y - 1) / 16)
+
+  /** a34: the 16 block objects with label-0 background holes punched in. */
+  private[ops] def holedBlocks(x: Int, y: Int, z: Int): Long =
+    if ((x + y + z) % 11 == 0) 0L else blocks16(x, y, z)
+
+  /** a28's prediction: the gold blocks with a MERGE (6 into 5), a SPLIT
+    * (11 at the x midline into a new 17) and boundary NOISE (sparse voxels
+    * of 1 flipped to 2). */
+  private[ops] def predBlocks(x: Int, y: Int, z: Int): Long = {
+    val g = blocks16(x, y, z)
+    if (g == 6) 5L
+    else if (g == 11 && x > 40) 17L
+    else if (g == 1 && (x + y + z) % 13 == 0) 2L
+    else g
+  }
+
+  /** a33 (`bg` 7) and a30 (`bg` 5): half the chunks, in a 3-d checkerboard,
+    * are uniform `bg`; the others carry bright varied data. */
+  private[ops] def checker(bg: Long)(x: Int, y: Int, z: Int): Long =
+    if (((x - 1) / 32 + (y - 1) / 32 + (z - 1) / 4) % 2 == 0) bg
+    else 100L + (x * 13 + y * 29 + z * 41) % 100
+
+  /** a22: labels with real per-block majorities AND tie blocks, so the
+    * smallest-label rule is exercised, not just the argmax. */
+  private[ops] def modeLabels(x: Int, y: Int, z: Int): Long = (x / 3 + y / 2 + z) % 6
+
+  /** a27/a29: a depth-dependent mix — the brightest z differs across
+    * columns. */
+  private[ops] def depthMix(x: Int, y: Int, z: Int): Long = (x * 13 + y * 29 + z * z * 41) % 256
+
+  /** a16: pillars every 16 voxels on x/y, 3 wide in the interior and
+    * clipped to 1-2 wide at the volume edges (25 pillars of varied size;
+    * the {31,32,33} pillars straddle the x=32|33 and y=32|33 chunk seams,
+    * every pillar spans the z=4|5 seam), plus a z=1 bridge merging three
+    * pillars of one row into one multi-chunk component (multi-hop merge). */
+  private[ops] def pillars(x: Int, y: Int, z: Int): Long = {
+    val pillar = (x + 1) % 16 < 3 && (y + 1) % 16 < 3
+    val bridge = z == 1 && y >= 15 && y <= 17 && x >= 15 && x <= 49
+    if (pillar || bridge) 1L else 0L
+  }
+
+  /** a17: a ~4% mask on the lattice zeros; it hits every chunk and every
+    * seam direction. */
+  private[ops] def sparseMask(x: Int, y: Int, z: Int): Long =
+    if (lattice23(x, y, z) == 0) 1L else 0L
+
+  /** a18/a37: the ~96% dense complement of [[sparseMask]]. */
+  private[ops] def denseMask(x: Int, y: Int, z: Int): Long =
+    if (lattice23(x, y, z) != 0) 1L else 0L
+
+  /** a20: a ~39% dense 5-label pattern; every chunk holds several labels
+    * and every seam direction carries cross-label contacts. */
+  private[ops] def contactLabels(x: Int, y: Int, z: Int): Long =
+    if (lattice23(x, y, z) < 9) 1L + (x * 5 + y * 11 + z * 3) % 5 else 0L
+
+  /** a40: 128 supervoxels (8×8×2 blocks of 8×8×4 voxels) with the lattice
+    * residues below 6 as holes, so every face pair carries a different
+    * contact area. */
+  private[ops] def supervoxels(x: Int, y: Int, z: Int): Long =
+    if (lattice23(x, y, z) >= 6) 1L + (x - 1) / 8 + ((y - 1) / 8) * 8 + ((z - 1) / 4) * 64
+    else 0L
+
+  /** a38: noise independent of z plus an injected ramp of exactly 3 per
+    * section. */
+  private[ops] def zRamp(x: Int, y: Int, z: Int): Long = (x * 7 + y * 3) % 97 + 3 * z
+
+  /** a21/a24/a41/a43: a skewed intensity field — the quadratic term piles
+    * mass at low values the way microscopy background does. */
+  private[ops] def skewed(x: Int, y: Int, z: Int): Long = {
+    val u = u251(x, y, z)
+    u * u / 251
+  }
+
+  /** a43's second version: [[skewed]] with the box [17,32]²×[3,6] raised by
+    * 50, saturating. */
+  private[ops] def skewedEdited(x: Int, y: Int, z: Int): Long = {
+    val base = skewed(x, y, z)
+    if (x >= 17 && x <= 32 && y >= 17 && y <= 32 && z >= 3 && z <= 6) math.min(255L, base + 50)
+    else base
+  }
+
+  /** a36: bimodal by construction — dark 30–69 vs bright 160–219 on a
+    * deterministic mode bit. */
+  private[ops] def bimodal(x: Int, y: Int, z: Int): Long = {
+    val u = u251(x, y, z)
+    if ((x * 13 + y * 29 + z * 3) % 7 < 3) 30L + u % 40 else 160L + u % 60
+  }
+
+  /** a23's intensity field. */
+  private[ops] def roiField(x: Int, y: Int, z: Int): Long = (x * 3 + y * 5 + z * 7) % 251
+
+  /** a26's intensity field. */
+  private[ops] def pyramidField(x: Int, y: Int, z: Int): Long = (x * 5 + y * 11 + z * 3) % 241
+
+  /** a41's reference distribution. */
+  private[ops] def refRamp(x: Int, y: Int, z: Int): Long = (x + 2 * y + 3 * z) % 200 + 28
+
   /** Full array-surface pipeline through the store: build a small volume
     * from deterministic data, ingest, read back as voxels, dump the voxel
     * relation, aggregate per z. The oracle re-aggregates the dumped rows in
     * DuckDB (exactness of the values themselves vs the source buffer is
     * VolumeSpec's job). */
-  def a3_voxel_pipeline(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a3").toString
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    vol.ingest(VoxelBuffer.sequenced(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1)))
-    aggFromDump(spark, vol.toVoxels(Box(1, 64, 1, 64, 1, 8)), s"$voxelDumpRoot/a3")
-  }
+  def a3_voxel_pipeline(spark: SparkSession, dir: String): DataFrame =
+    aggFromDump(spark, demoVolume(spark, "a3")(demoSequenced()).toVoxels(demoExtent),
+      s"$voxelDumpRoot/a3")
 
   def a3OracleSql: String = voxelAggOracle(s"$voxelDumpRoot/a3")
 
@@ -129,10 +278,7 @@ object ArrayOps {
     * shifts every voxel and fails the hash gate. Same oracle shape as
     * a6/a7/a9/a11. */
   def a35_mrc_volume(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.sources.Mrc
-    import graft.volume.VoxelBuffer
-    val path = java.nio.file.Files.createTempDirectory("graft-a35").toString + "/vol.mrc"
+    val path = Scratch.dir("graft-a35") + "/vol.mrc"
     Mrc.write(spark, path, VoxelBuffer.sequenced(Meta.TUInt16, 20, 12, 8, 1, (1, 1, 1)))
     aggFromDump(spark, Mrc.open(spark, path).toVoxels(Box(1, 20, 1, 12, 1, 8)),
       s"$voxelDumpRoot/a35")
@@ -152,32 +298,9 @@ object ArrayOps {
     * a28 block fixture plants known boxes, so the catalog is
     * geometry-verified, not just fold-verified. */
   def a34_object_catalog(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a34").toString
-    val meta = Meta.VolumeMeta("segmentation", Meta.TUInt16, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    val buf = VoxelBuffer.zeros(Meta.TUInt16, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          // 16 block objects, plus label 0 background holes punched in
-          val g = 1 + (x - 1) / 16 + 4 * ((y - 1) / 16)
-          val v = if ((x + y + z) % 11 == 0) 0 else g
-          buf.setLong(x - 1, y - 1, z - 1, 0, v.toLong)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    vol.ingest(buf)
+    val vol = demoVolume(spark, "a34", "segmentation")(demoFill(holedBlocks, Meta.TUInt16))
     val dump = s"$voxelDumpRoot/a34"
-    vol.toVoxels(Box(1, 64, 1, 64, 1, 8))
+    vol.toVoxels(demoExtent)
       .filter(col("value") =!= 0)
       .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("label"))
       .write.mode("overwrite").parquet(dump)
@@ -214,31 +337,9 @@ object ArrayOps {
     * map-side-combined digest count, then the tiny histogram fold — the
     * a14/q32 measurement shape over chunk bytes. */
   def a33_chunk_dedup(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a33").toString
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          val dark = ((x - 1) / 32 + (y - 1) / 32 + (z - 1) / 4) % 2 == 0
-          buf.setLong(x - 1, y - 1, z - 1, 0,
-            if (dark) 7L else 100L + (x * 13 + y * 29 + z * 41) % 100)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    vol.ingest(buf)
+    val vol = demoVolume(spark, "a33")(demoFill(checker(7L)))
     val dump = s"$voxelDumpRoot/a33"
-    spark.read.format("precomputed").load(root)
+    spark.read.format("precomputed").load(vol.root)
       .filter(col("blob").isNotNull)
       .select(col("cx"), col("cy"), col("cz"), md5(col("blob")).as("h"))
       .write.mode("overwrite").parquet(dump)
@@ -266,17 +367,9 @@ object ArrayOps {
     * aggregates at (channel, z) grain, so channel-major buffer layout,
     * per-channel chunk framing, and the voxel view's `c` column are all
     * value-certified cross-engine, not just spec-asserted. */
-  def a32_multichannel(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a32").toString
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 2, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    vol.ingest(VoxelBuffer.sequenced(Meta.TUInt8, 64, 64, 8, 2, (1, 1, 1)))
-    aggFromDump(spark, vol.toVoxels(Box(1, 64, 1, 64, 1, 8)),
+  def a32_multichannel(spark: SparkSession, dir: String): DataFrame =
+    aggFromDump(spark, demoVolume(spark, "a32")(demoSequenced(channels = 2)).toVoxels(demoExtent),
       s"$voxelDumpRoot/a32", keys = Seq("c", "z"))
-  }
 
   def a32OracleSql: String = voxelAggOracle(s"$voxelDumpRoot/a32", Seq("c", "z"))
 
@@ -290,14 +383,8 @@ object ArrayOps {
     * container (header, shuffle, blosclz backend) on real chunk traffic,
     * not just the codec property tests. */
   def a25_blosc_pipeline(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a25").toString
-    val meta = Meta.VolumeMeta("image", Meta.TUInt16, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "blosclz", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    vol.ingest(VoxelBuffer.sequenced(Meta.TUInt16, 64, 64, 8, 1, (1, 1, 1)))
-    aggFromDump(spark, vol.toVoxels(Box(1, 64, 1, 64, 1, 8)), s"$voxelDumpRoot/a25")
+    val vol = demoVolume(spark, "a25", encoding = "blosclz")(demoSequenced(Meta.TUInt16))
+    aggFromDump(spark, vol.toVoxels(demoExtent), s"$voxelDumpRoot/a25")
   }
 
   def a25OracleSql: String = voxelAggOracle(s"$voxelDumpRoot/a25")
@@ -306,16 +393,9 @@ object ArrayOps {
     * mip 2, dump and aggregate mip 2 (pooling exactness in VolumeOpsSpec;
     * the oracle re-aggregates the dump). */
   def a4_downsample(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a4").toString
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0)))).withNumMips(2)
-    val vol = Volume.create(spark, root, meta)
-    vol.ingest(VoxelBuffer.sequenced(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1)))
-    VolumeOps.buildNextMip(vol, Box(1, 64, 1, 64, 1, 8))
-    aggFromDump(spark,
-      new Volume(spark, root, meta, 2).toVoxels(Box(1, 32, 1, 32, 1, 8)),
+    val vol = demoVolume(spark, "a4", mips = 2)(demoSequenced())
+    VolumeOps.buildNextMip(vol, demoExtent)
+    aggFromDump(spark, new Volume(spark, vol.root, vol.meta, 2).toVoxels(Box(1, 32, 1, 32, 1, 8)),
       s"$voxelDumpRoot/a4")
   }
 
@@ -333,16 +413,10 @@ object ArrayOps {
     * 2x vs 2x−1) shifts the hash — a plain count/sum gate would pass a
     * transposed or shifted kernel. */
   def a31_upsample(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a31").toString
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0)))).withNumMips(2)
-    val vol = Volume.create(spark, root, meta)
-    vol.ingest(VoxelBuffer.sequenced(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1)))
-    VolumeOps.buildNextMip(vol, Box(1, 64, 1, 64, 1, 8))
+    val vol = demoVolume(spark, "a31", mips = 2)(demoSequenced())
+    VolumeOps.buildNextMip(vol, demoExtent)
     val dump = s"$voxelDumpRoot/a31"
-    val mip1 = new Volume(spark, root, meta, 2).toVoxels(Box(1, 32, 1, 32, 1, 8))
+    val mip1 = new Volume(spark, vol.root, vol.meta, 2).toVoxels(Box(1, 32, 1, 32, 1, 8))
       .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("v"))
     mip1.write.mode("overwrite").parquet(dump)
     Tables.parquet(spark, dump)
@@ -387,36 +461,10 @@ object ArrayOps {
     * and the mip write is the standard one-shuffle fromVoxels; the final
     * histogram is a third tiny aggregation. */
   def a22_mode_downsample(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a22").toString
-    val meta = Meta.VolumeMeta("segmentation", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-      .withNumMips(2)
-    val vol = Volume.create(spark, root, meta)
-    // label field with real per-block majorities AND tie blocks (the
-    // smallest-label rule must be exercised, not just the argmax)
-    val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          buf.setLong(x - 1, y - 1, z - 1, 0, ((x / 3 + y / 2 + z) % 6).toLong)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    vol.ingest(buf)
-    val box = Box(1, 64, 1, 64, 1, 8)
-    vol.toVoxels(box).select(col("x"), col("y"), col("z"),
-        col("value").cast(LongType).as("value"))
-      .write.mode("overwrite").parquet(s"$voxelDumpRoot/a22_src")
-    VolumeOps.buildNextMip(vol, box)
-    new Volume(spark, root, meta, 2).toVoxels(Box(1, 32, 1, 32, 1, 8))
+    val vol = demoVolume(spark, "a22", "segmentation", mips = 2)(demoFill(modeLabels))
+    longVoxels(vol.toVoxels(demoExtent)).write.mode("overwrite").parquet(s"$voxelDumpRoot/a22_src")
+    VolumeOps.buildNextMip(vol, demoExtent)
+    new Volume(spark, vol.root, vol.meta, 2).toVoxels(Box(1, 32, 1, 32, 1, 8))
       .groupBy(col("z"), col("value").cast(LongType).as("label"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("z"), col("label"))
@@ -455,41 +503,16 @@ object ArrayOps {
     * mean-pool (same half-up rounding in double) and the same join +
     * fold. */
   def a19_mip_audit(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a19").toString
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0)))).withNumMips(2)
-    val vol = Volume.create(spark, root, meta)
-    vol.ingest(VoxelBuffer.sequenced(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1)))
-    VolumeOps.buildNextMip(vol, Box(1, 64, 1, 64, 1, 8))
-    val vol1 = new Volume(spark, root, meta, 2)
+    val vol = demoVolume(spark, "a19", mips = 2)(demoSequenced())
+    VolumeOps.buildNextMip(vol, demoExtent)
+    val vol1 = new Volume(spark, vol.root, vol.meta, 2)
     // tamper with one stored mip-1 region (z 5..8 of one chunk): the audit
     // must localize the damage, not just pass on pristine data
-    val tamper = VoxelBuffer.zeros(Meta.TUInt8, 32, 32, 4, 1, (1, 1, 5))
-    var tz = 0
-    while (tz < 4) {
-      var ty = 0
-      while (ty < 32) {
-        var tx = 0
-        while (tx < 32) { tamper.setLong(tx, ty, tz, 0, 7L); tx += 1 }
-        ty += 1
-      }
-      tz += 1
-    }
-    vol1.ingest(tamper)
-    val m0 = vol.toVoxels(Box(1, 64, 1, 64, 1, 8))
-      .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("value"))
-    val m1 = vol1.toVoxels(Box(1, 32, 1, 32, 1, 8))
-      .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("value"))
-    m0.write.mode("overwrite").parquet(s"$voxelDumpRoot/a19m0")
-    m1.write.mode("overwrite").parquet(s"$voxelDumpRoot/a19m1")
-    val derived = Tables.parquet(spark, s"$voxelDumpRoot/a19m0")
-      .groupBy(
-        (floor((col("x") - 1) / 2) + 1).cast(IntegerType).as("x"),
-        (floor((col("y") - 1) / 2) + 1).cast(IntegerType).as("y"),
-        col("z"))
-      .agg(round(avg(col("value"))).cast(LongType).as("want"))
+    tamperMip1(vol1, 5)
+    longVoxels(vol.toVoxels(demoExtent)).write.mode("overwrite").parquet(s"$voxelDumpRoot/a19m0")
+    longVoxels(vol1.toVoxels(Box(1, 32, 1, 32, 1, 8)))
+      .write.mode("overwrite").parquet(s"$voxelDumpRoot/a19m1")
+    val derived = meanPooled(spark, s"$voxelDumpRoot/a19m0")
     Tables.parquet(spark, s"$voxelDumpRoot/a19m1")
       .join(derived, Seq("x", "y", "z"))
       .groupBy(col("z"))
@@ -498,6 +521,24 @@ object ArrayOps {
         sum(when(col("value") =!= col("want"), 1L).otherwise(0L)).as("n_mismatch"))
       .orderBy(col("z"))
   }
+
+  /** Overwrite the mip-1 region x, y 1..32, z z0..z0+3 of `vol1` with 7s —
+    * the injected drift a19 must localize and a47 must repair. */
+  private def tamperMip1(vol1: Volume, z0: Int): Unit = {
+    val tamper = VoxelBuffer.zeros(Meta.TUInt8, 32, 32, 4, 1, (1, 1, z0))
+    java.util.Arrays.fill(tamper.bytes, 7.toByte)
+    vol1.ingest(tamper)
+  }
+
+  /** Each mip-1 cell's expected value (`want`): the half-up rounded mean of
+    * its 2×2×1 block in the mip-0 dump — the kernel `buildNextMip` runs. */
+  private def meanPooled(spark: SparkSession, m0Dump: String): DataFrame =
+    Tables.parquet(spark, m0Dump)
+      .groupBy(
+        (floor((col("x") - 1) / 2) + 1).cast(IntegerType).as("x"),
+        (floor((col("y") - 1) / 2) + 1).cast(IntegerType).as("y"),
+        col("z"))
+      .agg(round(avg(col("value"))).cast(LongType).as("want"))
 
   /** Oracle twin of [[a19_mip_audit]]: the same mean-pool re-derivation
     * (double avg, half-up round) and match fold from the two dumps. */
@@ -522,14 +563,8 @@ object ArrayOps {
     * whole scan stack: arithmetic planning, executor existence probes,
     * column pruning (no blob), key formatting. */
   def a5_chunk_table(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a5").toString
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    vol.ingest(VoxelBuffer.sequenced(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1)))
-    spark.read.format("precomputed").load(root)
+    val vol = demoVolume(spark, "a5")(demoSequenced())
+    spark.read.format("precomputed").load(vol.root)
       .select(col("mip"), col("cx"), col("cy"), col("cz"),
         col("x0"), col("x1"), col("y0"), col("y1"), col("z0"), col("z1"), col("key"))
   }
@@ -539,14 +574,11 @@ object ArrayOps {
     * 8-chunk in x), dump the voxel relation, aggregate per z; the oracle
     * re-aggregates the dump. */
   def a6_zarr_pipeline(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.sources.Zarr
-    import graft.volume.VoxelBuffer
-    val root = java.nio.file.Files.createTempDirectory("graft-a6").toString
+    val root = Scratch.dir("graft-a6")
     val vol = Zarr.create(spark, root, shape = (20, 12, 8), chunks = (8, 4, 2),
       dataType = Meta.TUInt16, encoding = "zlib")
     vol.ingest(VoxelBuffer.sequenced(Meta.TUInt16, 24, 12, 8, 1, (1, 1, 1)))
-    aggFromDump(spark, graft.sources.Zarr.open(spark, root).toVoxels(Box(1, 20, 1, 12, 1, 8)),
+    aggFromDump(spark, Zarr.open(spark, root).toVoxels(Box(1, 20, 1, 12, 1, 8)),
       s"$voxelDumpRoot/a6")
   }
 
@@ -557,10 +589,7 @@ object ArrayOps {
     * per-block headers, big-endian payloads, and edge clipping on top of the
     * same Volume machinery (oracle re-aggregates the dumped voxels). */
   def a7_n5_pipeline(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.sources.N5
-    import graft.volume.VoxelBuffer
-    val root = java.nio.file.Files.createTempDirectory("graft-a7").toString
+    val root = Scratch.dir("graft-a7")
     val vol = N5.create(spark, root, shape = (20, 12, 8), blockSize = (8, 4, 2),
       dataType = Meta.TUInt16, encoding = "gzip")
     vol.ingest(VoxelBuffer.sequenced(Meta.TUInt16, 20, 12, 8, 1, (1, 1, 1)))
@@ -575,10 +604,7 @@ object ArrayOps {
     * reopen and aggregate the distributed voxel view — same oracle shape as
     * a6/a7 (re-aggregate the dumped voxels in DuckDB). */
   def a9_zarr3_pipeline(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.sources.Zarr3
-    import graft.volume.VoxelBuffer
-    val root = java.nio.file.Files.createTempDirectory("graft-a9").toString
+    val root = Scratch.dir("graft-a9")
     val vol = Zarr3.create(spark, root, shape = (20, 12, 8), chunks = (8, 4, 2),
       dataType = Meta.TUInt16, encoding = "gzip")
     vol.ingest(VoxelBuffer.sequenced(Meta.TUInt16, 24, 12, 8, 1, (1, 1, 1)))
@@ -595,10 +621,7 @@ object ArrayOps {
     * view — reads go index + ranged-GET per inner chunk. Same oracle shape
     * as a9. */
   def a10_zarr3_sharded(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.sources.Zarr3
-    import graft.volume.VoxelBuffer
-    val root = java.nio.file.Files.createTempDirectory("graft-a10").toString
+    val root = Scratch.dir("graft-a10")
     val vol = Zarr3.createSharded(spark, root, shape = (20, 12, 8),
       shardShape = (16, 8, 4), innerChunks = (8, 4, 2),
       dataType = Meta.TUInt16, encoding = "gzip")
@@ -618,10 +641,7 @@ object ArrayOps {
     * header-derivation bug (wrong width, depth, or bit width) shifts
     * every voxel and fails the hash gate. */
   def a11_tiff_stack(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.sources.TiffStack
-    import graft.volume.VoxelBuffer
-    val root = java.nio.file.Files.createTempDirectory("graft-a11").toString
+    val root = Scratch.dir("graft-a11")
     val vol = TiffStack.create(spark, root, shape = (20, 12, 8), dataType = Meta.TUInt16)
     vol.ingest(VoxelBuffer.sequenced(Meta.TUInt16, 20, 12, 8, 1, (1, 1, 1)))
     aggFromDump(spark, TiffStack.open(spark, root).toVoxels(Box(1, 20, 1, 12, 1, 8)),
@@ -641,13 +661,10 @@ object ArrayOps {
     * re-aggregates the dump. A byte wrong anywhere in the TIFF decode, the
     * cross-format blit, or the downsample shifts a sum and fails the gate. */
   def a12_convert_pipeline(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.sources.TiffStack
-    import graft.volume.{Volume, VoxelBuffer}
-    val srcRoot = java.nio.file.Files.createTempDirectory("graft-a12-tiff").toString
+    val srcRoot = Scratch.dir("graft-a12-tiff")
     val src = TiffStack.create(spark, srcRoot, shape = (20, 12, 8), dataType = Meta.TUInt16)
     src.ingest(VoxelBuffer.sequenced(Meta.TUInt16, 20, 12, 8, 1, (1, 1, 1)))
-    val dstRoot = java.nio.file.Files.createTempDirectory("graft-a12-pre").toString
+    val dstRoot = Scratch.dir("graft-a12-pre")
     val box = Box(1, 20, 1, 12, 1, 8)
     VolumeOps.rechunk(TiffStack.open(spark, srcRoot), box, dstRoot,
       chunkSize = (8, 4, 2), encoding = Some("gzip"))
@@ -674,15 +691,9 @@ object ArrayOps {
     * the dumped voxel relation (label included in the dump, so the oracle
     * replays aggregation, not label derivation). */
   def a13_label_stats(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a13").toString
-    val meta = Meta.VolumeMeta("segmentation", Meta.TUInt16, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    vol.ingest(VoxelBuffer.sequenced(Meta.TUInt16, 64, 64, 8, 1, (1, 1, 1)))
+    val vol = demoVolume(spark, "a13", "segmentation")(demoSequenced(Meta.TUInt16))
     val dump = s"$voxelDumpRoot/a13"
-    vol.toVoxels(Box(1, 64, 1, 64, 1, 8))
+    vol.toVoxels(demoExtent)
       .withColumn("label", expr("CAST(value AS BIGINT) DIV 1024"))
       .write.mode("overwrite").parquet(dump)
     Tables.parquet(spark, dump)
@@ -714,20 +725,10 @@ object ArrayOps {
     * re-aggregates the dumped zipped relation (label + intensity both in
     * the dump, so the oracle replays aggregation, not volume plumbing). */
   def a15_label_intensity(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val segRoot = java.nio.file.Files.createTempDirectory("graft-a15-seg").toString
-    val imgRoot = java.nio.file.Files.createTempDirectory("graft-a15-img").toString
-    val segMeta = Meta.VolumeMeta("segmentation", Meta.TUInt16, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val imgMeta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "raw", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val seg = Volume.create(spark, segRoot, segMeta)
-    val img = Volume.create(spark, imgRoot, imgMeta)
-    seg.ingest(VoxelBuffer.sequenced(Meta.TUInt16, 64, 64, 8, 1, (1, 1, 1)))
-    img.ingest(VoxelBuffer.sequenced(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1)))
+    val seg = demoVolume(spark, "a15-seg", "segmentation")(demoSequenced(Meta.TUInt16))
+    val img = demoVolume(spark, "a15-img", encoding = "raw")(demoSequenced())
     val dump = s"$voxelDumpRoot/a15"
-    img.zipVoxels(seg, Box(1, 64, 1, 64, 1, 8))
+    img.zipVoxels(seg, demoExtent)
       .withColumn("label", expr("CAST(vb AS BIGINT) DIV 1024"))
       .select(col("x"), col("y"), col("z"), col("va").cast(LongType).as("v"), col("label"))
       .write.mode("overwrite").parquet(dump)
@@ -756,38 +757,13 @@ object ArrayOps {
     * pruning must be invisible in the answer (the q28/q30/q36
     * discipline: the optimization may never change the result). */
   def a30_zonemap(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a30").toString
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          val dark = ((x - 1) / 32 + (y - 1) / 32 + (z - 1) / 4) % 2 == 0
-          val v = if (dark) 5L else 100L + (x * 13 + y * 29 + z * 41) % 100
-          buf.setLong(x - 1, y - 1, z - 1, 0, v)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    vol.ingest(buf)
-    val box = Box(1, 64, 1, 64, 1, 8)
+    val vol = demoVolume(spark, "a30")(demoFill(checker(5L)))
     val dump = s"$voxelDumpRoot/a30"
-    vol.toVoxels(box)
-      .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("value"))
-      .write.mode("overwrite").parquet(dump)
+    longVoxels(vol.toVoxels(demoExtent)).write.mode("overwrite").parquet(dump)
     // the at-rest zone-map artifact: built once, read back per query
     val statsPath = s"${Similarity.OracleDumpRoot}/a30_stats"
-    vol.chunkStats(box).write.mode("overwrite").parquet(statsPath)
-    vol.toVoxelsAtLeast(box, 50L, Some(Tables.parquet(spark, statsPath)))
+    vol.chunkStats(demoExtent).write.mode("overwrite").parquet(statsPath)
+    vol.toVoxelsAtLeast(demoExtent, 50L, Some(Tables.parquet(spark, statsPath)))
       .groupBy(col("z"))
       .agg(count(lit(1)).as("n"), sum(col("value").cast(LongType)).as("sv"))
   }
@@ -814,34 +790,11 @@ object ArrayOps {
     * seams. The voxel relation never shuffles; the per-z fold is
     * map-side combined. */
   def a29_blur(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a29").toString
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          buf.setLong(x - 1, y - 1, z - 1, 0, ((x * 13 + y * 29 + z * z * 41) % 256).toLong)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    vol.ingest(buf)
-    val box = Box(1, 64, 1, 64, 1, 8)
+    val vol = demoVolume(spark, "a29")(demoFill(depthMix))
     val dump = s"$voxelDumpRoot/a29"
-    vol.toVoxels(box)
-      .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("value"))
-      .write.mode("overwrite").parquet(dump)
+    longVoxels(vol.toVoxels(demoExtent)).write.mode("overwrite").parquet(dump)
     // partials feed three consumers — materialized once
-    val parts = Tables.materialize(vol.localBlur(box))
+    val parts = Tables.materialize(vol.localBlur(demoExtent))
     val interior = parts.select(explode(col("zsums")).as("t"))
       .select(col("t.z").as("z"), col("t.n").as("n"), col("t.s").as("s"))
     val needs = parts.select(explode(col("needs")).as("nd")).select(col("nd.*"))
@@ -892,40 +845,10 @@ object ArrayOps {
     * by label-pair cardinality, not voxels. At petavoxel scale the only
     * data that moves is the tiny partial-count relation. */
   def a28_seg_contingency(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val goldRoot = java.nio.file.Files.createTempDirectory("graft-a28-gold").toString
-    val predRoot = java.nio.file.Files.createTempDirectory("graft-a28-pred").toString
-    def segMeta = Meta.VolumeMeta("segmentation", Meta.TUInt16, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val gold = Volume.create(spark, goldRoot, segMeta)
-    val pred = Volume.create(spark, predRoot, segMeta)
-    val gBuf = VoxelBuffer.zeros(Meta.TUInt16, 64, 64, 8, 1, (1, 1, 1))
-    val pBuf = VoxelBuffer.zeros(Meta.TUInt16, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          val g = 1 + (x - 1) / 16 + 4 * ((y - 1) / 16) // 16 block labels
-          val p =
-            if (g == 6) 5 // merge error
-            else if (g == 11 && x > 40) 17 // split error at the x midline
-            else if (g == 1 && (x + y + z) % 13 == 0) 2 // boundary noise
-            else g
-          gBuf.setLong(x - 1, y - 1, z - 1, 0, g.toLong)
-          pBuf.setLong(x - 1, y - 1, z - 1, 0, p.toLong)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    gold.ingest(gBuf)
-    pred.ingest(pBuf)
+    val gold = demoVolume(spark, "a28-gold", "segmentation")(demoFill(blocks16, Meta.TUInt16))
+    val pred = demoVolume(spark, "a28-pred", "segmentation")(demoFill(predBlocks, Meta.TUInt16))
     val dump = s"$voxelDumpRoot/a28"
-    gold.zipVoxels(pred, Box(1, 64, 1, 64, 1, 8))
+    gold.zipVoxels(pred, demoExtent)
       .select(col("va").cast(LongType).as("gold"), col("vb").cast(LongType).as("pred"))
       .write.mode("overwrite").parquet(dump)
     Tables.parquet(spark, dump)
@@ -946,12 +869,9 @@ object ArrayOps {
     * both engines. Zero GETs: at petavoxel scale this is the health check
     * that never reads a blob. */
   def a14_storage_report(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a14").toString
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (60, 60, 7), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
+    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1,
+      Vector(demoScale.copy(size = (60, 60, 7))))
+    val vol = Volume.create(spark, Scratch.dir("graft-a14"), meta)
     vol.ingest(VoxelBuffer.sequenced(Meta.TUInt8, 60, 60, 7, 1, (1, 1, 1)))
     val dump = s"$voxelDumpRoot/a14"
     vol.storageReport(Box(1, 60, 1, 60, 1, 7))
@@ -1009,40 +929,9 @@ object ArrayOps {
     * foreground voxel relation — the oracle replays the graph semantics,
     * not the chunk decomposition. */
   def a16_connected_components(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a16").toString
-    val meta = Meta.VolumeMeta("segmentation", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    // mask: pillars every 16 voxels on x/y, 3 wide in the interior and
-    // clipped to 1-2 wide at the volume edges (25 pillars of varied size;
-    // the {31,32,33} pillars straddle the x=32|33 and y=32|33 chunk seams,
-    // every pillar spans the z=4|5 seam), plus a z=1 bridge merging three
-    // pillars of one row into one multi-chunk component (multi-hop merge)
-    val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          val pillar = (x + 1) % 16 < 3 && (y + 1) % 16 < 3
-          val bridge = z == 1 && y >= 15 && y <= 17 && x >= 15 && x <= 49
-          if (pillar || bridge) buf.setLong(x - 1, y - 1, z - 1, 0, 1L)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    vol.ingest(buf)
-    val box = Box(1, 64, 1, 64, 1, 8)
-    // dump the foreground voxel relation for the oracle's independent replay
-    vol.toVoxels(box).filter(col("value") =!= 0)
-      .select(col("x"), col("y"), col("z"))
-      .write.mode("overwrite").parquet(s"$voxelDumpRoot/a16")
-    componentStats(vol.localComponents(box))
+    val vol = demoVolume(spark, "a16", "segmentation")(demoFill(pillars))
+    dumpForeground(vol, "a16")
+    componentStats(vol.localComponents(demoExtent))
   }
 
   /** Stages 2+3 of distributed CC over a [[graft.volume.Volume.localComponents]]
@@ -1127,33 +1016,9 @@ object ArrayOps {
     * foreground voxels with the same chunk-id arithmetic
     * (fld(x−1, cs)+1 — Grid.chunkIdOf's 1-based rule). */
   def a17_dilate(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a17").toString
-    val meta = Meta.VolumeMeta("segmentation", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    // ~4% pseudo-random mask; hits every chunk and every seam direction
-    val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          if ((x * 7 + y * 3 + z * 5) % 23 == 0) buf.setLong(x - 1, y - 1, z - 1, 0, 1L)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    vol.ingest(buf)
-    val box = Box(1, 64, 1, 64, 1, 8)
-    vol.toVoxels(box).filter(col("value") =!= 0)
-      .select(col("x"), col("y"), col("z"))
-      .write.mode("overwrite").parquet(s"$voxelDumpRoot/a17")
-    dilateStats(vol.localDilate(box))
+    val vol = demoVolume(spark, "a17", "segmentation")(demoFill(sparseMask))
+    dumpForeground(vol, "a17")
+    dilateStats(vol.localDilate(demoExtent))
   }
 
   /** Stages 2+3 of distributed dilation over a
@@ -1214,32 +1079,9 @@ object ArrayOps {
     * erosion removes a shell around every hole and every seam carries
     * confirmations. */
   def a18_erode(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a18").toString
-    val meta = Meta.VolumeMeta("segmentation", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          if ((x * 7 + y * 3 + z * 5) % 23 != 0) buf.setLong(x - 1, y - 1, z - 1, 0, 1L)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    vol.ingest(buf)
-    val box = Box(1, 64, 1, 64, 1, 8)
-    vol.toVoxels(box).filter(col("value") =!= 0)
-      .select(col("x"), col("y"), col("z"))
-      .write.mode("overwrite").parquet(s"$voxelDumpRoot/a18")
-    erodeStats(vol.localErode(box))
+    val vol = demoVolume(spark, "a18", "segmentation")(demoFill(denseMask))
+    dumpForeground(vol, "a18")
+    erodeStats(vol.localErode(demoExtent))
   }
 
   /** Stage 2 of distributed erosion over a
@@ -1309,29 +1151,9 @@ object ArrayOps {
     * t18 exact-decimal regression discipline and attaches as a one-row
     * broadcast (the a21/c12 constant-attach class). */
   def a38_zprofile(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
     val dec = DecimalType(18, 8)
-    val root = java.nio.file.Files.createTempDirectory("graft-a38").toString
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "raw", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          buf.setLong(x - 1, y - 1, z - 1, 0, ((x * 7 + y * 3) % 97 + 3 * z).toLong)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    vol.ingest(buf)
-    val per = vol.toVoxels(Box(1, 64, 1, 64, 1, 8))
+    val vol = demoVolume(spark, "a38", encoding = "raw")(demoFill(zRamp))
+    val per = vol.toVoxels(demoExtent)
       .groupBy(col("z").cast(LongType).as("z"))
       .agg(count(lit(1)).as("n"), sum(col("value").cast(LongType)).as("vsum"))
       .select(col("z"), col("n"), col("vsum"),
@@ -1398,9 +1220,7 @@ object ArrayOps {
     * run row-locally in one typed pass and reduce map-side at segment
     * grain. */
   def a39_mesh_stats(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.MeshFragment
-    val root = java.nio.file.Files.createTempDirectory("graft-a39").toString
-    val meshDir = new java.io.File(root, "mesh"); meshDir.mkdirs()
+    val meshDir = new java.io.File(Scratch.dir("graft-a39"), "mesh"); meshDir.mkdirs()
     var lab = 1
     while (lab <= 24) {
       val s = 1 + lab % 3
@@ -1423,7 +1243,6 @@ object ArrayOps {
     }
     val files = spark.read.format("binaryFile").load(meshDir.toString)
       .select(col("path"), col("content"))
-    import org.apache.spark.sql.Encoders
     implicit val manEnc = Encoders.product[(Long, String)]
     implicit val statEnc =
       Encoders.product[(String, Long, Long, Long, Long, Long, Long, Long, Long, Long)]
@@ -1568,32 +1387,9 @@ object ArrayOps {
     * cross-seam dilation in all six directions. Dumps the foreground for
     * the oracle's relational replay. */
   def a37_opening(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a37").toString
-    val meta = Meta.VolumeMeta("segmentation", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          if ((x * 7 + y * 3 + z * 5) % 23 != 0) buf.setLong(x - 1, y - 1, z - 1, 0, 1L)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    vol.ingest(buf)
-    val box = Box(1, 64, 1, 64, 1, 8)
-    vol.toVoxels(box).filter(col("value") =!= 0)
-      .select(col("x"), col("y"), col("z"))
-      .write.mode("overwrite").parquet(s"$voxelDumpRoot/a37")
-    openStats(vol.localOpen(box))
+    val vol = demoVolume(spark, "a37", "segmentation")(demoFill(denseMask))
+    dumpForeground(vol, "a37")
+    openStats(vol.localOpen(demoExtent))
   }
 
   /** Oracle twin of [[a37_opening]]: erosion as the 6-neighbor
@@ -1639,33 +1435,9 @@ object ArrayOps {
     * relation itself never moves. The oracle replays the same cumulative
     * rule over the dumped voxels. */
   def a21_percentiles(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a21").toString
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    // skewed deterministic intensity field: quadratic term concentrates
-    // mass at low values the way microscopy background does
-    val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          val u = (x * 31 + y * 17 + z * 7) % 251
-          buf.setLong(x - 1, y - 1, z - 1, 0, (u * u / 251).toLong)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    vol.ingest(buf)
+    val vol = demoVolume(spark, "a21")(demoFill(skewed))
     val dump = s"$voxelDumpRoot/a21"
-    vol.toVoxels(Box(1, 64, 1, 64, 1, 8))
+    vol.toVoxels(demoExtent)
       .select(col("value").cast(LongType).as("value"))
       .write.mode("overwrite").parquet(dump)
     val hist = Tables.parquet(spark, dump)
@@ -1695,30 +1467,9 @@ object ArrayOps {
     * so the DuckDB oracle re-derives the same projection from the same
     * rows (store-roundtrip exactness is VolumeSpec's job). */
   def a27_mip_project(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a27").toString
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          // depth-dependent mix: the brightest z differs across columns
-          buf.setLong(x - 1, y - 1, z - 1, 0, ((x * 13 + y * 29 + z * z * 41) % 256).toLong)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    vol.ingest(buf)
+    val vol = demoVolume(spark, "a27")(demoFill(depthMix))
     val dump = s"$voxelDumpRoot/a27"
-    vol.toVoxels(Box(1, 64, 1, 64, 1, 8))
+    vol.toVoxels(demoExtent)
       .select(col("x"), col("y"), col("value").cast(LongType).as("value"))
       .write.mode("overwrite").parquet(dump)
     Tables.parquet(spark, dump)
@@ -1764,35 +1515,11 @@ object ArrayOps {
     *     oracle replays adjacency as a 3-positive-shift self-join over the
     *     dumped labeled voxels. */
   def a20_contact_area(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a20").toString
-    val meta = Meta.VolumeMeta("segmentation", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    // ~39% dense 5-label pattern: every chunk holds several labels and every
-    // seam direction carries cross-label contacts
-    val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          if ((x * 7 + y * 3 + z * 5) % 23 < 9)
-            buf.setLong(x - 1, y - 1, z - 1, 0, 1L + (x * 5 + y * 11 + z * 3) % 5)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    vol.ingest(buf)
-    val box = Box(1, 64, 1, 64, 1, 8)
-    vol.toVoxels(box).filter(col("value") =!= 0)
+    val vol = demoVolume(spark, "a20", "segmentation")(demoFill(contactLabels))
+    vol.toVoxels(demoExtent).filter(col("value") =!= 0)
       .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("label"))
       .write.mode("overwrite").parquet(s"$voxelDumpRoot/a20")
-    contactStats(vol.localContacts(box))
+    contactStats(vol.localContacts(demoExtent))
   }
 
   /** Stages 2+3 of distributed contact extraction over a
@@ -1909,28 +1636,8 @@ object ArrayOps {
     * one box); at gate scale the union box covers the volume, so the
     * pruning would be a no-op here. Output grain: one row per ROI. */
   def a23_roi_gather(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a23").toString
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          buf.setLong(x - 1, y - 1, z - 1, 0, (x * 3 + y * 5 + z * 7) % 251)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    vol.ingest(buf)
-    val vox = vol.toVoxels(Box(1, 64, 1, 64, 1, 8))
+    val vol = demoVolume(spark, "a23")(demoFill(roiField))
+    val vox = vol.toVoxels(demoExtent)
     vox.write.mode("overwrite").parquet(s"$voxelDumpRoot/a23")
     val roiArr = array(a23Rois.map { case (id, x0, x1, y0, y1, z0, z1) =>
       struct(lit(id).as("id"), lit(x0).as("x0"), lit(x1).as("x1"),
@@ -1965,35 +1672,9 @@ object ArrayOps {
     * DESTINATION volume and aggregates per chunk, so it certifies fit →
     * broadcast-apply → store write → re-read end-to-end. */
   def a24_hist_equalize(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val srcRoot = java.nio.file.Files.createTempDirectory("graft-a24-src").toString
-    val dstRoot = java.nio.file.Files.createTempDirectory("graft-a24-dst").toString
-    val vmeta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val src = Volume.create(spark, srcRoot, vmeta)
     // a21's skewed quadratic field: equalization must visibly stretch it
-    val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          val u = (x * 31 + y * 17 + z * 7) % 251
-          buf.setLong(x - 1, y - 1, z - 1, 0, (u * u / 251).toLong)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    src.ingest(buf)
-    val box = Box(1, 64, 1, 64, 1, 8)
-    val vox = src.toVoxels(box)
-      .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("value"))
-    vox.write.mode("overwrite").parquet(s"$voxelDumpRoot/a24")
+    val src = demoVolume(spark, "a24-src")(demoFill(skewed))
+    longVoxels(src.toVoxels(demoExtent)).write.mode("overwrite").parquet(s"$voxelDumpRoot/a24")
     val dumped = Tables.parquet(spark, s"$voxelDumpRoot/a24")
     val hist = dumped.groupBy(col("value")).agg(count(lit(1)).as("cnt"))
     val cum = hist.withColumn("cc", sum(col("cnt")).over(
@@ -2004,16 +1685,24 @@ object ArrayOps {
       // under an integer boundary would round differently across engines
       .select(col("value"),
         expr("(cc - ccmin) * 255 DIV (n - ccmin)").cast(LongType).as("eq"))
-    val dst = Volume.create(spark, dstRoot, vmeta)
-    dst.fromVoxels(dumped.join(broadcast(lut), Seq("value"))
+    writeBack(src, "a24-dst", dumped.join(broadcast(lut), Seq("value"))
       .select(col("x"), col("y"), col("z"), col("eq").as("value")))
-    Volume.open(spark, dstRoot).toVoxels(box)
-      .select(expr("(x - 1) DIV 32 + 1").as("cx"), expr("(y - 1) DIV 32 + 1").as("cy"),
-        expr("(z - 1) DIV 4 + 1").as("cz"), col("value").cast(LongType).as("v"))
-      .groupBy(col("cx"), col("cy"), col("cz"))
       .agg(count(lit(1)).as("n"), sum(col("v")).as("vsum"),
         min(col("v")).as("vmin"), max(col("v")).as("vmax"))
       .orderBy(col("cx"), col("cy"), col("cz"))
+  }
+
+  /** Write `voxels` back through a fresh store shaped like `src`, reopen it,
+    * and group its voxels (`v`, as BIGINT) per 32×32×4 chunk — the census
+    * shape of the a24/a36/a41 write-back gates. */
+  private def writeBack(src: Volume, tag: String,
+      voxels: DataFrame): RelationalGroupedDataset = {
+    val dst = Volume.create(src.spark, Scratch.dir(s"graft-$tag"), src.meta)
+    dst.fromVoxels(voxels)
+    Volume.open(src.spark, dst.root).toVoxels(demoExtent)
+      .select(expr("(x - 1) DIV 32 + 1").as("cx"), expr("(y - 1) DIV 32 + 1").as("cy"),
+        expr("(z - 1) DIV 4 + 1").as("cz"), col("value").cast(LongType).as("v"))
+      .groupBy(col("cx"), col("cy"), col("cz"))
   }
 
   /** Oracle twin of [[a24_hist_equalize]]: the same histogram → cumsum →
@@ -2060,36 +1749,8 @@ object ArrayOps {
     * threshold is a one-row driver scalar (dimension grain), and the
     * write-back is the single-shuffle fromVoxels path. */
   def a36_otsu_threshold(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val srcRoot = java.nio.file.Files.createTempDirectory("graft-a36-src").toString
-    val dstRoot = java.nio.file.Files.createTempDirectory("graft-a36-dst").toString
-    val vmeta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val src = Volume.create(spark, srcRoot, vmeta)
-    val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          val u = (x * 31 + y * 17 + z * 7) % 251
-          val dark = (x * 13 + y * 29 + z * 3) % 7 < 3
-          buf.setLong(x - 1, y - 1, z - 1, 0,
-            if (dark) 30L + u % 40 else 160L + u % 60)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    src.ingest(buf)
-    val box = Box(1, 64, 1, 64, 1, 8)
-    val vox = src.toVoxels(box)
-      .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("value"))
-    vox.write.mode("overwrite").parquet(s"$voxelDumpRoot/a36")
+    val src = demoVolume(spark, "a36-src")(demoFill(bimodal))
+    longVoxels(src.toVoxels(demoExtent)).write.mode("overwrite").parquet(s"$voxelDumpRoot/a36")
     val dumped = Tables.parquet(spark, s"$voxelDumpRoot/a36")
     val hist = dumped.groupBy(col("value")).agg(count(lit(1)).as("cnt"))
     val w = Window.orderBy(col("value")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2104,13 +1765,8 @@ object ArrayOps {
           / expr(s"CAST(cc * ($n - cc) AS DOUBLE)")).as("sigma"))
       .withColumn("r", row_number().over(Window.orderBy(col("sigma").desc, col("value").asc)))
       .filter(col("r") === 1).select(col("value")).head().getLong(0)
-    val dst = Volume.create(spark, dstRoot, vmeta)
-    dst.fromVoxels(dumped.select(col("x"), col("y"), col("z"),
-      when(col("value") > thr, 255L).otherwise(0L).as("value")))
-    Volume.open(spark, dstRoot).toVoxels(box)
-      .select(expr("(x - 1) DIV 32 + 1").as("cx"), expr("(y - 1) DIV 32 + 1").as("cy"),
-        expr("(z - 1) DIV 4 + 1").as("cz"), col("value").cast(LongType).as("v"))
-      .groupBy(col("cx"), col("cy"), col("cz"))
+    writeBack(src, "a36-dst", dumped.select(col("x"), col("y"), col("z"),
+        when(col("value") > thr, 255L).otherwise(0L).as("value")))
       .agg(count(lit(1)).as("n"), sum(when(col("v") === 255L, 1L).otherwise(0L)).as("n_fg"))
       .select(col("cx"), col("cy"), col("cz"), col("n"), col("n_fg"), lit(thr).as("thr"))
       .orderBy(col("cx"), col("cy"), col("cz"))
@@ -2174,32 +1830,11 @@ object ArrayOps {
     * ROI's chosen mip + served stats; the oracle replays the budget rule
     * and the grid fold over per-mip dumps. */
   def a26_mip_select(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a26").toString
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-      .withNumMips(2)
-    val vol = Volume.create(spark, root, meta)
-    val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          buf.setLong(x - 1, y - 1, z - 1, 0, (x * 5 + y * 11 + z * 3) % 241)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    vol.ingest(buf)
-    VolumeOps.buildNextMip(vol, Box(1, 64, 1, 64, 1, 8))
-    vol.toVoxels(Box(1, 64, 1, 64, 1, 8))
+    val vol = demoVolume(spark, "a26", mips = 2)(demoFill(pyramidField))
+    VolumeOps.buildNextMip(vol, demoExtent)
+    vol.toVoxels(demoExtent)
       .write.mode("overwrite").parquet(s"$voxelDumpRoot/a26m1")
-    new Volume(spark, root, meta, 2)
+    new Volume(spark, vol.root, vol.meta, 2)
       .toVoxels(Box(1, 32, 1, 32, 1, 8))
       .write.mode("overwrite").parquet(s"$voxelDumpRoot/a26m2")
     // serve: arithmetic mip choice, then a23's row-local gather per level
@@ -2290,45 +1925,14 @@ object ArrayOps {
     * plus voxel work proportional to the CHANGED region only — the a14
     * LIST-audit principle extended to cross-version comparison. */
   def a43_version_diff(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val r1 = java.nio.file.Files.createTempDirectory("graft-a43-v1").toString
-    val r2 = java.nio.file.Files.createTempDirectory("graft-a43-v2").toString
-    val vmeta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val v1 = Volume.create(spark, r1, vmeta)
-    val v2 = Volume.create(spark, r2, vmeta)
-    val b1 = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    val b2 = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          val u = (x * 31 + y * 17 + z * 7) % 251
-          val base = (u * u / 251).toLong
-          b1.setLong(x - 1, y - 1, z - 1, 0, base)
-          val edited =
-            if (x >= 17 && x <= 32 && y >= 17 && y <= 32 && z >= 3 && z <= 6)
-              math.min(255L, base + 50)
-            else base
-          b2.setLong(x - 1, y - 1, z - 1, 0, edited)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    v1.ingest(b1)
-    v2.ingest(b2)
-    def chunks(root: String, side: String) =
-      spark.read.format("precomputed").load(root)
+    val v1 = demoVolume(spark, "a43-v1")(demoFill(skewed))
+    val v2 = demoVolume(spark, "a43-v2")(demoFill(skewedEdited))
+    def chunks(vol: Volume, side: String) =
+      spark.read.format("precomputed").load(vol.root)
         .select(col("cx"), col("cy"), col("cz"), md5(col("blob")).as(s"h_$side"))
-    val manifest = chunks(r1, "a").join(chunks(r2, "b"), Seq("cx", "cy", "cz"))
+    val manifest = chunks(v1, "a").join(chunks(v2, "b"), Seq("cx", "cy", "cz"))
       .withColumn("changed", col("h_a") =!= col("h_b"))
-    val box = Box(1, 64, 1, 64, 1, 8)
-    def vox(vol: Volume, side: String) = vol.toVoxels(box)
+    def vox(vol: Volume, side: String) = vol.toVoxels(demoExtent)
       .select(col("x"), col("y"), col("z"),
         expr("(x - 1) DIV 32 + 1").as("cx"), expr("(y - 1) DIV 32 + 1").as("cy"),
         expr("(z - 1) DIV 4 + 1").as("cz"),
@@ -2393,9 +1997,7 @@ object ArrayOps {
     * dataset); decode + degree fold + length fold run row-locally in one
     * typed pass, one map-side-combined reduce at segment grain. */
   def a42_skeleton_stats(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Skeleton
-    val root = java.nio.file.Files.createTempDirectory("graft-a42").toString
-    val skDir = new java.io.File(root, "skeletons"); skDir.mkdirs()
+    val skDir = new java.io.File(Scratch.dir("graft-a42"), "skeletons"); skDir.mkdirs()
     var lab = 1
     while (lab <= 20) {
       val s = 1 + lab % 3
@@ -2428,7 +2030,6 @@ object ArrayOps {
         Skeleton.encode(Skeleton.Skel(verts, edges)))
       lab += 1
     }
-    import org.apache.spark.sql.Encoders
     implicit val statEnc =
       Encoders.product[(Long, Long, Long, Long, Long, Long, Long, Long, Long, Long, Long)]
     spark.read.format("binaryFile").load(skDir.toString)
@@ -2511,40 +2112,10 @@ object ArrayOps {
     * class), one broadcast LUT apply over the voxel scan. Voxels shuffle
     * only in the store write, exactly as a24. */
   def a41_hist_match(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val srcRoot = java.nio.file.Files.createTempDirectory("graft-a41-src").toString
-    val refRoot = java.nio.file.Files.createTempDirectory("graft-a41-ref").toString
-    val dstRoot = java.nio.file.Files.createTempDirectory("graft-a41-dst").toString
-    val vmeta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val src = Volume.create(spark, srcRoot, vmeta)
-    val refv = Volume.create(spark, refRoot, vmeta)
-    val bufS = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    val bufR = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          val u = (x * 31 + y * 17 + z * 7) % 251
-          bufS.setLong(x - 1, y - 1, z - 1, 0, (u * u / 251).toLong) // a24's skewed field
-          bufR.setLong(x - 1, y - 1, z - 1, 0, ((x + 2 * y + 3 * z) % 200 + 28).toLong)
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    src.ingest(bufS)
-    refv.ingest(bufR)
-    val box = Box(1, 64, 1, 64, 1, 8)
-    src.toVoxels(box)
-      .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("value"))
-      .write.mode("overwrite").parquet(s"$voxelDumpRoot/a41_src")
-    refv.toVoxels(box)
+    val src = demoVolume(spark, "a41-src")(demoFill(skewed))
+    val refv = demoVolume(spark, "a41-ref")(demoFill(refRamp))
+    longVoxels(src.toVoxels(demoExtent)).write.mode("overwrite").parquet(s"$voxelDumpRoot/a41_src")
+    refv.toVoxels(demoExtent)
       .select(col("value").cast(LongType).as("value"))
       .write.mode("overwrite").parquet(s"$voxelDumpRoot/a41_ref")
     val srcVox = Tables.parquet(spark, s"$voxelDumpRoot/a41_src")
@@ -2562,13 +2133,8 @@ object ArrayOps {
       .select(col("r"), col("cr"), col("nr"))
     val lut = sCum.join(broadcast(rCum), col("cr") * col("ns") >= col("cs") * col("nr"))
       .groupBy(col("value")).agg(min(col("r")).as("m"))
-    val dst = Volume.create(spark, dstRoot, vmeta)
-    dst.fromVoxels(srcVox.join(broadcast(lut), Seq("value"))
-      .select(col("x"), col("y"), col("z"), col("m").as("value")))
-    Volume.open(spark, dstRoot).toVoxels(box)
-      .select(expr("(x - 1) DIV 32 + 1").as("cx"), expr("(y - 1) DIV 32 + 1").as("cy"),
-        expr("(z - 1) DIV 4 + 1").as("cz"), col("value").cast(LongType).as("v"))
-      .groupBy(col("cx"), col("cy"), col("cz"))
+    writeBack(src, "a41-dst", srcVox.join(broadcast(lut), Seq("value"))
+        .select(col("x"), col("y"), col("z"), col("m").as("value")))
       .agg(count(lit(1)).as("n"), sum(col("v")).as("vsum"),
         min(col("v")).as("vmin"), max(col("v")).as("vmax"))
       .orderBy(col("cx"), col("cy"), col("cz"))
@@ -2620,35 +2186,11 @@ object ArrayOps {
     * graph-of-labels sized — exactly how a petavoxel agglomeration stays
     * tractable. */
   def a40_agglomerate(spark: SparkSession, dir: String, tau: Long = 20L): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
-    val root = java.nio.file.Files.createTempDirectory("graft-a40").toString
-    val meta = Meta.VolumeMeta("segmentation", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-    val vol = Volume.create(spark, root, meta)
-    val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-    var z = 1
-    while (z <= 8) {
-      var y = 1
-      while (y <= 64) {
-        var x = 1
-        while (x <= 64) {
-          if ((x * 7 + y * 3 + z * 5) % 23 >= 6) {
-            val sv = (x - 1) / 8 + ((y - 1) / 8) * 8 + ((z - 1) / 4) * 64
-            buf.setLong(x - 1, y - 1, z - 1, 0, (sv + 1).toLong)
-          }
-          x += 1
-        }
-        y += 1
-      }
-      z += 1
-    }
-    vol.ingest(buf)
-    val box = Box(1, 64, 1, 64, 1, 8)
-    vol.toVoxels(box).filter(col("value") =!= 0)
+    val vol = demoVolume(spark, "a40", "segmentation")(demoFill(supervoxels))
+    vol.toVoxels(demoExtent).filter(col("value") =!= 0)
       .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("label"))
       .write.mode("overwrite").parquet(s"$voxelDumpRoot/a40")
-    val contacts = Tables.materialize(contactStats(vol.localContacts(box)))
+    val contacts = Tables.materialize(contactStats(vol.localContacts(demoExtent)))
     // supervoxel sizes fold over the ALREADY-DUMPED labeled voxel
     // relation (r13 opt) — the dump above decoded every chunk once for
     // the oracle; re-deriving sizes from the store paid that whole
@@ -2722,9 +2264,7 @@ object ArrayOps {
     * per cell. The driver touches only the 18-cell fixture here; nothing
     * in the path reads more than one cell at a time. */
   def a44_annotations(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Annotations
-    val root = java.nio.file.Files.createTempDirectory("graft-a44").toString
-    val cellDir = new java.io.File(root, "spatial0"); cellDir.mkdirs()
+    val cellDir = new java.io.File(Scratch.dir("graft-a44"), "spatial0"); cellDir.mkdirs()
     val pts = (1 to 120).map { i =>
       ((37 * i) % 96, (53 * i) % 64, (29 * i) % 48, i.toLong)
     }
@@ -2738,7 +2278,6 @@ object ArrayOps {
         java.nio.file.Files.write(cellDir.toPath.resolve(s"${cx}_${cy}_$cz"),
           Annotations.encode(Annotations.Points(pos, sorted.map(_._4).toArray)))
       }
-    import org.apache.spark.sql.Encoders
     implicit val outEnc =
       Encoders.product[(Long, Long, Long, Long, Long, Long, Long, Long, Long, Long, Long)]
     spark.read.format("binaryFile").load(cellDir.toString)
@@ -2809,14 +2348,8 @@ object ArrayOps {
     * streams every object exactly once (the same I/O a restore would pay;
     * production runs it partition-by-partition on a cadence). */
   def a46_fixity_audit(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{ChunkStore, Volume, VoxelBuffer}
     val (root, man) = fixityReg.getOrBuild(dir) {
-      val r = java.nio.file.Files.createTempDirectory("graft-a46").toString
-      val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-        Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-      val vol = Volume.create(spark, r, meta)
-      vol.ingest(VoxelBuffer.sequenced(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1)))
+      val r = demoVolume(spark, "a46")(demoSequenced()).root
       val m = s"$voxelDumpRoot/a46_manifest_${graft.ops.Similarity.dirToken(dir)}"
       spark.read.format("precomputed").load(r)
         .select(col("key"), md5(col("blob")).as("h"))
@@ -2873,50 +2406,25 @@ object ArrayOps {
     * itself a distributed buildNextMip over one chunk's base region), the
     * d20 incremental posture applied to pyramids. */
   def a47_mip_repair(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
     val tok = graft.ops.Similarity.dirToken(dir)
     val m0Dump = s"$voxelDumpRoot/a47m0_$tok"
     val m1Dump = s"$voxelDumpRoot/a47m1_$tok"
     A47M0Dump = m0Dump
     A47M1Dump = m1Dump
     mipRepairReg.getOrBuild(dir) {
-      val root = java.nio.file.Files.createTempDirectory("graft-a47").toString
-      val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-        Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 16), (0, 0, 0))))
-        .withNumMips(2)
-      val vol = Volume.create(spark, root, meta)
+      val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1,
+        Vector(demoScale.copy(size = (64, 64, 16)))).withNumMips(2)
+      val vol = Volume.create(spark, Scratch.dir("graft-a47"), meta)
       vol.ingest(VoxelBuffer.sequenced(Meta.TUInt8, 64, 64, 16, 1, (1, 1, 1)))
       VolumeOps.buildNextMip(vol, Box(1, 64, 1, 64, 1, 16))
-      val vol1 = new Volume(spark, root, meta, 2)
+      val vol1 = new Volume(spark, vol.root, vol.meta, 2)
       // inject drift into mip-1 chunks cz=2 and cz=4 (z 5..8 and 13..16)
-      Seq(5, 13).foreach { z0 =>
-        val tamper = VoxelBuffer.zeros(Meta.TUInt8, 32, 32, 4, 1, (1, 1, z0))
-        var tz = 0
-        while (tz < 4) {
-          var ty = 0
-          while (ty < 32) {
-            var tx = 0
-            while (tx < 32) { tamper.setLong(tx, ty, tz, 0, 7L); tx += 1 }
-            ty += 1
-          }
-          tz += 1
-        }
-        vol1.ingest(tamper)
-      }
+      Seq(5, 13).foreach(tamperMip1(vol1, _))
       // AUDIT: re-derive mip-1 from mip-0 (xy mean-pool) and flag chunks
       // with any mismatching voxel — the a19 comparison at chunk grain
-      val m0 = vol.toVoxels(Box(1, 64, 1, 64, 1, 16))
-        .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("value"))
-      m0.write.mode("overwrite").parquet(m0Dump)
-      val want = Tables.parquet(spark, m0Dump)
-        .groupBy(
-          (floor((col("x") - 1) / 2) + 1).cast(IntegerType).as("x"),
-          (floor((col("y") - 1) / 2) + 1).cast(IntegerType).as("y"),
-          col("z"))
-        .agg(round(avg(col("value"))).cast(LongType).as("want"))
-      val drifted = vol1.toVoxels(Box(1, 32, 1, 32, 1, 16))
-        .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("value"))
+      longVoxels(vol.toVoxels(Box(1, 64, 1, 64, 1, 16))).write.mode("overwrite").parquet(m0Dump)
+      val want = meanPooled(spark, m0Dump)
+      val drifted = longVoxels(vol1.toVoxels(Box(1, 32, 1, 32, 1, 16)))
         .join(want, Seq("x", "y", "z"))
         .filter(col("value") =!= col("want"))
         .select(((col("z") - 1).cast(LongType) / 4 + 1).cast(IntegerType).as("cz"))
@@ -2930,8 +2438,7 @@ object ArrayOps {
       drifted.foreach { cz =>
         VolumeOps.buildNextMip(vol, Box(1, 64, 1, 64, (cz - 1) * 4 + 1, cz * 4))
       }
-      new Volume(spark, root, meta, 2).toVoxels(Box(1, 32, 1, 32, 1, 16))
-        .select(col("x"), col("y"), col("z"), col("value").cast(LongType).as("value"))
+      longVoxels(new Volume(spark, vol.root, vol.meta, 2).toVoxels(Box(1, 32, 1, 32, 1, 16)))
         .write.mode("overwrite").parquet(m1Dump)
       // post-repair re-derivation must be clean EVERYWHERE (same dump the
       // gate folds — but equality of engine and oracle folds alone would
@@ -2944,14 +2451,8 @@ object ArrayOps {
     }
     // the gated report: per mip-1 chunk, the injected-drift verdict and
     // the post-repair agreement census (must be total everywhere)
-    val want = Tables.parquet(spark, m0Dump)
-      .groupBy(
-        (floor((col("x") - 1) / 2) + 1).cast(IntegerType).as("x"),
-        (floor((col("y") - 1) / 2) + 1).cast(IntegerType).as("y"),
-        col("z"))
-      .agg(round(avg(col("value"))).cast(LongType).as("want"))
     Tables.parquet(spark, m1Dump)
-      .join(want, Seq("x", "y", "z"))
+      .join(meanPooled(spark, m0Dump), Seq("x", "y", "z"))
       .groupBy(
         (floor((col("x") - 1) / 32) + 1).cast(IntegerType).as("cx"),
         (floor((col("y") - 1) / 32) + 1).cast(IntegerType).as("cy"),
@@ -3007,23 +2508,18 @@ object ArrayOps {
     * (MurmurHash3 content is not oracle-replayable) and pinned again by
     * SqlDdlSpec. */
   def a45_sql_ddl(spark: SparkSession, dir: String): DataFrame = {
-    import graft.core.Meta
-    import graft.volume.{Volume, VoxelBuffer}
     graft.plans.GraftExtensions.install(spark)
     val root = ddlRootReg.getOrBuild(dir) {
       val tok = graft.ops.Similarity.dirToken(dir)
-      val srcRoot = java.nio.file.Files.createTempDirectory("graft-a45-src").toString
-      val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-        Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
-      val buf = VoxelBuffer.sequenced(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
-      Volume.create(spark, srcRoot, meta).ingest(buf)
-      val dst = java.nio.file.Files.createTempDirectory("graft-a45-dst").toString + "/layer"
+      val buf = demoSequenced()
+      val srcRoot = demoVolume(spark, "a45-src")(buf).root
+      val dst = Scratch.dir("graft-a45-dst") + "/layer"
       spark.sql(s"CREATE TABLE graft.a45_src_$tok USING precomputed OPTIONS (path '$srcRoot')")
       spark.sql(s"""CREATE TABLE graft.a45_dst_$tok USING precomputed OPTIONS (
         path '$dst', voxel_type 'uint8', size '64,64,8', chunk_size '32,32,4',
         resolution '1,1,1', encoding 'gzip')""")
       spark.sql(s"INSERT INTO graft.a45_dst_$tok SELECT * FROM graft.a45_src_$tok")
-      require(Volume.open(spark, dst).cutout(Box(1, 64, 1, 64, 1, 8)) == buf,
+      require(Volume.open(spark, dst).cutout(demoExtent) == buf,
         "a45: SQL-ingested volume must decode bit-exactly")
       dst
     }

@@ -95,7 +95,7 @@ object EventStreams {
     spark.conf.set(key, n.toString)
     try body(ck) finally {
       spark.conf.set(key, old)
-      rmStage(ck)
+      graft.core.Scratch.delete(ck)
     }
   }
 
@@ -841,7 +841,7 @@ object EventStreams {
       kind = graft.core.AtRestRegistry.Fixture)
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      stagedDirReg.values.foreach(d => rmStage(d))))
+      stagedDirReg.values.foreach(graft.core.Scratch.delete)))
   }
 
   private def stageWithSentinels(spark: SparkSession, dir: String,
@@ -875,18 +875,8 @@ object EventStreams {
       .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
     Files.move(part.toPath, Paths.get(s"$stage/events1.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
-    rmStage(tmpOut)
+    graft.core.Scratch.delete(tmpOut)
     stage
-  }
-
-  /** Recursively delete a bounded-replay staging dir (repeated bench
-    * invocations would otherwise accumulate copies of the events table). */
-  private def rmStage(stage: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(stage))
   }
 
   def leftIntervalJoinOnce(spark: SparkSession, dir: String, windowMin: Int = 30): DataFrame = {
@@ -1730,7 +1720,7 @@ object EventStreams {
           q.processAllAvailable() // batch 2: stragglers vs armed watermark
         } finally q.stop()
       }
-    } finally rmStage(stage)
+    } finally graft.core.Scratch.delete(stage)
     val streamed = lastUpdate(spark.table(name), Seq("hr", "event_type"), Seq("n"))
       .select(col("hr"), col("event_type"), col("n").as("n_stream"))
     Tables.events(spark, dir)

@@ -17,6 +17,6 @@ object SparkSuite {
     s
   }
 
-  def tempDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh directory under the JVM's scratch parent (deleted at exit). */
+  def tempDir(prefix: String): String = graft.core.Scratch.dir(prefix)
 }
