@@ -22,6 +22,11 @@ object Codec {
     def name: String
     def encode(raw: Array[Byte]): Array[Byte]
     def decode(blob: Array[Byte]): Array[Byte]
+    /** Decode a blob the caller expects to hold `rawLen` bytes. A codec
+      * that can inflate straight into an array of that size overrides
+      * this; the result is still whatever the blob holds, so a wrong size
+      * fails the caller's shape check, not here. */
+    def decode(blob: Array[Byte], rawLen: Int): Array[Byte] = decode(blob)
   }
 
   /** Identity (reference: src/Codings.jl:39-45). Only reachable by explicit
@@ -57,6 +62,21 @@ object Codec {
         while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
         in.close()
         out.toByteArray
+      }
+    /** Inflates into one `rawLen`-byte array through a 64 KiB input buffer,
+      * then reads to EOF, which checks the trailer (and reads any further
+      * member); a longer stream falls back to the one-argument `decode`. */
+    override def decode(blob: Array[Byte], rawLen: Int): Array[Byte] =
+      if (!hasMagic(blob, GzipMagic)) blob
+      else {
+        val in = new GZIPInputStream(new ByteArrayInputStream(blob), 64 * 1024)
+        try {
+          val out = new Array[Byte](rawLen)
+          val n = in.readNBytes(out, 0, rawLen)
+          if (n < rawLen) java.util.Arrays.copyOf(out, n)
+          else if (in.read() < 0) out
+          else decode(blob)
+        } finally in.close()
       }
   }
 
@@ -134,10 +154,11 @@ object Codec {
       d.end()
       out.toByteArray
     }
-    def decode(blob: Array[Byte]): Array[Byte] = {
-      val sniff = blob.length >= 2 && (blob(0) & 0xff) == 0x78 &&
+    private def sniff(blob: Array[Byte]): Boolean =
+      blob.length >= 2 && (blob(0) & 0xff) == 0x78 &&
         (((blob(0) & 0xff) << 8) | (blob(1) & 0xff)) % 31 == 0
-      if (!sniff) return blob // passthrough, consistent with gzip/zstd
+    def decode(blob: Array[Byte]): Array[Byte] = {
+      if (!sniff(blob)) return blob // passthrough, consistent with gzip/zstd
       val inf = new java.util.zip.Inflater()
       inf.setInput(blob)
       val out = new ByteArrayOutputStream(blob.length * 3 + 64)
@@ -150,6 +171,25 @@ object Codec {
         }
       } finally inf.end()
       out.toByteArray
+    }
+    /** Inflates into one `rawLen`-byte array; a longer stream falls back
+      * to the one-argument `decode`. */
+    override def decode(blob: Array[Byte], rawLen: Int): Array[Byte] = {
+      if (!sniff(blob)) return blob
+      val inf = new java.util.zip.Inflater()
+      inf.setInput(blob)
+      try {
+        val out = new Array[Byte](rawLen)
+        val probe = new Array[Byte](1)
+        var n = 0
+        while (!inf.finished()) {
+          val k = if (n < rawLen) inf.inflate(out, n, rawLen - n) else inf.inflate(probe)
+          if (k == 0 && inf.needsInput()) throw new IllegalArgumentException("zlib: truncated stream")
+          if (n == rawLen && k > 0) return decode(blob)
+          n += k
+        }
+        if (n == rawLen) out else java.util.Arrays.copyOf(out, n)
+      } finally inf.end()
     }
   }
 

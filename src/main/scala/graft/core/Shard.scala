@@ -115,8 +115,10 @@ object Shard {
     * sharing is deliberately traded away for the snapshot guarantee.
     * Driver-side calls (no TaskContext — direct API use) are uncached: a
     * long-lived driver thread has no completion point, and a stale index
-    * there would outlive any write. A task is single-threaded, so plain
-    * get/put needs no striping. */
+    * there would outlive any write. The exception is a call that opens a
+    * [[DriverScope]] (an in-process cutout): its workers share one scope,
+    * dropped when the call closes it. Two workers may both miss and fetch
+    * one index; the first put wins, so no lock is held across a GET. */
   private val MaxCachedPerTask = 1024
   private val MaxCachedGlobal = 4096
   private val indexCache =
@@ -128,15 +130,37 @@ object Shard {
   private val scopeCounts =
     new java.util.concurrent.ConcurrentHashMap[Long, java.util.concurrent.atomic.AtomicInteger]()
 
+  private def dropScope(scope: Long): Unit = {
+    scopeCounts.remove(scope)
+    indexCache.keySet().removeIf(k => k._1 == scope)
+  }
+
+  /** The cache scope of one driver-side call: [[apply]] runs a read under
+    * it on the calling thread, [[close]] drops its entries. Ids are
+    * negative, so they never collide with a task attempt id. */
+  final class DriverScope private[Shard] (id: Long) {
+    def apply[T](read: => T): T = {
+      val prev = boundScope.get()
+      boundScope.set(id)
+      try read finally boundScope.set(prev)
+    }
+    def close(): Unit = dropScope(id)
+  }
+  private val nextDriverScope = new java.util.concurrent.atomic.AtomicLong(-1L)
+  private val boundScope = new ThreadLocal[java.lang.Long]
+  def driverScope(): DriverScope = new DriverScope(nextDriverScope.getAndDecrement())
+
   def cachedIndex(fs: FileSystem, root: String, key: String, p: Params): Option[Array[Long]] = {
     val tc = org.apache.spark.TaskContext.get()
-    if (tc == null) return readIndex(fs, root, key, p) // driver: uncached
-    val scope = tc.taskAttemptId()
-    if (registeredTasks.add(scope))
-      tc.addTaskCompletionListener[Unit] { _ =>
-        registeredTasks.remove(scope)
-        scopeCounts.remove(scope)
-        indexCache.keySet().removeIf(k => k._1 == scope)
+    val scope: Long =
+      if (tc != null) {
+        val id = tc.taskAttemptId()
+        if (registeredTasks.add(id))
+          tc.addTaskCompletionListener[Unit] { _ => registeredTasks.remove(id); dropScope(id) }
+        id
+      } else boundScope.get() match {
+        case null => return readIndex(fs, root, key, p) // driver, no scope: uncached
+        case id => id
       }
     val k = (scope, root, key)
     val hit = indexCache.get(k)
@@ -145,7 +169,7 @@ object Shard {
       val v = readIndex(fs, root, key, p)
       val n = scopeCounts.computeIfAbsent(scope, _ => new java.util.concurrent.atomic.AtomicInteger())
       if (n.get() < MaxCachedPerTask && indexCache.size() < MaxCachedGlobal &&
-        indexCache.put(k, v) == null) n.incrementAndGet()
+        indexCache.putIfAbsent(k, v) == null) n.incrementAndGet()
       v
     }
   }
@@ -154,7 +178,8 @@ object Shard {
     * task that reads, writes, then re-reads the same shard must see its
     * own write). Other scopes hold point-in-time snapshots by design, and
     * tasks that start later never see stale state because their scope is
-    * new. Driver-side calls cache nothing, so there is nothing to drop. */
+    * new. A driver-side write runs under no scope, so there is nothing
+    * to drop. */
   def invalidate(root: String, key: String): Unit =
     org.apache.spark.TaskContext.get() match {
       case null => ()

@@ -5,6 +5,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -264,10 +265,12 @@ class PrecomputedScan(root: String, mips: Seq[(Int, Meta.ScaleMeta)],
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PrecomputedReaderFactory(root,
-      new ChunkStore.SerializableConf(SparkSession.active.sessionState.newHadoopConf()),
-      required)
+  /** The store conf ships once per scan, as a broadcast its tasks share. */
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val spark = SparkSession.active
+    new PrecomputedReaderFactory(root, spark.sparkContext.broadcast(
+      new ChunkStore.SerializableConf(spark.sessionState.newHadoopConf())), required)
+  }
 }
 
 /** Per-scale chunk-grid geometry a partition needs to turn linear cell ids
@@ -291,7 +294,7 @@ final case class ListingPartition(grid: ScaleGrid, bounds: IdBounds, globs: Seq[
   extends InputPartition
 
 class PrecomputedReaderFactory(root: String,
-    conf: ChunkStore.SerializableConf, required: StructType)
+    conf: Broadcast[ChunkStore.SerializableConf], required: StructType)
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
@@ -319,7 +322,7 @@ class PrecomputedReaderFactory(root: String,
     val g = p.grid
     val needBlob = required.fieldNames.contains("blob")
     new PartitionReader[InternalRow] {
-      private lazy val fs = ChunkStore.fs(root, conf.conf)
+      private lazy val fs = ChunkStore.fs(root, conf.value.conf)
       private lazy val names =
         p.globs.iterator.flatMap(ChunkStore.globNames(fs, root, g.scaleKey, _))
       private var cx = 0; private var cy = 0; private var cz = 0
@@ -358,7 +361,7 @@ class PrecomputedReaderFactory(root: String,
     val g = p.grid
     val needBlob = required.fieldNames.contains("blob")
     new PartitionReader[InternalRow] {
-      private lazy val fs = ChunkStore.fs(root, conf.conf)
+      private lazy val fs = ChunkStore.fs(root, conf.value.conf)
       private lazy val prober = new ChunkStore.SuffixProber(fs, root)
       private var id = p.start - 1
       private var box: Grid.Box = _
@@ -443,15 +446,17 @@ class PrecomputedBatchWrite(root: String, scales: Map[Int, Meta.ScaleMeta],
         if (fs.exists(dir)) fs.delete(dir, true)
       }
     }
-    val conf = new ChunkStore.SerializableConf(
-      SparkSession.active.sessionState.newHadoopConf())
+    // the store conf ships once per write, as a broadcast its tasks share
+    val spark = SparkSession.active
+    val conf = spark.sparkContext.broadcast(
+      new ChunkStore.SerializableConf(spark.sessionState.newHadoopConf()))
     val idx = Map("mip" -> schema.fieldIndex("mip"),
       "cx" -> schema.fieldIndex("cx"), "cy" -> schema.fieldIndex("cy"),
       "cz" -> schema.fieldIndex("cz"), "blob" -> schema.fieldIndex("blob"))
     val scalesB = scales
     val rootB = root
     (partitionId: Int, taskId: Long) => new DataWriter[InternalRow] {
-      private lazy val fs = ChunkStore.fs(rootB, conf.conf)
+      private lazy val fs = ChunkStore.fs(rootB, conf.value.conf)
       private var written = 0L
       override def write(row: InternalRow): Unit = {
         val m = row.getInt(idx("mip"))

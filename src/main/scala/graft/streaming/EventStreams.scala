@@ -421,7 +421,7 @@ object EventStreams {
     * idempotent retries; the bounded local drive has no retries.) */
   def indexMaintainOnce(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.{Dedup, Tables}
-    val ixDir = java.nio.file.Files.createTempDirectory("graft-e14-ix").toString
+    val ixDir = graft.core.Scratch.dir("graft-e14-ix")
     Tables.t(spark, dir, "documents")
       .filter(pmod(col("doc_id"), lit(Dedup.DeltaMod)) =!= 0)
       .select(md5(col("text")).as("h")).distinct()
@@ -463,8 +463,8 @@ object EventStreams {
     * double-appending.) */
   def dualSinkOnce(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.TextOps
-    val keepDir = java.nio.file.Files.createTempDirectory("graft-e15-keep").toString
-    val rejDir = java.nio.file.Files.createTempDirectory("graft-e15-rej").toString
+    val keepDir = graft.core.Scratch.dir("graft-e15-keep")
+    val rejDir = graft.core.Scratch.dir("graft-e15-rej")
     val stream = spark.readStream.schema(docSchema).parquet(s"$dir/documents*.parquet")
     val flagged = TextOps.gopherRules(TextOps.withSyntheticLines(stream))
       .select(col("doc_id"), col("keep"))
@@ -615,7 +615,7 @@ object EventStreams {
     * sink layout IS the memory. */
   def idempotentSinkOnce(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.TextOps
-    val sink = java.nio.file.Files.createTempDirectory("graft-e16-sink").toString
+    val sink = graft.core.Scratch.dir("graft-e16-sink")
     def driveOnce(): Unit = {
       val stream = spark.readStream.schema(docSchema).parquet(s"$dir/documents*.parquet")
       val toks = stream.select(col("doc_id"),
@@ -1636,7 +1636,7 @@ object EventStreams {
     * The gate folds the final table to a bucket census — correct only if
     * no batch was lost, doubled, or merged out of order. */
   def streamMergeOnce(spark: SparkSession, dir: String): DataFrame = {
-    val target = java.nio.file.Files.createTempDirectory("graft-e20").toString + "/state"
+    val target = graft.core.Scratch.dir("graft-e20") + "/state"
     val stream = readEventStream(spark, dir)
     val name = s"stream_merge_${System.nanoTime()}"
     withFewStatePartitions(spark, 4) { ck =>
@@ -1797,7 +1797,7 @@ object EventStreams {
     // donor payloads are plant-fixture machinery (see donorRelation) —
     // materialized once, joined per batch
     val donors = Tables.materialize(Multimodal.donorRelation(spark, dir))
-    val acc = java.nio.file.Files.createTempDirectory("graft-e29-acc").toString
+    val acc = graft.core.Scratch.dir("graft-e29-acc")
     streamVisualInto(spark, s"$dir/documents*.parquet", evalIdx, donors, acc,
       evalMod, tau)
     Tables.parquet(spark, s"$acc/batch_*")
@@ -1841,7 +1841,7 @@ object EventStreams {
   def streamIvfOnce(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.Similarity
     val (cents, _, cellPath) = Similarity.ivfAtRest(spark, dir)
-    val acc = java.nio.file.Files.createTempDirectory("graft-e28-acc").toString
+    val acc = graft.core.Scratch.dir("graft-e28-acc")
     streamIvfInto(spark, s"$dir/embeddings*.parquet",
       Tables.t(spark, dir, "embeddings").schema, cents, acc)
     servedIvfCensus(spark, cellPath, acc)

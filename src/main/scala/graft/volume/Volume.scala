@@ -1,6 +1,10 @@
 package graft.volume
 
+import java.util.concurrent.{CountDownLatch, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong, AtomicReference}
+
 import org.apache.hadoop.fs.FileSystem
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
@@ -281,12 +285,14 @@ final case class VolumeCtx(
     * (reference: src/modes/sequential.jl:43-48). */
   def decodeChunk(slice: ChunkSlice, blob: Array[Byte]): VoxelBuffer = {
     val b = slice.chunkBox
+    // a length past the array limit fails the buffer's shape check anyway
+    val rawLen = math.min(b.numVoxels * numChannels * dataType.byteSize, Int.MaxValue - 64L).toInt
     val raw = keyStyle match {
       case "n5" => // raw header carries the clipped block dims; payload is big-endian
         val (dims, payload) = graft.core.N5Block.strip(blob)
         require(dims == ((b.x.len, b.y.len, b.z.len)),
           s"n5: block ${relKey(slice)} header dims $dims != chunk box (${b.x.len},${b.y.len},${b.z.len})")
-        graft.core.N5Block.swapEndian(codec.decode(payload), dataType.byteSize)
+        graft.core.N5Block.swapEndian(codec.decode(payload, rawLen), dataType.byteSize)
       case "tiff-z" =>
         // a REAL image container per slice: TIFF rows are top-down
         // row-major — exactly this engine's x-fastest-then-y layout for a
@@ -311,7 +317,7 @@ final case class VolumeCtx(
           case n => throw new IllegalArgumentException(
             s"tiff: ${n * 8}-bit voxels unsupported (8/16-bit grayscale only)")
         }
-      case _ => codec.decode(blob)
+      case _ => codec.decode(blob, rawLen)
     }
     new VoxelBuffer(dataType, b.x.len, b.y.len, b.z.len, numChannels,
       (b.x.lo, b.y.lo, b.z.lo), raw)
@@ -367,8 +373,9 @@ final case class VolumeCtx(
 }
 
 /** A handle on one chunked N-d array dataset — the engine's `BigArray`
-  * (reference: src/type.jl). Reads and writes are Spark jobs over the chunk
-  * grid; the voxel view (`toVoxels`) is the bridge to the relational surface.
+  * (reference: src/type.jl). `cutout` reads in the calling process; writes
+  * and the DataFrame operators are Spark jobs over the chunk grid; the
+  * voxel view (`toVoxels`) is the bridge to the relational surface.
   *
   * Scale design notes (100 TB target):
   *  - chunk task sets are ranges of the linear ids of the cells a box
@@ -381,20 +388,25 @@ final case class VolumeCtx(
   *    box's row count, so a join never broadcasts a petavoxel scan. The
   *    other per-chunk DataFrame operators (`zipVoxels`, `chunkStats`,
   *    `toVoxelsAtLeast`, `missingChunks` and the `local*` halo kernels)
-  *    run on one combinator, `chunkRows`, over `spark.range`; `cutout`,
-  *    `ingest` and `VolumeOps.rechunk` run on `chunkCells`, over
+  *    run on one combinator, `chunkRows`, over `spark.range`; `ingest`
+  *    and `VolumeOps.rechunk` run on `chunkCells`, over
   *    `sparkContext.range`. Each opens the store once per task
   *    (`storeFs`, or the scan's broadcast conf) and fetches with the
   *    handle's fill semantics;
   *  - range filters over the voxel view fold into the scan's box and leave
   *    the plan (`PushBoxFilters`), so a voxel query over a new box reads
   *    only the chunks it touches and compiles no new code;
-  *  - `cutout`, `ingest` and `rechunk` are each one plain RDD job (no
-  *    Catalyst planning, no encoder round-trip, no shuffle), so a small call
-  *    costs little more than its chunk I/O and codec work. `cutout`
-  *    materializes on the driver (API parity with the reference's
-  *    `ba[ranges...]`) and is guarded by a size cap — large reads should
-  *    stay distributed via `toVoxels`;
+  *  - `cutout` materializes on the driver (API parity with the reference's
+  *    `ba[ranges...]`), so it runs there too, with no Spark job: a few
+  *    in-process workers (`Volume.forEachChunk`, at most the default
+  *    parallelism or the driver's processors, whichever is fewer) fetch,
+  *    decode and blit chunks straight into the output, like the
+  *    reference's `:multithreads` read. It is guarded by a size cap —
+  *    large reads should stay distributed via `toVoxels`;
+  *  - `ingest` and `rechunk` are each one plain RDD job (no Catalyst
+  *    planning, no encoder round-trip, no shuffle), so a small call costs
+  *    little more than its chunk I/O and codec work: a large write's
+  *    encode is spread over the executors;
   *  - `fromVoxels` is one plain RDD job too, run under one SQL execution of
   *    its input plan: map tasks fold voxel rows into partial chunks with
   *    Spark's spilling combiner, and the only shuffle in the write path
@@ -403,10 +415,10 @@ final case class VolumeCtx(
   *
   * Store conf: a handle snapshots its Hadoop store conf — connector settings
   * and the `graft.store.retry.*` policy included — at its first chunk job
-  * (for the DataFrame operators: when the first such DataFrame is built),
-  * and broadcasts it once; the voxel view's scans read with the same
-  * broadcast. Later jobs ship only the broadcast reference, so no task
-  * re-parses the conf. A conf change made after that is seen by a
+  * or cutout (for the DataFrame operators: when the first such DataFrame
+  * is built), and broadcasts it once; `cutout` and the voxel view's scans
+  * read with the same broadcast. Later jobs ship only the broadcast
+  * reference, so no task re-parses the conf. A conf change made after that is seen by a
   * newly opened handle, not by this one.
   */
 final class Volume(
@@ -427,9 +439,9 @@ final class Volume(
     scaleMeta.voxelOffset, scaleMeta.volumeBox, meta.dataType, meta.numChannels,
     scaleMeta.encoding, fillMissing, keyStyle, padEdgeChunks, shard, mrc)
 
-  /** The store conf every chunk task of this handle reads, broadcast once at
-    * the handle's first chunk job (see the class notes). Closures capture it
-    * through a local `val`, never through `this`. */
+  /** The store conf every chunk task and cutout of this handle reads,
+    * broadcast once at the handle's first use (see the class notes).
+    * Closures capture it through a local `val`, never through `this`. */
   @transient private[graft] lazy val confBc: Broadcast[ChunkStore.SerializableConf] =
     spark.sparkContext.broadcast(new ChunkStore.SerializableConf(
       ChunkStore.storeConf(spark.sessionState.newHadoopConf(), root, ctx.codec.name)))
@@ -450,7 +462,7 @@ final class Volume(
 
   /** The grid cells a box touches inside the volume as an RDD of chunk
     * coords (with `perShard`: of the shards holding them) — the task source
-    * of `cutout`, `ingest` and `VolumeOps.rechunk`. Ids come from
+    * of `ingest` and `VolumeOps.rechunk`. Ids come from
     * `sparkContext.range` in [[Volume.taskPartitions]] partitions, so
     * nothing is enumerated on the driver; None (no job) when the box misses
     * the volume. */
@@ -501,12 +513,15 @@ final class Volume(
     * anchored at the query origin; out-of-volume / missing chunks stay zero.
     * Driver-side materialization is capped — use `toVoxels` for big boxes.
     *
-    * One RDD job over the linear ids of the chunks the box touches inside
-    * the volume: each task opens one FileSystem and streams its chunks
-    * through fetch→decode→clip (the executor-side analog of the reference's
-    * worker pipeline, src/modes/multithreads.jl:66-123), and the driver
-    * blits each partition's pieces into the output as that partition's
-    * result arrives. A box wholly outside the volume launches no job. */
+    * Runs in the calling process, like the reference's `:multithreads`
+    * read (src/modes/multithreads.jl:66-123): [[Volume.chunkWorkers]]
+    * workers, the calling thread among them, share the linear ids of the
+    * chunks the box touches inside the volume, and each fetches, decodes
+    * and blits its chunks straight into the output (chunks write disjoint
+    * bytes). All read through one FileSystem opened from [[confBc]], with
+    * the handle's fill and retry semantics. No Spark job runs; the first
+    * failure stops the other workers and is rethrown as the store raised
+    * it. */
   def cutout(query: Box, maxBytes: Long = Int.MaxValue - 64L): VoxelBuffer = {
     if (query.isEmpty)
       return VoxelBuffer.zeros(meta.dataType, 0, 0, 0, meta.numChannels,
@@ -516,16 +531,15 @@ final class Volume(
       s"cutout of $bytesNeeded bytes exceeds cap $maxBytes; use toVoxels for distributed processing")
     val out = VoxelBuffer.zeros(meta.dataType, query.x.len, query.y.len, query.z.len,
       meta.numChannels, (query.x.lo, query.y.lo, query.z.lo))
-    val c = ctx; val openFs = storeFs
-    for (cells <- chunkCells(query)) {
-      val pieces = cells.mapPartitions { it =>
-        val fs = openFs()
-        it.flatMap { case (cx, cy, cz) =>
-          c.sliceAt(cx, cy, cz, query).flatMap(s => c.readChunk(fs, s).map(_.slice(s.cutoutBox)))
-        }
-      }
-      spark.sparkContext.runJob(pieces, (it: Iterator[VoxelBuffer]) => it.toArray,
-        (_: Int, ps: Array[VoxelBuffer]) => ps.foreach(p => out.blit(p, p.box)))
+    val cells = ctx.cellRanges(query)
+    if (cells.total > 0) {
+      val fs = storeFs()
+      val scope = graft.core.Shard.driverScope()
+      try Volume.forEachChunk(cells.total, spark.sparkContext) { id =>
+        val (cx, cy, cz) = cells.coords(id)
+        for (s <- ctx.sliceAt(cx, cy, cz, query); chunk <- scope(ctx.readChunk(fs, s)))
+          out.blit(chunk, s.cutoutBox)
+      } finally scope.close()
     }
     out
   }
@@ -1476,6 +1490,69 @@ object Volume {
     * twice the default parallelism. */
   private[graft] def taskPartitions(total: Long, sc: org.apache.spark.SparkContext): Int =
     math.max(1, math.min(total, sc.defaultParallelism * 2L)).toInt
+
+  /** Most workers one in-process chunk loop runs: the cluster's default
+    * parallelism, capped by the driver's own processors. */
+  private[graft] def workerBound(sc: SparkContext): Int =
+    math.max(1, math.min(sc.defaultParallelism, Runtime.getRuntime.availableProcessors))
+
+  /** Workers for `total` chunks: one per chunk, up to [[workerBound]]. */
+  private[graft] def chunkWorkers(total: Long, sc: SparkContext): Int =
+    math.max(1L, math.min(total, workerBound(sc).toLong)).toInt
+
+  /** The helper threads of [[forEachChunk]], shared by every call: one
+    * fewer than the first caller's [[workerBound]] (each calling thread is
+    * a worker too), daemon, and let go after 30 s idle. */
+  private var pool: ThreadPoolExecutor = _
+  private[graft] def chunkPool(sc: SparkContext): ThreadPoolExecutor = synchronized {
+    if (pool == null) {
+      val n = math.max(1, workerBound(sc) - 1)
+      val made = new AtomicInteger(0)
+      pool = new ThreadPoolExecutor(n, n, 30L, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](),
+        (r: Runnable) => {
+          val t = new Thread(r, s"graft-chunk-worker-${made.incrementAndGet()}")
+          t.setDaemon(true)
+          t
+        })
+      pool.allowCoreThreadTimeOut(true)
+    }
+    pool
+  }
+
+  /** Run `body` over the ids `0 until total` on [[chunkWorkers]] threads:
+    * the calling thread and helpers from [[chunkPool]] claim ids from one
+    * counter, so nothing is enumerated. A helper still queued when the
+    * caller runs out of ids is skipped, so a busy pool never stalls a
+    * call. Returns when every worker that ran has stopped, which orders
+    * their writes before the caller's next read. The first failure stops
+    * the other workers after their current id and is rethrown unwrapped. */
+  private[graft] def forEachChunk(total: Long, sc: SparkContext)(body: Long => Unit): Unit = {
+    val next = new AtomicLong(0L)
+    val failure = new AtomicReference[Throwable](null)
+    def work(): Unit = {
+      var id = next.getAndIncrement()
+      while (id < total && failure.get() == null) {
+        try body(id)
+        catch { case t: Throwable => failure.compareAndSet(null, t) }
+        id = next.getAndIncrement()
+      }
+    }
+    val helpers = chunkWorkers(total, sc) - 1
+    val unclaimed = new AtomicInteger(helpers)
+    val done = new CountDownLatch(helpers)
+    for (_ <- 0 until helpers)
+      chunkPool(sc).execute(() => if (unclaimed.getAndDecrement() > 0) try work() finally done.countDown())
+    work()
+    while (unclaimed.getAndDecrement() > 0) done.countDown()
+    // an interrupt stops the workers like a failure; the wait still
+    // outlasts every running one
+    var interrupted = false
+    while (done.getCount > 0)
+      try done.await()
+      catch { case e: InterruptedException => failure.compareAndSet(null, e); interrupted = true }
+    if (interrupted) Thread.currentThread().interrupt()
+    if (failure.get() != null) throw failure.get()
+  }
 
   private def field(name: String, t: DataType): StructField = StructField(name, t, nullable = false)
   private def ints(names: String*): Seq[StructField] = names.map(field(_, IntegerType))

@@ -74,6 +74,30 @@ class MetaCodecSpec extends AnyFunSuite with MiniProp {
     assert(Codec.ZstdCodec.decode(plain).sameElements(plain))
   }
 
+  test("size-aware gzip and zlib decode: exact, short, long, truncated, multi-member, passthrough") {
+    val bytes = Array.tabulate[Byte](5000)(i => (i * 31 % 251).toByte)
+    for (c <- Seq(Codec.GzipCodec, Codec.ZlibCodec)) {
+      val blob = c.encode(bytes)
+      assert(c.decode(blob, bytes.length).sameElements(bytes), c.name)
+      // a wrong expected size returns what the blob holds, for the caller's shape check
+      assert(c.decode(blob, bytes.length + 7).sameElements(bytes), c.name)
+      assert(c.decode(blob, bytes.length - 7).sameElements(bytes), c.name)
+      assert(c.decode(blob, 0).sameElements(bytes), c.name)
+      assertThrows[Exception](c.decode(blob.take(blob.length / 2), bytes.length))
+      val plain = Array[Byte](1, 2, 3, 4, 5, 6, 7, 8)
+      assert(c.decode(plain, 64) eq plain, c.name)
+    }
+    // a corrupt gzip trailer still fails once the payload is inflated
+    val gz = Codec.GzipCodec.encode(bytes)
+    val badCrc = gz.clone(); badCrc(badCrc.length - 8) = (badCrc(badCrc.length - 8) ^ 1).toByte
+    assertThrows[java.util.zip.ZipException](Codec.GzipCodec.decode(badCrc, bytes.length))
+    // two concatenated members decode as one stream
+    val (a, b) = bytes.splitAt(1234)
+    val twoMembers = Codec.GzipCodec.encode(a) ++ Codec.GzipCodec.encode(b)
+    assert(Codec.GzipCodec.decode(twoMembers, bytes.length).sameElements(bytes))
+    assert(Codec.GzipCodec.decode(twoMembers, a.length).sameElements(bytes))
+  }
+
   test("'raw' encoding aliases to gzip (Infos.jl:24-25); unknown rejected") {
     assert(Codec.forEncoding("raw") == Codec.GzipCodec)
     assert(Codec.forEncoding("gzip") == Codec.GzipCodec)

@@ -145,6 +145,21 @@ class PrecomputedSourceSpec extends AnyFunSuite {
     assert(dst.cutout(buf.box) == buf)
   }
 
+  test("a scan and a write each broadcast the store conf: no task deserializes one") {
+    import graft.volume.ChunkStore
+    val src = newVolume()
+    val dstRoot = SparkSuite.tempDir("graft-dsv2-conf")
+    Volume.create(spark, dstRoot, src.meta)
+    val before = ChunkStore.confDeserialized.get()
+    val rows = spark.read.format("precomputed").load(src.root)
+    assert(rows.select("key", "blob").collect().length == 8)
+    rows.write.format("precomputed").mode("append").save(dstRoot)
+    // local-mode tasks read a broadcast from the driver's block manager
+    assert(ChunkStore.confDeserialized.get() == before)
+    val buf = VoxelBuffer.sequenced(Meta.TUInt8, 200, 200, 10, 1, (1, 1, 1))
+    assert(Volume.open(spark, dstRoot).cutout(buf.box) == buf)
+  }
+
   test(".gz-suffixed stores read fully; absent cells cost ONE probe once resolved") {
     val vol = newVolume()
     val dir = new java.io.File(vol.root, "6_6_30")

@@ -24,6 +24,9 @@ class Mock3aFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
 object FlakyFaults {
   val remaining = new java.util.concurrent.atomic.AtomicInteger(0)
   def shouldFail(): Boolean = remaining.getAndUpdate(n => math.max(0, n - 1)) > 0
+  /** Every `open` call, and a delay each one sleeps first. */
+  val opens = new java.util.concurrent.atomic.AtomicLong(0)
+  val openDelayMs = new java.util.concurrent.atomic.AtomicLong(0)
 }
 
 /** A `flaky3a:` FileSystem whose next-N data ops throw a transient
@@ -34,6 +37,8 @@ class FlakyFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "flaky3a"
   override def getUri: java.net.URI = java.net.URI.create("flaky3a:///")
   override def open(p: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    FlakyFaults.opens.incrementAndGet()
+    if (FlakyFaults.openDelayMs.get() > 0) Thread.sleep(FlakyFaults.openDelayMs.get())
     if (FlakyFaults.shouldFail()) throw new java.io.IOException("injected transient failure (open)")
     super.open(p, bufferSize)
   }
@@ -128,6 +133,46 @@ class MockSchemeSpec extends AnyFunSuite {
     hconf.unset(ChunkStore.RetryBaseMsKey)
   }
 
+  test("a transient fault in one cutout worker is retried; a strict missing chunk stops every worker") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.flaky3a.impl", classOf[FlakyFileSystem].getName)
+    hconf.set(ChunkStore.RetryBaseMsKey, "1")
+    try {
+      val local = SparkSuite.tempDir("graft-flaky3a-workers")
+      val root = s"flaky3a:$local"
+      // 4 x 4 x 4 chunks, so every worker has several to read
+      val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
+        Meta.ScaleMeta("1_1_1", (16, 16, 4), "gzip", (1, 1, 1), (64, 64, 16), (0, 0, 0))))
+      val buf = VoxelBuffer.sequenced(Meta.TUInt8, 64, 64, 16, 1, (1, 1, 1))
+      Volume.create(spark, root, meta).ingest(buf)
+      val box = Box(1, 64, 1, 64, 1, 16)
+
+      val vol = Volume.open(spark, root)
+      val retries = ChunkStore.retriesObserved.get()
+      FlakyFaults.remaining.set(1)
+      assert(vol.cutout(box) == buf)
+      assert(FlakyFaults.remaining.get() == 0, "a worker met the fault")
+      assert(ChunkStore.retriesObserved.get() - retries == 1, "and retried it once")
+
+      // the first chunk a worker claims (id 0) is missing; every open
+      // sleeps, so the others would take ~0.3 s to read all 64 chunks
+      assert(new java.io.File(local, "1_1_1/0-16_0-16_0-4").delete())
+      val strict = new Volume(spark, root, meta, 1, fillMissing = false)
+      FlakyFaults.openDelayMs.set(20)
+      val opens = FlakyFaults.opens.get()
+      val e = intercept[ChunkStore.MissingChunkException](strict.cutout(box))
+      val opened = FlakyFaults.opens.get()
+      assert(e.key == "1_1_1/0-16_0-16_0-4")
+      assert(opened - opens <= 32, s"the failure stopped the other workers: ${opened - opens} opens")
+      Thread.sleep(200)
+      assert(FlakyFaults.opens.get() == opened, "no worker reads after the cutout throws")
+    } finally {
+      FlakyFaults.remaining.set(0)
+      FlakyFaults.openDelayMs.set(0)
+      hconf.unset(ChunkStore.RetryBaseMsKey)
+    }
+  }
+
   test("a handle keeps the store conf of its first chunk job; a new open sees later changes") {
     val hconf = spark.sparkContext.hadoopConfiguration
     hconf.set("fs.flaky3a.impl", classOf[FlakyFileSystem].getName)
@@ -153,7 +198,8 @@ class MockSchemeSpec extends AnyFunSuite {
 
       val fresh = Volume.open(spark, root)
       FlakyFaults.remaining.set(1)
-      intercept[org.apache.spark.SparkException](fresh.cutout(box))
+      val e = intercept[java.io.IOException](fresh.cutout(box))
+      assert(e.getMessage.contains("injected transient failure"), e.getMessage)
       assert(FlakyFaults.remaining.get() == 0, "the new handle's one attempt met the fault")
     } finally {
       FlakyFaults.remaining.set(0)

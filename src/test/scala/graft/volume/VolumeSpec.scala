@@ -124,9 +124,8 @@ class VolumeSpec extends AnyFunSuite {
       assert(out.getLong(x, y, z) == 0L)
 
     val strict = new Volume(spark, vol.root, vol.meta, 1, fillMissing = false)
-    val e = intercept[org.apache.spark.SparkException](strict.cutout(Box(1, 200, 1, 100, 1, 5)))
-    assert(e.getMessage.contains("no such chunk key") ||
-      Option(e.getCause).exists(_.getMessage.contains("no such chunk key")))
+    val e = intercept[ChunkStore.MissingChunkException](strict.cutout(Box(1, 200, 1, 100, 1, 5)))
+    assert(e.getMessage.contains("no such chunk key"))
   }
 
   def jobsAndQueries(thunk: => Unit): (Int, Int) = PlanProbe.jobsAndQueries(spark)(thunk)
@@ -140,7 +139,7 @@ class VolumeSpec extends AnyFunSuite {
     e
   }
 
-  test("a handle ships its store conf once; a cutout is one plain Spark job") {
+  test("a handle ships its store conf once; a cutout runs no Spark job") {
     val vol = newVolume()
     val buf = VoxelBuffer.sequenced(Meta.TUInt8, 200, 200, 10, 1, (1, 1, 1))
     val before = ChunkStore.confDeserialized.get()
@@ -157,7 +156,7 @@ class VolumeSpec extends AnyFunSuite {
     assert(ChunkStore.confDeserialized.get() == before)
     val b = Box(57, 123, 90, 110, 3, 8)
     var got: VoxelBuffer = null
-    assert(jobsAndQueries { got = vol.cutout(b) } == ((1, 0)))
+    assert(jobsAndQueries { got = vol.cutout(b) } == ((0, 0)))
     assert(got == buf.slice(b))
   }
 
@@ -193,6 +192,36 @@ class VolumeSpec extends AnyFunSuite {
     val zmodel = written.slice(Box(1, 20, 1, 12, 1, 6))
     for (b <- Seq(Box(17, 20, 1, 12, 1, 6), Box(15, 22, 2, 11, 2, 5), Box(-2, 25, 0, 14, 0, 8)))
       assert(zarr.cutout(b) == expectedCutout(zmodel, b), b)
+  }
+
+  test("concurrent cutouts on one handle equal the model; the chunk pool stays under the worker bound") {
+    val meta = Meta.VolumeMeta("image", Meta.TUInt16, 1, Vector(
+      Meta.ScaleMeta("1_1_1", (8, 16, 8), "gzip", (1, 1, 1), (96, 48, 24), (0, 0, 0))))
+    val vol = Volume.create(spark, SparkSuite.tempDir("graft-cut-conc"), meta)
+    val model = VoxelBuffer.sequenced(Meta.TUInt16, 96, 48, 24, 1, (1, 1, 1))
+    vol.ingest(model)
+    // 4 driver threads, 50 cutouts each, boxes straddling the volume edges
+    val callers = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val wrong = try {
+      (0 until 4).map { t =>
+        callers.submit(() => {
+          val rng = new scala.util.Random(t)
+          (1 to 50).flatMap { _ =>
+            val (x0, y0, z0) = (rng.nextInt(100) - 5, rng.nextInt(52) - 5, rng.nextInt(28) - 5)
+            val b = Box(x0, x0 + rng.nextInt(40), y0, y0 + rng.nextInt(30), z0, z0 + rng.nextInt(20))
+            if (vol.cutout(b) == expectedCutout(model, b)) None else Some(b)
+          }
+        })
+      }.flatMap(_.get())
+    } finally callers.shutdown()
+    assert(wrong.isEmpty, s"${wrong.size} wrong cutouts, first ${wrong.headOption}")
+    // each caller is a worker too, so the shared pool holds fewer threads
+    // than one call's bound
+    val sc = spark.sparkContext
+    assert(Volume.chunkPool(sc).getLargestPoolSize < Volume.workerBound(sc))
+    import scala.jdk.CollectionConverters._
+    val live = Thread.getAllStackTraces.keySet.asScala.count(_.getName.startsWith("graft-chunk-worker-"))
+    assert(live < Volume.workerBound(sc), live)
   }
 
   /** A buffer at `origin` whose values differ from `sequenced` there, so a
@@ -557,7 +586,7 @@ class VolumeSpec extends AnyFunSuite {
     val f = new java.io.File(vol.root, "6_6_30/0-100_0-100_0-5")
     val bytes = java.nio.file.Files.readAllBytes(f.toPath)
     java.nio.file.Files.write(f.toPath, bytes.take(bytes.length / 2))
-    val e = intercept[org.apache.spark.SparkException](vol.cutout(Box(1, 100, 1, 100, 1, 5)))
+    val e = intercept[java.io.EOFException](vol.cutout(Box(1, 100, 1, 100, 1, 5)))
     assert(e.getMessage != null)
   }
 
@@ -567,9 +596,8 @@ class VolumeSpec extends AnyFunSuite {
     f.mkdirs()
     java.nio.file.Files.write(new java.io.File(f, "0-100_0-100_0-5").toPath,
       Array[Byte](1, 2, 3, 4))
-    val e = intercept[org.apache.spark.SparkException](vol.cutout(Box(1, 100, 1, 100, 1, 5)))
-    assert(e.getMessage.contains("buffer bytes") ||
-      Option(e.getCause).exists(_.getMessage.contains("buffer bytes")), e.getMessage)
+    val e = intercept[IllegalArgumentException](vol.cutout(Box(1, 100, 1, 100, 1, 5)))
+    assert(e.getMessage.contains("buffer bytes"), e.getMessage)
   }
 
   test("jpeg-encoded store reads through the volume path (decode-only codec)") {
