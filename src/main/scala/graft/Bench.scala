@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.tools.Harness
 
 /** Benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR`, forcing full evaluation through the `noop` sink
@@ -37,16 +37,8 @@ object Bench {
     touched.exists(_._1.kind == graft.core.AtRestRegistry.Artifact)
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
     // opt-in reliable-checkpoint mode: with a dir set, Tables.materialize
     // takes the production (executor-loss-safe) branch instead of
     // localCheckpoint — same results, slightly more I/O (MaterializeSpec
@@ -54,38 +46,14 @@ object Bench {
     sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
       .foreach(spark.sparkContext.setCheckpointDir)
 
-    // (name, phase) of every run that threw, in order; never a timing
-    val failures = scala.collection.mutable.LinkedHashSet.empty[(String, String)]
-    def failed(name: String, phase: String, e: Throwable): None.type = {
-      System.err.println(s"[bench] $name ($phase) failed: $e")
-      failures += (name -> phase)
-      None
-    }
-    def force(name: String, phase: String = "warm"): Option[Double] = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
-      catch { case e: Throwable => return failed(name, phase, e) }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // drop caches a query may have persisted (e.g. the minhash shingle
-      // set) so runs don't accumulate memory pressure across 2x37 queries
-      spark.catalog.clearCache()
-      Some(dt)
-    }
+    val failures = new Harness.Failures
+    def force(name: String, phase: String = "warm"): Option[Double] =
+      Harness.force(spark, name, sfDir, failures, phase).map(_.total)
 
     // warmup: session machinery + parquet footers + codegen paths
-    spark.range(1000).selectExpr("sum(id)").write.mode("overwrite").format("noop").save()
+    Harness.warmup(spark)
     force("q01_agg"); force("q02_join5")
-
-    // no-op floor probe (the ScalingAudit harness-floor job): a trivial
-    // one-partition noop sink times the submit/schedule/commit machinery —
-    // its drift across the run is a direct read on contemporaneous box
-    // load, independent of any query's own cost
-    def floorProbe(): Double = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(1).coalesce(1).write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }.min
-    val floorBase = floorProbe()
+    val floorBase = Harness.floor(spark)
 
     // Recorded per-query bands from the previous round's idle-box run
     // (flat JSON object name -> seconds, regenerated via
@@ -161,15 +129,13 @@ object Bench {
     val arrayBench = try {
       import graft.core.{Grid, Meta}
       import graft.volume.{Volume, VoxelBuffer}
-      val root = java.nio.file.Files.createTempDirectory("graft-bench-vol").toString
+      val root = graft.core.Scratch.dir("graft-bench-vol")
       val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
         Meta.ScaleMeta("1_1_1", (64, 64, 64), "gzip", (1, 1, 1), (256, 256, 256), (0, 0, 0))))
       val vol = Volume.create(spark, root, meta)
       val buf = VoxelBuffer.sequenced(Meta.TUInt8, 256, 256, 256, 1, (1, 1, 1))
       def adjudicated(name: String)(f: => Unit): Double = {
-        val sample = () => {
-          val t = System.nanoTime(); f; Some((System.nanoTime() - t) / 1e9)
-        }
+        val sample = () => Some(Harness.seconds(f))
         remeasureSamplers += (name -> sample)
         val r = adjudicate(name, sample).get // a throwing sample ends the array bench
         if (isSuspect(name, r)) arraySuspects ::= ((name, r.best, bands(name)))
@@ -192,29 +158,25 @@ object Bench {
       }
       // whole-volume re-layout throughput (one shuffle by destination chunk)
       val tRechunk = adjudicated("v_rechunk_256") {
-        val dst = java.nio.file.Files.createTempDirectory("graft-bench-rck").toString
+        val dst = graft.core.Scratch.dir("graft-bench-rck")
         val n = graft.ops.VolumeOps.rechunk(vol, Grid.Box(1, 256, 1, 256, 1, 256),
           dst, chunkSize = (128, 128, 32))
         require(n == 2L * 2 * 8, "rechunk chunk count mismatch")
       }
       Seq("v_ingest_256" -> tIngest, "v_cutout_256" -> tCutout, "v_scan_256" -> tScan,
         "v_rechunk_256" -> tRechunk)
-    } catch { case e: Throwable => failed("v_array_bench", "warm", e); Seq.empty }
+    } catch { case e: Throwable => failures.record("v_array_bench", "warm", e); Seq.empty }
     // bounded-drive floor (e-family adjudication aid): ONE stateful drive
     // over a 1-row stream through the exact e-drive harness — reported as
     // its own entry so every e-query's number reads as floor + data work
     val floorBench = try {
-      val sample = () => {
-        val t = System.nanoTime()
-        graft.streaming.EventStreams.driveFloorOnce(spark)
-        Some((System.nanoTime() - t) / 1e9)
-      }
+      val sample = () => Some(Harness.seconds(graft.streaming.EventStreams.driveFloorOnce(spark)))
       remeasureSamplers += ("e0_drive_floor" -> sample)
       val r = adjudicate("e0_drive_floor", sample).get
       if (isSuspect("e0_drive_floor", r))
         arraySuspects ::= (("e0_drive_floor", r.best, bands("e0_drive_floor")))
       Seq("e0_drive_floor" -> r.best)
-    } catch { case e: Throwable => failed("e0_drive_floor", "warm", e); Seq.empty }
+    } catch { case e: Throwable => failures.record("e0_drive_floor", "warm", e); Seq.empty }
     val allSuspects = suspects ++ arraySuspects.reverse
 
     // ---- post-sweep self-adjudication (r12 directive #2) ----
@@ -222,9 +184,9 @@ object Bench {
     // by hand (r11: 8, r12: 7 — every one environmental). The harness now
     // does that work itself: every entry still over band after the in-run
     // best-of-5 is re-measured best-of-3 in BOTH orders (forward then
-    // reversed — the SuspectBench de-biasing), bracketed by floor probes
-    // whose drift vs the run's baseline reads the box load directly. An
-    // entry whose re-measure lands back inside the band is labeled
+    // reversed, so a drift in box load favours no entry), bracketed by
+    // floor probes whose drift vs the run's baseline reads the box load
+    // directly. An entry whose re-measure lands back inside the band is labeled
     // `environmental` by the harness; only `persistent` entries need a
     // human (or a judge) to look at the code.
     // remeasure: the best re-measured time, None when every re-measure
@@ -238,12 +200,12 @@ object Bench {
       val samplers: Map[String, () => Option[Double]] =
         names.map(n => n -> (() => force(n, "remeasure"))).toMap ++ remeasureSamplers
       def safe(n: String, s: () => Option[Double]): Option[Double] =
-        try s() catch { case e: Throwable => failed(n, "remeasure", e) }
+        try s() catch { case e: Throwable => failures.record(n, "remeasure", e) }
       def bo3(n: String): Seq[Double] =
         samplers.get(n).toSeq.flatMap(s => (1 to 3).flatMap(_ => safe(n, s)))
       try {
         val order = allSuspects.map(_._1)
-        def floor() = safe("floor_probe", () => Some(floorProbe()))
+        def floor() = safe("floor_probe", () => Some(Harness.floor(spark)))
         val floorPre = floor()
         val fwd = order.map(n => n -> bo3(n))
         val floorMid = floor()
@@ -285,8 +247,7 @@ object Bench {
     val registryBuildSec = registryBuilds.values.sum
     val cold: Seq[(String, Double)] =
       runs.collect { case (n, _, true) => n }.flatMap { n =>
-        graft.core.AtRestRegistry.all
-          .filter(_.kind == graft.core.AtRestRegistry.Artifact).foreach(_.reset())
+        Harness.resetArtifacts()
         force(n, "cold").map(n -> _)
       }
 
@@ -328,7 +289,7 @@ object Bench {
     // semantically irrelevant, so an untruncated line parses identically.)
     val singles = measured.collect { case (k, Some(r)) => "\"" + k + "\":" + dec3(r.first) }
       .mkString("{", ",", "}")
-    val failedJson = failures.map { case (n, phase) => s"""{"name":"$n","phase":"$phase"}""" }
+    val failedJson = failures.toSeq.map { case (n, phase) => s"""{"name":"$n","phase":"$phase"}""" }
       .mkString("[", ",", "]")
     val suspectJson = allSuspects.map { case (n, best, band) =>
       val extra = adjudications.get(n).map(a =>
@@ -389,7 +350,7 @@ object Bench {
       s"""{"name":"$n","best":${dec3(best)},"band":${dec3(band)}$v}"""
     }.mkString("[", ",", "]")
     val susMore = if (allSuspects.size > 5) s""","suspect_more":${allSuspects.size - 5}""" else ""
-    System.out.println(s"""{"sf":"$sfDir","n_queries":${results0.size},"n_failed":${failures.size},"suspect":$susCap$susMore,$vPart"registry_build_sec":${dec3(registryBuildSec)},"value_warm":${dec3(totalWarm)},"metric":"total","unit":"sec","value":${dec3(total)}}""")
+    System.out.println(s"""{"sf":"$sfDir","n_queries":${results0.size},"n_failed":${failures.toSeq.size},"suspect":$susCap$susMore,$vPart"registry_build_sec":${dec3(registryBuildSec)},"value_warm":${dec3(totalWarm)},"metric":"total","unit":"sec","value":${dec3(total)}}""")
     System.out.flush()
   }
 }

@@ -103,7 +103,7 @@ object ArrayOps {
   /** The demo store's one scale: 64×64×8 voxels in 32×32×4 chunks at
     * origin (1, 1, 1). Most store-backed a-queries build it, and their
     * oracles' chunk arithmetic assumes it. */
-  private val demoScale =
+  private[graft] val demoScale =
     Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))
 
   /** The demo store's full extent. */

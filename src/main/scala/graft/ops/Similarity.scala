@@ -1800,13 +1800,6 @@ object Similarity {
   private[graft] val knnGraphReg =
     graft.core.AtRestRegistry[String]("sim.s21_knngraph", arity = 2)
 
-  /** Test/audit seam: clear the at-rest fit registries so a measurement
-    * harness (PlanShapeSpec, tools.ScalingAudit) can observe a COLD build
-    * deterministically — mirrors [[graft.ops.Dedup.resetPairRegistryForTests]]. */
-  private[graft] def resetAtRestRegistriesForTests(): Unit = {
-    knnGraphReg.reset(); s39FitReg.reset()
-  }
-
   /** The at-rest s21 kNN-graph relation (src, nb, cs, rnk) for `dir`. */
   def knnGraphAtRest(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
     val path = knnGraphReg.getOrBuild(dir, k) {

@@ -326,9 +326,8 @@ final case class VoxelScanExec(ctx: VolumeCtx, box: Box, output: Seq[Attribute],
   }
 }
 
-/** Session extension registrar:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. */
+/** Session extension registrar: `.withExtensions(new GraftExtensions)` on
+  * the session builder, or `spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => PushBoxFilters)

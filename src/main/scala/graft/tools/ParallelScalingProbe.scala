@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One measured parallelism fact (r13 verdict: the bench's sub-second
@@ -23,18 +22,12 @@ import org.apache.spark.sql.functions._
   */
 object ParallelScalingProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.cpus
     val copies = args.headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     import graft.functions.TriangleLimbSumAgg.triangle_limb_sum
 
-    val emb = graft.ops.Tables.parquet(spark, s"$sfDir/embeddings.parquet")
+    val emb = graft.ops.Tables.parquet(spark, s"${Harness.sfDir}/embeddings.parquet")
     val nD = emb.selectExpr("size(embedding)").head().getInt(0)
     // The fixture is one small parquet file, so the scan is ONE task:
     // everything before the exchange serializes. Fan out in two stages —
@@ -54,12 +47,8 @@ object ParallelScalingProbe {
         "transform(embedding, x -> CAST(CAST(round(CAST(x AS DOUBLE), 8) AS DECIMAL(18,8)) * 100000000 AS BIGINT))")
         .as("u"))
 
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      big.agg(triangle_limb_sum(col("u"), nD).as("s"))
-        .write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def once(): Double =
+      Harness.seconds(Harness.sink(big.agg(triangle_limb_sum(col("u"), nD).as("s"))))
     spark.sparkContext.setJobDescription(s"scaling probe: s24 pre-aggregate x$copies")
     once() // warmup: codegen + parquet footers
     val runs = (1 to 3).map(_ => once())

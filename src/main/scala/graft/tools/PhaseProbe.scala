@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Split a query's cost into CONSTRUCTION (eager driver-side work done
   * while `SparkEntry.queries(name)` builds the DataFrame — fits, dumps,
   * registry builds) and SINK (the noop write of the returned plan), the
@@ -14,23 +12,11 @@ object PhaseProbe {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").write.mode("overwrite").format("noop").save()
+    val spark = Harness.session()
+    Harness.warmup(spark)
     (1 to reps).foreach { i =>
-      val t0 = System.nanoTime()
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      val t1 = System.nanoTime()
-      df.write.mode("overwrite").format("noop").save()
-      val t2 = System.nanoTime()
-      spark.catalog.clearCache()
-      println(f"[phase] $name rep=$i construct=${(t1 - t0) / 1e9}%.3f sink=${(t2 - t1) / 1e9}%.3f")
+      val t = Harness.force(spark, name, Harness.sfDir).getOrElse(sys.error(s"$name failed"))
+      println(f"[phase] $name rep=$i construct=${t.construct}%.3f sink=${t.sink}%.3f")
     }
     spark.stop()
   }

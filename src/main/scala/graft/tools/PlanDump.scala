@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` output for named queries to files:
   * `sbt "runMain graft.tools.PlanDump <outDir> <suffix> [query ...]"` —
   * writes `<outDir>/<query>_<suffix>.txt` for each query. Runs under the
@@ -14,14 +12,8 @@ object PlanDump {
     val outDir = args(0)
     val suffix = args(1)
     val names = args.drop(2).toSeq
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, sfDir)

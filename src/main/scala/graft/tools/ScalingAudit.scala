@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-exponent audit (r11 directive 4): answers the 100×-scale
   * question with DATA instead of plan reading. Times the costliest
   * queries at two scale factors (sf0.01 and sf0.1 — a 10× data step,
@@ -65,56 +63,25 @@ object ScalingAudit {
   def main(args: Array[String]): Unit = {
     val sfs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def timeOnce(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, dir)
-        .write.mode("overwrite").format("noop").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      dt
-    }
-    // per-SF clean slate over the ARTIFACT registries the audited queries
-    // build (each keys on the input dir, so this only makes run order
-    // independent of earlier touches in one JVM; the per-query
-    // RegistryBuilds resets are what time the cold builds). Deliberately
-    // NOT AtRestRegistry.resetAll(): clearing the staged-fixture registry
-    // would orphan its tmpfs dirs from the shutdown hook's delete.
-    def resetRegistries(): Unit = {
-      graft.ops.Dedup.resetPairRegistryForTests()
-      graft.ops.Similarity.resetAtRestRegistriesForTests()
-      graft.ops.Corpus.resetAtRestRegistriesForTests()
-      RegistryBuilds.values.foreach(reset => reset())
-    }
-
-    // warmup: session machinery + codegen paths (Bench convention)
-    spark.range(1000).selectExpr("sum(id)").write.mode("overwrite").format("noop").save()
-
-    // per-SF harness floor: submit + noop-commit a one-partition job
-    def floorOf(): Double =
-      (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        spark.range(1).coalesce(1).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+    val spark = Harness.session()
+    def timeOnce(name: String, dir: String): Double =
+      Harness.force(spark, name, dir).fold(sys.error(s"$name failed over $dir"))(_.total)
+    Harness.warmup(spark)
 
     case class M(cold: Double, best: Double)
     val results: Map[(String, String), M] = (for {
       dir <- sfs
-      _ = resetRegistries()
+      // per-SF clean slate (each artifact keys on the input dir, so this
+      // only makes run order independent of earlier touches in one JVM;
+      // the per-query RegistryBuilds resets are what time the cold builds)
+      _ = Harness.resetArtifacts()
       name <- Queries
     } yield {
       RegistryBuilds.get(name).foreach(reset => reset())
       val reps = (1 to 3).map(_ => timeOnce(name, dir))
       (name, dir) -> M(reps.head, reps.min)
     }).toMap
-    val floors = sfs.map(d => d -> floorOf()).toMap
+    val floors = sfs.map(d => d -> Harness.floor(spark)).toMap
 
     val (lo, hi) = (sfs.head, sfs.last)
     println(f"[scaling] floor ${lo} = ${floors(lo)}%.3f s, ${hi} = ${floors(hi)}%.3f s")

@@ -80,8 +80,7 @@ class FunctionsSpec extends AnyFunSuite with graft.testutil.MiniProp {
 
   test("explode_chunk is SQL-registered: LATERAL VIEW over a chunk table") {
     ChunkExprs.register(spark)
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
+    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(graft.ops.ArrayOps.demoScale))
     val vol = Volume.create(spark, SparkSuite.tempDir("graft-gen-sql"), meta)
     val buf = VoxelBuffer.sequenced(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
     vol.ingest(buf)
@@ -103,8 +102,7 @@ class FunctionsSpec extends AnyFunSuite with graft.testutil.MiniProp {
   }
 
   test("explode_chunk generator unpacks a chunk blob to the exact voxel rows") {
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
+    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(graft.ops.ArrayOps.demoScale))
     val vol = Volume.create(spark, SparkSuite.tempDir("graft-gen"), meta)
     val buf = VoxelBuffer.sequenced(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
     vol.ingest(buf)

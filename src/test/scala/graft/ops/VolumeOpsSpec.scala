@@ -11,8 +11,7 @@ class VolumeOpsSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
 
   test("storageReport: stored bytes match the on-disk objects; raw bytes match clamped extents") {
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (60, 60, 7), (0, 0, 0))))
+    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(ArrayOps.demoScale.copy(size = (60, 60, 7))))
     val root = SparkSuite.tempDir("graft-srep")
     val vol = Volume.create(spark, root, meta)
     vol.ingest(VoxelBuffer.sequenced(Meta.TUInt8, 60, 60, 7, 1, (1, 1, 1)))
@@ -66,8 +65,7 @@ class VolumeOpsSpec extends AnyFunSuite {
   }
 
   test("downsampleAvg mean-pools 2x2x1 blocks into the next mip") {
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0)))).withNumMips(2)
+    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(ArrayOps.demoScale)).withNumMips(2)
     val vol = Volume.create(spark, SparkSuite.tempDir("graft-ds"), meta)
     val buf = VoxelBuffer.sequenced(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
     vol.ingest(buf)
@@ -293,8 +291,7 @@ class VolumeOpsSpec extends AnyFunSuite {
 
   test("a30 zone map: pruned scan equals filtered full scan and never fetches pruned blobs") {
     import org.apache.spark.sql.functions._
-    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(
-      Meta.ScaleMeta("1_1_1", (32, 32, 4), "gzip", (1, 1, 1), (64, 64, 8), (0, 0, 0))))
+    val meta = Meta.VolumeMeta("image", Meta.TUInt8, 1, Vector(ArrayOps.demoScale))
     val root = SparkSuite.tempDir("graft-a30spec")
     val vol = Volume.create(spark, root, meta)
     val buf = VoxelBuffer.zeros(Meta.TUInt8, 64, 64, 8, 1, (1, 1, 1))
