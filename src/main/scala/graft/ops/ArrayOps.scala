@@ -793,17 +793,28 @@ object ArrayOps {
     val vol = demoVolume(spark, "a29")(demoFill(depthMix))
     val dump = s"$voxelDumpRoot/a29"
     longVoxels(vol.toVoxels(demoExtent)).write.mode("overwrite").parquet(dump)
+    blurStats(vol.localBlur(demoExtent))
+  }
+
+  /** The seam fold of distributed blur over a
+    * [[graft.volume.Volume.localBlur]] relation: per-z (n, Σ blur). Each
+    * need takes its neighbour's value from the face-value relation; a value
+    * that never arrives (its voxel lies inside the query box but past the
+    * volume) reads as zero, as the kernel reads a missing chunk. Exposed
+    * separately so specs can drive it over arbitrary volumes. */
+  private[graft] def blurStats(localBlur: DataFrame): DataFrame = {
     // partials feed three consumers — materialized once
-    val parts = Tables.materialize(vol.localBlur(demoExtent))
+    val parts = Tables.materialize(localBlur)
     val interior = parts.select(explode(col("zsums")).as("t"))
       .select(col("t.z").as("z"), col("t.n").as("n"), col("t.s").as("s"))
     val needs = parts.select(explode(col("needs")).as("nd")).select(col("nd.*"))
     val vals = parts.select(explode(col("vals")).as("fv")).select(col("fv.*"))
     val finished = needs
       .join(vals, needs("tx") === vals("x") && needs("ty") === vals("y") &&
-        needs("tz") === vals("z"))
+        needs("tz") === vals("z"), "left")
       .groupBy(col("px"), col("py"), col("pz"))
-      .agg(first(col("s0")).as("s0"), first(col("c")).as("c"), sum(col("v")).as("sv"))
+      .agg(first(col("s0")).as("s0"), first(col("c")).as("c"),
+        sum(coalesce(col("v"), lit(0L))).as("sv"))
       .select(col("pz").as("z"),
         expr("CAST((s0 + sv) DIV c AS BIGINT)").as("bv"))
       .groupBy(col("z")).agg(count(lit(1)).as("n"), sum(col("bv")).as("s"))
@@ -1032,15 +1043,26 @@ object ArrayOps {
     val spill = ld.select(explode(col("spill")).as("p"))
       .select(col("p.tcx").as("cx"), col("p.tcy").as("cy"), col("p.tcz").as("cz"),
         col("p.x").as("x"), col("p.y").as("y"), col("p.z").as("z"))
-      .distinct() // a corner coord can arrive from several source chunks
-    val extra = spill.join(shell, Seq("x", "y", "z"), "left_anti")
+    addPerOwner(ld, "n_dil", "n_dil", spill, shell)
+  }
+
+  /** The seam fold [[dilateStats]] and [[openStats]] share: the distinct
+    * owner-keyed `additions` (cx, cy, cz, x, y, z) — one coord can arrive
+    * from several source chunks — that are not in the owner's local set
+    * `local` (x, y, z) add to the owner chunk's `baseCount` column of
+    * `base`; a chunk that only receives additions gets a row of its own.
+    * One row per chunk (cx, cy, cz, n_fg, `out`), ordered. */
+  private def addPerOwner(base: DataFrame, baseCount: String, out: String,
+      additions: DataFrame, local: DataFrame): DataFrame = {
+    val extra = additions.distinct()
+      .join(local, Seq("x", "y", "z"), "left_anti")
       .groupBy(col("cx"), col("cy"), col("cz")).agg(count(lit(1)).as("n_extra"))
-    ld.select(col("cx"), col("cy"), col("cz"), col("n_fg"), col("n_dil"))
+    base.select(col("cx"), col("cy"), col("cz"), col("n_fg"), col(baseCount))
       .join(extra, Seq("cx", "cy", "cz"), "full_outer")
       .select(col("cx").cast(LongType).as("cx"), col("cy").cast(LongType).as("cy"),
         col("cz").cast(LongType).as("cz"),
         coalesce(col("n_fg"), lit(0L)).as("n_fg"),
-        (coalesce(col("n_dil"), lit(0L)) + coalesce(col("n_extra"), lit(0L))).as("n_dil"))
+        (coalesce(col(baseCount), lit(0L)) + coalesce(col("n_extra"), lit(0L))).as(out))
       .orderBy(col("cx"), col("cy"), col("cz"))
   }
 
@@ -1090,19 +1112,7 @@ object ArrayOps {
     * all its needs are present. Exposed separately for specs. */
   private[graft] def erodeStats(localErode: DataFrame): DataFrame = {
     val le = Tables.materialize(localErode)
-    val face = le.select(explode(col("face")).as("f"))
-      .select(col("f.x").as("nx"), col("f.y").as("ny"), col("f.z").as("nz"),
-        lit(1).as("present"))
-    val cand = le.select(col("cx"), col("cy"), col("cz"), explode(col("cand")).as("c"))
-      .select(col("cx"), col("cy"), col("cz"),
-        col("c.x").as("x"), col("c.y").as("y"), col("c.z").as("z"),
-        explode(col("c.needs")).as("nd"))
-      .select(col("cx"), col("cy"), col("cz"), col("x"), col("y"), col("z"),
-        col("nd.x").as("nx"), col("nd.y").as("ny"), col("nd.z").as("nz"))
-    val confirmed = cand.join(face, Seq("nx", "ny", "nz"), "left_outer")
-      .groupBy(col("cx"), col("cy"), col("cz"), col("x"), col("y"), col("z"))
-      .agg(count(lit(1)).as("n_needs"), count(col("present")).as("n_found"))
-      .filter(col("n_needs") === col("n_found"))
+    val confirmed = confirmedCands(le)
       .groupBy(col("cx"), col("cy"), col("cz")).agg(count(lit(1)).as("n_border"))
     le.select(col("cx"), col("cy"), col("cz"), col("n_fg"), col("n_inner"))
       .join(confirmed, Seq("cx", "cy", "cz"), "left_outer")
@@ -1110,6 +1120,27 @@ object ArrayOps {
         col("cz").cast(LongType).as("cz"), col("n_fg"),
         (col("n_inner") + coalesce(col("n_border"), lit(0L))).as("n_erode"))
       .orderBy(col("cx"), col("cy"), col("cz"))
+  }
+
+  /** The seam join [[erodeStats]] and [[openStats]] share: the candidates
+    * (cx, cy, cz, x, y, z) of a [[graft.volume.Volume.localErode]] or
+    * [[graft.volume.Volume.localOpen]] relation whose every need is
+    * confirmed by a `face` presence row. */
+  private def confirmedCands(local: DataFrame): DataFrame = {
+    val face = local.select(explode(col("face")).as("f"))
+      .select(col("f.x").as("nx"), col("f.y").as("ny"), col("f.z").as("nz"),
+        lit(1).as("present"))
+    val needs = local.select(col("cx"), col("cy"), col("cz"), explode(col("cand")).as("c"))
+      .select(col("cx"), col("cy"), col("cz"),
+        col("c.x").as("x"), col("c.y").as("y"), col("c.z").as("z"),
+        explode(col("c.needs")).as("nd"))
+      .select(col("cx"), col("cy"), col("cz"), col("x"), col("y"), col("z"),
+        col("nd.x").as("nx"), col("nd.y").as("ny"), col("nd.z").as("nz"))
+    needs.join(face, Seq("nx", "ny", "nz"), "left_outer")
+      .groupBy(col("cx"), col("cy"), col("cz"), col("x"), col("y"), col("z"))
+      .agg(count(lit(1)).as("n_needs"), count(col("present")).as("n_found"))
+      .filter(col("n_needs") === col("n_found"))
+      .select(col("cx"), col("cy"), col("cz"), col("x"), col("y"), col("z"))
   }
 
   /** Oracle twin of [[a18_erode]]: a voxel survives iff its 6-neighbor
@@ -1347,38 +1378,17 @@ object ArrayOps {
     * pair instead of twice for a two-pass composition. */
   private[graft] def openStats(localOpen: DataFrame): DataFrame = {
     val lo = Tables.materialize(localOpen)
-    val face = lo.select(explode(col("face")).as("f"))
-      .select(col("f.x").as("nx"), col("f.y").as("ny"), col("f.z").as("nz"),
-        lit(1).as("present"))
     val cand = lo.select(explode(col("cand")).as("c"))
       .select(col("c.x").as("x"), col("c.y").as("y"), col("c.z").as("z"),
-        col("c.needs").as("needs"), col("c.targets").as("targets"))
-    val needs = cand.select(col("x"), col("y"), col("z"), explode(col("needs")).as("nd"))
-      .select(col("x"), col("y"), col("z"),
-        col("nd.x").as("nx"), col("nd.y").as("ny"), col("nd.z").as("nz"))
-    val confirmedKeys = needs.join(face, Seq("nx", "ny", "nz"), "left_outer")
-      .groupBy(col("x"), col("y"), col("z"))
-      .agg(count(lit(1)).as("n_needs"), count(col("present")).as("n_found"))
-      .filter(col("n_needs") === col("n_found"))
-      .select(col("x"), col("y"), col("z"))
-    val additions = cand.join(confirmedKeys, Seq("x", "y", "z"))
+        col("c.targets").as("targets"))
+    val confirmed = confirmedCands(lo).select(col("x"), col("y"), col("z"))
+    val additions = cand.join(confirmed, Seq("x", "y", "z"))
       .select(explode(col("targets")).as("t"))
-      .select(col("t.tcx").as("tcx"), col("t.tcy").as("tcy"), col("t.tcz").as("tcz"),
+      .select(col("t.tcx").as("cx"), col("t.tcy").as("cy"), col("t.tcz").as("cz"),
         col("t.x").as("x"), col("t.y").as("y"), col("t.z").as("z"))
-      .distinct() // one coord can arrive from several confirmed sources
     val rim = lo.select(explode(col("rim")).as("r"))
       .select(col("r.x").as("x"), col("r.y").as("y"), col("r.z").as("z"))
-    val extra = additions.join(rim, Seq("x", "y", "z"), "left_anti")
-      .groupBy(col("tcx"), col("tcy"), col("tcz")).agg(count(lit(1)).as("n_extra"))
-      .withColumnRenamed("tcx", "cx").withColumnRenamed("tcy", "cy")
-      .withColumnRenamed("tcz", "cz")
-    lo.select(col("cx"), col("cy"), col("cz"), col("n_fg"), col("n_open_loc"))
-      .join(extra, Seq("cx", "cy", "cz"), "full_outer")
-      .select(col("cx").cast(LongType).as("cx"), col("cy").cast(LongType).as("cy"),
-        col("cz").cast(LongType).as("cz"),
-        coalesce(col("n_fg"), lit(0L)).as("n_fg"),
-        (coalesce(col("n_open_loc"), lit(0L)) + coalesce(col("n_extra"), lit(0L))).as("n_open"))
-      .orderBy(col("cx"), col("cy"), col("cz"))
+    addPerOwner(lo, "n_open_loc", "n_open", additions, rim)
   }
 
   /** The a37 gate drive: the a18 dense lattice mask (~96% fg — holes at

@@ -99,8 +99,9 @@ object EventStreams {
     }
   }
 
-  /** Per-JVM 1-row parquet fixture for [[driveFloorOnce]] — staged once,
-    * deleted with the other staged dirs' lifetime (tmpfs temp dir). */
+  /** Per-JVM 1-row parquet fixture for [[driveFloorOnce]] — staged once
+    * (tmpfs temp dir) and deleted at JVM exit by [[stagedDirReg]]'s
+    * shutdown hook. */
   private[graft] val floorFixtureReg =
     graft.core.AtRestRegistry[String]("stream.floor_fixture", arity = 1,
       kind = graft.core.AtRestRegistry.Fixture)
@@ -841,7 +842,7 @@ object EventStreams {
       kind = graft.core.AtRestRegistry.Fixture)
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      stagedDirReg.values.foreach(graft.core.Scratch.delete)))
+      (stagedDirReg.values ++ floorFixtureReg.values).foreach(graft.core.Scratch.delete)))
   }
 
   private def stageWithSentinels(spark: SparkSession, dir: String,

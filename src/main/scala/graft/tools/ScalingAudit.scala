@@ -85,7 +85,8 @@ object ScalingAudit {
 
     val (lo, hi) = (sfs.head, sfs.last)
     println(f"[scaling] floor ${lo} = ${floors(lo)}%.3f s, ${hi} = ${floors(hi)}%.3f s")
-    println("| query | t@sf0.01 | t@sf0.1 | adj ratio | exponent | cold ratio | verdict |")
+    def label(dir: String) = java.nio.file.Paths.get(dir).getFileName
+    println(s"| query | t@${label(lo)} | t@${label(hi)} | adj ratio | exponent | cold ratio | verdict |")
     println("|---|---|---|---|---|---|---|")
     val rows = Queries.map { n =>
       val (m0, m1) = (results((n, lo)), results((n, hi)))

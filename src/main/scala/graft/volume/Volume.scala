@@ -431,7 +431,7 @@ final class Volume(
     val padEdgeChunks: Boolean = false,
     val shard: Option[graft.core.Shard.Params] = None,
     val mrc: Option[graft.core.MrcFormat.Params] = None) extends Serializable {
-  import Volume.{CutBox, arrayOf, coordType, field, ints, longs}
+  import Volume.{CutBox, Step, arrayOf, coordType, field, ints, longs}
 
   val scaleMeta: ScaleMeta = meta.scale(mip)
 
@@ -642,7 +642,7 @@ final class Volume(
     chunkRows(query, schema) { fs => s =>
       c.readChunk(fs, s).iterator.flatMap { b => // a missing chunk has no foreground
         val v = new CutBox(s.cutoutBox); val cut = v.cut
-        val nx = v.nx; val ny = v.ny; val nz = v.nz
+        val nx = v.nx; val ny = v.ny
         val (fg, _) = v.mask(b)
         // union-find over the cut box; -1 = background
         val parent = new Array[Int](fg.length)
@@ -654,28 +654,17 @@ final class Volume(
         }
         // pass 1: mark foreground, union each voxel with its already-
         // visited -x/-y/-z neighbors (x-fastest scan order)
-        var lz = 0
-        while (lz < nz) {
-          var ly = 0
-          while (ly < ny) {
-            var lx = 0
-            while (lx < nx) {
-              val i = v.li(lx, ly, lz)
-              if (fg(i)) {
-                parent(i) = i
-                @inline def union(j: Int): Unit = {
-                  val ri = find(i); val rj = find(j)
-                  if (ri != rj) parent(math.max(ri, rj)) = math.min(ri, rj)
-                }
-                if (lx > 0 && fg(i - 1)) union(i - 1)
-                if (ly > 0 && fg(i - nx)) union(i - nx)
-                if (lz > 0 && fg(i - nx * ny)) union(i - nx * ny)
-              }
-              lx += 1
+        v.sweep { (lx, ly, lz, i) =>
+          if (fg(i)) {
+            parent(i) = i
+            @inline def union(j: Int): Unit = {
+              val ri = find(i); val rj = find(j)
+              if (ri != rj) parent(math.max(ri, rj)) = math.min(ri, rj)
             }
-            ly += 1
+            if (lx > 0 && fg(i - 1)) union(i - 1)
+            if (ly > 0 && fg(i - nx)) union(i - nx)
+            if (lz > 0 && fg(i - nx * ny)) union(i - nx * ny)
           }
-          lz += 1
         }
         // pass 2: fold per-root stats + face voxel lists
         final class Acc {
@@ -686,29 +675,18 @@ final class Volume(
           val face = scala.collection.mutable.ArrayBuffer.empty[Row]
         }
         val accs = scala.collection.mutable.LongMap.empty[Acc]
-        lz = 0
-        while (lz < nz) {
-          var ly = 0
-          while (ly < ny) {
-            var lx = 0
-            while (lx < nx) {
-              val i = v.li(lx, ly, lz)
-              if (fg(i)) {
-                val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                val lin = (gz.toLong << 40) | (gy.toLong << 20) | gx.toLong
-                val a = accs.getOrElseUpdate(find(i).toLong, new Acc)
-                a.n += 1
-                if (lin < a.minLin) a.minLin = lin
-                if (gx < a.x0) a.x0 = gx; if (gx > a.x1) a.x1 = gx
-                if (gy < a.y0) a.y0 = gy; if (gy > a.y1) a.y1 = gy
-                if (gz < a.z0) a.z0 = gz; if (gz > a.z1) a.z1 = gz
-                if (v.onFace(lx, ly, lz)) a.face += Row(gx, gy, gz)
-              }
-              lx += 1
-            }
-            ly += 1
+        v.sweep { (lx, ly, lz, i) =>
+          if (fg(i)) {
+            val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
+            val lin = (gz.toLong << 40) | (gy.toLong << 20) | gx.toLong
+            val a = accs.getOrElseUpdate(find(i).toLong, new Acc)
+            a.n += 1
+            if (lin < a.minLin) a.minLin = lin
+            if (gx < a.x0) a.x0 = gx; if (gx > a.x1) a.x1 = gx
+            if (gy < a.y0) a.y0 = gy; if (gy > a.y1) a.y1 = gy
+            if (gz < a.z0) a.z0 = gz; if (gz > a.z1) a.z1 = gz
+            if (v.onFace(lx, ly, lz)) a.face += Row(gx, gy, gz)
           }
-          lz += 1
         }
         accs.values.iterator.map { a =>
           Row(a.minLin, a.n, a.x0, a.x1, a.y0, a.y1, a.z0, a.z1, a.face.toSeq)
@@ -751,39 +729,19 @@ final class Volume(
         var nDil = 0L
         val shell = scala.collection.mutable.ArrayBuffer.empty[Row]
         val spill = scala.collection.mutable.ArrayBuffer.empty[Row]
-        var lz = 0
-        while (lz < nz) {
-          var ly = 0
-          while (ly < ny) {
-            var lx = 0
-            while (lx < nx) {
-              val i = v.li(lx, ly, lz)
-              val self = fg(i)
-              val dil = self ||
-                (lx > 0 && fg(i - 1)) || (lx < nx - 1 && fg(i + 1)) ||
-                (ly > 0 && fg(i - nx)) || (ly < ny - 1 && fg(i + nx)) ||
-                (lz > 0 && fg(i - nx * ny)) || (lz < nz - 1 && fg(i + nx * ny))
-              val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-              if (dil) {
-                nDil += 1
-                if (v.onFace(lx, ly, lz)) shell += Row(gx, gy, gz)
-              }
-              if (self) {
-                @inline def push(dcx: Int, dcy: Int, dcz: Int, tx: Int, ty: Int, tz: Int): Unit =
-                  if (query.x.contains(tx) && query.y.contains(ty) && query.z.contains(tz))
-                    spill += Row(s.idx + dcx, s.idy + dcy, s.idz + dcz, tx, ty, tz)
-                if (lx == 0) push(-1, 0, 0, gx - 1, gy, gz)
-                if (lx == nx - 1) push(1, 0, 0, gx + 1, gy, gz)
-                if (ly == 0) push(0, -1, 0, gx, gy - 1, gz)
-                if (ly == ny - 1) push(0, 1, 0, gx, gy + 1, gz)
-                if (lz == 0) push(0, 0, -1, gx, gy, gz - 1)
-                if (lz == nz - 1) push(0, 0, 1, gx, gy, gz + 1)
-              }
-              lx += 1
-            }
-            ly += 1
+        val push: Step = (x, y, z, dcx, dcy, dcz) =>
+          spill += Row(s.idx + dcx, s.idy + dcy, s.idz + dcz, x, y, z)
+        v.sweep { (lx, ly, lz, i) =>
+          val self = fg(i)
+          val dil = self ||
+            (lx > 0 && fg(i - 1)) || (lx < nx - 1 && fg(i + 1)) ||
+            (ly > 0 && fg(i - nx)) || (ly < ny - 1 && fg(i + nx)) ||
+            (lz > 0 && fg(i - nx * ny)) || (lz < nz - 1 && fg(i + nx * ny))
+          if (v.onFace(lx, ly, lz)) {
+            if (dil) shell += Row(cut.x.lo + lx, cut.y.lo + ly, cut.z.lo + lz)
+            if (self) v.steps(lx, ly, lz, query, push)
           }
-          lz += 1
+          if (dil) nDil += 1
         }
         Row(s.idx, s.idy, s.idz, nFg, nDil, shell.toSeq, spill.toSeq)
       }
@@ -816,32 +774,12 @@ final class Volume(
     chunkRows(query, schema) { fs => s =>
       c.readChunk(fs, s).iterator.map { b => // a missing chunk is all background
         val v = new CutBox(s.cutoutBox); val cut = v.cut
-        val nx = v.nx; val ny = v.ny; val nz = v.nz
         val (fg, nFg) = v.mask(b)
         var nInner = 0L
         val cand = scala.collection.mutable.ArrayBuffer.empty[Row]
-        val face = scala.collection.mutable.ArrayBuffer.empty[Row]
-        var lz = 0
-        while (lz < nz) {
-          var ly = 0
-          while (ly < ny) {
-            var lx = 0
-            while (lx < nx) {
-              val i = v.li(lx, ly, lz)
-              if (fg(i)) {
-                val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                if (v.onFace(lx, ly, lz)) {
-                  face += Row(gx, gy, gz)
-                  v.erosionNeeds(fg, lx, ly, lz, query).foreach(needs => cand += Row(gx, gy, gz, needs))
-                } else if (v.interiorSurvives(fg, i)) nInner += 1
-              }
-              lx += 1
-            }
-            ly += 1
-          }
-          lz += 1
-        }
-        Row(s.idx, s.idy, s.idz, nFg, nInner, cand.toSeq, face.toSeq)
+        val face = v.erosion(fg, query)((lx, ly, lz, needs) =>
+          cand += Row(cut.x.lo + lx, cut.y.lo + ly, cut.z.lo + lz, needs), _ => nInner += 1)
+        Row(s.idx, s.idy, s.idz, nFg, nInner, cand.toSeq, face)
       }
     }
   }
@@ -882,76 +820,40 @@ final class Volume(
         val v = new CutBox(s.cutoutBox); val cut = v.cut
         val nx = v.nx; val ny = v.ny; val nz = v.nz
         val (fg, nFg) = v.mask(b)
-        // pass 1: interior erosion (non-face voxels — all 6 probes in-cut)
-        // and face candidates with needs + owner-resolved dilation targets
+        // pass 1: the erosion pass, each face candidate carrying its
+        // owner-resolved dilation targets
         val opened = new Array[Boolean](fg.length)
         val cand = scala.collection.mutable.ArrayBuffer.empty[Row]
-        val face = scala.collection.mutable.ArrayBuffer.empty[Row]
-        var lz = 0
-        while (lz < nz) {
-          var ly = 0
-          while (ly < ny) {
-            var lx = 0
-            while (lx < nx) {
-              val i = v.li(lx, ly, lz)
-              if (fg(i)) {
-                val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                if (v.onFace(lx, ly, lz)) {
-                  face += Row(gx, gy, gz)
-                  v.erosionNeeds(fg, lx, ly, lz, query).foreach { needs =>
-                    // all 7 dilation targets are in-box (an in-box eroded
-                    // voxel's neighbors are in-box — its out-of-box
-                    // neighbors would have killed it); owner chunk shifts
-                    // only on the crossed axis
-                    val targets = scala.collection.mutable.ArrayBuffer.empty[Row]
-                    @inline def tgt(dlx: Int, dly: Int, dlz: Int): Unit = {
-                      val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
-                      val dcx = if (tlx < 0) -1 else if (tlx >= nx) 1 else 0
-                      val dcy = if (tly < 0) -1 else if (tly >= ny) 1 else 0
-                      val dcz = if (tlz < 0) -1 else if (tlz >= nz) 1 else 0
-                      targets += Row(s.idx + dcx, s.idy + dcy, s.idz + dcz,
-                        gx + dlx, gy + dly, gz + dlz)
-                    }
-                    tgt(0, 0, 0)
-                    tgt(-1, 0, 0); tgt(1, 0, 0)
-                    tgt(0, -1, 0); tgt(0, 1, 0)
-                    tgt(0, 0, -1); tgt(0, 0, 1)
-                    cand += Row(gx, gy, gz, needs, targets.toSeq)
-                  }
-                } else if (v.interiorSurvives(fg, i)) {
-                  // dilate the interior-eroded voxel: all 7 in-cut
-                  opened(i) = true
-                  opened(i - 1) = true; opened(i + 1) = true
-                  opened(i - nx) = true; opened(i + nx) = true
-                  opened(i - nx * ny) = true; opened(i + nx * ny) = true
-                }
-              }
-              lx += 1
-            }
-            ly += 1
-          }
-          lz += 1
-        }
+        val face = v.erosion(fg, query)({ (lx, ly, lz, needs) =>
+          // all 7 dilation targets are in-box (an in-box eroded voxel's
+          // neighbors are in-box — its out-of-box neighbors would have
+          // killed it)
+          val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
+          val targets = scala.collection.mutable.ArrayBuffer(Row(s.idx, s.idy, s.idz, gx, gy, gz))
+          v.steps(lx, ly, lz, query, new Step {
+            def seam(x: Int, y: Int, z: Int, dcx: Int, dcy: Int, dcz: Int): Unit =
+              targets += Row(s.idx + dcx, s.idy + dcy, s.idz + dcz, x, y, z)
+            override def inCut(j: Int, x: Int, y: Int, z: Int): Unit =
+              targets += Row(s.idx, s.idy, s.idz, x, y, z)
+          })
+          cand += Row(gx, gy, gz, needs, targets.toSeq)
+        }, { i =>
+          // dilate the interior-eroded voxel: all 7 in-cut
+          opened(i) = true
+          opened(i - 1) = true; opened(i + 1) = true
+          opened(i - nx) = true; opened(i + nx) = true
+          opened(i - nx * ny) = true; opened(i + nx * ny) = true
+        })
         var nOpenLoc = 0L
         val rim = scala.collection.mutable.ArrayBuffer.empty[Row]
-        lz = 0
-        while (lz < nz) {
-          var ly = 0
-          while (ly < ny) {
-            var lx = 0
-            while (lx < nx) {
-              if (opened(v.li(lx, ly, lz))) {
-                nOpenLoc += 1
-                if (lx <= 1 || lx >= nx - 2 || ly <= 1 || ly >= ny - 2 || lz <= 1 || lz >= nz - 2)
-                  rim += Row(cut.x.lo + lx, cut.y.lo + ly, cut.z.lo + lz)
-              }
-              lx += 1
-            }
-            ly += 1
+        v.sweep { (lx, ly, lz, i) =>
+          if (opened(i)) {
+            nOpenLoc += 1
+            if (lx <= 1 || lx >= nx - 2 || ly <= 1 || ly >= ny - 2 || lz <= 1 || lz >= nz - 2)
+              rim += Row(cut.x.lo + lx, cut.y.lo + ly, cut.z.lo + lz)
           }
-          lz += 1
         }
-        Row(s.idx, s.idy, s.idz, nFg, nOpenLoc, rim.toSeq, cand.toSeq, face.toSeq)
+        Row(s.idx, s.idy, s.idz, nFg, nOpenLoc, rim.toSeq, cand.toSeq, face)
       }
     }
   }
@@ -975,20 +877,11 @@ final class Volume(
         case None => Row(s.idx, s.idy, s.idz, 0L, 0L, nTot)
         case Some(b) =>
           var mn = Long.MaxValue; var mx = Long.MinValue
-          var z = cut.z.lo
-          while (z <= cut.z.hi) {
-            var y = cut.y.lo
-            while (y <= cut.y.hi) {
-              var x = cut.x.lo
-              while (x <= cut.x.hi) {
-                val v = b.getLong(x - b.origin._1, y - b.origin._2, z - b.origin._3, 0)
-                if (v < mn) mn = v
-                if (v > mx) mx = v
-                x += 1
-              }
-              y += 1
-            }
-            z += 1
+          val ox = cut.x.lo - b.origin._1; val oy = cut.y.lo - b.origin._2; val oz = cut.z.lo - b.origin._3
+          new CutBox(cut).sweep { (lx, ly, lz, _) =>
+            val v = b.getLong(ox + lx, oy + ly, oz + lz, 0)
+            if (v < mn) mn = v
+            if (v > mx) mx = v
           }
           Row(s.idx, s.idy, s.idz, mn, mx, nTot)
       })
@@ -1045,8 +938,9 @@ final class Volume(
     *    arrive from the adjacent chunk;
     *  - `vals` — this chunk's cut-face voxel values: the only values a
     *    neighbor can need.
-    * The caller ([[graft.ops.ArrayOps.a29_blur]]) joins needs→vals on the
-    * neighbor coordinate, re-groups per voxel to finish `⌊s/c⌋`, and folds
+    * The caller ([[graft.ops.ArrayOps.blurStats]]) joins needs→vals on the
+    * neighbor coordinate (a value that never arrives, past the volume,
+    * reads as zero), re-groups per voxel to finish `⌊s/c⌋`, and folds
     * everything per z — O(surface) rows move, the voxel relation never
     * shuffles. A missing chunk reads as zeros (fill-missing semantics),
     * still contributing its geometry. Integer volumes only. */
@@ -1061,48 +955,33 @@ final class Volume(
       arrayOf("vals", StructType(ints("x", "y", "z") ++ longs("v")))))
     chunkRows(query, schema) { fs => s =>
       val v = new CutBox(s.cutoutBox); val cut = v.cut
-      val nx = v.nx; val ny = v.ny; val nz = v.nz
       val vv = v.values(c.readChunk(fs, s)) // a missing chunk reads as zeros
-      val zn = new Array[Long](nz); val zs = new Array[Long](nz)
+      val zn = new Array[Long](v.nz); val zs = new Array[Long](v.nz)
       val needs = scala.collection.mutable.ArrayBuffer.empty[Row]
       val vals = scala.collection.mutable.ArrayBuffer.empty[Row]
-      var lz = 0
-      while (lz < nz) {
-        var ly = 0
-        while (ly < ny) {
-          var lx = 0
-          while (lx < nx) {
-            val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-            var s0 = vv(v.li(lx, ly, lz))
-            var cTot = 1
-            val miss = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
-            @inline def probe(dlx: Int, dly: Int, dlz: Int): Unit = {
-              val tx = gx + dlx; val ty = gy + dly; val tz = gz + dlz
-              if (query.x.contains(tx) && query.y.contains(ty) && query.z.contains(tz)) {
-                cTot += 1
-                val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
-                if (tlx >= 0 && tlx < nx && tly >= 0 && tly < ny && tlz >= 0 && tlz < nz)
-                  s0 += vv(v.li(tlx, tly, tlz))
-                else miss += ((tx, ty, tz))
-              }
-            }
-            probe(-1, 0, 0); probe(1, 0, 0)
-            probe(0, -1, 0); probe(0, 1, 0)
-            probe(0, 0, -1); probe(0, 0, 1)
-            if (miss.isEmpty) {
-              zn(lz) += 1
-              zs(lz) += Math.floorDiv(s0, cTot.toLong)
-            } else {
-              miss.foreach { case (tx, ty, tz) => needs += Row(gx, gy, gz, s0, cTot, tx, ty, tz) }
-            }
-            if (v.onFace(lx, ly, lz)) vals += Row(gx, gy, gz, vv(v.li(lx, ly, lz)))
-            lx += 1
-          }
-          ly += 1
+      // the voxel's sum over itself and its in-cut in-query neighbours, its
+      // in-query neighbourhood size, and the neighbours across a seam
+      var s0 = 0L; var cTot = 0
+      val miss = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
+      val probe = new Step {
+        def seam(x: Int, y: Int, z: Int, dcx: Int, dcy: Int, dcz: Int): Unit = {
+          cTot += 1; miss += ((x, y, z))
         }
-        lz += 1
+        override def inCut(j: Int, x: Int, y: Int, z: Int): Unit = { cTot += 1; s0 += vv(j) }
       }
-      val zsums = (0 until nz).filter(zn(_) > 0).map(i => Row(cut.z.lo + i, zn(i), zs(i)))
+      v.sweep { (lx, ly, lz, i) =>
+        val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
+        s0 = vv(i); cTot = 1; miss.clear()
+        v.steps(lx, ly, lz, query, probe)
+        if (miss.isEmpty) {
+          zn(lz) += 1
+          zs(lz) += Math.floorDiv(s0, cTot.toLong)
+        } else {
+          miss.foreach { case (tx, ty, tz) => needs += Row(gx, gy, gz, s0, cTot, tx, ty, tz) }
+        }
+        if (v.onFace(lx, ly, lz)) vals += Row(gx, gy, gz, vv(i))
+      }
+      val zsums = (0 until v.nz).filter(zn(_) > 0).map(i => Row(cut.z.lo + i, zn(i), zs(i)))
       Iterator.single(Row(s.idx, s.idy, s.idz, zsums, needs.toSeq, vals.toSeq))
     }
   }
@@ -1150,32 +1029,20 @@ final class Volume(
           val k = if (a < bb) (a, bb) else (bb, a)
           pairCnt.update(k, pairCnt.getOrElse(k, 0L) + 1L)
         }
-        var lz = 0
-        while (lz < nz) {
-          var ly = 0
-          while (ly < ny) {
-            var lx = 0
-            while (lx < nx) {
-              val i = v.li(lx, ly, lz)
-              val l = lab(i)
-              if (l != 0L) {
-                val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
-                // local +x/+y/+z pairs — each counted exactly once
-                if (lx + 1 < nx) { val n = lab(i + 1); if (n != 0L && n != l) addPair(l, n) }
-                if (ly + 1 < ny) { val n = lab(i + nx); if (n != 0L && n != l) addPair(l, n) }
-                if (lz + 1 < nz) { val n = lab(i + nx * ny); if (n != 0L && n != l) addPair(l, n) }
-                // forward halo: positive faces push a probe across the seam
-                if (lx == nx - 1 && query.x.contains(gx + 1)) probe += Row(gx + 1, gy, gz, l)
-                if (ly == ny - 1 && query.y.contains(gy + 1)) probe += Row(gx, gy + 1, gz, l)
-                if (lz == nz - 1 && query.z.contains(gz + 1)) probe += Row(gx, gy, gz + 1, l)
-                // backward presence: negative faces are probe targets
-                if (lx == 0 || ly == 0 || lz == 0) negface += Row(gx, gy, gz, l)
-              }
-              lx += 1
-            }
-            ly += 1
+        v.sweep { (lx, ly, lz, i) =>
+          val l = lab(i)
+          if (l != 0L) {
+            val gx = cut.x.lo + lx; val gy = cut.y.lo + ly; val gz = cut.z.lo + lz
+            // local +x/+y/+z pairs — each counted exactly once
+            if (lx + 1 < nx) { val n = lab(i + 1); if (n != 0L && n != l) addPair(l, n) }
+            if (ly + 1 < ny) { val n = lab(i + nx); if (n != 0L && n != l) addPair(l, n) }
+            if (lz + 1 < nz) { val n = lab(i + nx * ny); if (n != 0L && n != l) addPair(l, n) }
+            // forward halo: positive faces push a probe across the seam
+            if (lx == nx - 1 || ly == ny - 1 || lz == nz - 1) v.steps(lx, ly, lz, query,
+              (x, y, z, dcx, dcy, dcz) => if (dcx + dcy + dcz > 0) probe += Row(x, y, z, l))
+            // backward presence: negative faces are probe targets
+            if (lx == 0 || ly == 0 || lz == 0) negface += Row(gx, gy, gz, l)
           }
-          lz += 1
         }
         val pairs = pairCnt.toSeq.sortBy(_._1).map { case ((a, bb), n) => Row(a, bb, n) }
         Row(s.idx, s.idy, s.idz, pairs, probe.toSeq, negface.toSeq)
@@ -1563,14 +1430,71 @@ object Volume {
   /** The `(x, y, z)` voxel struct of the halo kernels' lists. */
   private val coordType: StructType = StructType(ints("x", "y", "z"))
 
+  /** A body of [[CutBox.sweep]]: a trait of its own, not a `Function4`,
+    * so the four indices reach it unboxed. */
+  private trait Visit { def apply(lx: Int, ly: Int, lz: Int, i: Int): Unit }
+
+  /** Where one unit step from a cut voxel lands ([[CutBox.steps]]). Only
+    * the seam case is abstract: every kernel handles it, and a kernel that
+    * needs no other case is a lambda. */
+  private trait Step {
+    /** Across a seam inside `query`, at global `(x, y, z)`, in the chunk
+      * `(dcx, dcy, dcz)` grid steps from this one. */
+    def seam(x: Int, y: Int, z: Int, dcx: Int, dcy: Int, dcz: Int): Unit
+    /** In the cut, at local index `j` and global `(x, y, z)`. */
+    def inCut(j: Int, x: Int, y: Int, z: Int): Unit = ()
+    /** Outside `query`: background to erosion, no target to dilation. */
+    def outside(): Unit = ()
+  }
+
   /** A chunk slice's cut box as flat arrays indexed
-    * `(lz * ny + ly) * nx + lx` — the view the halo kernels share. Each
-    * kernel keeps its own per-voxel loops. */
+    * `(lz * ny + ly) * nx + lx` — the view the halo kernels share, with
+    * their one voxel loop ([[sweep]]) and their one neighbour probe
+    * ([[steps]]). */
   private final class CutBox(val cut: Box) {
     val nx: Int = cut.x.len; val ny: Int = cut.y.len; val nz: Int = cut.z.len
     @inline def li(lx: Int, ly: Int, lz: Int): Int = (lz * ny + ly) * nx + lx
     @inline def onFace(lx: Int, ly: Int, lz: Int): Boolean =
       lx == 0 || lx == nx - 1 || ly == 0 || ly == ny - 1 || lz == 0 || lz == nz - 1
+
+    /** Visits every voxel of the cut, x fastest, with its local index. */
+    def sweep(body: Visit): Unit = {
+      var i = 0
+      var lz = 0
+      while (lz < nz) {
+        var ly = 0
+        while (ly < ny) {
+          var lx = 0
+          while (lx < nx) {
+            body(lx, ly, lz, i)
+            i += 1; lx += 1
+          }
+          ly += 1
+        }
+        lz += 1
+      }
+    }
+
+    /** The six unit steps from cut voxel (lx, ly, lz), in the order −x, +x,
+      * −y, +y, −z, +z. A step past the cut but inside `query` crosses a
+      * seam: the cut is the chunk clipped to `query`, so the neighbour's
+      * chunk differs only on the crossed axis. */
+    def steps(lx: Int, ly: Int, lz: Int, query: Box, to: Step): Unit = {
+      def step(dx: Int, dy: Int, dz: Int): Unit = {
+        val tlx = lx + dx; val tly = ly + dy; val tlz = lz + dz
+        val x = cut.x.lo + tlx; val y = cut.y.lo + tly; val z = cut.z.lo + tlz
+        val dcx = if (tlx < 0) -1 else if (tlx >= nx) 1 else 0
+        val dcy = if (tly < 0) -1 else if (tly >= ny) 1 else 0
+        val dcz = if (tlz < 0) -1 else if (tlz >= nz) 1 else 0
+        if (dcx == 0 && dcy == 0 && dcz == 0) to.inCut(li(tlx, tly, tlz), x, y, z)
+        else if (query.x.contains(x) && query.y.contains(y) && query.z.contains(z))
+          to.seam(x, y, z, dcx, dcy, dcz)
+        else to.outside()
+      }
+      step(-1, 0, 0); step(1, 0, 0)
+      step(0, -1, 0); step(0, 1, 0)
+      step(0, 0, -1); step(0, 0, 1)
+    }
 
     /** The foreground (nonzero) mask of `b` over the cut, float voxels read
       * as doubles, and its voxel count. */
@@ -1578,21 +1502,11 @@ object Volume {
       val isFloat = b.dataType == TFloat32 || b.dataType == TFloat64
       val ox = cut.x.lo - b.origin._1; val oy = cut.y.lo - b.origin._2; val oz = cut.z.lo - b.origin._3
       val fg = new Array[Boolean](nx * ny * nz)
-      var n = 0L; var i = 0
-      var lz = 0
-      while (lz < nz) {
-        var ly = 0
-        while (ly < ny) {
-          var lx = 0
-          while (lx < nx) {
-            fg(i) = if (isFloat) b.getDouble(ox + lx, oy + ly, oz + lz, 0) != 0.0
-              else b.getLong(ox + lx, oy + ly, oz + lz, 0) != 0L
-            if (fg(i)) n += 1
-            i += 1; lx += 1
-          }
-          ly += 1
-        }
-        lz += 1
+      var n = 0L
+      sweep { (lx, ly, lz, i) =>
+        fg(i) = if (isFloat) b.getDouble(ox + lx, oy + ly, oz + lz, 0) != 0.0
+          else b.getLong(ox + lx, oy + ly, oz + lz, 0) != 0L
+        if (fg(i)) n += 1
       }
       (fg, n)
     }
@@ -1602,50 +1516,42 @@ object Volume {
       val vs = new Array[Long](nx * ny * nz)
       for (b <- b) {
         val ox = cut.x.lo - b.origin._1; val oy = cut.y.lo - b.origin._2; val oz = cut.z.lo - b.origin._3
-        var i = 0
-        var lz = 0
-        while (lz < nz) {
-          var ly = 0
-          while (ly < ny) {
-            var lx = 0
-            while (lx < nx) {
-              vs(i) = b.getLong(ox + lx, oy + ly, oz + lz, 0)
-              i += 1; lx += 1
-            }
-            ly += 1
-          }
-          lz += 1
-        }
+        sweep((lx, ly, lz, i) => vs(i) = b.getLong(ox + lx, oy + ly, oz + lz, 0))
       }
       vs
     }
 
-    /** Whether foreground voxel `i`, on no face, survives erosion: all six
-      * neighbours are foreground. */
-    @inline def interiorSurvives(fg: Array[Boolean], i: Int): Boolean =
-      fg(i - 1) && fg(i + 1) && fg(i - nx) && fg(i + nx) && fg(i - nx * ny) && fg(i + nx * ny)
-
-    /** The erosion probe of foreground voxel (lx, ly, lz) on a face: None
-      * when an in-cut neighbour is background or a neighbour past the cut
-      * lies outside `query` (background by definition); otherwise the
-      * across-seam neighbours whose presence the seam join must confirm. */
-    def erosionNeeds(fg: Array[Boolean], lx: Int, ly: Int, lz: Int, query: Box): Option[Seq[Row]] = {
+    /** The erosion pass of [[Volume.localErode]] and [[Volume.localOpen]]
+      * over foreground `fg`, cut from `query`. A voxel survives when it and
+      * its six neighbours are foreground, a neighbour outside `query`
+      * counting as background. A surviving interior voxel goes to
+      * `inner(i)`. A face voxel whose in-cut neighbours pass and whose
+      * other neighbours lie inside `query` goes to `cand(lx, ly, lz,
+      * needs)`, with the across-seam neighbours the seam join must
+      * confirm. Returns the foreground face voxels: the presence proofs
+      * the neighbouring chunks' needs are confirmed against. */
+    def erosion(fg: Array[Boolean], query: Box)(
+        cand: (Int, Int, Int, Seq[Row]) => Unit, inner: Int => Unit): Seq[Row] = {
+      val face = scala.collection.mutable.ArrayBuffer.empty[Row]
       val needs = scala.collection.mutable.ArrayBuffer.empty[Row]
       var alive = true
-      def probe(dlx: Int, dly: Int, dlz: Int): Unit = {
-        val tlx = lx + dlx; val tly = ly + dly; val tlz = lz + dlz
-        if (tlx >= 0 && tlx < nx && tly >= 0 && tly < ny && tlz >= 0 && tlz < nz) {
-          if (!fg(li(tlx, tly, tlz))) alive = false
-        } else {
-          val tx = cut.x.lo + tlx; val ty = cut.y.lo + tly; val tz = cut.z.lo + tlz
-          if (query.x.contains(tx) && query.y.contains(ty) && query.z.contains(tz)) needs += Row(tx, ty, tz)
-          else alive = false
+      val probe = new Step {
+        def seam(x: Int, y: Int, z: Int, dcx: Int, dcy: Int, dcz: Int): Unit = needs += Row(x, y, z)
+        override def inCut(j: Int, x: Int, y: Int, z: Int): Unit = if (!fg(j)) alive = false
+        override def outside(): Unit = alive = false
+      }
+      sweep { (lx, ly, lz, i) =>
+        if (fg(i)) {
+          if (onFace(lx, ly, lz)) {
+            face += Row(cut.x.lo + lx, cut.y.lo + ly, cut.z.lo + lz)
+            alive = true; needs.clear()
+            steps(lx, ly, lz, query, probe)
+            if (alive) cand(lx, ly, lz, needs.toSeq)
+          } else if (fg(i - 1) && fg(i + 1) && fg(i - nx) && fg(i + nx) &&
+              fg(i - nx * ny) && fg(i + nx * ny)) inner(i)
         }
       }
-      probe(-1, 0, 0); probe(1, 0, 0)
-      probe(0, -1, 0); probe(0, 1, 0)
-      probe(0, 0, -1); probe(0, 0, 1)
-      if (alive) Some(needs.toSeq) else None
+      face.toSeq
     }
   }
 

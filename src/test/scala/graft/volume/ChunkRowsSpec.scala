@@ -1,7 +1,6 @@
 package graft.volume
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Meta
@@ -71,23 +70,6 @@ class ChunkRowsSpec extends AnyFunSuite {
   def perCell(s: Iterable[(Int, Int, Int)]): Map[(Long, Long, Long), Long] =
     s.groupBy(cell).map { case (k, v) => k -> v.size.toLong }
 
-  /** The a29 fold of `localBlur` partials into per-z (n, Σ blur), a value
-    * that never arrives (its voxel lies past the volume) reading zero. */
-  def blurByZ(parts: DataFrame): Map[Int, (Long, Long)] = {
-    val interior = parts.select(explode(col("zsums")).as("t"))
-      .select(col("t.z").as("z"), col("t.n").as("n"), col("t.s").as("s"))
-    val needs = parts.select(explode(col("needs")).as("nd")).select(col("nd.*"))
-    val vals = parts.select(explode(col("vals")).as("fv")).select(col("fv.*"))
-    val finished = needs
-      .join(vals, needs("tx") === vals("x") && needs("ty") === vals("y") && needs("tz") === vals("z"), "left")
-      .groupBy(col("px"), col("py"), col("pz"))
-      .agg(first(col("s0")).as("s0"), first(col("c")).as("c"), sum(coalesce(col("v"), lit(0L))).as("sv"))
-      .select(col("pz").as("z"), expr("CAST((s0 + sv) DIV c AS BIGINT)").as("bv"))
-      .groupBy(col("z")).agg(count(lit(1)).as("n"), sum(col("bv")).as("s"))
-    interior.unionByName(finished).groupBy(col("z")).agg(sum(col("n")), sum(col("s")))
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-  }
-
   /** Every operator on the combinator, each reduced to a comparable value. */
   def operators(vol: Volume, other: Volume, q: Box): Seq[(String, () => Any)] = Seq(
     "toVoxels" -> (() => sorted(rows(vol.toVoxels(q)))),
@@ -98,7 +80,8 @@ class ChunkRowsSpec extends AnyFunSuite {
     "localOpen" -> (() => sorted(rows(ArrayOps.openStats(vol.localOpen(q))))),
     "chunkStats" -> (() => sorted(rows(vol.chunkStats(q)))),
     "toVoxelsAtLeast" -> (() => sorted(rows(vol.toVoxelsAtLeast(q, 3L)))),
-    "localBlur" -> (() => blurByZ(vol.localBlur(q))),
+    "localBlur" -> (() => ArrayOps.blurStats(vol.localBlur(q)).collect()
+      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap),
     "localContacts" -> (() => sorted(rows(ArrayOps.contactStats(vol.localContacts(q))))),
     "missingChunks probe" -> (() => vol.missingChunks(q, "probe").collect().toSeq.sorted),
     "missingChunks listing" -> (() => vol.missingChunks(q, "listing").collect().toSeq.sorted))
